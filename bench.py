@@ -293,28 +293,16 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    from pyspark.sql import SparkSession
+    from dataframeutils_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dataframeutils-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # The in-session slow-creep mechanism (r7, supersedes the
-        # storage-block theory): whole-stage-codegen classes fill the
-        # JVM's 240 MB default JIT code cache over a 100+-query
-        # session; once full the JVM stops compiling and newly
-        # generated code runs INTERPRETED (dedup_clusters measured
-        # 20 s poisoned vs 4.0 s with this flag, 3.6 s solo).
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    # The engine session: the same conf the tests run under, including
+    # the 1 GB JIT code cache that keeps whole-stage-codegen compiled
+    # across a 100+-query session (r7: dedup_clusters 20 s with the
+    # 240 MB default vs 4.0 s with it). Driver memory: SPARK_DRIVER_MEMORY.
+    spark = get_spark(
+        app_name="dataframeutils-bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dataframeutils_spark.operators.local_solve import local_threshold
 from dataframeutils_spark.operators.text import _tokens
 
 END_OF_WORD = "▁"  # sentencepiece-style marker, appended per word
@@ -64,27 +65,6 @@ def _apply_merge(syms: Column, left: str, right: str) -> Column:
             ),
         ).otherwise(F.concat(acc, F.array(x))),
     )
-
-
-def _bpe_local_vocab_threshold() -> int:
-    """Word-table ceiling for driver-local BPE training — the same
-    bounded-collect discipline as the connected-components local path
-    (the table is already capped at ``vocab_top`` rows by contract, so
-    the collect is bounded at ANY corpus size). Production override:
-    ``SPARK_GRAFT_BPE_LOCAL_VOCAB`` (0 disables). A malformed value
-    falls back to the default rather than failing the query."""
-    import os
-    import warnings
-
-    raw = os.environ.get("SPARK_GRAFT_BPE_LOCAL_VOCAB", "100000")
-    try:
-        return int(raw)
-    except ValueError:
-        warnings.warn(
-            f"SPARK_GRAFT_BPE_LOCAL_VOCAB={raw!r} is not an int; "
-            "using default 100000"
-        )
-        return 100000
 
 
 def _bpe_train_local(
@@ -146,15 +126,19 @@ def bpe_train(
     oracle unconditionally replays all ``n_merges`` rounds — on a
     corpus too sparse to support them, the asymmetry must fail loudly
     here, not as an opaque row-count diff at the gate.
+
+    The merge rounds run on the driver when ``vocab_top`` ≤
+    ``local_vocab_threshold`` (default 100k words;
+    ``SPARK_GRAFT_BPE_LOCAL_VOCAB`` overrides it, 0 disables the local
+    path), otherwise as the distributed loop.
     """
     spark = docs.sparkSession
     wt = _word_table(docs, text_col, vocab_top)
-    thresh = (
-        _bpe_local_vocab_threshold()
-        if local_vocab_threshold is None
-        else local_vocab_threshold
-    )
-    if 0 < vocab_top <= thresh:
+    if local_vocab_threshold is None:
+        local_vocab_threshold = local_threshold(
+            "SPARK_GRAFT_BPE_LOCAL_VOCAB", 100_000
+        )
+    if 0 < vocab_top <= local_vocab_threshold:
         # The training frame is ≤ vocab_top rows BY CONTRACT (the limit
         # above), so collecting it is bounded at any corpus size — the
         # whole iterative loop then runs driver-local instead of paying

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dataframeutils_spark.operators.local_solve import local_threshold, route_local
+
 # ---------------------------------------------------------------------------
 # hashing schemes
 # ---------------------------------------------------------------------------
@@ -390,7 +392,7 @@ def simhash(
     hashed = counted.select("doc_id", "w", portable_hash60(F.col("tok")).alias("h"))
     # One parsed F.expr per aggregate / one for the bit recombination
     # instead of ~1100 py4j Column calls: the strings parse to the
-    # identical Catalyst tree (analyzed-plan sameResult pinned in
+    # identical Catalyst tree (optimized-plan sameResult pinned in
     # tests/test_northstar.py), and plan CONSTRUCTION drops ~1.5 s per
     # invocation — a per-query driver cost the bench pays at any scale
     # (r14 §fixed-tail).
@@ -507,28 +509,6 @@ GROUP BY h.doc_id
 # ---------------------------------------------------------------------------
 
 
-def _cc_local_edge_threshold() -> int:
-    """Edge-count ceiling for the driver-local component solve.
-
-    4M long pairs ≈ 64 MB collected — comfortably inside driver memory
-    on any deployment that can also hold a default-sized broadcast.
-    Production override: ``SPARK_GRAFT_CC_LOCAL_EDGES`` (0 disables the
-    local path entirely; raise it on drivers with more headroom). A
-    malformed value falls back to the default rather than failing."""
-    import os
-    import warnings
-
-    raw = os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "4000000")
-    try:
-        return int(raw)
-    except ValueError:
-        warnings.warn(
-            f"SPARK_GRAFT_CC_LOCAL_EDGES={raw!r} is not an int; "
-            "using default 4000000"
-        )
-        return 4000000
-
-
 def _cc_numpy(a, b):
     """Exact union-find over numpy id arrays; returns (nodes, labels)
     with labels[i] = min id in node i's component. Hook-to-min over all
@@ -627,9 +607,10 @@ def connected_components(
     materialized once (the upstream pair pipeline is paid exactly once
     either way) and counted. When it is below
     ``local_edge_threshold`` edges (default 4M ≈ 64 MB of long pairs —
-    the same bounded-collect discipline as a broadcast-join decision),
-    the components are solved exactly on the driver with a vectorized
-    numpy union-find (hook-to-min + pointer-doubling compression)
+    the same bounded-collect discipline as a broadcast-join decision;
+    ``SPARK_GRAFT_CC_LOCAL_EDGES`` overrides it, 0 disables the local
+    path), the components are solved exactly on the driver with a
+    vectorized numpy union-find (hook-to-min + pointer-doubling compression)
     instead of running O(log D) distributed rounds whose per-round
     scheduling overhead dwarfs the data at that size (measured: 12
     rounds over a 376-node winnow graph ≈ 5 s of fixed cost; the local
@@ -656,14 +637,14 @@ def connected_components(
     src, dst = F.col(src_col), F.col(dst_col)
     if numeric_ids:
         src, dst = src.cast("long"), dst.cast("long")
-    pairs = edges.select(src.alias("src"), dst.alias("dst"))
-    # eager: pay for the upstream pair pipeline ONCE; the count that
-    # routes between the local and distributed paths reads the
-    # materialized blocks, not the pipeline
-    pairs = pairs.localCheckpoint()
     if local_edge_threshold is None:
-        local_edge_threshold = _cc_local_edge_threshold()
-    if pairs.count() <= local_edge_threshold:
+        local_edge_threshold = local_threshold(
+            "SPARK_GRAFT_CC_LOCAL_EDGES", 4_000_000
+        )
+    pairs, local = route_local(
+        edges.select(src.alias("src"), dst.alias("dst")), local_edge_threshold
+    )
+    if local:
         return _connected_components_local(pairs, numeric_ids=numeric_ids)
     sym = pairs.union(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1634,37 +1615,6 @@ def fuzzy_term_pairs(
         "n_a",
         "n_b",
     ).filter(F.col("dist") <= 1)
-
-
-def fuzzy_term_pairs_sql(
-    table: str = "documents", min_len: int = 4, min_count: int = 1
-) -> str:
-    """DuckDB oracle for :func:`fuzzy_term_pairs` — same deletion
-    neighborhood, same native levenshtein (unit-cost edit distance in
-    both engines)."""
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
-    return f"""
-WITH vocab AS (
-  SELECT term, count(*) AS n
-  FROM (SELECT unnest({toks}) AS term FROM {table})
-  WHERE length(term) >= {min_len}
-  GROUP BY term
-  HAVING count(*) >= {min_count}
-), keyed AS (
-  SELECT term, n, unnest(list_append(
-    list_transform(range(1, length(term) + 1),
-                   i -> substr(term, 1, i - 1) || substr(term, i + 1)),
-    term)) AS variant
-  FROM vocab
-), cand AS (
-  SELECT DISTINCT a.term AS term_a, b.term AS term_b,
-         a.n AS n_a, b.n AS n_b
-  FROM keyed a JOIN keyed b ON a.variant = b.variant AND a.term < b.term
-)
-SELECT term_a, term_b, levenshtein(term_a, term_b) AS dist, n_a, n_b
-FROM cand
-WHERE levenshtein(term_a, term_b) <= 1
-"""
 
 
 def fuzzy_term_lookup(

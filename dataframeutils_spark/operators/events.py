@@ -1492,9 +1492,12 @@ def diurnal_profile(
         F.sum(F.cos(theta)).alias("_c"),
         F.sum(F.sin(theta)).alias("_s"),
     )
-    rbar = (
+    # clamped: a fully concentrated type's sum can round R̄ just above
+    # 1, where sqrt(−2 ln R̄) would be NaN (sqrt already makes it ≥ 0)
+    rbar = F.least(
         F.sqrt(F.col("_c") * F.col("_c") + F.col("_s") * F.col("_s"))
-        / F.col("n")
+        / F.col("n"),
+        F.lit(1.0),
     )
     # mean direction → hours in [0, 24)
     peak = (
@@ -1528,7 +1531,7 @@ def diurnal_profile_sql(table: str = "events", alpha: float = 0.01) -> str:
         f"{two_pi} * CAST(epoch_us(ts) % 86400000000 AS DOUBLE)"
         " / 86400000000.0"
     )
-    rbar = "sqrt(c * c + s * s) / n"
+    rbar = "least(sqrt(c * c + s * s) / n, 1.0)"
     return f"""
 WITH agg AS (
   SELECT event_type, count(*) AS n,

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataframeutils_spark.operators.local_solve import local_threshold, route_local
 from dataframeutils_spark.operators.text import _tokens, ranked_topk
 
 
@@ -83,25 +84,6 @@ def _pagerank_local(
     )
 
 
-def _pagerank_local_edge_threshold() -> int:
-    """Edge ceiling for the driver-local pagerank solve (collected
-    rows are (src, dst, p) strings+double ≈ 60 B → 1M ≈ 60 MB).
-    Production override: ``SPARK_GRAFT_PR_LOCAL_EDGES`` (0 disables);
-    malformed values fall back to the default."""
-    import os
-    import warnings
-
-    raw = os.environ.get("SPARK_GRAFT_PR_LOCAL_EDGES", "1000000")
-    try:
-        return int(raw)
-    except ValueError:
-        warnings.warn(
-            f"SPARK_GRAFT_PR_LOCAL_EDGES={raw!r} is not an int; "
-            "using default 1000000"
-        )
-        return 1000000
-
-
 def pagerank(
     nodes: DataFrame,
     edges: DataFrame,
@@ -124,8 +106,10 @@ def pagerank(
 
     Scale-adaptive small-graph path (the connected-components /
     k_core discipline): the transition table is materialized once and
-    counted; at or below ``local_edge_threshold`` edges the ``iters``
-    rounds run on the driver in vectorized numpy instead of paying
+    counted; at or below ``local_edge_threshold`` edges (default 1M of
+    (src, dst, p) rows ≈ 60 MB; ``SPARK_GRAFT_PR_LOCAL_EDGES``
+    overrides it, 0 disables the local path) the ``iters`` rounds run
+    on the driver in vectorized numpy instead of paying
     iters × (join + aggregate + join) of per-round scheduling — and,
     as much, instead of CONSTRUCTING the unrolled iteration plan
     (~2 s of driver-side expression building for 5 rounds). Above the
@@ -147,13 +131,12 @@ def pagerank(
         "src", "dst", (F.col("w") / F.col("sw")).alias("p")
     )
     if local_edge_threshold is None:
-        local_edge_threshold = _pagerank_local_edge_threshold()
-    if local_edge_threshold > 0:
-        trans = trans.localCheckpoint()  # eager: count reads blocks
-        if trans.count() <= local_edge_threshold:
-            return _pagerank_local(trans, nodes, iters=iters, damping=damping)
-    else:
-        trans = trans.localCheckpoint(eager=False)
+        local_edge_threshold = local_threshold(
+            "SPARK_GRAFT_PR_LOCAL_EDGES", 1_000_000
+        )
+    trans, local = route_local(trans, local_edge_threshold)
+    if local:
+        return _pagerank_local(trans, nodes, iters=iters, damping=damping)
 
     ranks = nodes.crossJoin(nn).select(
         "node", (F.lit(1.0) / F.col("n")).alias("rank")
@@ -719,26 +702,6 @@ FROM agg CROSS JOIN nodes
 _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
-def _graph_local_edge_threshold() -> int:
-    """Edge-count ceiling for driver-local graph solves — the same
-    bounded-collect discipline as the connected-components local path
-    (16 bytes/edge → 4M ≈ 64 MB). Production override:
-    ``SPARK_GRAFT_GRAPH_LOCAL_EDGES`` (0 disables). A malformed value
-    falls back to the default rather than failing."""
-    import os
-    import warnings
-
-    raw = os.environ.get("SPARK_GRAFT_GRAPH_LOCAL_EDGES", "4000000")
-    try:
-        return int(raw)
-    except ValueError:
-        warnings.warn(
-            f"SPARK_GRAFT_GRAPH_LOCAL_EDGES={raw!r} is not an int; "
-            "using default 4000000"
-        )
-        return 4000000
-
-
 def _k_core_local(
     edges: DataFrame, k: int, rounds: int
 ) -> DataFrame:
@@ -814,9 +777,10 @@ def k_core_summary(
 
     Scale-adaptive small-graph path (same discipline as
     connected_components): the edge table is materialized once and
-    counted; below ``local_edge_threshold`` edges (default 4M ≈ 64 MB,
-    integral node ids only) the peel runs on the driver in vectorized
-    numpy instead of paying ``rounds`` × (aggregate + two semi-joins)
+    counted; at or below ``local_edge_threshold`` edges (default 4M ≈
+    64 MB; ``SPARK_GRAFT_GRAPH_LOCAL_EDGES`` overrides it, 0 disables
+    the local path; integral node ids only) the peel runs on the driver
+    in vectorized numpy instead of paying ``rounds`` × (aggregate + two semi-joins)
     of per-round scheduling overhead (measured ~3.8 s for 10 rounds
     over a 1.2M-edge graph at sf0.1; the local peel is < 100 ms).
     avg_degree is rounded by the same Spark decround expression either
@@ -826,18 +790,17 @@ def k_core_summary(
     from dataframeutils_spark.schema import decround
 
     if local_edge_threshold is None:
-        local_edge_threshold = _graph_local_edge_threshold()
+        local_edge_threshold = local_threshold(
+            "SPARK_GRAFT_GRAPH_LOCAL_EDGES", 4_000_000
+        )
     dtypes = dict(edges.dtypes)
-    if (
-        local_edge_threshold > 0
-        and dtypes.get("u") in _INTEGRAL_TYPES
-        and dtypes.get("v") in _INTEGRAL_TYPES
+    if not (
+        dtypes.get("u") in _INTEGRAL_TYPES and dtypes.get("v") in _INTEGRAL_TYPES
     ):
-        cur = edges.localCheckpoint()  # eager: count reads blocks
-        if cur.count() <= local_edge_threshold:
-            return _k_core_local(cur, k=k, rounds=rounds)
-    else:
-        cur = edges.localCheckpoint(eager=False)
+        local_edge_threshold = 0  # the numpy peel needs integral ids
+    cur, local = route_local(edges, local_edge_threshold)
+    if local:
+        return _k_core_local(cur, k=k, rounds=rounds)
     prev_n = None
     for _ in range(rounds):
         deg = (

@@ -497,29 +497,6 @@ FROM v
 """
 
 
-def resize_images(media: DataFrame, target_w: int = 224, target_h: int = 224) -> DataFrame:
-    """Resize stage: same mapInPandas shape as a real resampler.
-
-    The stub passes bytes through and records the requested target —
-    swapping in PIL's resize changes only the inner function, never the
-    plan. Output keeps the binary payload column (fat rows stay
-    scan-side; still no shuffle).
-    """
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[["media_id", "media_type"]].copy()
-            out["content"] = pdf["content"]  # stub: passthrough bytes
-            out["target_w"] = target_w
-            out["target_h"] = target_h
-            yield out
-
-    return media.mapInPandas(
-        resize_batches,
-        schema="media_id long, media_type string, content binary, target_w int, target_h int",
-    )
-
-
 def resize_images_real(
     media: DataFrame, target_w: int = 16, target_h: int = 16
 ) -> DataFrame:

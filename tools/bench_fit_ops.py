@@ -41,16 +41,9 @@ FIT_OPS = [
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    from pyspark.sql import SparkSession
+    from dataframeutils_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("bench-fit-ops")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="bench-fit-ops", master="local[32]", shuffle_partitions=32)
     import __spark_entry__ as E
 
     qs = E.queries()

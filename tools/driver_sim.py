@@ -18,12 +18,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
+from dataframeutils_spark.sources.testdata import TABLES  # noqa: E402
 from tools.oracle_sweep import compare, normalize  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 
 
 def main() -> None:
@@ -41,9 +37,13 @@ def main() -> None:
     )
     import __spark_entry__ as E
 
+    fails = 0
     if not only:
+        # entry() is the contract's smoke check: it must return rows
         n = len(E.entry(spark).collect())
-        print(f"entry(): {n} rows {'OK' if n >= 0 else 'FAIL'}", flush=True)
+        print(f"entry(): {n} rows {'OK' if n > 0 else 'FAIL empty'}", flush=True)
+        if n == 0:
+            fails += 1
 
     con = duckdb.connect()
     for t in TABLES:
@@ -52,7 +52,6 @@ def main() -> None:
         )
 
     qs, os_ = E.queries(), E.oracle_sql()
-    fails = 0
     results: dict[str, dict] = {}
     for name, fn in qs.items():
         if only and name not in only:

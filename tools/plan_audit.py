@@ -42,16 +42,9 @@ PYTHON_STAGES = (
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
+    from dataframeutils_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="plan-audit", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     from dataframeutils_spark import driver as d

@@ -25,16 +25,9 @@ def main() -> int:
     names = sys.argv[3:]
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from dataframeutils_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-dump")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="plan-dump", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     from dataframeutils_spark import driver as d

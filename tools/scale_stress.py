@@ -545,23 +545,10 @@ def main() -> None:
     only = set(sys.argv[3:])
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from dataframeutils_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-stress")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # match bench.py: keep whole-stage-codegen compiled across a
-        # long multi-query session (JIT code-cache exhaustion)
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="scale-stress", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
     )
     spark.sparkContext.setLogLevel("ERROR")
 
