@@ -116,18 +116,17 @@ def save_plot(df: DataFrame, path: str, title: str | None = None) -> str:
     return path
 
 
-def save_table(df: DataFrame, path: str, html: bool = True) -> None:
-    """CSV (+styled HTML preview) sink — reference O9 semantics.
+def save_table(df: DataFrame, path: str) -> None:
+    """CSV + styled HTML preview sink — reference O9 semantics.
 
     The CSV is written distributed (a directory of part files — the
     100 TB-safe shape); the HTML preview is driver-side and capped at
     the reference's 1000 rows.
     """
     df.write.mode("overwrite").option("header", True).csv(path + ".csv")
-    if html:
-        pdf = _head_deterministic(df)
-        with open(path + ".html", "w") as fh:
-            fh.write(pdf.to_html(index=False))
+    pdf = _head_deterministic(df)
+    with open(path + ".html", "w") as fh:
+        fh.write(pdf.to_html(index=False))
 
 
 class TimeSeriesStudy:
@@ -172,17 +171,13 @@ class TimeSeriesStudy:
         name: str,
         table: bool,
         results_dir: str | None,
-        plot: bool = False,
     ) -> DataFrame:
         # reference contract (`time_series_study.py:160` etc.): sinks
         # fall back to default_results_dir, never the process CWD
-        out_dir = results_dir or self.default_results_dir
-        if table or plot:
-            os.makedirs(out_dir, exist_ok=True)
         if table:
+            out_dir = results_dir or self.default_results_dir
+            os.makedirs(out_dir, exist_ok=True)
             save_table(df, os.path.join(out_dir, name))
-        if plot:
-            save_plot(df, os.path.join(out_dir, name + ".png"), title=name)
         return df
 
     # -- analyses (one per reference method) --------------------------

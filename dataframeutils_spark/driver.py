@@ -1658,7 +1658,6 @@ def q_events_value_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame
 def q_events_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON prop extraction on events.props (SURVEY §7 phase 5):
     from_json-style parse → per-event-type stats of the 'k' field."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = load_table(spark, sf_dir, "events")
     parsed = ev.select(
         "event_type", F.get_json_object("props", "$.k").cast("double").alias("k")
@@ -3263,7 +3262,6 @@ def q_multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _events_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataframeutils_spark.streaming import windows as sw
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return sw.normalize_event_times(load_table(spark, sf_dir, "events"))
 
 
@@ -4399,33 +4397,12 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registered driver queries, ordered for the correctness rotation.
 
     The external correctness gate checks at most the FIRST 50 entries of
-    this dict (insertion order); ordering is a rotation policy with
-    priority: (1) never driver-verified, (2) longest since last
-    driver-verified. The committed CORRECTNESS_LOCAL.json full sweep
-    (tools/driver_sim.py, the same vanilla-session + DuckDB-oracle
-    compare the driver runs) covers ALL queries at HEAD every round.
-
-    Round 13 ordering (executes the r12 verdict's item 1): positions
-    1-10 are the 10 r12 in-round additions that have NEVER been
-    externally gated (retrieval_quality, the web/URL trio, the two
-    snapshot-drift audits, encoding_audit, term_drift, holt_forecast,
-    seasonal_anomalies — all exact-mode). Positions 11-24 are the 14
-    rows-only-by-design queries last externally exercised in
-    CORRECTNESS_r05.json (iterative/seeded fits with no SQL-expressible
-    oracle: ADF stationarity, Engle-Granger, Granger causality, Markov
-    regimes, the GARCH family, iforest/LOF outliers, the xxhash LSH
-    variant, the k-means IVF arms, and the approx-percentile event
-    profile) — the driver records a rows-only check for these; they
-    are the only non-exact rows in the window and are pre-declared
-    here. Positions 25-50 re-gate the 26 OLDEST previously-gated rows:
-    the 13 r8-batch leftovers (last gated r08) and the 13-entry head of
-    the r9 batch (last gated r09). With this window green, cumulative
-    external coverage reaches 234/234 registered queries. Below the
-    cap, prior groups keep their relative order: the r12 window (gated
-    green in CORRECTNESS_r12.json), the r9-batch tail, the r10 batch,
-    and the r11 window. In-round r13 newcomers are registered below the
-    cap per the rotation protocol; the round-14 window should lead with
-    them, then continue the oldest re-gates (the r9-batch tail).
+    this dict, in insertion order. Order by priority: queries never
+    externally gated first, then those gated longest ago; a new query is
+    registered below the cap and leads the next window. Queries with no
+    SQL oracle get a rows-only check. ``tools/driver_sim.py`` (the
+    gate's vanilla session and DuckDB compare) checks every entry and
+    records the full sweep in CORRECTNESS_LOCAL.json.
     """
     return {
         # --- r13 window 1-10: the 10 never-externally-gated r12 additions ---

@@ -91,20 +91,6 @@ def norm_cdf(x: float) -> float:
     return 0.5 * math.erfc(-x / math.sqrt(2.0))
 
 
-def norm_sf(x: float) -> float:
-    return 0.5 * math.erfc(x / math.sqrt(2.0))
-
-
-def f_sf(x: float, dfn: float, dfd: float) -> float:
-    """P(X > x) for the F distribution via the regularized beta function."""
-    if not np.isfinite(x):
-        return float("nan")
-    if x <= 0:
-        return 1.0
-    # I_{dfd/(dfd+dfn x)}(dfd/2, dfn/2)
-    return betainc_reg(dfd / 2.0, dfn / 2.0, dfd / (dfd + dfn * x))
-
-
 def betainc_reg(a: float, b: float, x: float) -> float:
     """Regularized incomplete beta I_x(a, b) (continued fraction)."""
     if x <= 0:

@@ -25,12 +25,9 @@ Scale notes:
 * :func:`decontaminate` shuffles exploded n-grams once to join the
   benchmark gram set. The benchmark side (an eval suite) is tiny
   relative to the corpus — it is distinct-ed and broadcast, so the
-  corpus side never shuffles at all with ``broadcast_benchmark=True``
-  (the default): the plan is scan → explode → broadcast-hash-join →
-  partial count → final count, with the only exchange carrying
-  (doc_id, count) partials. With ``hash_grams=True`` (production) the
-  join key is an 8-byte xxhash64 instead of the gram string, so even
-  the non-broadcast fallback shuffles fixed-width keys, never text.
+  corpus side never shuffles at all: the plan is scan → explode →
+  broadcast-hash-join → partial count → final count, with the only
+  exchange carrying (doc_id, count) partials.
 """
 
 from __future__ import annotations
@@ -56,8 +53,6 @@ def decontaminate(
     threshold: float = 0.05,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_grams: bool = False,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Per-document benchmark-overlap contamination.
 
@@ -66,15 +61,7 @@ def decontaminate(
     document's DISTINCT token ``n``-grams, ``n_hit_grams`` how many of
     those appear anywhere in ``benchmark``, and ``contaminated`` is
     ``contamination_ratio >= threshold``.
-
-    ``hash_grams=True`` joins on ``xxhash64(gram)`` instead of the gram
-    string — the production path at scale (8-byte shuffle keys; xxhash64
-    has no DuckDB equivalent so that variant is rows-only at the
-    oracle, like minhash's xxhash path).
     """
-    gram_key = (
-        (lambda c: F.xxhash64(c)) if hash_grams else (lambda c: c)
-    )
 
     def doc_grams(df: DataFrame) -> DataFrame:
         toks = F.split(F.col(text_col), r"\s+")
@@ -83,20 +70,18 @@ def decontaminate(
             F.array_distinct(ngram_array(toks, n)).alias("grams"),
         )
 
-    bench_grams = (
+    bench_grams = F.broadcast(
         doc_grams(benchmark)
         .select(F.explode("grams").alias("gram"))
-        .select(gram_key(F.col("gram")).alias("gkey"))
+        .select(F.col("gram").alias("gkey"))
         .distinct()
     )
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
 
     corpus_grams = doc_grams(corpus)
     per_doc = corpus_grams.select("doc_id", F.size("grams").alias("n_grams"))
     hits = (
         corpus_grams.select("doc_id", F.explode("grams").alias("gram"))
-        .select("doc_id", gram_key(F.col("gram")).alias("gkey"))
+        .select("doc_id", F.col("gram").alias("gkey"))
         .join(bench_grams.withColumn("hit", F.lit(1)), "gkey", "left")
         .groupBy("doc_id")
         .agg(F.count("hit").alias("n_hit_grams"))
@@ -629,9 +614,7 @@ FROM classes
 """
 
 
-def benford_audit(
-    df: DataFrame, amount_col: str, cents: bool = True
-) -> DataFrame:
+def benford_audit(df: DataFrame, amount_col: str) -> DataFrame:
     """Benford first-digit audit over a monetary column — the classic
     fabricated-data / ETL-corruption screen (Benford 1938, Nigrini's
     forensic usage): natural multi-scale amounts follow
@@ -655,9 +638,7 @@ def benford_audit(
     from dataframeutils_spark.schema import decround
 
     amt = F.col(amount_col)
-    ints = (
-        F.round(amt * 100).cast("long") if cents else F.round(amt).cast("long")
-    )
+    ints = F.round(amt * 100).cast("long")
     d = (
         # ints >= 1, not amt > 0: an amount in (0, half-a-cent) rounds
         # to integer 0 whose "first digit" is 0 — log(1 + 1/0) would
@@ -693,16 +674,12 @@ def benford_audit(
     )
 
 
-def benford_audit_sql(table: str, amount_expr: str, cents: bool = True) -> str:
+def benford_audit_sql(table: str, amount_expr: str) -> str:
     """DuckDB oracle for :func:`benford_audit` — same string-domain
     digit extraction and integer-ratio shares."""
     from dataframeutils_spark.schema import decround_sql
 
-    ints = (
-        f"CAST(round(({amount_expr}) * 100) AS BIGINT)"
-        if cents
-        else f"CAST(round({amount_expr}) AS BIGINT)"
-    )
+    ints = f"CAST(round(({amount_expr}) * 100) AS BIGINT)"
     return f"""
 WITH d AS (
   SELECT CAST(substr(CAST({ints} AS VARCHAR), 1, 1) AS INT) AS digit,

@@ -14,12 +14,13 @@ BASELINE.json north-star operators, built Spark-native:
 * :func:`embedding_dup_pairs` — cosine near-duplicate pairs over an
   ``array<float>`` embedding column.
 
-Hashing: the default ``portable`` scheme derives 60-bit integers from
-md5 hex substrings — computable identically in Spark and DuckDB, which
-is what makes even the MinHash/LSH pipeline fully oracle-checkable.
-``xxhash64`` is the production path at 100 TB (one JVM intrinsic
-instead of md5+substring+base-conversion per shingle); both flow
-through the same plan shapes.
+Hashing: :func:`portable_hash60` derives 60-bit integers from md5 hex
+substrings — computable identically in Spark and DuckDB, which is what
+makes even the MinHash/LSH pipeline fully oracle-checkable. Only the
+MinHash signature (:func:`minhash_signatures`, :func:`minhash_lsh_pairs`)
+also offers ``xxhash64`` (``portable=False``: one JVM intrinsic instead
+of md5+substring+base-conversion per shingle), through the same plan
+shape.
 
 Scale notes: every stage is explode → hash → groupBy — linear in
 corpus size, shuffling only (doc_id | shingle | band) keys. Candidate
@@ -49,12 +50,6 @@ def portable_hash60(col: Column) -> Column:
 
 def portable_hash60_sql(expr: str) -> str:
     return f"CAST(concat('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def fast_hash64(col: Column) -> Column:
-    """Production hash: xxhash64 JVM intrinsic (no DuckDB equivalent —
-    queries built on it get rows-only driver checks)."""
-    return F.xxhash64(col)
 
 
 # ---------------------------------------------------------------------------
@@ -452,7 +447,6 @@ def shared_span_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    portable: bool = True,
 ) -> DataFrame:
     """Cross-document exact long-span sharing: per doc — (doc_id,
     n_spans, n_shared_spans, max_span_df).
@@ -474,8 +468,7 @@ def shared_span_stats(
     spans and are absent from the output (they cannot share one).
     """
     sh = shingles(docs, text_col=text_col, id_col=id_col, n=n)
-    h = portable_hash60(F.col("shingle")) if portable else fast_hash64(F.col("shingle"))
-    hashed = sh.select("doc_id", h.alias("span_h"))
+    hashed = sh.select("doc_id", portable_hash60(F.col("shingle")).alias("span_h"))
     span_df = hashed.groupBy("span_h").agg(F.count("*").alias("df"))
     return (
         hashed.join(span_df, "span_h")
@@ -732,7 +725,6 @@ def duplicate_components(
     n: int = 3,
     num_perm: int = 16,
     bands: int = 4,
-    portable: bool = True,
 ) -> DataFrame:
     """The shared near-duplicate label table (doc_id, cluster_id):
     MinHash-LSH candidate pairs → connected components, min-id label.
@@ -742,7 +734,7 @@ def duplicate_components(
     alone) — a change to pair generation propagates to every consumer
     instead of silently diverging."""
     sh = shingles(docs, text_col=text_col, id_col=id_col, n=n)
-    pairs = minhash_lsh_pairs(sh, num_perm=num_perm, bands=bands, portable=portable)
+    pairs = minhash_lsh_pairs(sh, num_perm=num_perm, bands=bands)
     return connected_components(pairs)
 
 
@@ -753,7 +745,6 @@ def dedup_clusters(
     n: int = 3,
     num_perm: int = 16,
     bands: int = 4,
-    portable: bool = True,
 ) -> DataFrame:
     """Near-duplicate cluster resolution — the step a real dedup
     pipeline needs *after* pair generation: which doc survives.
@@ -770,7 +761,7 @@ def dedup_clusters(
     """
     comp = duplicate_components(
         docs, text_col=text_col, id_col=id_col, n=n,
-        num_perm=num_perm, bands=bands, portable=portable,
+        num_perm=num_perm, bands=bands,
     )
     size = comp.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return comp.join(size, "cluster_id").select(
@@ -1068,7 +1059,6 @@ def incremental_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_col: str = "h",
-    portable: bool = True,
 ) -> DataFrame:
     """Classify every NEW-batch doc against an existing corpus snapshot:
     (doc_id, status) with status ∈ {'dup_of_corpus', 'dup_in_batch',
@@ -1090,9 +1080,8 @@ def incremental_dedup(
     (ReuseExchange/AQE) and the text never shuffles. 'dup_in_batch'
     keeps min-doc_id-first semantics consistent with exact_dedup.
     """
-    hfn = portable_hash60 if portable else fast_hash64
     b = batch.select(
-        F.col(id_col).alias("doc_id"), hfn(F.col(text_col)).alias("h")
+        F.col(id_col).alias("doc_id"), portable_hash60(F.col(text_col)).alias("h")
     )
     store = corpus_hashes.select(F.col(hash_col).alias("h")).distinct()
     from pyspark.sql import Window
@@ -1111,18 +1100,16 @@ def incremental_dedup(
 
 
 def snapshot_split(
-    docs: DataFrame, id_col: str = "doc_id", salt: str = "snap", portable: bool = True
+    docs: DataFrame, id_col: str = "doc_id", salt: str = "snap"
 ) -> tuple[DataFrame, DataFrame]:
     """Deterministic (corpus, batch) halves of one documents table —
     the driver-testable stand-in for 'yesterday's corpus, today's
     crawl'. Hash-parity on the id, same stability contract as
     operators.sampling (order/partition independent, engine portable).
     """
-    hfn = portable_hash60 if portable else fast_hash64
-    # pmod, not %: xxhash64 is signed, and Spark's % keeps the sign —
-    # a plain `% 2` yields {-1, 0, 1} and rows with -1 would vanish
-    # from BOTH halves (22% measured), breaking the partition promise
-    side = F.pmod(hfn(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), F.lit(2))
+    side = F.pmod(
+        portable_hash60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), F.lit(2)
+    )
     return docs.filter(side == 0), docs.filter(side == 1)
 
 
@@ -1164,7 +1151,6 @@ def keep_best_clusters(
     n: int = 3,
     num_perm: int = 16,
     bands: int = 4,
-    portable: bool = True,
 ) -> DataFrame:
     """:func:`dedup_clusters` with a QUALITY keep policy: within each
     transitive near-dup cluster keep the doc maximizing ``quality_col``
@@ -1184,7 +1170,7 @@ def keep_best_clusters(
 
     clusters = dedup_clusters(
         docs, text_col=text_col, id_col=id_col, n=n, num_perm=num_perm,
-        bands=bands, portable=portable,
+        bands=bands,
     ).drop("is_canonical")
     quality = docs.select(
         F.col(id_col).alias("doc_id"), F.col(quality_col).alias("quality")
@@ -1771,7 +1757,6 @@ def dup_matrix(
     n: int = 3,
     num_perm: int = 16,
     bands: int = 4,
-    portable: bool = True,
 ) -> DataFrame:
     """Cross-source near-duplicate matrix: per unordered source pair,
     how many LSH candidate pairs connect them and how many distinct
@@ -1789,7 +1774,7 @@ def dup_matrix(
     map-side-combinable counts over ≤ |sources|² rows.
     """
     sh = shingles(docs, text_col=text_col, id_col=id_col, n=n)
-    pairs = minhash_lsh_pairs(sh, num_perm=num_perm, bands=bands, portable=portable)
+    pairs = minhash_lsh_pairs(sh, num_perm=num_perm, bands=bands)
     src = docs.select(
         F.col(id_col).alias("doc_id"), F.col(source_col).alias("src")
     )

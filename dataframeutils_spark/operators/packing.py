@@ -133,19 +133,6 @@ def pack_sequences_bpe(
     return pack_from_counts(counts.localCheckpoint(), seq_len=seq_len)
 
 
-def pack_summary(
-    docs: DataFrame, seq_len: int = 256, **kwargs
-) -> DataFrame:
-    """Per-sequence audit: (seq_id, n_docs, n_tokens, full) — every
-    sequence except the last must hold exactly ``seq_len`` tokens."""
-    m = pack_sequences(docs, seq_len=seq_len, **kwargs)
-    return m.groupBy("seq_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-        (F.sum("n_tokens") == seq_len).alias("full"),
-    )
-
-
 def _pack_manifest_sql(seq_len: int) -> str:
     """Manifest chain (prefix sum → bin fan-out → span arithmetic) over
     an in-scope CTE ``d(doc_id, n)`` — shared by the whitespace and BPE

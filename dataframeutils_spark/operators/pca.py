@@ -161,13 +161,11 @@ def _triu_dim(n_cells: int) -> int:
     return d
 
 
-def _cov_cells_select(
-    outer: DataFrame, means: DataFrame, n_row: DataFrame, upper_only: bool
-) -> DataFrame:
+def _cov_cells_select(outer: DataFrame, means: DataFrame, n_row: DataFrame) -> DataFrame:
     """Shared tail: (i, j, xx) + per-dim sums + n → siground'd sample
-    covariance rows, optionally mirrored below the diagonal."""
+    covariance rows (upper triangle, i ≤ j)."""
     j_means = means.select(F.col("i").alias("j"), F.col("s_i").alias("s_j"))
-    out = (
+    return (
         outer.join(F.broadcast(means), "i")
         .join(F.broadcast(j_means), "j")
         .crossJoin(F.broadcast(n_row))
@@ -180,17 +178,10 @@ def _cov_cells_select(
             ).alias("cov"),
         )
     )
-    if not upper_only:
-        out = out.unionByName(
-            out.filter(F.col("i") != F.col("j")).select(
-                F.col("j").alias("i"), F.col("i").alias("j"), "cov"
-            )
-        )
-    return out
 
 
 def _covariance_from_blocked(
-    emb: DataFrame, vec_col: str, d: int, block: int, upper_only: bool
+    emb: DataFrame, vec_col: str, d: int, block: int
 ) -> DataFrame:
     """Blocked covariance path for D > block: bounded Arrow reduce per
     block-pair, THEN a single explode of the already-aggregated arrays
@@ -245,13 +236,12 @@ def _covariance_from_blocked(
         reduced.filter((F.col("bi") == 0) & (F.col("bj") == 0))
         .select(F.col("n").alias("n_total"))
     )
-    return _cov_cells_select(cells, means, n_row, upper_only)
+    return _cov_cells_select(cells, means, n_row)
 
 
 def embedding_covariance(
     emb: DataFrame,
     vec_col: str = "embedding",
-    upper_only: bool = True,
     block: int | None = None,
 ) -> DataFrame:
     """Sample covariance matrix of the embedding column as (i, j, cov)
@@ -273,7 +263,7 @@ def embedding_covariance(
     """
     d = _probe_dim(emb, vec_col)
     if block is not None and d > block:
-        return _covariance_from_blocked(emb, vec_col, d, block, upper_only)
+        return _covariance_from_blocked(emb, vec_col, d, block)
     parts = _partial_moments(emb, vec_col)
     # bounded reduce: the exchange carries ≤ n_batches × (D + D(D+1)/2)
     cells = (
@@ -306,7 +296,7 @@ def embedding_covariance(
     outer = cells.filter(F.col("pos") >= d).join(ij, "pos").select(
         "i", "j", F.col("s").alias("xx")
     )
-    return _cov_cells_select(outer, means, n_row, upper_only)
+    return _cov_cells_select(outer, means, n_row)
 
 
 def embedding_covariance_sql(

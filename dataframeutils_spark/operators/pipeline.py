@@ -45,7 +45,6 @@ def prepare_corpus(
     train_pct: int = 80,
     val_pct: int = 10,
     salt: str = "split",
-    portable: bool = True,
 ) -> DataFrame:
     """Per-surviving-document pipeline output: (doc_id, n_chars,
     quality, lang_pred, split).
@@ -91,7 +90,7 @@ def prepare_corpus(
         filtered.withColumn("keep_id", F.min("doc_id").over(w))
         .filter(F.col("doc_id") == F.col("keep_id"))
     )
-    split = _bucket(F.col("doc_id"), salt, portable)
+    split = _bucket(F.col("doc_id"), salt)
     return kept.select(
         "doc_id",
         "n_chars",
@@ -421,22 +420,6 @@ def snapshot_diff(
         status.alias("status"),
         "old_hash",
         "new_hash",
-    )
-
-
-def snapshot_diff_summary(
-    old_docs: DataFrame,
-    new_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(status, n_docs, min/max doc id) — the release-note numbers; one
-    map-side-combined groupBy over the diff."""
-    d = snapshot_diff(old_docs, new_docs, id_col=id_col, text_col=text_col)
-    return d.groupBy("status").agg(
-        F.count("*").alias("n_docs"),
-        F.min(id_col).alias("min_doc_id"),
-        F.max(id_col).alias("max_doc_id"),
     )
 
 

@@ -10,9 +10,8 @@ hash-bucket assignment on the stable key is the standard answer.
 
 Scale notes: pure scan-side projection — zero shuffle for assignment
 itself, one map-side-combinable groupBy for the summary. The portable
-md5 hash keeps the operator exactly oracle-checkable; ``xxhash64`` is
-the production hash at 100 TB (same plan shape, rows-only check), as
-in :mod:`dataframeutils_spark.operators.dedup`.
+md5 hash (:func:`~dataframeutils_spark.operators.dedup.portable_hash60`)
+keeps every operator exactly oracle-checkable.
 """
 
 from __future__ import annotations
@@ -21,7 +20,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.dedup import (
-    fast_hash64,
     portable_hash60,
     portable_hash60_sql,
 )
@@ -29,11 +27,9 @@ from dataframeutils_spark.operators.dedup import (
 SPLIT_BUCKETS = 100
 
 
-def _bucket(id_col: Column, salt: str, portable: bool) -> Column:
+def _bucket(id_col: Column, salt: str) -> Column:
     salted = F.concat(F.lit(salt + ":"), id_col.cast("string"))
-    if portable:
-        return portable_hash60(salted) % SPLIT_BUCKETS
-    return F.pmod(fast_hash64(salted), F.lit(SPLIT_BUCKETS))
+    return portable_hash60(salted) % SPLIT_BUCKETS
 
 
 def split_assign(
@@ -42,7 +38,6 @@ def split_assign(
     train_pct: int = 80,
     val_pct: int = 10,
     salt: str = "split",
-    portable: bool = True,
 ) -> DataFrame:
     """Input plus a deterministic ``split`` column ('train'/'val'/'test').
 
@@ -51,7 +46,7 @@ def split_assign(
     re-rolls the assignment; growing the corpus never reassigns an
     existing id (the property random splits lack).
     """
-    b = _bucket(F.col(id_col), salt, portable)
+    b = _bucket(F.col(id_col), salt)
     split = (
         F.when(b < train_pct, F.lit("train"))
         .when(b < train_pct + val_pct, F.lit("val"))
@@ -68,7 +63,6 @@ def split_summary(
     train_pct: int = 80,
     val_pct: int = 10,
     salt: str = "split",
-    portable: bool = True,
 ) -> DataFrame:
     """Stratification audit of the split: per (split, stratum) —
     (split, lang, n_docs, sum_chars, min_doc_id, max_doc_id).
@@ -78,7 +72,7 @@ def split_summary(
     output — hash-identical across engines with no float rounding.
     """
     return (
-        split_assign(docs, id_col, train_pct, val_pct, salt, portable)
+        split_assign(docs, id_col, train_pct, val_pct, salt)
         .groupBy("split", F.col(strat_col).alias("stratum"))
         .agg(
             F.count("*").alias("n_docs"),
@@ -94,14 +88,13 @@ def hash_sample(
     rate_pct: int,
     id_col: str = "doc_id",
     salt: str = "sample",
-    portable: bool = True,
 ) -> DataFrame:
     """Deterministic ``rate_pct``-percent downsample: keep rows whose
     hash bucket < rate_pct. Samples are NESTED across rates (the 5 %
     sample is a subset of the 10 % sample — hash_sample(5) ⊆
     hash_sample(10) for equal salt), which makes scaling-law runs
     comparable; a fresh ``salt`` draws an independent sample."""
-    return df.filter(_bucket(F.col(id_col), salt, portable) < rate_pct)
+    return df.filter(_bucket(F.col(id_col), salt) < rate_pct)
 
 
 def hash_sample_summary(
@@ -110,7 +103,6 @@ def hash_sample_summary(
     id_col: str = "doc_id",
     size_col: str = "n_chars",
     salt: str = "sample",
-    portable: bool = True,
 ) -> DataFrame:
     """Audit of :func:`hash_sample` across ``rates``: per rate —
     (rate_pct, n_rows, sum_chars, nested_violations).
@@ -134,7 +126,7 @@ def hash_sample_summary(
             for r in rates
         ]
     )
-    b = _bucket(F.col(id_col), salt, portable)
+    b = _bucket(F.col(id_col), salt)
     exploded = (
         df.select(b.alias("bucket"), F.col(size_col).alias("sz"))
         .select("bucket", "sz", F.explode(pairs).alias("rp"))
@@ -158,7 +150,6 @@ def stratified_hash_sample(
     id_col: str = "doc_id",
     default_pct: int = 100,
     salt: str = "mix",
-    portable: bool = True,
 ) -> DataFrame:
     """Deterministic per-stratum downsampling — the data-MIXTURE op: keep
     ``rates[stratum]`` percent of each stratum (default ``default_pct``
@@ -173,7 +164,7 @@ def stratified_hash_sample(
     """
     m = F.create_map(*[F.lit(x) for kv in rates.items() for x in kv])
     pct = F.coalesce(m[F.col(strat_col)], F.lit(default_pct))
-    return df.filter(_bucket(F.col(id_col), salt, portable) < pct)
+    return df.filter(_bucket(F.col(id_col), salt) < pct)
 
 
 def stratified_sample_summary(
@@ -184,13 +175,12 @@ def stratified_sample_summary(
     size_col: str = "n_chars",
     default_pct: int = 100,
     salt: str = "mix",
-    portable: bool = True,
 ) -> DataFrame:
     """Mixture audit: per stratum — (stratum, rate_pct, n_total, n_kept,
     kept_chars). Integer-exact; one map-side-combinable groupBy."""
     m = F.create_map(*[F.lit(x) for kv in rates.items() for x in kv])
     pct = F.coalesce(m[F.col(strat_col)], F.lit(default_pct))
-    kept = _bucket(F.col(id_col), salt, portable) < pct
+    kept = _bucket(F.col(id_col), salt) < pct
     return df.groupBy(F.col(strat_col).alias("stratum")).agg(
         F.max(pct).cast("long").alias("rate_pct"),
         F.count("*").alias("n_total"),
@@ -228,7 +218,6 @@ def quota_sample(
     strat_col: str = "lang",
     id_col: str = "doc_id",
     salt: str = "quota",
-    portable: bool = True,
     bucket_bits: int = 10,
 ) -> DataFrame:
     """EXACT-quota stratified sample: exactly ⌊n_s·pct/100⌋ rows per
@@ -259,7 +248,6 @@ def quota_sample(
         lambda total: ((total * pct) / F.lit(100)).cast("long"),
         id_col,
         salt,
-        portable,
         bucket_bits,
     )
 
@@ -270,17 +258,12 @@ def _lowest_hash_select(
     quota_of_total,
     id_col: str,
     salt: str,
-    portable: bool,
     bucket_bits: int,
 ) -> DataFrame:
     """Shared straddle-free selection core: keep each stratum's
     ``quota_of_total(stratum_count)`` lowest-hash rows (two-phase rank;
     see :func:`quota_sample` for the scale rationale)."""
-    h = (
-        portable_hash60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
-        if portable
-        else F.pmod(fast_hash64(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), F.lit(2**60))
-    )
+    h = portable_hash60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
     hashed = df.withColumn("_h", h).withColumn(
         "_b", F.shiftright(F.col("_h"), 60 - bucket_bits)
     )
@@ -319,7 +302,6 @@ def cap_per_group(
     strat_col: str = "source",
     id_col: str = "doc_id",
     salt: str = "cap",
-    portable: bool = True,
     bucket_bits: int = 10,
 ) -> DataFrame:
     """Domain capping: keep AT MOST ``cap`` rows per group (the web-
@@ -341,7 +323,6 @@ def cap_per_group(
         lambda total: F.least(total, F.lit(cap).cast("long")),
         id_col,
         salt,
-        portable,
         bucket_bits,
     )
 
@@ -545,12 +526,11 @@ GROUP BY 1
 # ---------------------------------------------------------------------------
 
 
-def shard_hash(id_col: Column, salt: str = "shard", portable: bool = True) -> Column:
+def shard_hash(id_col: Column, salt: str = "shard") -> Column:
     """The ONE shard-order hash shared by :func:`shard_manifest` and
     ``sources.formats.export_shards`` — a single definition so the
     manifest-realizes-the-export invariant cannot drift."""
-    hfn = portable_hash60 if portable else fast_hash64
-    return hfn(F.concat(F.lit(salt + ":"), id_col.cast("string")))
+    return portable_hash60(F.concat(F.lit(salt + ":"), id_col.cast("string")))
 
 
 def shard_manifest(
@@ -559,7 +539,6 @@ def shard_manifest(
     id_col: str = "doc_id",
     size_col: str = "n_chars",
     salt: str = "shard",
-    portable: bool = True,
 ) -> DataFrame:
     """Deterministic global-shuffle shard manifest for training export:
     (doc_id, shard, pos, offset) — which output shard each doc lands
@@ -580,7 +559,7 @@ def shard_manifest(
     """
     from pyspark.sql import Window
 
-    h = shard_hash(F.col(id_col), salt, portable)
+    h = shard_hash(F.col(id_col), salt)
     w = Window.partitionBy("shard").orderBy(F.col("h").asc(), F.col("doc_id").asc())
     return (
         df.select(
@@ -588,8 +567,6 @@ def shard_manifest(
             F.col(size_col).alias("sz"),
             h.alias("h"),
         )
-        # pmod, not %: xxhash64 is signed and % keeps the sign — plain
-        # `%` would emit shard ids in [-(n-1), n-1] (2n-1 directories)
         .withColumn("shard", F.pmod(F.col("h"), F.lit(n_shards)))
         .select(
             "doc_id",
@@ -931,7 +908,6 @@ def leakage_safe_split(
     n: int = 3,
     num_perm: int = 16,
     bands: int = 4,
-    portable: bool = True,
 ) -> DataFrame:
     """Train/val/test assignment where near-duplicate documents NEVER
     straddle a split boundary: (doc_id, rep_id, split).
@@ -967,7 +943,7 @@ def leakage_safe_split(
 
     clusters = duplicate_components(
         docs, text_col=text_col, id_col=id_col, n=n,
-        num_perm=num_perm, bands=bands, portable=portable,
+        num_perm=num_perm, bands=bands,
     )
     # no broadcast hint: the label table is the duplicate SUBSET (small
     # at test scale, but a few % of a 100 TB corpus is still TBs) — let
@@ -980,7 +956,7 @@ def leakage_safe_split(
             F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("rep_id"),
         )
     )
-    b = _bucket(F.col("rep_id"), salt, portable)
+    b = _bucket(F.col("rep_id"), salt)
     split = (
         F.when(b < train_pct, F.lit("train"))
         .when(b < train_pct + val_pct, F.lit("val"))

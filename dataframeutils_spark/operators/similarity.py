@@ -381,7 +381,6 @@ def ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
-    arrow_rerank: bool = False,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """LSH-bucketed approximate top-k: (query_id, neighbor_id, rank, cos_sim).
@@ -399,8 +398,7 @@ def ann_topk(
     """
     sigs = hyperplane_signatures(corpus, bits, id_col, vec_col, dim=dim)
     return _bucketed_topk_from_sigs(
-        sigs, corpus, k, bits, bands, id_col, vec_col, dim, arrow_rerank,
-        bucket_cap=bucket_cap,
+        sigs, corpus, k, bits, bands, id_col, vec_col, dim, bucket_cap=bucket_cap,
     )
 
 
@@ -412,7 +410,6 @@ def ann_topk_multiprobe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
-    arrow_rerank: bool = False,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
     probe_limit: int | None = None,
 ) -> DataFrame:
@@ -455,7 +452,7 @@ def ann_topk_multiprobe(
     (1+r)× probe set."""
     sigs = hyperplane_signatures(corpus, bits, id_col, vec_col, dim=dim)
     return _bucketed_topk_from_sigs(
-        sigs, corpus, k, bits, bands, id_col, vec_col, dim, arrow_rerank,
+        sigs, corpus, k, bits, bands, id_col, vec_col, dim,
         multiprobe=True, bucket_cap=bucket_cap, probe_limit=probe_limit,
     )
 
@@ -469,7 +466,6 @@ def _bucketed_topk_from_sigs(
     id_col: str,
     vec_col: str,
     dim: int | None = None,
-    arrow_rerank: bool = False,
     multiprobe: bool = False,
     bucket_cap: int | None = None,
     probe_limit: int | None = None,
@@ -564,34 +560,7 @@ def _bucketed_topk_from_sigs(
         .select("qid", "nid")
         .distinct()
     )
-    return _rerank_topk(cand, corpus, k, id_col, vec_col, dim, arrow=arrow_rerank)
-
-
-def _cos_batch_kernel(qv: pd.Series, nv: pd.Series) -> pd.Series:
-    """Arrow-vectorized cosine kernel: one numpy batch per Arrow chunk
-    instead of one interpreted lambda call per array element.
-
-    Module scope with real type hints so the modern ``pandas_udf``
-    inference path resolves the eval type (the deprecated
-    ``PandasUDFType.SCALAR`` enum form is slated for removal)."""
-    import numpy as np
-
-    # Arrow hands each cell over as an ndarray already — np.stack
-    # keeps the conversion in C (tolist() materializes python floats
-    # and measurably dominates the kernel)
-    q = np.stack(qv.to_numpy()).astype(np.float64, copy=False)
-    n = np.stack(nv.to_numpy()).astype(np.float64, copy=False)
-    dot = np.einsum("ij,ij->i", q, n)
-    den = np.sqrt(np.einsum("ij,ij->i", q, q)) * np.sqrt(
-        np.einsum("ij,ij->i", n, n)
-    )
-    with np.errstate(divide="ignore", invalid="ignore"):
-        out = np.where(den > 0, dot / den, np.nan)
-    return pd.Series(out)
-
-
-def _cos_batch_udf():
-    return F.pandas_udf(_cos_batch_kernel, "double")
+    return _rerank_topk(cand, corpus, k, id_col, vec_col, dim)
 
 
 def _rerank_topk(
@@ -601,7 +570,6 @@ def _rerank_topk(
     id_col: str,
     vec_col: str,
     dim: int | None = None,
-    arrow: bool = False,
 ) -> DataFrame:
     """Exact-cosine re-rank of a (qid, nid) candidate table → top-k.
 
@@ -612,32 +580,21 @@ def _rerank_topk(
     depend on which pair it appears in). Shared by the LSH and IVF
     paths — any blocking scheme reduces to a (qid, nid) table here.
 
-    ``arrow=True`` scores candidates with a vectorized pandas UDF
-    (numpy einsum per Arrow batch) instead of the JVM fold. Measured on
-    13.4M candidates at the 10× stress: fold 134 s → per-pair arrow
-    86 s — still transfer-bound (every vector crosses the Arrow
-    boundary once per PAIR), which is why the IVF production path uses
-    the cogrouped re-rank (:func:`_ivf_rerank_cogrouped`, 25 s) that
-    ships vectors once per bucket instead. The per-pair variant remains
-    for blocking schemes without disjoint buckets (LSH bands). BLAS
-    accumulation order differs from the sequential fold in the last
-    ulp, so arrow paths get rows-only driver checks; the oracle-exact
-    queries keep the fold.
+    Scoring is the JVM fold (oracle-exact). At scale every vector
+    crosses the join once per candidate PAIR (134 s on 13.4M candidates
+    at the 10× stress), which is why the IVF production path uses the
+    cogrouped re-rank (:func:`_ivf_rerank_cogrouped`, 25 s) that ships
+    vectors once per bucket instead.
     """
     e = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-    if arrow:
-        qv = e.select(F.col("vid").alias("qid"), F.col("v").alias("qv"))
-        nv = e.select(F.col("vid").alias("nid"), F.col("v").alias("nv"))
-        cos = _cos_batch_udf()(F.col("qv"), F.col("nv"))
-    else:
-        en = e.select("vid", "v", _norm(F.col("v"), dim).alias("nrm"))
-        qv = en.select(
-            F.col("vid").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-        )
-        nv = en.select(
-            F.col("vid").alias("nid"), F.col("v").alias("nv"), F.col("nrm").alias("nn")
-        )
-        cos = F.try_divide(_dot(F.col("qv"), F.col("nv"), dim), F.col("qn") * F.col("nn"))
+    en = e.select("vid", "v", _norm(F.col("v"), dim).alias("nrm"))
+    qv = en.select(
+        F.col("vid").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
+    )
+    nv = en.select(
+        F.col("vid").alias("nid"), F.col("v").alias("nv"), F.col("nrm").alias("nn")
+    )
+    cos = F.try_divide(_dot(F.col("qv"), F.col("nv"), dim), F.col("qn") * F.col("nn"))
     scored = cand.join(qv, "qid").join(nv, "nid").select("qid", "nid", cos.alias("cos_sim"))
     w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("nid"))
     return (
@@ -910,11 +867,12 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF-bucketed approximate top-k: (query_id, neighbor_id, rank, cos_sim).
 
-    ``arrow_rerank=True`` switches candidate scoring to the vectorized
-    pandas-UDF kernel (see :func:`_rerank_topk`) — the production
-    setting when data is clustered (hot inverted lists blow up the
-    candidate count, and re-rank, not assignment, dominates: measured
-    0.6 s assignment vs 134 s fold re-rank at the 10× stress).
+    ``arrow_rerank=True`` scores whole inverted lists with one numpy
+    matmul per cogroup (:func:`_ivf_rerank_cogrouped`) instead of the
+    JVM fold of :func:`_rerank_topk` — the production setting when data
+    is clustered (hot inverted lists blow up the candidate count, and
+    re-rank, not assignment, dominates: measured 0.6 s assignment vs
+    134 s fold re-rank at the 10× stress).
 
     The second scale path next to LSH (:func:`ann_topk`): every vector
     is assigned to its nearest coarse centroid (one inverted list per
@@ -1384,7 +1342,6 @@ def recall_audit(
     dim: int | None = None,
     max_rows: int | None = 100_000,
     sample_mod: int | None = 16,
-    production: bool = False,
     arms: tuple[str, ...] = ("ann_lsh", "ivf"),
     max_queries: int | None = None,
 ) -> DataFrame:
@@ -1413,9 +1370,7 @@ def recall_audit(
     quantizer with the Arrow assignment + re-rank paths — the
     configuration a real deployment runs on clustered corpora; no
     DuckDB k-means → rows-only, its recall floor on clustered data is
-    pinned in tests/test_northstar.py). ``production=True`` is sugar
-    appending both production arms (ivf_kmeans + ann_multiprobe) to
-    ``arms``, four methods with the defaults. Splitting the exact arms
+    pinned in tests/test_northstar.py). Splitting the exact arms
     and the k-means arm into two REGISTERED queries keeps the
     hash-gated audit plan small while the expensive production arm
     stays rows-only on its own.
@@ -1447,8 +1402,6 @@ def recall_audit(
     exact = brute_force_topk(
         emb, queries=queries, k=k, dim=dim, max_query_rows=max_rows
     ).select("query_id", "neighbor_id").localCheckpoint()
-    if production:
-        arms = tuple(dict.fromkeys(arms + ("ivf_kmeans", "ann_multiprobe")))
     builders = {
         "ann_lsh": lambda: ann_topk(emb, k=k, bits=bits, bands=bands, dim=dim),
         "ivf": lambda: ivf_topk(
@@ -1572,7 +1525,6 @@ def label_agreement(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    multiprobe: bool = False,
 ) -> DataFrame:
     """1-NN label agreement per class: for each vector whose LSH search
     returns a nearest neighbor, does that neighbor carry the same
@@ -1581,7 +1533,7 @@ def label_agreement(
     near-random agreement means the embedding does not separate the
     labels, however good the loss curve looked.
 
-    Uses the deterministic LSH path (single- or multi-probe), so the
+    Uses the deterministic single-probe LSH path, so the
     whole audit — including which queries HAVE a neighbor — is exactly
     oracle-checkable and runs at corpus scale (bucket-bounded; the
     guarded O(N²) brute force is unnecessary because agreement is a
@@ -1595,9 +1547,8 @@ def label_agreement(
     """
     from dataframeutils_spark.schema import decround
 
-    fn = ann_topk_multiprobe if multiprobe else ann_topk
-    nn = fn(emb, k=1, bits=bits, bands=bands, id_col=id_col,
-            vec_col=vec_col, dim=dim).filter(F.col("rank") == 1)
+    nn = ann_topk(emb, k=1, bits=bits, bands=bands, id_col=id_col,
+                  vec_col=vec_col, dim=dim).filter(F.col("rank") == 1)
     lab = emb.select(F.col(id_col).alias("_id"), F.col(label_col).alias("_lab"))
     q_lab = lab.select(F.col("_id").alias("query_id"), F.col("_lab").alias("q_label"))
     n_lab = lab.select(F.col("_id").alias("neighbor_id"), F.col("_lab").alias("n_label"))
@@ -1629,15 +1580,12 @@ def label_agreement_sql(
     bands: int = 4,
     dim: int = 64,
     table: str = "embeddings",
-    multiprobe: bool = False,
 ) -> str:
     """DuckDB oracle for :func:`label_agreement` — the ann_topk oracle
     at k=1 joined with labels, same aggregates."""
     from dataframeutils_spark.schema import decround_sql
 
-    ann = ann_topk_sql(
-        k=1, bits=bits, bands=bands, table=table, dim=dim, multiprobe=multiprobe
-    )
+    ann = ann_topk_sql(k=1, bits=bits, bands=bands, table=table, dim=dim)
     rate = decround_sql("n_agree * 1.0 / n_queries")
     cov = decround_sql("coalesce(n_queries, 0) * 1.0 / class_size")
     return f"""

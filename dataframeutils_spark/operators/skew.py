@@ -29,7 +29,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dataframeutils_spark.operators.dedup import fast_hash64, portable_hash60
+from dataframeutils_spark.operators.dedup import portable_hash60
 
 
 def salted_join(
@@ -39,7 +39,6 @@ def salted_join(
     row_col: str,
     n_salt: int = 8,
     how: str = "inner",
-    portable: bool = True,
 ) -> DataFrame:
     """Join ``fact`` to ``dim`` on ``on`` with ``n_salt``-way key
     salting; result ≡ ``fact.join(dim, on, how)``.
@@ -55,17 +54,14 @@ def salted_join(
     if how not in ("inner", "left"):
         raise ValueError(f"salted_join supports inner/left, got {how!r}")
     salted = F.concat(F.lit("salt:"), F.col(row_col).cast("string"))
-    h = portable_hash60(salted) if portable else F.abs(fast_hash64(salted))
-    f = fact.withColumn("_salt", (h % n_salt).cast("int"))
+    f = fact.withColumn("_salt", (portable_hash60(salted) % n_salt).cast("int"))
     # sequence of int literals explodes to int directly (a cast wrapped
     # AROUND the generator is rejected: UNSUPPORTED_GENERATOR)
     d = dim.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
     return f.join(d, on=[*on, "_salt"], how=how).drop("_salt")
 
 
-def user_profile_salted(
-    events: DataFrame, n_salt: int = 8, portable: bool = True
-) -> DataFrame:
+def user_profile_salted(events: DataFrame, n_salt: int = 8) -> DataFrame:
     """Registered-query shape: every event joined to its user's mean
     value via :func:`salted_join` — (event_id, user_id, value,
     user_avg). The dim is the per-user profile aggregate; the fact is
@@ -73,10 +69,7 @@ def user_profile_salted(
     surface."""
     fact = events.select("event_id", "user_id", "value")
     dim = events.groupBy("user_id").agg(F.avg("value").alias("user_avg"))
-    return salted_join(
-        fact, dim, on=("user_id",), row_col="event_id", n_salt=n_salt,
-        portable=portable,
-    )
+    return salted_join(fact, dim, on=("user_id",), row_col="event_id", n_salt=n_salt)
 
 
 def user_profile_salted_sql(table: str = "events") -> str:

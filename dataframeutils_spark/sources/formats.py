@@ -8,10 +8,10 @@ types between runs, both unacceptable at 100 TB — and validate against
 the expected column contract up front so a bad feed fails at plan time,
 not 3 hours into a job.
 
-Writers: partitioned parquet is the canonical lake layout (partition
-column → directory pruning at read time); bucketed tables co-locate
-join/agg keys so repeated joins on the bucket key skip their shuffle
-entirely (Spark reuses the bucketing as the required distribution).
+The one writer, :func:`export_shards`, lays the corpus out as the
+deterministic training shards that
+:func:`~dataframeutils_spark.operators.sampling.shard_manifest`
+describes.
 """
 
 from __future__ import annotations
@@ -68,40 +68,6 @@ def read_documents_csv(
     return _check_columns(df, schema, f"read_documents_csv({path})")
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_by: tuple[str, ...] = ("lang",), mode: str = "overwrite"
-) -> None:
-    """Hive-layout partitioned parquet: one directory per partition
-    value; a reader filtering on the partition column prunes whole
-    directories before any I/O (PartitionFilters in the scan node, vs
-    PushedFilters which still open footers). Keep partition cardinality
-    bounded (lang/source/date — never doc_id): each partition × task
-    writes a file, and millions of tiny files kill both the driver's
-    listing and HDFS/S3 metadata."""
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_by: str = "doc_id",
-    num_buckets: int = 16,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table (saveAsTable — bucketing metadata lives in
-    the catalog, plain ``.parquet(path)`` cannot carry it). Joins and
-    aggregations keyed on ``bucket_by`` between tables with matching
-    bucket counts run shuffle-free: the on-disk hash distribution
-    satisfies Catalyst's required child distribution. The one-time
-    write cost IS a shuffle into ``num_buckets`` — pay it once, skip it
-    on every subsequent join."""
-    w = df.write.mode(mode).bucketBy(num_buckets, bucket_by)
-    if sort_by:
-        w = w.sortBy(sort_by)
-    w.format("parquet").saveAsTable(table_name)
-
-
 def read_documents_orc(
     spark: SparkSession, path: str, schema: T.StructType = DOCUMENTS_SCHEMA
 ) -> DataFrame:
@@ -111,10 +77,6 @@ def read_documents_orc(
     the stripe reader."""
     df = spark.read.schema(schema).orc(path)
     return _check_columns(df, schema, f"read_documents_orc({path})")
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
 
 
 def read_documents_xml(

@@ -28,9 +28,23 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
+def read_nanos_as_long(spark: SparkSession) -> None:
+    """Let this session read the events table's ``ts`` column.
+
+    events.parquet stores ``ts`` as parquet timestamp[ns], which Spark
+    rejects (``PARQUET_TYPE_ILLEGAL``) unless nanos are read as a long.
+    Every events reader — :func:`load_table` and the streaming source —
+    calls this before touching the file, so the first events read of a
+    fresh (even vanilla) session already works.
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"Unknown table {name!r}; expected one of {TABLES}")
+    if name == "events":
+        read_nanos_as_long(spark)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -64,8 +78,8 @@ def events_bins_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics: ties on timestamp keep original row order —
     ``weighted_bin_calculator.py:62``).
 
-    The driver's events.parquet stores ``ts`` as parquet timestamp[ns],
-    which Spark rejects; we read nanos as long and floor-truncate to
+    events.parquet stores ``ts`` as parquet timestamp[ns];
+    :func:`load_table` reads nanos as long and we floor-truncate to
     microseconds — exactly what DuckDB does when it reads the same file,
     so both engines see identical timestamps (and identical tie sets).
 
@@ -76,7 +90,6 @@ def events_bins_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1e-12 summation-order noise. Outputs are divided back to value
     units by the query layer.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = load_table(spark, sf_dir, "events")
     ts_type = dict((f.name, f.dataType.simpleString()) for f in ev.schema.fields)["ts"]
     # integer DIV, not float division: ns epoch values exceed 2^53 so a

@@ -14,7 +14,6 @@ an option.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def streaming_dedup(
@@ -37,17 +36,3 @@ def streaming_dedup(
         )
     return events.dropDuplicates(list(keys))
 
-
-def streaming_content_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Exact-content dedup of a document stream: hash the text to a
-    32-byte digest FIRST so the dedup state (and the shuffle) carries
-    hashes, never document bodies — the same never-shuffle-the-text
-    rule as batch ``exact_dedup``."""
-    hashed = docs.withColumn("text_hash", F.md5(F.col(text_col)))
-    return streaming_dedup(hashed, ("text_hash",), ts_col=ts_col, watermark=watermark)

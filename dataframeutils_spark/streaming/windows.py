@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from dataframeutils_spark.sources.testdata import read_nanos_as_long
+
 
 def read_events_stream(
     spark,
@@ -46,7 +48,7 @@ def read_events_stream(
     """
     import os
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    read_nanos_as_long(spark)
     table_dir = os.path.join(sf_dir, glob)
     if os.path.isdir(table_dir):
         # directory-per-table layout (multi-file parquet, e.g. the

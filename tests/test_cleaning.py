@@ -44,19 +44,6 @@ def test_decontaminate_flags_overlap(spark):
     assert out[3]["n_grams"] == 0 and out[3]["contaminated"] is False
 
 
-def test_decontaminate_hash_grams_matches_string_path(spark):
-    bench = _docs(spark, [(100, "a b c d e f")])
-    corpus = _docs(
-        spark, [(1, "a b c d x"), (2, "p q r s t"), (3, "c d e f g h")]
-    )
-    plain = cleaning.decontaminate(corpus, bench, n=3)
-    hashed = cleaning.decontaminate(corpus, bench, n=3, hash_grams=True)
-    key = lambda df: sorted(  # noqa: E731
-        (r["doc_id"], r["n_grams"], r["n_hit_grams"]) for r in df.collect()
-    )
-    assert key(plain) == key(hashed)
-
-
 def test_decontaminate_counts_distinct_grams_once(spark):
     # repeated n-gram in the corpus doc counts once (distinct semantics)
     bench = _docs(spark, [(100, "a b c")])

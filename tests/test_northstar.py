@@ -732,22 +732,6 @@ def test_weighted_sample_determinism_and_bias(spark, sf_docs):
     assert set(c["doc_id"]) != set(a["doc_id"])
 
 
-def test_snapshot_split_production_hash_is_partition(spark, sf_docs):
-    """portable=False (xxhash64): the split must still be a PARTITION —
-    Spark's signed % once dropped 22% of rows from both halves."""
-    corpus, batch = dedup.snapshot_split(sf_docs, portable=False)
-    assert corpus.count() + batch.count() == sf_docs.count()
-    assert corpus.join(batch, "doc_id").count() == 0
-
-
-def test_shard_manifest_production_hash_shard_range(spark, sf_docs):
-    from dataframeutils_spark.operators import sampling
-
-    out = sampling.shard_manifest(sf_docs, n_shards=8, portable=False).toPandas()
-    assert len(out) == sf_docs.count()
-    assert set(out["shard"]) <= set(range(8)), sorted(set(out["shard"]))
-
-
 def test_recall_audit_bounds_and_budget_response(spark):
     """Recall lies in [0,1]; widening the IVF probe budget can only
     help (more lists searched ⊇ fewer)."""
@@ -1033,11 +1017,6 @@ def test_snapshot_diff_statuses(spark):
     new = docs_df(spark, [(2, "b"), (3, "c2"), (4, "d")])
     got = {r["doc_id"]: r["status"] for r in pipeline.snapshot_diff(old, new).collect()}
     assert got == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
-    summ = {
-        r["status"]: r["n_docs"]
-        for r in pipeline.snapshot_diff_summary(old, new).collect()
-    }
-    assert summ == {"removed": 1, "unchanged": 1, "changed": 1, "added": 1}
 
 
 def test_curriculum_manifest_invariants(spark):
@@ -1132,7 +1111,7 @@ def test_production_ivf_kmeans_recall_floor(spark):
         r["method"]: r
         for r in similarity.recall_audit(
             emb, k=5, bits=32, bands=4, n_probe=2, dim=d,
-            sample_mod=4, production=True,
+            sample_mod=4, arms=("ann_lsh", "ivf", "ivf_kmeans", "ann_multiprobe"),
         ).collect()
     }
     assert set(out) == {"ann_lsh", "ivf", "ivf_kmeans", "ann_multiprobe"}
@@ -1548,11 +1527,7 @@ def test_minhash_signatures_match_exploded_formulation(spark):
         salted = F.concat(
             F.col("perm").cast("string"), F.lit(":"), F.col("shingle")
         )
-        h = (
-            dedup.portable_hash60(salted)
-            if portable
-            else dedup.fast_hash64(salted)
-        )
+        h = dedup.portable_hash60(salted) if portable else F.xxhash64(salted)
         old = (
             sh.select(
                 "doc_id",

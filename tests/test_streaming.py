@@ -108,20 +108,6 @@ def test_streaming_dedup_drops_repeats_first_wins(spark):
     assert got.groupBy("user_id", "event_type").count().filter(F.col("count") > 1).count() == 0
 
 
-def test_streaming_content_dedup_hashes_not_text(spark):
-    from dataframeutils_spark.streaming import dedup as SD
-
-    rows = [(1, "same body", "2024-01-01 00:00:00"),
-            (2, "same body", "2024-01-01 00:05:00"),
-            (3, "other body", "2024-01-01 00:10:00")]
-    df = spark.createDataFrame(rows, "doc_id long, text string, ts string").withColumn(
-        "ts", F.to_timestamp("ts")
-    )
-    out = SD.streaming_content_dedup(df)
-    assert out.count() == 2
-    assert "text_hash" in out.columns
-
-
 @pytest.fixture(scope="module")
 def multi_file_events_dir(spark, tmp_path_factory):
     """events split into 3 time-ordered parquet files with strictly

@@ -221,3 +221,31 @@ def test_driver_oracle_parity_weighted_bins(spark, ddb):
     q = driver.all_queries()["weighted_bins"]
     sql = driver.all_oracles()["weighted_bins"]
     assert_matches_oracle(q(spark, SF_DIR), ddb, sql)
+
+
+def test_weighted_bins_fresh_session_reads_timestamp_ns(spark, tmp_path):
+    """events.ts stored as parquet timestamp[ns] (the shipped layout):
+    the flagship must work as the FIRST events read of a session — its
+    raw row count runs before the bins input is built, so the events
+    reader itself has to make the nanos column readable."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_DIR}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(t, tmp_path / "events.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+    )
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    try:
+        assert_matches_oracle(
+            driver.q_weighted_bins(spark, str(tmp_path)),
+            con,
+            driver.all_oracles()["weighted_bins"],
+        )
+    finally:
+        con.close()

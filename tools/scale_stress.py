@@ -431,7 +431,8 @@ def _jvm_peak_rss_gb() -> float:
 def generate(spark, mult: int, out_dir: str) -> None:
     from pyspark.sql import functions as F
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    from dataframeutils_spark.sources.testdata import load_table
+
     m = spark.range(mult).select(F.col("id").cast("int").alias("m"))
     # Write every table across defaultParallelism files. The sf0.1
     # source is ONE file; crossJoin(broadcast) preserves that, and the
@@ -443,7 +444,7 @@ def generate(spark, mult: int, out_dir: str) -> None:
     # stress data should model that, not a degenerate one-file layout.
     par = spark.sparkContext.defaultParallelism
 
-    ev = spark.read.parquet(f"{SRC}/events.parquet").crossJoin(F.broadcast(m))
+    ev = load_table(spark, SRC, "events").crossJoin(F.broadcast(m))
     ts_type = dict((f.name, f.dataType.simpleString()) for f in ev.schema.fields)["ts"]
     shifted_ts = (
         # int64 nanos (nanosAsLong sessions): shift in raw nanos
