@@ -558,15 +558,9 @@ def rank_transform(long_df: DataFrame, min_len: int = 10) -> DataFrame:
 
     Output: (grp, feature, date, value, pct).
     """
-    from dataframeutils_spark.schema import decround
+    from dataframeutils_spark.schema import decround, gate_min_len
 
-    w = Window.partitionBy("grp", "feature")
-    g = (
-        long_df.filter(F.col("value").isNotNull())
-        .withColumn("_n", F.count("value").over(w))
-        .filter(F.col("_n") >= min_len)
-        .withColumn("_rv", decround(F.col("value")))
-    )
+    g = gate_min_len(long_df, min_len).withColumn("_rv", decround(F.col("value")))
     wr = Window.partitionBy("grp", "feature").orderBy("_rv")
     wt = Window.partitionBy("grp", "feature", "_rv")
     avg_rank = F.rank().over(wr) + (F.count("*").over(wt) - F.lit(1)) / F.lit(2.0)

@@ -23,6 +23,19 @@ oracle-checkable end-to-end (:func:`real_media_table` synthesizes
 VALID PNG/WAV payloads whose header fields are hash-derived, so the
 real parsers are exactly checkable too).
 
+Every real-codec tier is built from two Arrow-batched scaffolds:
+
+* :func:`_synth_table` — the fixture side. Each ``*_media_table``
+  builder selects ``(media_id, text)``, derives a seed from the text
+  (the first 15 hex digits of its md5, the same arithmetic the SQL
+  oracles spell as ``_SEED_SQL``) and synthesizes one valid payload per
+  document inside ``mapInPandas`` — scan-side, no driver round-trip,
+  payload bytes never shuffle. Builders whose codec is slow pure Python
+  first spread the narrow ``(media_id, text)`` rows over the cores.
+* :func:`_map_payloads` — the decode side. Each decoder keeps one
+  media type and maps every payload to 0..n narrow output rows inside
+  ``mapInPandas``, so only those rows ever flow downstream.
+
 Scale notes: media rows are fat (MBs); the mapInPandas stages set no
 per-group boundary (pure per-row map → no shuffle at all), and callers
 should keep ``spark.sql.files.maxPartitionBytes`` at its default so a
@@ -34,7 +47,7 @@ cheap columns only.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -63,6 +76,71 @@ METADATA_SCHEMA = (
     "media_id long, media_type string, n_bytes long, content_md5 string, "
     "width int, height int, n_frames int"
 )
+
+# the fixture seed in SQL: first 15 hex digits of md5(text) as a bigint
+_SEED_SQL = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+
+
+def _synth_table(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    make: Callable[[int, int], tuple[str, bytes]],
+    spread: bool,
+) -> DataFrame:
+    """Fixture scaffold: one synthesized payload per document.
+
+    ``make(media_id, h)`` returns ``(media_type, payload)``, where ``h``
+    is the document's seed (first 15 hex digits of md5(text)). With
+    ``spread`` the narrow ``(media_id, text)`` rows are first hash-spread
+    over ``defaultParallelism`` partitions, so pure-Python codec work
+    uses every core even when the documents arrive as one small file.
+    """
+
+    def synth_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            types, payloads = [], []
+            for mid, text in zip(pdf["media_id"], pdf["text"]):
+                h = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:15], 16)
+                media_type, payload = make(mid, h)
+                types.append(media_type)
+                payloads.append(payload)
+            yield pd.DataFrame(
+                {"media_id": pdf["media_id"], "media_type": types, "content": payloads}
+            )
+
+    src = docs.select(F.col(id_col).alias("media_id"), F.col(text_col).alias("text"))
+    if spread:
+        par = docs.sparkSession.sparkContext.defaultParallelism
+        src = src.repartition(par, F.col("media_id"))
+    return src.mapInPandas(
+        synth_batches, schema="media_id long, media_type string, content binary"
+    )
+
+
+def _map_payloads(
+    media: DataFrame,
+    media_type: str,
+    rows_of: Callable[[int, bytes], Iterable[tuple]],
+    schema: str,
+) -> DataFrame:
+    """Decode scaffold: keep ``media_type`` rows and map each payload
+    to the 0..n output rows ``rows_of(media_id, payload)`` yields, as
+    tuples in ``schema`` column order."""
+    cols = [f.split()[0] for f in schema.split(",")]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [
+                row
+                for mid, c in zip(pdf["media_id"], pdf["content"])
+                for row in rows_of(mid, bytes(c))
+            ]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return media.filter(F.col("media_type") == media_type).mapInPandas(
+        batches, schema=schema
+    )
 
 
 def media_table(
@@ -384,37 +462,18 @@ def real_media_table(
     so :func:`decode_metadata` with ``use_real_codecs=True`` is exactly
     checkable: the parser must recover precisely the fields the
     generator embedded.
-
-    Synthesis runs inside ``mapInPandas`` (scan-side, no shuffle, no
-    driver round-trip) — the same stage shape real payload ingestion
-    has.
     """
 
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            types, payloads = [], []
-            for mid, text in zip(pdf["media_id"], pdf["text"]):
-                h = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:15], 16)
-                if mid % 2 == 0:
-                    types.append("image")
-                    payloads.append(
-                        synthesize_png(8 + h % _PNG_W_MOD, 8 + (h // _PNG_W_MOD) % _PNG_H_MOD)
-                    )
-                else:
-                    types.append("audio")
-                    payloads.append(
-                        synthesize_wav(
-                            8000 + h % _WAV_RATE_MOD, 1 + h % 2, 16 + (h // 7) % _WAV_N_MOD
-                        )
-                    )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "media_type": types, "content": payloads}
+    def make(mid: int, h: int) -> tuple[str, bytes]:
+        if mid % 2 == 0:
+            return "image", synthesize_png(
+                8 + h % _PNG_W_MOD, 8 + (h // _PNG_W_MOD) % _PNG_H_MOD
             )
+        return "audio", synthesize_wav(
+            8000 + h % _WAV_RATE_MOD, 1 + h % 2, 16 + (h // 7) % _WAV_N_MOD
+        )
 
-    src = docs.select(F.col(id_col).alias("media_id"), F.col(text_col).alias("text"))
-    return src.mapInPandas(
-        synth_batches, schema="media_id long, media_type string, content binary"
-    )
+    return _synth_table(docs, text_col, id_col, make, spread=False)
 
 
 def real_decode_metadata_sql(table: str = "documents") -> str:
@@ -425,7 +484,7 @@ def real_decode_metadata_sql(table: str = "documents") -> str:
     hash mismatch. content_md5/n_bytes are md5-of-generated-bytes and
     are not SQL-expressible, so the checked projection excludes them.
     """
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     return f"""
 SELECT doc_id AS media_id,
        CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS media_type,
@@ -469,7 +528,7 @@ def decode_metadata_sql(table: str = "documents") -> str:
     """DuckDB oracle for media_table → decode_metadata over documents:
     the fake decode is pure hash arithmetic, so the whole multimodal
     pipeline (binary encode → batch decode → metadata) is checkable."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     return f"""
 SELECT doc_id AS media_id,
        ['image','audio','video'][(doc_id % 3 + 1)::INT] AS media_type,
@@ -486,7 +545,7 @@ def sample_frames_sql(table: str = "documents", every_k: int = 8) -> str:
     """DuckDB oracle for media_table → sample_frames over documents:
     the fake frame count is hash arithmetic, so the frame fan-out is
     exactly checkable."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     return f"""
 WITH v AS (
   SELECT doc_id AS media_id, (1 + {h} % {_FRAME_MOD})::INT AS n_frames
@@ -508,31 +567,19 @@ def resize_images_real(
     work happened: for the gradient fixtures it equals a pure-SQL
     double sum the oracle computes independently, so a wrong filter
     implementation, index map, or channel order shows as a value
-    mismatch, not just a shape difference. Same scan-side mapInPandas
-    shape as the stub tier — no shuffle, payloads never leave the
-    stage.
+    mismatch, not just a shape difference.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                w, h, img = decode_png_pixels(bytes(c))
-                small = resize_nearest(img, target_w, target_h)
-                rows.append((mid, w, h, target_w, target_h, int(small.sum())))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "src_w", "src_h", "out_w", "out_h", "px_sum",
-                ],
-            )
+    def rows_of(mid: int, b: bytes):
+        w, h, img = decode_png_pixels(b)
+        small = resize_nearest(img, target_w, target_h)
+        yield mid, w, h, target_w, target_h, int(small.sum())
 
-    return media.filter(F.col("media_type") == "image").mapInPandas(
-        batches,
-        schema=(
-            "media_id long, src_w int, src_h int, out_w int, out_h int, "
-            "px_sum long"
-        ),
+    return _map_payloads(
+        media,
+        "image",
+        rows_of,
+        "media_id long, src_w int, src_h int, out_w int, out_h int, px_sum long",
     )
 
 
@@ -543,7 +590,7 @@ def resize_real_sql(
     recomputes the nearest-neighbor-resized gradient sum from the same
     md5 arithmetic that sized the synthesized PNG —
     Σ_{x,y} (7·((x·w)//ow) + 13·((y·h)//oh)) mod 251."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     return f"""
 WITH dims AS (
   SELECT doc_id AS media_id,
@@ -608,27 +655,17 @@ def _dhash_bands(img) -> tuple[int, int, int, int]:
 def image_dhash(media: DataFrame) -> DataFrame:
     """Perceptual difference-hash per image: (media_id, width, height,
     b0..b3) with the 64-bit dHash packed as four 16-bit bands. REAL
-    pixel decode (PNG, all filter types) inside the scan task; only the
-    narrow hash rows flow on — the shape that holds at 100 TB of
-    payloads."""
+    pixel decode (PNG, all filter types) per payload."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                w, h, img = decode_png_pixels(bytes(c))
-                rows.append((mid, w, h) + _dhash_bands(img))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "b0", "b1", "b2", "b3"],
-            )
+    def rows_of(mid: int, b: bytes):
+        w, h, img = decode_png_pixels(b)
+        yield (mid, w, h) + _dhash_bands(img)
 
-    return media.filter(F.col("media_type") == "image").mapInPandas(
-        batches,
-        schema=(
-            "media_id long, width int, height int, "
-            "b0 int, b1 int, b2 int, b3 int"
-        ),
+    return _map_payloads(
+        media,
+        "image",
+        rows_of,
+        "media_id long, width int, height int, b0 int, b1 int, b2 int, b3 int",
     )
 
 
@@ -686,7 +723,7 @@ def image_dhash_sql(table: str = "documents") -> str:
     The ENGINE decodes real PNG bytes and resamples real pixels; the
     oracle predicts the result from the generator arithmetic, so any
     decode/resample/packing bug shows as a hash mismatch."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     return f"""
 WITH dims AS (
   SELECT doc_id AS media_id,
@@ -878,19 +915,11 @@ def sample_frames(media: DataFrame, every_k: int = 8) -> DataFrame:
     which is the memory-correct shape at scale.
     """
 
-    def sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs = [], []
-            for mid, t, c in zip(pdf["media_id"], pdf["media_type"], pdf["content"]):
-                n_frames = _fake_decode(t, bytes(c))[3]
-                for k in range(0, n_frames, every_k):
-                    ids.append(mid)
-                    idxs.append(k)
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs})
+    def rows_of(mid: int, b: bytes):
+        for k in range(0, _fake_decode("video", b)[3], every_k):
+            yield mid, k
 
-    return media.filter(F.col("media_type") == "video").mapInPandas(
-        sample_batches, schema="media_id long, frame_idx int"
-    )
+    return _map_payloads(media, "video", rows_of, "media_id long, frame_idx int")
 
 
 def image_features(media: DataFrame) -> DataFrame:
@@ -902,43 +931,29 @@ def image_features(media: DataFrame) -> DataFrame:
 
     ``px_mean`` is computed as (integer pixel sum) / (w·h) so both
     engines divide identical integers — exactly comparable without a
-    rounding contract. Same scan-side ``mapInPandas`` shape as decode
-    and resize: no shuffle, payloads never leave the stage; at 100 TB
-    the feature rows (a few ints per image) are what shuffles, never
-    rasters.
+    rounding contract. At 100 TB the feature rows (a few ints per
+    image) are what shuffles, never rasters.
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                w, h, img = decode_png_pixels(bytes(c))
-                flat = np.asarray(img, dtype=np.int64).ravel()
-                hist = np.bincount(flat // 64, minlength=4)[:4]
-                rows.append(
-                    (
-                        mid, w, h,
-                        float(int(flat.sum()) / flat.size),
-                        int(flat.min()), int(flat.max()),
-                        int(hist[0]), int(hist[1]), int(hist[2]), int(hist[3]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "src_w", "src_h", "px_mean", "px_min",
-                    "px_max", "hist_0", "hist_1", "hist_2", "hist_3",
-                ],
-            )
+    def rows_of(mid: int, b: bytes):
+        w, h, img = decode_png_pixels(b)
+        flat = np.asarray(img, dtype=np.int64).ravel()
+        hist = np.bincount(flat // 64, minlength=4)[:4]
+        yield (
+            mid, w, h,
+            float(int(flat.sum()) / flat.size),
+            int(flat.min()), int(flat.max()),
+            int(hist[0]), int(hist[1]), int(hist[2]), int(hist[3]),
+        )
 
-    return media.filter(F.col("media_type") == "image").mapInPandas(
-        batches,
-        schema=(
-            "media_id long, src_w int, src_h int, px_mean double, "
-            "px_min int, px_max int, hist_0 long, hist_1 long, "
-            "hist_2 long, hist_3 long"
-        ),
+    return _map_payloads(
+        media,
+        "image",
+        rows_of,
+        "media_id long, src_w int, src_h int, px_mean double, "
+        "px_min int, px_max int, hist_0 long, hist_1 long, "
+        "hist_2 long, hist_3 long",
     )
 
 
@@ -947,7 +962,7 @@ def image_features_sql(table: str = "documents") -> str:
     recomputes every feature from the generator's gradient arithmetic
     pixel(x,y) = (7x+13y) mod 251 — the decoder must recover exactly
     this raster for the histogram and extrema to match."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     px = "(7 * x + 13 * y) % 251"
     hist_col = (
         "CAST(list_sum(list_transform(range(hgt), y -> "
@@ -1245,42 +1260,38 @@ def gif_media_table(
 ) -> DataFrame:
     """Fixture builder for the animated-GIF pixel tier: one valid GIF
     per document, header fields and rasters hash-derived (same md5
-    arithmetic as :func:`real_media_table`), synthesized scan-side in
-    ``mapInPandas`` — no shuffle, no driver round-trip."""
+    arithmetic as :func:`real_media_table`)."""
 
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:15], 16)
-                payloads.append(
-                    synthesize_gif(
-                        8 + h % _GIF_W_MOD,
-                        8 + (h // _GIF_W_MOD) % _GIF_H_MOD,
-                        2 + (h // 11) % _GIF_F_MOD,
-                        # every 3rd doc interlaced: decoded pixels are
-                        # identical, so the oracle also pins the
-                        # de-interlace path
-                        interlaced=(h % 3 == 0),
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": "video",
-                    "content": payloads,
-                }
-            )
+    def make(mid: int, h: int) -> tuple[str, bytes]:
+        return "video", synthesize_gif(
+            8 + h % _GIF_W_MOD,
+            8 + (h // _GIF_W_MOD) % _GIF_H_MOD,
+            2 + (h // 11) % _GIF_F_MOD,
+            # every 3rd doc interlaced: decoded pixels are identical,
+            # so the oracle also pins the de-interlace path
+            interlaced=(h % 3 == 0),
+        )
 
-    src = docs.select(F.col(id_col).alias("media_id"), F.col(text_col).alias("text"))
-    # spread the pure-Python LZW work across cores even when the doc
-    # source is one small parquet file (one narrow (id, text) shuffle;
-    # measured 13.5 s single-task → ~1.5 s at sf0.1). At corpus scale
-    # the input arrives in many splits and this is a cheap no-op-shaped
-    # round-robin of already-narrow rows.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return src.repartition(par, F.col("media_id")).mapInPandas(
-        synth_batches, schema="media_id long, media_type string, content binary"
+    return _synth_table(docs, text_col, id_col, make, spread=True)
+
+
+def _frame_stats(media: DataFrame, every_k: int, decode_frames) -> DataFrame:
+    """Per-frame intensity stats of every ``every_k``-th frame, for a
+    ``decode_frames(payload) -> (width, height, frames)`` video codec."""
+    import numpy as np
+
+    def rows_of(mid: int, b: bytes):
+        w, h, frames = decode_frames(b)
+        for fi in range(0, len(frames), every_k):
+            flat = frames[fi].astype(np.int64).ravel()
+            yield mid, fi, w, h, int(flat.sum()), int(flat.min()), int(flat.max())
+
+    return _map_payloads(
+        media,
+        "video",
+        rows_of,
+        "media_id long, frame_idx int, src_w int, src_h int, "
+        "px_sum long, px_min int, px_max int",
     )
 
 
@@ -1288,38 +1299,9 @@ def gif_frame_stats(media: DataFrame, every_k: int = 2) -> DataFrame:
     """REAL-pixel frame sampling: decode every ``every_k``-th frame of
     each GIF payload and reduce it to per-frame intensity stats —
     (media_id, frame_idx, src_w, src_h, px_sum, px_min, px_max).
-
-    Same scale shape as the PNG feature stage: payloads stay inside
-    their scan task (``mapInPandas``, no shuffle), and only the narrow
-    per-frame stat rows flow downstream. At 100 TB the frame fan-out
-    multiplies ROW COUNT, never payload bytes."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                w, h, frames = decode_gif_frames(bytes(c))
-                for fi in range(0, len(frames), every_k):
-                    flat = frames[fi].astype(np.int64).ravel()
-                    rows.append(
-                        (mid, fi, w, h, int(flat.sum()), int(flat.min()), int(flat.max()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "src_w", "src_h",
-                    "px_sum", "px_min", "px_max",
-                ],
-            )
-
-    return media.filter(F.col("media_type") == "video").mapInPandas(
-        batches,
-        schema=(
-            "media_id long, frame_idx int, src_w int, src_h int, "
-            "px_sum long, px_min int, px_max int"
-        ),
-    )
+    At 100 TB the frame fan-out multiplies ROW COUNT, never payload
+    bytes."""
+    return _frame_stats(media, every_k, decode_gif_frames)
 
 
 def gif_frame_stats_sql(table: str = "documents", every_k: int = 2) -> str:
@@ -1329,7 +1311,7 @@ def gif_frame_stats_sql(table: str = "documents", every_k: int = 2) -> str:
     decoder must recover exactly this raster for every checked frame,
     so any codec bug (width schedule, sub-block reassembly, palette
     mapping) shows as a value mismatch, not just a row-count drift."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     px = "(7 * x + 13 * y + 11 * f) % 251"
     return f"""
 WITH dims AS (
@@ -1374,71 +1356,38 @@ def jpeg_media_table(
 ) -> DataFrame:
     """Fixture builder for the baseline-JPEG pixel tier: one valid
     grayscale JFIF per document, dimensions and gradient shift
-    hash-derived (same md5 arithmetic as :func:`real_media_table`),
-    synthesized scan-side in ``mapInPandas`` so payload bytes never
-    shuffle."""
+    hash-derived (same md5 arithmetic as :func:`real_media_table`)."""
     from dataframeutils_spark.operators.jpeg import synthesize_jpeg
 
-    def synth_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def make(mid: int, h: int) -> tuple[str, bytes]:
+        return "image", synthesize_jpeg(
+            9 + h % _JPEG_W_MOD,
+            9 + (h // _JPEG_W_MOD) % _JPEG_H_MOD,
+            (h // 7) % _JPEG_S_MOD,
+        )
 
-        for pdf in it:
-            payloads = []
-            for text in pdf["text"]:
-                h = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:15], 16)
-                payloads.append(
-                    synthesize_jpeg(
-                        9 + h % _JPEG_W_MOD,
-                        9 + (h // _JPEG_W_MOD) % _JPEG_H_MOD,
-                        (h // 7) % _JPEG_S_MOD,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": "image",
-                    "content": payloads,
-                }
-            )
-
-    src = docs.select(F.col(id_col).alias("media_id"), F.col(text_col).alias("text"))
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return src.repartition(par, F.col("media_id")).mapInPandas(
-        synth_batches, schema="media_id long, media_type string, content binary"
-    )
+    return _synth_table(docs, text_col, id_col, make, spread=True)
 
 
 def jpeg_block_stats(media: DataFrame) -> DataFrame:
     """REAL JPEG pixel decode reduced to per-image intensity stats —
-    (media_id, src_w, src_h, px_sum, px_min, px_max). Payloads stay
-    inside their scan task (``mapInPandas``, no shuffle); only the
-    narrow stat rows flow downstream, so at 100 TB the decode cost is
-    embarrassingly parallel and the shuffle volume is rows, not
-    bytes."""
+    (media_id, src_w, src_h, px_sum, px_min, px_max). At 100 TB the
+    decode cost is embarrassingly parallel and the shuffle volume is
+    rows, not bytes."""
     import numpy as np
 
     from dataframeutils_spark.operators.jpeg import decode_jpeg_pixels
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                w, h, img = decode_jpeg_pixels(bytes(c))
-                flat = img.astype(np.int64).ravel()
-                rows.append(
-                    (mid, w, h, int(flat.sum()), int(flat.min()), int(flat.max()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "src_w", "src_h", "px_sum", "px_min", "px_max"],
-            )
+    def rows_of(mid: int, b: bytes):
+        w, h, img = decode_jpeg_pixels(b)
+        flat = img.astype(np.int64).ravel()
+        yield mid, w, h, int(flat.sum()), int(flat.min()), int(flat.max())
 
-    return media.filter(F.col("media_type") == "image").mapInPandas(
-        batches,
-        schema=(
-            "media_id long, src_w int, src_h int, "
-            "px_sum long, px_min int, px_max int"
-        ),
+    return _map_payloads(
+        media,
+        "image",
+        rows_of,
+        "media_id long, src_w int, src_h int, px_sum long, px_min int, px_max int",
     )
 
 
@@ -1448,7 +1397,7 @@ def jpeg_block_stats_sql(table: str = "documents") -> str:
     pixel(x, y) = (11*(x//8) + 17*(y//8) + s) % 256. The Huffman
     decoder must recover exactly this raster — any entropy-decode,
     DC-prediction, dequant, or IDCT bug shows as a value mismatch."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     px = "(11 * (x // 8) + 17 * (y // 8) + s) % 256"
     return f"""
 WITH dims AS (
@@ -1522,36 +1471,16 @@ def wav_audio_table(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Fixture builder for the PCM sample tier: one valid PCM16 WAV per
-    document (mono or stereo, hash-derived rate/length), synthesized
-    scan-side in ``mapInPandas`` so payload bytes never shuffle."""
+    document (mono or stereo, hash-derived rate/length)."""
 
-    def synth_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def make(mid: int, h: int) -> tuple[str, bytes]:
+        return "audio", synthesize_wav(
+            8000 + h % _WAV_AUDIO_RATE_MOD,
+            1 + h % 2,
+            256 + (h // 3) % _WAV_AUDIO_N_MOD,
+        )
 
-        for pdf in it:
-            payloads = []
-            for text in pdf["text"]:
-                h = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:15], 16)
-                payloads.append(
-                    synthesize_wav(
-                        8000 + h % _WAV_AUDIO_RATE_MOD,
-                        1 + h % 2,
-                        256 + (h // 3) % _WAV_AUDIO_N_MOD,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": "audio",
-                    "content": payloads,
-                }
-            )
-
-    src = docs.select(F.col(id_col).alias("media_id"), F.col(text_col).alias("text"))
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return src.repartition(par, F.col("media_id")).mapInPandas(
-        synth_batches, schema="media_id long, media_type string, content binary"
-    )
+    return _synth_table(docs, text_col, id_col, make, spread=True)
 
 
 def audio_features(media: DataFrame) -> DataFrame:
@@ -1561,38 +1490,25 @@ def audio_features(media: DataFrame) -> DataFrame:
     s_max). sq_sum is the energy numerator (RMS = sqrt(sq_sum/N) —
     kept as the exact integer so the oracle compares without float
     drift); zero_crossings counts strict sign flips along the
-    interleaved stream. Payloads never shuffle (``mapInPandas``), only
-    narrow feature rows do."""
+    interleaved stream."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                rate, nch, samples = decode_wav_samples(bytes(c))
-                flat = samples.ravel().astype(np.int64)  # interleaved order
-                zc = int(((flat[:-1] * flat[1:]) < 0).sum())
-                rows.append(
-                    (
-                        mid, rate, nch, samples.shape[0],
-                        int((flat * flat).sum()), zc,
-                        int(flat.min()), int(flat.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_channels", "n_frames",
-                    "sq_sum", "zero_crossings", "s_min", "s_max",
-                ],
-            )
+    def rows_of(mid: int, b: bytes):
+        rate, nch, samples = decode_wav_samples(b)
+        flat = samples.ravel().astype(np.int64)  # interleaved order
+        zc = int(((flat[:-1] * flat[1:]) < 0).sum())
+        yield (
+            mid, rate, nch, samples.shape[0],
+            int((flat * flat).sum()), zc,
+            int(flat.min()), int(flat.max()),
+        )
 
-    return media.filter(F.col("media_type") == "audio").mapInPandas(
-        batches,
-        schema=(
-            "media_id long, sample_rate int, n_channels int, n_frames int, "
-            "sq_sum long, zero_crossings int, s_min int, s_max int"
-        ),
+    return _map_payloads(
+        media,
+        "audio",
+        rows_of,
+        "media_id long, sample_rate int, n_channels int, n_frames int, "
+        "sq_sum long, zero_crossings int, s_min int, s_max int",
     )
 
 
@@ -1716,56 +1632,31 @@ def mp4_media_table(
 ) -> DataFrame:
     """Fixture builder for the MP4 metadata tier: one structurally
     valid ISO BMFF skeleton per document, presentation size and frame
-    count hash-derived; synthesized scan-side (``mapInPandas``)."""
+    count hash-derived."""
 
-    def synth_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def make(mid: int, h: int) -> tuple[str, bytes]:
+        return "video", synthesize_mp4(
+            16 + h % _MP4_W_MOD,
+            16 + (h // 13) % _MP4_H_MOD,
+            1 + (h // 7) % _MP4_F_MOD,
+        )
 
-        for pdf in it:
-            payloads = []
-            for text in pdf["text"]:
-                h = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:15], 16)
-                payloads.append(
-                    synthesize_mp4(
-                        16 + h % _MP4_W_MOD,
-                        16 + (h // 13) % _MP4_H_MOD,
-                        1 + (h // 7) % _MP4_F_MOD,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": "video",
-                    "content": payloads,
-                }
-            )
-
-    src = docs.select(F.col(id_col).alias("media_id"), F.col(text_col).alias("text"))
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return src.repartition(par, F.col("media_id")).mapInPandas(
-        synth_batches, schema="media_id long, media_type string, content binary"
-    )
+    return _synth_table(docs, text_col, id_col, make, spread=True)
 
 
 def mp4_meta(media: DataFrame) -> DataFrame:
     """REAL ISO-BMFF box walk over MP4 payloads → (media_id, width,
-    height, n_frames, n_bytes). Same scale shape as every media tier:
-    payloads stay inside their scan task, narrow rows flow on."""
+    height, n_frames, n_bytes)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                bb = bytes(c)
-                w, h, n = _parse_mp4(bb)
-                rows.append((mid, w, h, n, len(bb)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "n_frames", "n_bytes"]
-            )
+    def rows_of(mid: int, b: bytes):
+        w, h, n = _parse_mp4(b)
+        yield mid, w, h, n, len(b)
 
-    return media.filter(F.col("media_type") == "video").mapInPandas(
-        batches,
-        schema="media_id long, width int, height int, n_frames int, n_bytes long",
+    return _map_payloads(
+        media,
+        "video",
+        rows_of,
+        "media_id long, width int, height int, n_frames int, n_bytes long",
     )
 
 
@@ -1775,7 +1666,7 @@ def mp4_meta_sql(table: str = "documents") -> str:
     total pins every box length in the skeleton (ftyp 28 + moov 8 +
     mvhd 108 + trak 8 + tkhd 92 + mdia 8 + minf 8 + stbl 8 + stts 24
     = 292), so a parser/synthesizer layout drift fails the hash."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     return f"""
 SELECT doc_id AS media_id,
        CAST(16 + {h} % {_MP4_W_MOD} AS INT) AS width,
@@ -1899,34 +1790,15 @@ def mp4_indexed_media_table(
     """Fixture builder for the frame-index tier: one indexed MP4 (with
     mdat) per document, all parameters md5-derived from the text."""
 
-    def synth_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def make(mid: int, h: int) -> tuple[str, bytes]:
+        return "video", synthesize_mp4_indexed(
+            16 + h % _MP4X_W_MOD,
+            16 + (h // 13) % _MP4X_H_MOD,
+            1 + (h // 7) % _MP4X_F_MOD,
+            h % 256,
+        )
 
-        for pdf in it:
-            payloads = []
-            for text in pdf["text"]:
-                h = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:15], 16)
-                payloads.append(
-                    synthesize_mp4_indexed(
-                        16 + h % _MP4X_W_MOD,
-                        16 + (h // 13) % _MP4X_H_MOD,
-                        1 + (h // 7) % _MP4X_F_MOD,
-                        h % 256,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": "video",
-                    "content": payloads,
-                }
-            )
-
-    src = docs.select(F.col(id_col).alias("media_id"), F.col(text_col).alias("text"))
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return src.repartition(par, F.col("media_id")).mapInPandas(
-        synth_batches, schema="media_id long, media_type string, content binary"
-    )
+    return _synth_table(docs, text_col, id_col, make, spread=True)
 
 
 def _walk_boxes(b: bytes, start: int, end: int):
@@ -2061,28 +1933,29 @@ def parse_mp4_frame_index(b: bytes) -> list[tuple[int, int, int, bool]]:
     return out
 
 
+def _frame_index(media: DataFrame, parse_index) -> DataFrame:
+    """One (media_id, frame, offset, n_bytes, keyframe) row per frame,
+    for a ``parse_index(payload) -> [(frame, offset, size, key)]``
+    container walker."""
+
+    def rows_of(mid: int, b: bytes):
+        for frame, ofs, size, key in parse_index(b):
+            yield mid, frame, ofs, size, key
+
+    return _map_payloads(
+        media,
+        "video",
+        rows_of,
+        "media_id long, frame int, offset long, n_bytes int, keyframe boolean",
+    )
+
+
 def mp4_frame_index(media: DataFrame) -> DataFrame:
     """Per-frame byte index over MP4 payloads: (media_id, frame,
-    offset, n_bytes, keyframe). Payloads never leave their scan task —
-    only the narrow index rows flow on, which is the whole point: at
-    100 TB the downstream keyframe sampler range-reads exactly the
-    bytes this index names."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                for sample, ofs, size, sync in parse_mp4_frame_index(bytes(c)):
-                    rows.append((mid, sample, ofs, size, sync))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame", "offset", "n_bytes", "keyframe"],
-            )
-
-    return media.filter(F.col("media_type") == "video").mapInPandas(
-        batches,
-        schema="media_id long, frame int, offset long, n_bytes int, keyframe boolean",
-    )
+    offset, n_bytes, keyframe) — only the narrow index rows flow on,
+    which is the whole point: at 100 TB the downstream keyframe sampler
+    range-reads exactly the bytes this index names."""
+    return _frame_index(media, parse_mp4_frame_index)
 
 
 def mp4_frame_index_sql(table: str = "documents") -> str:
@@ -2091,7 +1964,7 @@ def mp4_frame_index_sql(table: str = "documents") -> str:
     prefix sum (the header size formula pins every box length in the
     synthesizer — moov grows 4 bytes per frame in stsz plus 4 per sync
     sample in stss), keyframes as the every-8 grid."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     return f"""
 WITH params AS (
   SELECT doc_id AS media_id,
@@ -2270,34 +2143,15 @@ def webm_indexed_media_table(
     document, parameters md5-derived from the text exactly like
     :func:`mp4_indexed_media_table`."""
 
-    def synth_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def make(mid: int, h: int) -> tuple[str, bytes]:
+        return "video", synthesize_webm_indexed(
+            16 + h % _MP4X_W_MOD,
+            16 + (h // 13) % _MP4X_H_MOD,
+            1 + (h // 7) % _MP4X_F_MOD,
+            h % 256,
+        )
 
-        for pdf in it:
-            payloads = []
-            for text in pdf["text"]:
-                h = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:15], 16)
-                payloads.append(
-                    synthesize_webm_indexed(
-                        16 + h % _MP4X_W_MOD,
-                        16 + (h // 13) % _MP4X_H_MOD,
-                        1 + (h // 7) % _MP4X_F_MOD,
-                        h % 256,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": "video",
-                    "content": payloads,
-                }
-            )
-
-    src = docs.select(F.col(id_col).alias("media_id"), F.col(text_col).alias("text"))
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return src.repartition(par, F.col("media_id")).mapInPandas(
-        synth_batches, schema="media_id long, media_type string, content binary"
-    )
+    return _synth_table(docs, text_col, id_col, make, spread=True)
 
 
 def _ebml_read_id(b: bytes, pos: int) -> tuple[int, int]:
@@ -2395,24 +2249,8 @@ def parse_webm_frame_index(b: bytes) -> list[tuple[int, int, int, bool]]:
 def webm_frame_index(media: DataFrame) -> DataFrame:
     """Per-frame byte index over WebM payloads: (media_id, frame,
     offset, n_bytes, keyframe) — the EBML twin of
-    :func:`mp4_frame_index`, same scale shape: payloads never leave
-    their scan task, only narrow index rows flow on."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                for frame, ofs, size, key in parse_webm_frame_index(bytes(c)):
-                    rows.append((mid, frame, ofs, size, key))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame", "offset", "n_bytes", "keyframe"],
-            )
-
-    return media.filter(F.col("media_type") == "video").mapInPandas(
-        batches,
-        schema="media_id long, frame int, offset long, n_bytes int, keyframe boolean",
-    )
+    :func:`mp4_frame_index`."""
+    return _frame_index(media, parse_webm_frame_index)
 
 
 def webm_frame_index_sql(table: str = "documents") -> str:
@@ -2422,7 +2260,7 @@ def webm_frame_index_sql(table: str = "documents") -> str:
     block overhead × (f + 1) + prefix sum of earlier frame sizes (the
     fixed-width EBML encodings in the synthesizer pin every element
     length; verified against parse_webm_frame_index in tests)."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     return f"""
 WITH params AS (
   SELECT doc_id AS media_id,
@@ -2488,25 +2326,15 @@ def audio_fingerprint(media: DataFrame) -> DataFrame:
     task, one int fingerprint out; the audio member of the perceptual
     dedup family next to :func:`image_dhash`."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                rate, nch, samples = decode_wav_samples(bytes(c))
-                rows.append(
-                    (mid, rate, nch, samples.shape[0], _audio_fp(samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "sample_rate", "n_channels", "n_frames", "fp"],
-            )
+    def rows_of(mid: int, b: bytes):
+        rate, nch, samples = decode_wav_samples(b)
+        yield mid, rate, nch, samples.shape[0], _audio_fp(samples)
 
-    return media.filter(F.col("media_type") == "audio").mapInPandas(
-        batches,
-        schema=(
-            "media_id long, sample_rate int, n_channels int, "
-            "n_frames int, fp long"
-        ),
+    return _map_payloads(
+        media,
+        "audio",
+        rows_of,
+        "media_id long, sample_rate int, n_channels int, n_frames int, fp long",
     )
 
 
@@ -2535,7 +2363,7 @@ def audio_fingerprint_sql(table: str = "documents") -> str:
     of the interleaved stream is (i·257) % 32768 − 16384, windows by
     the same integer index map. The ENGINE decodes real RIFF bytes; the
     oracle predicts the result from the generator arithmetic."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     W = _AFP_WINDOWS
     # COALESCE: clips shorter than 32 samples leave some windows empty,
     # and DuckDB's list_sum([]) is NULL where the engine's empty-slice
@@ -2584,41 +2412,28 @@ def audio_window_features(media: DataFrame, window: int = 512) -> DataFrame:
     non-overlapping windows of ``window`` frames and emit one feature
     row per window — (media_id, win_idx, n_in_window, sq_sum,
     zero_crossings, s_min, s_max). Same scale shape as GIF frame
-    sampling: the fan-out multiplies ROW COUNT, never payload bytes,
-    and payloads stay inside their scan task."""
+    sampling: the fan-out multiplies ROW COUNT, never payload bytes."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                rate, nch, samples = decode_wav_samples(bytes(c))
-                n = samples.shape[0]
-                for wi in range(-(-n // window)):
-                    seg = samples[wi * window : (wi + 1) * window]
-                    flat = seg.ravel().astype(np.int64)  # interleaved
-                    zc = int(((flat[:-1] * flat[1:]) < 0).sum())
-                    rows.append(
-                        (
-                            mid, wi, seg.shape[0],
-                            int((flat * flat).sum()), zc,
-                            int(flat.min()), int(flat.max()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "win_idx", "n_in_window",
-                    "sq_sum", "zero_crossings", "s_min", "s_max",
-                ],
+    def rows_of(mid: int, b: bytes):
+        rate, nch, samples = decode_wav_samples(b)
+        n = samples.shape[0]
+        for wi in range(-(-n // window)):
+            seg = samples[wi * window : (wi + 1) * window]
+            flat = seg.ravel().astype(np.int64)  # interleaved
+            zc = int(((flat[:-1] * flat[1:]) < 0).sum())
+            yield (
+                mid, wi, seg.shape[0],
+                int((flat * flat).sum()), zc,
+                int(flat.min()), int(flat.max()),
             )
 
-    return media.filter(F.col("media_type") == "audio").mapInPandas(
-        batches,
-        schema=(
-            "media_id long, win_idx int, n_in_window int, "
-            "sq_sum long, zero_crossings int, s_min int, s_max int"
-        ),
+    return _map_payloads(
+        media,
+        "audio",
+        rows_of,
+        "media_id long, win_idx int, n_in_window int, "
+        "sq_sum long, zero_crossings int, s_min int, s_max int",
     )
 
 
@@ -2626,7 +2441,7 @@ def audio_window_features_sql(table: str = "documents", window: int = 512) -> st
     """DuckDB oracle for :func:`audio_window_features`: per window,
     recompute the sawtooth over the interleaved index range
     [win*window*nch, min((win+1)*window, nfr)*nch) — all integer."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     s = "((i * 257) % 32768 - 16384)"
     s1 = "(((i + 1) * 257) % 32768 - 16384)"
     return f"""
@@ -2662,7 +2477,7 @@ def audio_features_sql(table: str = "documents") -> str:
     recomputes every feature from the sawtooth s(i) = (i*257) % 32768
     - 16384 over the interleaved stream — all integer arithmetic, so
     the compare is exact."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     s = "((i * 257) % 32768 - 16384)"
     s1 = "(((i + 1) * 257) % 32768 - 16384)"
     return f"""
@@ -2814,74 +2629,25 @@ def avi_media_table(
 ) -> DataFrame:
     """Fixture builder for the MJPEG-AVI pixel tier: one valid AVI per
     document, dims / frame count / gradient shift hash-derived (same
-    md5 arithmetic as :func:`real_media_table`), synthesized scan-side
-    in ``mapInPandas`` so payload bytes never shuffle."""
+    md5 arithmetic as :func:`real_media_table`)."""
 
-    def synth_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def make(mid: int, h: int) -> tuple[str, bytes]:
+        return "video", synthesize_avi(
+            9 + h % _AVI_W_MOD,
+            9 + (h // _AVI_W_MOD) % _AVI_H_MOD,
+            2 + (h // 11) % _AVI_F_MOD,
+            (h // 7) % _AVI_S_MOD,
+        )
 
-        for pdf in it:
-            payloads = []
-            for text in pdf["text"]:
-                h = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:15], 16)
-                payloads.append(
-                    synthesize_avi(
-                        9 + h % _AVI_W_MOD,
-                        9 + (h // _AVI_W_MOD) % _AVI_H_MOD,
-                        2 + (h // 11) % _AVI_F_MOD,
-                        (h // 7) % _AVI_S_MOD,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": "video",
-                    "content": payloads,
-                }
-            )
-
-    src = docs.select(F.col(id_col).alias("media_id"), F.col(text_col).alias("text"))
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return src.repartition(par, F.col("media_id")).mapInPandas(
-        synth_batches, schema="media_id long, media_type string, content binary"
-    )
+    return _synth_table(docs, text_col, id_col, make, spread=True)
 
 
 def avi_frame_stats(media: DataFrame, every_k: int = 2) -> DataFrame:
     """REAL-pixel video frame sampling: decode every ``every_k``-th
     MJPEG frame of each AVI payload and reduce it to per-frame
     intensity stats — (media_id, frame_idx, src_w, src_h, px_sum,
-    px_min, px_max). Payloads stay inside their scan task
-    (``mapInPandas``, no shuffle); only narrow stat rows flow
-    downstream, so at 100 TB the decode is embarrassingly parallel and
-    the shuffle volume is rows, not bytes."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                w, h, frames = decode_avi_frames(bytes(c))
-                for fi in range(0, len(frames), every_k):
-                    flat = frames[fi].astype(np.int64).ravel()
-                    rows.append(
-                        (mid, fi, w, h, int(flat.sum()), int(flat.min()), int(flat.max()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "src_w", "src_h",
-                    "px_sum", "px_min", "px_max",
-                ],
-            )
-
-    return media.filter(F.col("media_type") == "video").mapInPandas(
-        batches,
-        schema=(
-            "media_id long, frame_idx int, src_w int, src_h int, "
-            "px_sum long, px_min int, px_max int"
-        ),
-    )
+    px_min, px_max); the AVI twin of :func:`gif_frame_stats`."""
+    return _frame_stats(media, every_k, decode_avi_frames)
 
 
 def avi_frame_stats_sql(table: str = "documents", every_k: int = 2) -> str:
@@ -2890,7 +2656,7 @@ def avi_frame_stats_sql(table: str = "documents", every_k: int = 2) -> str:
     pixel(x, y, f) = (11*(x//8) + 17*(y//8) + s + 29*f) % 256 — the
     container walk AND the JPEG entropy/DC/IDCT chain must recover
     exactly this raster for every checked frame."""
-    h = "CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)"
+    h = _SEED_SQL
     px = f"(11 * (x // 8) + 17 * (y // 8) + s + {_AVI_FRAME_STEP} * f) % 256"
     return f"""
 WITH dims AS (

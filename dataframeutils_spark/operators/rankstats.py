@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.dedup import portable_hash60
-from dataframeutils_spark.schema import decround, siground
+from dataframeutils_spark.schema import decround, gate_min_len, siground
 
 _EPOCH = "1970-01-01"
 
@@ -50,15 +50,6 @@ _EPOCH = "1970-01-01"
 # (3M-row battery → ~3k rows/bucket), ledger windows bounded at
 # _N_BUCKETS rows at ANY battery size.
 _N_BUCKETS = 1024
-
-
-def _gated(long_df: DataFrame, min_len: int) -> DataFrame:
-    w = Window.partitionBy("grp", "feature")
-    return (
-        long_df.filter(F.col("value").isNotNull())
-        .withColumn("_n", F.count("value").over(w))
-        .filter(F.col("_n") >= min_len)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -171,7 +162,7 @@ def mann_whitney_drift(long_df: DataFrame, min_len: int = 40) -> DataFrame:
 
     Output: (grp, feature, n1, n2, u_stat, z, drifted).
     """
-    g = _gated(long_df, min_len)
+    g = gate_min_len(long_df, min_len)
     w = Window.partitionBy("grp", "feature")
     day = F.datediff(F.col("date"), F.lit(_EPOCH))
     g = g.withColumn(
@@ -285,7 +276,7 @@ def mann_kendall_trend(
 
     Output: (grp, feature, n, n_sampled, s_stat, var_s, z, trend).
     """
-    g = _gated(long_df, min_len)
+    g = gate_min_len(long_df, min_len)
     p_expr = F.expr(f"(_n + {cap - 1}) div {cap}")
     sampled = (
         g.withColumn(

@@ -28,18 +28,7 @@ from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.cross_feature import _pair_frame
 from dataframeutils_spark.operators.memory import acf_hurst
-from dataframeutils_spark.schema import nan_to_null
-
-
-def _with_min_len(long_df: DataFrame, min_len: int) -> DataFrame:
-    """NULL-filter + per-(grp, feature) length gate, before any UDF."""
-    w = Window.partitionBy("grp", "feature")
-    return (
-        long_df.filter(F.col("value").isNotNull())
-        .withColumn("_n", F.count("value").over(w))
-        .filter(F.col("_n") >= min_len)
-        .drop("_n")
-    )
+from dataframeutils_spark.schema import gate_min_len, nan_to_null
 
 
 def stationarity_tests(long_df: DataFrame, regression: str = "c", min_len: int = 10) -> DataFrame:
@@ -47,7 +36,7 @@ def stationarity_tests(long_df: DataFrame, regression: str = "c", min_len: int =
 
     Output: (grp, feature, adf_stat, adf_p, kpss_stat, kpss_p).
     """
-    gated = _with_min_len(long_df, min_len)
+    gated = gate_min_len(long_df, min_len).drop("_n")
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         from dataframeutils_spark.functions import stats as S
@@ -118,7 +107,7 @@ def kpss_stationarity(long_df: DataFrame, min_len: int = 10) -> DataFrame:
     Output: (grp, feature, n, nlags, kpss_stat, kpss_p).
     """
     w = Window.partitionBy("grp", "feature")
-    gated = _with_min_len(long_df, min_len).withColumn(
+    gated = gate_min_len(long_df, min_len).drop("_n").withColumn(
         "_const", F.min("value").over(w) == F.max("value").over(w)
     ).filter(~F.col("_const")).drop("_const")
 
@@ -148,7 +137,7 @@ def kpss_stationarity(long_df: DataFrame, min_len: int = 10) -> DataFrame:
 def ljung_box_p(long_df: DataFrame, lags: int = 10, min_len: int = 12) -> DataFrame:
     """Ljung–Box p at ``lags`` per (grp × feature) — the UDF half of
     reference A4 (``time_series_study.py:327-331``)."""
-    gated = _with_min_len(long_df, min_len)
+    gated = gate_min_len(long_df, min_len).drop("_n")
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         from dataframeutils_spark.functions import stats as S
@@ -184,7 +173,7 @@ def frequency_domain(long_df: DataFrame, detrend: bool = True, min_len: int = 8)
     reference A5 (``time_series_study.py:367-433``): optional linear
     detrend, scipy-convention density periodogram, argmax excluding the
     zero frequency."""
-    gated = _with_min_len(long_df, min_len)
+    gated = gate_min_len(long_df, min_len).drop("_n")
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         from dataframeutils_spark.functions import stats as S

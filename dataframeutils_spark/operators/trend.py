@@ -44,18 +44,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.dedup import portable_hash60
-from dataframeutils_spark.schema import decround
+from dataframeutils_spark.schema import decround, gate_min_len
 
 _EPOCH = "1970-01-01"
-
-
-def _gated(long_df: DataFrame, min_len: int) -> DataFrame:
-    w = Window.partitionBy("grp", "feature")
-    return (
-        long_df.filter(F.col("value").isNotNull())
-        .withColumn("_n", F.count("value").over(w))
-        .filter(F.col("_n") >= min_len)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +71,7 @@ def changepoint_cusum(long_df: DataFrame, min_len: int = 30) -> DataFrame:
     (grp, feature, n, cp_date, cusum_stat, p_value, mean_before,
     mean_after, shift_detected).
     """
-    g = _gated(long_df, min_len)
+    g = gate_min_len(long_df, min_len)
     w = Window.partitionBy("grp", "feature")
     wo = w.orderBy("date")
     run = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -153,7 +144,7 @@ def seasonal_decompose(
     if period % 2 == 0:
         raise ValueError("seasonal_decompose: only odd periods (centered MA)")
     half = period // 2
-    g = _gated(long_df, min_len)
+    g = gate_min_len(long_df, min_len)
     wo = Window.partitionBy("grp", "feature").orderBy("date")
     win = wo.rowsBetween(-half, half)
 
@@ -320,7 +311,7 @@ def theilsen_slope(
 
     Returns (grp, feature, n, n_sampled, n_pairs, slope, intercept).
     """
-    g = _gated(long_df, min_len)
+    g = gate_min_len(long_df, min_len)
     p_expr = F.expr(f"(_n + {cap - 1}) div {cap}")
     sampled = (
         g.withColumn(
@@ -538,7 +529,7 @@ def ks_two_sample(long_df: DataFrame, min_len: int = 40) -> DataFrame:
 
     Output: (grp, feature, n1, n2, ks_stat, p_value, drift_detected).
     """
-    g = _gated(long_df, min_len)
+    g = gate_min_len(long_df, min_len)
     w = Window.partitionBy("grp", "feature")
     day = F.datediff(F.col("date"), F.lit(_EPOCH))
     g = g.withColumn(
@@ -623,7 +614,7 @@ def ewma_control(
     Output: (grp, feature, n, n_violations, first_violation,
     last_ewma) — first_violation is the 1-based index, 0 if none.
     """
-    g = _gated(long_df, min_len)
+    g = gate_min_len(long_df, min_len)
     om = 1.0 - lam
     om2 = om * om
     ratio = lam / (2.0 - lam)
@@ -768,7 +759,7 @@ def js_drift(
 
     Output: (grp, feature, n1, n2, js_div, js_dist, drifted).
     """
-    g = _gated(long_df, min_len)
+    g = gate_min_len(long_df, min_len)
     w = Window.partitionBy("grp", "feature")
     day = F.datediff(F.col("date"), F.lit(_EPOCH))
     g = (
@@ -927,7 +918,7 @@ def holt_forecast(
     """
     from dataframeutils_spark.schema import decround
 
-    g = _gated(long_df, min_len)
+    g = gate_min_len(long_df, min_len)
     base = g.groupBy("grp", "feature").agg(
         F.count("*").alias("n"),
         F.array_sort(
@@ -1071,7 +1062,7 @@ def seasonal_anomalies(
     if period % 2 == 0:
         raise ValueError("seasonal_anomalies: only odd periods (centered MA)")
     half = period // 2
-    g = _gated(long_df, min_len)
+    g = gate_min_len(long_df, min_len)
     wo = Window.partitionBy("grp", "feature").orderBy("date")
     win = wo.rowsBetween(-half, half)
     d = (

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -138,6 +138,18 @@ def melt_panel(df: DataFrame, schema: PanelSchema) -> DataFrame:
         F.col(schema.date_col).alias("date"),
         F.explode(structs).alias("fv"),
     ).select("grp", "date", F.col("fv.feature").alias("feature"), F.col("fv.value").alias("value"))
+
+
+def gate_min_len(long_df: DataFrame, min_len: int) -> DataFrame:
+    """Per-series length gate over the long layout: drop NULL values,
+    keep the (grp, feature) series with at least ``min_len`` values.
+    Each row keeps its series' value count as ``_n``."""
+    w = Window.partitionBy("grp", "feature")
+    return (
+        long_df.filter(F.col("value").isNotNull())
+        .withColumn("_n", F.count("value").over(w))
+        .filter(F.col("_n") >= min_len)
+    )
 
 
 # --------------------------------------------------------------------------

@@ -25,8 +25,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 
 def read_nanos_as_long(spark: SparkSession) -> None:
     """Let this session read the events table's ``ts`` column.

@@ -270,15 +270,21 @@ def test_media_tiers_single_exchange_payload_stays_scan_side(spark):
     round-robin BEFORE synthesis — synthesize and decode run as
     chained ArrowEvalPython/MapInPandas stages with no Exchange
     between them, so at 100 TB the raster/PCM bytes stay inside their
-    scan task."""
+    scan task. Every fixture that spreads its synthesis is listed;
+    real_media_table does not spread, so its plan has no Exchange."""
     from dataframeutils_spark.operators import multimodal as M
 
     docs = load_table(spark, SF_DIR, "documents")
+    assert "Exchange" not in _plan(M.image_features(M.real_media_table(docs)))
     for build, reduce_ in [
         (M.gif_media_table, lambda m: M.gif_frame_stats(m, every_k=2)),
         (M.jpeg_media_table, M.jpeg_block_stats),
         (M.wav_audio_table, M.audio_features),
         (M.wav_audio_table, lambda m: M.audio_window_features(m, window=512)),
+        (M.mp4_media_table, M.mp4_meta),
+        (M.mp4_indexed_media_table, M.mp4_frame_index),
+        (M.webm_indexed_media_table, M.webm_frame_index),
+        (M.avi_media_table, lambda m: M.avi_frame_stats(m, every_k=2)),
     ]:
         plan = _plan(reduce_(build(docs)))
         assert plan.count("Exchange") == 1, plan

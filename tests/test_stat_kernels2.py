@@ -64,10 +64,6 @@ def _mp_norm_cdf(x: float) -> float:
     return float(mp.ncdf(x))
 
 
-def _mp_betainc(a: float, b: float, x: float) -> float:
-    return float(mp.betainc(a, b, 0, x, regularized=True))
-
-
 def _qr_ols(X: np.ndarray, y: np.ndarray):
     """OLS via QR (vs the kernels' lstsq + pinv covariance)."""
     Q, R = np.linalg.qr(X)
@@ -164,16 +160,6 @@ def test_norm_cdf_sf_ppf_vs_mpmath():
         np.testing.assert_allclose(S.norm_cdf(x), _mp_norm_cdf(x), rtol=1e-13)
     for p in (1e-12, 1e-6, 0.01, 0.3, 0.5, 0.9, 0.999):
         np.testing.assert_allclose(_mp_norm_cdf(S._norm_ppf(p)), p, rtol=1e-11)
-
-
-def test_betainc_and_f_sf_vs_mpmath():
-    for a, b, x in [(0.5, 0.5, 0.3), (2.0, 5.0, 0.1), (10.0, 3.0, 0.8), (4.5, 4.5, 0.5)]:
-        np.testing.assert_allclose(S.betainc_reg(a, b, x), _mp_betainc(a, b, x), rtol=1e-12)
-    # F-distribution tails: P(F > f) = I_{dfd/(dfd+dfn f)}(dfd/2, dfn/2)
-    for f, dfn, dfd in [(1.3, 3, 40), (5.0, 2, 10), (0.4, 6, 6)]:
-        x = dfd / (dfd + dfn * f)
-        want = float(mp.betainc(dfd / 2, dfn / 2, 0, x, regularized=True))
-        np.testing.assert_allclose(S.betainc_reg(dfd / 2.0, dfn / 2.0, x), want, rtol=1e-12)
 
 
 # --------------------------------------------------------------------------

@@ -5,7 +5,10 @@ Writes one `<out_dir>/<query><suffix>.txt` per query — the evidence
 format for optimization rounds (plans/r{N}/<query>_before.txt /
 _after.txt). Runs against the package in the CURRENT working tree, so
 checking out an older commit in a worktree and running this from there
-produces the "before" plans.
+produces the "before" plans. Run-specific text (expression ids `#123`,
+RDD ids `RDD[8]` and their JVM call sites, exchange `plan_id=42`) is
+normalized before writing, so dumps of the same query from two trees
+diff directly.
 
 Usage: python tools/plan_dump.py <out_dir> <suffix> <query> [query ...]
        python tools/plan_dump.py <out_dir> <suffix> ALL
@@ -13,11 +16,28 @@ Usage: python tools/plan_dump.py <out_dir> <suffix> <query> [query ...]
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+_RUN_IDS = [
+    (re.compile(r"#\d+"), "#N"),
+    # the call site flips from NativeMethodAccessorImpl.java:0 to
+    # <unknown>:0 once the JVM has generated its reflection accessor
+    (re.compile(r"RDD\[\d+\] at (\w+) at [^\s,]+:\d+"), r"RDD[N] at \1 at <call site>"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+]
+
+
+def normalize(txt: str) -> str:
+    """Replace the ids and call sites a plan gets from its session."""
+    for pat, rep in _RUN_IDS:
+        txt = pat.sub(rep, txt)
+    return txt
 
 
 def main() -> int:
@@ -45,7 +65,7 @@ def main() -> int:
             continue
         try:
             df = fn(spark, SF_DIR)
-            txt = (
+            txt = normalize(
                 df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"
                 )
