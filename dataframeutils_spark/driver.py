@@ -3556,16 +3556,15 @@ def q_weighted_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to value units (single correctly-rounded division — identical
     in both engines).
 
-    ``num_buckets`` is derived from the RAW parquet row count —
-    events_bins_input is a row-preserving 1:1 select, so the counts are
-    equal, but counting the bare scan is a parquet-metadata job (~0.3 s
-    at sf0.1) while counting the transformed frame decodes pages
-    (~2 s cold). Same bucket count, cheaper first-query path.
+    ``num_buckets`` is derived from the input's row count.
+    events_bins_input is a row-preserving 1:1 select, so its optimized
+    ``count()`` plan is the bare scan's, and the input is read once.
     """
-    n_rows = load_table(spark, sf_dir, "events").count()
+    inp = events_bins_input(spark, sf_dir)
+    n_rows = inp.count()
     par = spark.sparkContext.defaultParallelism
     res = weighted_bins.calculate_weighted_bins(
-        events_bins_input(spark, sf_dir),
+        inp,
         num_buckets=weighted_bins.derive_num_buckets(n_rows, par),
         id1_col="id1",
         id2_col="id2",

@@ -25,25 +25,57 @@ TABLES = (
     "embeddings",
 )
 
+# The read contract (FIXTURES.md): the Spark schema of every table but
+# ``events``, equal to what parquet inference gives on the shipped files.
+# Reading with it starts no schema-inference job while a query is built;
+# a column missing from a file would read as NULL, which
+# tests/test_table_schemas.py guards against.
+SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+    "c_mktsegment STRING",
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, "
+    "p_retailprice DOUBLE",
+    "orders": "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+    "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING",
+    "lineitem": "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+    "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+    "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ",
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
 
 def read_nanos_as_long(spark: SparkSession) -> None:
-    """Let this session read the events table's ``ts`` column.
+    """Let this session read an events file whose ``ts`` is timestamp[ns].
 
-    events.parquet stores ``ts`` as parquet timestamp[ns], which Spark
-    rejects (``PARQUET_TYPE_ILLEGAL``) unless nanos are read as a long.
-    Every events reader — :func:`load_table` and the streaming source —
-    calls this before touching the file, so the first events read of a
-    fresh (even vanilla) session already works.
+    The shipped events.parquet stores ``ts`` as INT64 microseconds with
+    ``isAdjustedToUTC=false``, which Spark reads as ``timestamp_ntz``
+    with or without this conf. It is here for timestamp[ns] files, which
+    Spark rejects (``PARQUET_TYPE_ILLEGAL``) unless nanos are read as a
+    long. Every events reader — :func:`load_table` and the streaming
+    source — calls this before touching the file, so the first events
+    read of a fresh (even vanilla) session works for either unit.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``<sf_dir>/<name>.parquet`` as a lazy DataFrame.
+
+    Every table but ``events`` is read with its declared schema from
+    :data:`SCHEMAS`. ``events`` keeps inference, because its ``ts`` may
+    be timestamp[us] or timestamp[ns] (read as a long).
+    """
     if name not in TABLES:
         raise ValueError(f"Unknown table {name!r}; expected one of {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         read_nanos_as_long(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return spark.read.parquet(path)
+    return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
 def lineitem_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,8 +108,9 @@ def events_bins_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics: ties on timestamp keep original row order —
     ``weighted_bin_calculator.py:62``).
 
-    events.parquet stores ``ts`` as parquet timestamp[ns];
-    :func:`load_table` reads nanos as long and we floor-truncate to
+    The shipped events.parquet stores ``ts`` as microseconds, read as
+    ``timestamp_ntz`` and passed through. A timestamp[ns] file reads as
+    a long under :func:`read_nanos_as_long`, and we floor-truncate it to
     microseconds — exactly what DuckDB does when it reads the same file,
     so both engines see identical timestamps (and identical tie sets).
 

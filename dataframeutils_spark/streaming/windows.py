@@ -75,9 +75,10 @@ def read_events_stream(
 def normalize_event_times(events: DataFrame) -> DataFrame:
     """ts (nanos-as-long, TIMESTAMP_NTZ, or TIMESTAMP) → TIMESTAMP (LTZ).
 
-    The driver's events.parquet stores ts as parquet timestamp[ns]; how
-    Spark surfaces it depends on session conf (``nanosAsLong`` → bigint
-    on older Sparks; 4.1 vanilla infers TIMESTAMP_NTZ). Watermarks
+    The shipped events.parquet stores ts as INT64 microseconds with
+    ``isAdjustedToUTC=false``, which Spark 4.1 reads as TIMESTAMP_NTZ; a
+    timestamp[ns] file reads as a bigint of nanos under ``nanosAsLong``
+    (``sources.testdata.read_nanos_as_long``). Watermarks
     (``EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE``) and ``unix_micros`` both
     require LTZ, so normalize every shape here — the one chokepoint all
     event-time operators load through. The NTZ→LTZ cast interprets wall

@@ -224,10 +224,10 @@ def test_driver_oracle_parity_weighted_bins(spark, ddb):
 
 
 def test_weighted_bins_fresh_session_reads_timestamp_ns(spark, tmp_path):
-    """events.ts stored as parquet timestamp[ns] (the shipped layout):
-    the flagship must work as the FIRST events read of a session — its
-    raw row count runs before the bins input is built, so the events
-    reader itself has to make the nanos column readable."""
+    """events.ts stored as parquet timestamp[ns]: the flagship must work
+    as the FIRST events read of a session — its row count runs as soon
+    as the bins input is built, so the events reader itself has to make
+    the nanos column readable."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq

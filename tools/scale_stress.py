@@ -450,7 +450,7 @@ def generate(spark, mult: int, out_dir: str) -> None:
         # int64 nanos (nanosAsLong sessions): shift in raw nanos
         (F.col("ts") + F.col("m").cast("long") * F.lit(3_600_000_000_000))
         if ts_type == "bigint"
-        # TIMESTAMP/_NTZ (Spark 4.1 default read of timestamp[ns]):
+        # TIMESTAMP/_NTZ (Spark 4.1's read of the timestamp[us] files):
         # shift with a calendar interval
         else F.col("ts") + F.expr("make_interval(0, 0, 0, 0, m, 0, 0)")
     )
@@ -463,7 +463,7 @@ def generate(spark, mult: int, out_dir: str) -> None:
         "props",
     ).repartition(par).write.mode("overwrite").parquet(f"{out_dir}/events.parquet")
 
-    docs = spark.read.parquet(f"{SRC}/documents.parquet").crossJoin(F.broadcast(m))
+    docs = load_table(spark, SRC, "documents").crossJoin(F.broadcast(m))
     docs.select(
         (F.col("doc_id") * mult + F.col("m")).alias("doc_id"),
         F.when(F.col("m") == 0, F.col("text"))
@@ -489,7 +489,7 @@ def generate(spark, mult: int, out_dir: str) -> None:
         "props",
     ).repartition(par).write.mode("overwrite").parquet(f"{out_dir}_hot/events.parquet")
 
-    emb = spark.read.parquet(f"{SRC}/embeddings.parquet").crossJoin(F.broadcast(m))
+    emb = load_table(spark, SRC, "embeddings").crossJoin(F.broadcast(m))
     emb.select(
         (F.col("vec_id") * mult + F.col("m")).alias("vec_id"),
         F.transform(
@@ -515,10 +515,12 @@ def generate_tpch(spark, mult: int, out_dir: str) -> None:
     """
     from pyspark.sql import functions as F
 
+    from dataframeutils_spark.sources.testdata import load_table
+
     par = spark.sparkContext.defaultParallelism
     m = spark.range(mult).select(F.col("id").alias("m"))
 
-    orders = spark.read.parquet(f"{SRC}/orders.parquet").crossJoin(F.broadcast(m))
+    orders = load_table(spark, SRC, "orders").crossJoin(F.broadcast(m))
     orders.select(
         (F.col("o_orderkey") * mult + F.col("m")).alias("o_orderkey"),
         "o_custkey",
@@ -528,16 +530,16 @@ def generate_tpch(spark, mult: int, out_dir: str) -> None:
         "o_orderpriority",
     ).repartition(par).write.mode("overwrite").parquet(f"{out_dir}/orders.parquet")
 
-    li = spark.read.parquet(f"{SRC}/lineitem.parquet").crossJoin(F.broadcast(m))
+    li = load_table(spark, SRC, "lineitem").crossJoin(F.broadcast(m))
     li.select(
         (F.col("l_orderkey") * mult + F.col("m")).alias("l_orderkey"),
         *[c for c in li.columns if c not in ("l_orderkey", "m")],
     ).repartition(par).write.mode("overwrite").parquet(f"{out_dir}/lineitem.parquet")
 
     for dim in ("customer", "supplier", "nation", "region", "part"):
-        spark.read.parquet(f"{SRC}/{dim}.parquet").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/{dim}.parquet")
+        load_table(spark, SRC, dim).coalesce(1).write.mode("overwrite").parquet(
+            f"{out_dir}/{dim}.parquet"
+        )
 
 
 def main() -> None:
