@@ -400,9 +400,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return round_floats(
-        dedup.embedding_dup_pairs(
-            load_table(spark, sf_dir, "embeddings"), threshold=0.45, dim=EMB_DIM
-        ),
+        dedup.embedding_dup_pairs(load_table(spark, sf_dir, "embeddings"), threshold=0.45),
         all_dec=True,
     )
 
@@ -512,9 +510,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-3 most-similar DIFFERENT-label vectors (exact baseline;
     the ANN tier's recall against it is pinned in pytest)."""
     return round_floats(
-        similarity.hard_negatives(
-            load_table(spark, sf_dir, "embeddings"), k=3, dim=EMB_DIM
-        ),
+        similarity.hard_negatives(load_table(spark, sf_dir, "embeddings"), k=3),
         all_dec=True,
     )
 
@@ -992,9 +988,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return round_floats(
-        similarity.brute_force_topk(
-            load_table(spark, sf_dir, "embeddings"), k=5, dim=EMB_DIM
-        ),
+        similarity.brute_force_topk(load_table(spark, sf_dir, "embeddings"), k=5),
         all_dec=True,
     )
 
@@ -2822,9 +2816,7 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.pmod(F.col("vec_id"), F.lit(17)) != 0)
     evals = emb.filter(F.pmod(F.col("vec_id"), F.lit(17)) == 0)
-    return cleaning.semantic_decontaminate(
-        corpus, evals, threshold=0.45, dim=EMB_DIM
-    )
+    return cleaning.semantic_decontaminate(corpus, evals, threshold=0.45)
 
 
 def q_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -378,7 +378,6 @@ def semantic_decontaminate(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     eval_id_col: str = "vec_id",
-    dim: int = 64,
 ) -> DataFrame:
     """Semantic (embedding-level) benchmark decontamination — the
     companion gate to :func:`decontaminate`'s n-gram overlap: paraphrased
@@ -404,15 +403,15 @@ def semantic_decontaminate(
     c = corpus_emb.select(
         F.col(id_col).alias("cid"),
         F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col), dim).alias("cn"),
+        _norm(F.col(vec_col)).alias("cn"),
     ).filter(F.col("cn") > 0)
     e = eval_emb.select(
         F.col(eval_id_col).alias("eid"),
         F.col(vec_col).alias("ev"),
-        _norm(F.col(vec_col), dim).alias("en"),
+        _norm(F.col(vec_col)).alias("en"),
     ).filter(F.col("en") > 0)
     sim = siground(
-        _dot(F.col("cv"), F.col("ev"), dim) / (F.col("cn") * F.col("en"))
+        _dot(F.col("cv"), F.col("ev")) / (F.col("cn") * F.col("en"))
     )
     scored = c.crossJoin(F.broadcast(e)).select(
         "cid", sim.alias("s"), (-F.col("eid")).alias("nege")
@@ -439,21 +438,17 @@ def semantic_decontaminate_sql(
     """DuckDB oracle for :func:`semantic_decontaminate`; subqueries
     yield (vec_id, embedding) each. Same sequential folds and
     round-before-compare."""
+    from dataframeutils_spark.operators.similarity import _dot_sql, _norm_sql
     from dataframeutils_spark.schema import siground_sql
 
-    fold = "list_reduce(list_prepend(0.0, {terms}), (a, b) -> a + b)"
-    dot = fold.format(
-        terms=f"list_transform(range(1, {dim} + 1), "
-        "i -> c.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)"
-    )
-    nrm = "sqrt(" + fold.format(terms="list_transform({v}, x -> x::DOUBLE * x::DOUBLE)") + ")"
+    dot = _dot_sql("c.embedding", "e.embedding", dim)
     sim = siground_sql(f"({dot} / (c.cn * e.en))")
     return f"""
 WITH corpus AS (
-  SELECT vec_id, embedding, {nrm.format(v='embedding')} AS cn
+  SELECT vec_id, embedding, {_norm_sql('embedding')} AS cn
   FROM ({corpus_sql})
 ), evals AS (
-  SELECT vec_id, embedding, {nrm.format(v='embedding')} AS en
+  SELECT vec_id, embedding, {_norm_sql('embedding')} AS en
   FROM ({eval_sql})
 ), scored AS (
   SELECT c.vec_id AS cid, e.vec_id AS eid, {sim} AS s

@@ -783,7 +783,6 @@ def embedding_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_rows: int | None = 100_000,
-    dim: int | None = None,
 ) -> DataFrame:
     """All-pairs cosine ≥ threshold: (vec_a, vec_b, cos_sim).
 
@@ -808,21 +807,14 @@ def embedding_dup_pairs(
                 "baseline — use the LSH path in operators.similarity for "
                 "large corpora, or pass max_rows=None to force."
             )
-    del dim  # accepted for API symmetry; see similarity._dot — the
-    # unrolled-by-dim formulation measured 2-3x slower than the HOF fold
-    norm = F.sqrt(
-        F.aggregate(F.col(vec_col), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x)
-    )
+    from dataframeutils_spark.operators.similarity import _dot, _norm
+
     e = embeddings.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("v"), norm.alias("nrm")
+        F.col(id_col).alias("vid"), F.col(vec_col).alias("v"), _norm(F.col(vec_col)).alias("nrm")
     ).filter(F.col("nrm") > 0)
     a = e.select(F.col("vid").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     b = e.select(F.col("vid").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot(F.col("va"), F.col("vb"))
     return (
         a.crossJoin(b)
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -1031,15 +1023,10 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 
 
 def embedding_dup_sql(table: str = "embeddings", threshold: float = 0.45) -> str:
-    dot = (
-        "list_reduce(list_prepend(0.0, list_transform(range(1, len(a.embedding) + 1), "
-        "i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE)), (x, y) -> x + y)"
-    )
-    nrm = (
-        "sqrt(list_reduce(list_prepend(0.0, list_transform({v}, x -> x::DOUBLE * x::DOUBLE)), "
-        "(x, y) -> x + y))"
-    )
-    na, nb = nrm.format(v="a.embedding"), nrm.format(v="b.embedding")
+    from dataframeutils_spark.operators.similarity import _dot_sql, _norm_sql
+
+    dot = _dot_sql("a.embedding", "b.embedding")
+    na, nb = _norm_sql("a.embedding"), _norm_sql("b.embedding")
     return f"""
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        {dot} / ({na} * {nb}) AS cos_sim
@@ -1402,11 +1389,11 @@ def semdedup_prune(
     e = embeddings.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col), dim).alias("nv"),
+        _norm(F.col(vec_col)).alias("nv"),
     ).filter(F.col("nv") > 0)
     scored = e.crossJoin(F.broadcast(cents)).select(
         "vid", "v", "nv", "centroid",
-        (_dot(F.col("v"), F.col("u"), dim) / (F.col("nrm") * F.col("nv"))).alias("cs"),
+        (_dot(F.col("v"), F.col("u")) / (F.col("nrm") * F.col("nv"))).alias("cs"),
     )
     # argmax(cs, tiebreak min centroid) as a map-side-combined max(struct):
     # the N×C scored rows stay inside their scan task and the exchange
@@ -1439,7 +1426,7 @@ def semdedup_prune(
         "centroid", F.col("cent_sim").alias("b_cent"),
     )
     pair_sim = siground(
-        _dot(F.col("a_v"), F.col("b_v"), dim) / (F.col("a_nv") * F.col("b_nv"))
+        _dot(F.col("a_v"), F.col("b_v")) / (F.col("a_nv") * F.col("b_nv"))
     )
     dominates = (F.col("a_cent") < F.col("b_cent")) | (
         (F.col("a_cent") == F.col("b_cent")) & (F.col("a_vid") < F.col("b_vid"))
@@ -1473,19 +1460,12 @@ def semdedup_prune_sql(
     """DuckDB oracle for :func:`semdedup_prune` — identical hash-derived
     centroids, sequential list_reduce folds (bit-identical to Spark's
     aggregate), siground rounding BEFORE every comparison."""
-    from dataframeutils_spark.operators.similarity import TWO59
+    from dataframeutils_spark.operators.similarity import TWO59, _dot_sql, _norm_sql
     from dataframeutils_spark.schema import siground_sql
 
     u = portable_hash60_sql("('ivf:' || c.c::VARCHAR || ':' || (d - 1)::VARCHAR)")
-    fold = "list_reduce(list_prepend(0.0, {terms}), (a, b) -> a + b)"
-    cdot = fold.format(
-        terms=f"list_transform(range(1, {dim} + 1), i -> e.embedding[i]::DOUBLE * c.u[i])"
-    )
-    pdot = fold.format(
-        terms=f"list_transform(range(1, {dim} + 1), "
-        "i -> a.v[i]::DOUBLE * b.v[i]::DOUBLE)"
-    )
-    nrm = "sqrt(" + fold.format(terms="list_transform({v}, x -> x::DOUBLE * x::DOUBLE)") + ")"
+    cdot = _dot_sql("e.embedding", "c.u", dim)
+    pdot = _dot_sql("a.v", "b.v", dim)
     if n_clusters is None:
         c_bound = (
             f"(SELECT CAST(greatest(4, ceil(sqrt(count(*)))) AS BIGINT) - 1 FROM {table})"
@@ -1499,9 +1479,9 @@ WITH cent AS (
          list_transform(range(1, {dim} + 1), d -> ({u}::DOUBLE / {TWO59} - 1.0)) AS u
   FROM {cent_src}
 ), cn AS (
-  SELECT centroid, u, {nrm.format(v='u')} AS nrm FROM cent
+  SELECT centroid, u, {_norm_sql('u')} AS nrm FROM cent
 ), ev AS (
-  SELECT vec_id, embedding, {nrm.format(v='embedding')} AS nv FROM {table}
+  SELECT vec_id, embedding, {_norm_sql('embedding')} AS nv FROM {table}
 ), sc AS (
   SELECT e.vec_id, e.embedding, e.nv, c.centroid,
          {cdot} / (c.nrm * e.nv) AS cs

@@ -15,6 +15,13 @@ North-star operators (no counterpart in the reference — SURVEY §2.3):
   [-1,1)) — no RNG state to ship, bit-identical in Spark and DuckDB, so
   even the ANN path is fully oracle-checkable.
 
+Fold-order contract: :func:`_dot`/:func:`_norm` (Spark) and their
+twins :func:`_dot_sql`/:func:`_norm_sql` over :func:`_fold_sql`
+(DuckDB) add the double terms left to right from 0.0, so every cosine
+in the embedding operators is bit-identical across the two engines.
+Spell every dot product, norm and list sum an oracle compares
+through them.
+
 Scale notes: brute force is O(|Q|·|corpus|·dim) — right for re-ranking
 and small query sets (broadcast the query side: |Q| rows vs 100 TB
 corpus means the join must be a BroadcastNestedLoop over the *small*
@@ -37,18 +44,15 @@ from dataframeutils_spark.operators.dedup import portable_hash60, portable_hash6
 TWO59 = float(2**59)
 
 
-def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def _dot(a: Column, b: Column) -> Column:
     """Sequential fold of Σ aᵢ·bᵢ in double — same order both engines.
 
     Measured dead end, recorded so it isn't retried: unrolling this
     fold into a flat 64-term ``0.0 + a₁·b₁ + …`` expression (to escape
     interpreted HOF lambdas) is 2-3× SLOWER at scale — 431 s vs 127 s
     for the 10× IVF stress — because the per-term ``element_at`` chains
-    defeat codegen long before the lambda overhead is repaid. ``dim``
-    is accepted (callers thread the known width) but the fold is the
-    fast formulation.
+    defeat codegen long before the lambda overhead is repaid.
     """
-    del dim  # see docstring: unrolled-by-dim measured slower
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -56,9 +60,93 @@ def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def _norm(v: Column, dim: int | None = None) -> Column:
-    del dim  # see _dot
+def _norm(v: Column) -> Column:
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
+
+
+def _fold_sql(terms: str) -> str:
+    """DuckDB twin of the ``aggregate`` fold: left-to-right double sum
+    of the list ``terms`` (``list_sum``/``list_dot_product`` may add in
+    a different order)."""
+    return f"list_reduce(list_prepend(0.0, {terms}), (a, b) -> a + b)"
+
+
+def _dot_sql(a: str, b: str, n: int | None = None) -> str:
+    """DuckDB twin of :func:`_dot` over positions 1..``n`` (default
+    ``len(a)``)."""
+    return _fold_sql(
+        f"list_transform(range(1, {n or f'len({a})'} + 1), "
+        f"i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)"
+    )
+
+
+def _norm_sql(v: str) -> str:
+    """DuckDB twin of :func:`_norm`."""
+    return f"sqrt({_fold_sql(f'list_transform({v}, x -> x::DOUBLE * x::DOUBLE)')})"
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """Cosine of two list expressions; NULL when either norm is zero,
+    like Spark's ``try_divide``."""
+    return f"{_dot_sql(a, b)} / NULLIF({_norm_sql(a)} * {_norm_sql(b)}, 0)"
+
+
+def _normed(df: DataFrame, id_col: str, vec_col: str, p: str, *extra: Column) -> DataFrame:
+    """One side of an exact top-k pair table: ``{p}id``, ``{p}v``, the
+    ``extra`` columns and the norm ``{p}n``. Norms are per-VECTOR
+    quantities: computed under the join (once per row on each side),
+    never in the pair projection, where the interpreted array fold
+    would run once per PAIR (measured ~2× on the sf0.1 recall audit).
+    Same doubles, bit-identical cos_sim."""
+    return df.select(
+        F.col(id_col).alias(f"{p}id"), F.col(vec_col).alias(f"{p}v"), *extra
+    ).withColumn(f"{p}n", _norm(F.col(f"{p}v")))
+
+
+def _exact_topk(pairs: DataFrame, k: int, q_out: str, n_out: str) -> DataFrame:
+    """Exact cosine top-k over a pair table (qid, nid, qv, nv, qn, nn):
+    vectors ``qv``/``nv`` with their precomputed norms ``qn``/``nn``.
+    Ranks by (cos_sim desc, nid); a zero norm scores NULL and ranks
+    last. Output (q_out, n_out, rank, cos_sim)."""
+    # try_divide: a zero-norm vector would make ANSI mode (Spark 4
+    # default) throw on the division; DuckDB yields NULL — match it
+    cos = F.try_divide(_dot(F.col("qv"), F.col("nv")), F.col("qn") * F.col("nn"))
+    scored = pairs.select("qid", "nid", cos.alias("cos_sim"))
+    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("nid"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("qid").alias(q_out),
+            F.col("nid").alias(n_out),
+            "rank",
+            "cos_sim",
+        )
+    )
+
+
+def _exact_topk_sql(
+    pairs: str,
+    k: int,
+    q_out: str = "query_id",
+    n_out: str = "neighbor_id",
+    ctes: str = "",
+) -> str:
+    """DuckDB twin of :func:`_exact_topk`. ``pairs`` is the FROM clause
+    binding the query vector row ``q`` and the neighbor row ``n``;
+    ``ctes`` are the WITH entries it reads."""
+    return f"""
+WITH {ctes + ", " if ctes else ""}scored AS (
+  SELECT q.vec_id AS {q_out}, n.vec_id AS {n_out},
+         {_cos_sql("q.embedding", "n.embedding")} AS cos_sim
+  {pairs}
+)
+SELECT {q_out}, {n_out},
+       row_number() OVER (PARTITION BY {q_out} ORDER BY cos_sim DESC, {n_out}) AS rank,
+       cos_sim
+FROM scored
+QUALIFY rank <= {k}
+"""
 
 
 def brute_force_topk(
@@ -68,12 +156,8 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_query_rows: int | None = 100_000,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, rank, cos_sim).
-
-    ``dim`` = the (fixed) embedding width, threaded to the scoring
-    helpers (see :func:`_dot` for why the fold formulation stays).
 
     ``queries`` defaults to the corpus itself (all-pairs self-search,
     excluding the identity match). Ties rank deterministically by
@@ -99,38 +183,10 @@ def brute_force_topk(
                 "exact baseline — use ann_topk for large corpora, or pass "
                 "max_query_rows=None to force."
             )
-    # Norms are per-VECTOR quantities: compute them under the join
-    # (once per corpus row / once per broadcast query row), never in
-    # the pair projection where the interpreted array fold would run
-    # |Q|·|corpus| times instead of |Q|+|corpus| (measured ~2× on the
-    # sf0.1 recall audit). Same doubles, bit-identical cos_sim.
-    c = corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nv")
-    ).withColumn("nn", _norm(F.col("nv"), dim))
-    q = (
-        (queries if queries is not None else corpus)
-        .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-        .withColumn("qn", _norm(F.col("qv"), dim))
-    )
+    c = _normed(corpus, id_col, vec_col, "n")
+    q = _normed(queries if queries is not None else corpus, id_col, vec_col, "q")
     joined = c.join(F.broadcast(q), F.col("qid") != F.col("nid"))
-    # try_divide: a zero-norm vector would make ANSI mode (Spark 4
-    # default) throw on the division; DuckDB yields NULL — match it
-    cos = F.try_divide(
-        _dot(F.col("qv"), F.col("nv"), dim),
-        F.col("qn") * F.col("nn"),
-    )
-    scored = joined.select("qid", "nid", cos.alias("cos_sim"))
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("nid").alias("neighbor_id"),
-            "rank",
-            "cos_sim",
-        )
-    )
+    return _exact_topk(joined, k, "query_id", "neighbor_id")
 
 
 def brute_force_topk_sql(
@@ -139,32 +195,14 @@ def brute_force_topk_sql(
     q_pred: str = "TRUE",
     q_rel: str | None = None,
 ) -> str:
-    """DuckDB oracle: same sequential-fold dot product via list_reduce
-    over the index range (list_dot_product may fold in a different
-    order; the explicit reduce pins left-to-right double addition).
-    ``q_pred`` filters the QUERY side (alias ``q``) — the oracle twin
-    of :func:`recall_audit`'s sampled-query ground truth."""
-    dot = (
-        "list_reduce(list_prepend(0.0, list_transform(range(1, len(q.embedding) + 1), "
-        "i -> q.embedding[i]::DOUBLE * n.embedding[i]::DOUBLE)), (a, b) -> a + b)"
+    """DuckDB oracle: the same sequential-fold cosine
+    (:func:`_exact_topk_sql`). ``q_pred`` filters the QUERY side (alias
+    ``q``) — the oracle twin of :func:`recall_audit`'s sampled-query
+    ground truth."""
+    return _exact_topk_sql(
+        f"FROM {q_rel or table} q JOIN {table} n ON q.vec_id <> n.vec_id\n  WHERE {q_pred}",
+        k,
     )
-    nrm = (
-        "sqrt(list_reduce(list_prepend(0.0, list_transform({v}, x -> x::DOUBLE * x::DOUBLE)), "
-        "(a, b) -> a + b))"
-    )
-    return f"""
-WITH scored AS (
-  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-         {dot} / ({nrm.format(v='q.embedding')} * {nrm.format(v='n.embedding')}) AS cos_sim
-  FROM {q_rel or table} q JOIN {table} n ON q.vec_id <> n.vec_id
-  WHERE {q_pred}
-)
-SELECT query_id, neighbor_id,
-       row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank,
-       cos_sim
-FROM scored
-QUALIFY rank <= {k}
-"""
 
 
 def hard_negatives(
@@ -174,7 +212,6 @@ def hard_negatives(
     vec_col: str = "embedding",
     label_col: str = "label",
     max_anchor_rows: int | None = 100_000,
-    dim: int | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per anchor, the
     top-k most-similar vectors with a DIFFERENT label —
@@ -201,30 +238,10 @@ def hard_negatives(
                 f"{max_anchor_rows}; mine candidates with ann_topk/IVF "
                 "and re-rank, or pass max_anchor_rows=None to force."
             )
-    c = corpus.select(
-        F.col(id_col).alias("nid"),
-        F.col(vec_col).alias("nv"),
-        F.col(label_col).alias("nlabel"),
-    ).withColumn("nn", _norm(F.col("nv"), dim))
-    q = corpus.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        F.col(label_col).alias("qlabel"),
-    ).withColumn("qn", _norm(F.col("qv"), dim))
+    c = _normed(corpus, id_col, vec_col, "n", F.col(label_col).alias("nlabel"))
+    q = _normed(corpus, id_col, vec_col, "q", F.col(label_col).alias("qlabel"))
     joined = c.join(F.broadcast(q), F.col("qlabel") != F.col("nlabel"))
-    cos = F.try_divide(_dot(F.col("qv"), F.col("nv"), dim), F.col("qn") * F.col("nn"))
-    scored = joined.select("qid", "nid", cos.alias("cos_sim"))
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("anchor_id"),
-            F.col("nid").alias("negative_id"),
-            "rank",
-            "cos_sim",
-        )
-    )
+    return _exact_topk(joined, k, "anchor_id", "negative_id")
 
 
 def hard_negatives_ann(
@@ -280,26 +297,12 @@ def hard_negatives_ann(
 def hard_negatives_sql(k: int = 5, table: str = "embeddings") -> str:
     """DuckDB oracle: identical sequential-fold scoring, label
     inequality in the join predicate."""
-    dot = (
-        "list_reduce(list_prepend(0.0, list_transform(range(1, len(q.embedding) + 1), "
-        "i -> q.embedding[i]::DOUBLE * n.embedding[i]::DOUBLE)), (a, b) -> a + b)"
+    return _exact_topk_sql(
+        f"FROM {table} q JOIN {table} n ON q.label <> n.label",
+        k,
+        "anchor_id",
+        "negative_id",
     )
-    nrm = (
-        "sqrt(list_reduce(list_prepend(0.0, list_transform({v}, x -> x::DOUBLE * x::DOUBLE)), "
-        "(a, b) -> a + b))"
-    )
-    return f"""
-WITH scored AS (
-  SELECT q.vec_id AS anchor_id, n.vec_id AS negative_id,
-         {dot} / ({nrm.format(v='q.embedding')} * {nrm.format(v='n.embedding')}) AS cos_sim
-  FROM {table} q JOIN {table} n ON q.label <> n.label
-)
-SELECT anchor_id, negative_id,
-       row_number() OVER (PARTITION BY anchor_id ORDER BY cos_sim DESC, negative_id) AS rank,
-       cos_sim
-FROM scored
-QUALIFY rank <= {k}
-"""
 
 
 def hyperplane_component(plane: Column, dim: Column) -> Column:
@@ -350,13 +353,8 @@ def hyperplane_signatures(
         .select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
         .crossJoin(F.broadcast(mat))
     )
-    proj = F.aggregate(
-        F.zip_with(F.col("v"), F.col("u"), lambda x, u: x.cast("double") * u),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return exploded.select(
-        "vec_id", "plane", (proj > 0).cast("int").alias("bit")
+        "vec_id", "plane", (_dot(F.col("v"), F.col("u")) > 0).cast("int").alias("bit")
     )
 
 
@@ -398,7 +396,7 @@ def ann_topk(
     """
     sigs = hyperplane_signatures(corpus, bits, id_col, vec_col, dim=dim)
     return _bucketed_topk_from_sigs(
-        sigs, corpus, k, bits, bands, id_col, vec_col, dim, bucket_cap=bucket_cap,
+        sigs, corpus, k, bits, bands, id_col, vec_col, bucket_cap=bucket_cap,
     )
 
 
@@ -452,7 +450,7 @@ def ann_topk_multiprobe(
     (1+r)× probe set."""
     sigs = hyperplane_signatures(corpus, bits, id_col, vec_col, dim=dim)
     return _bucketed_topk_from_sigs(
-        sigs, corpus, k, bits, bands, id_col, vec_col, dim,
+        sigs, corpus, k, bits, bands, id_col, vec_col,
         multiprobe=True, bucket_cap=bucket_cap, probe_limit=probe_limit,
     )
 
@@ -465,7 +463,6 @@ def _bucketed_topk_from_sigs(
     bands: int,
     id_col: str,
     vec_col: str,
-    dim: int | None = None,
     multiprobe: bool = False,
     bucket_cap: int | None = None,
     probe_limit: int | None = None,
@@ -560,7 +557,7 @@ def _bucketed_topk_from_sigs(
         .select("qid", "nid")
         .distinct()
     )
-    return _rerank_topk(cand, corpus, k, id_col, vec_col, dim)
+    return _rerank_topk(cand, corpus, k, id_col, vec_col)
 
 
 def _rerank_topk(
@@ -569,16 +566,12 @@ def _rerank_topk(
     k: int,
     id_col: str,
     vec_col: str,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact-cosine re-rank of a (qid, nid) candidate table → top-k.
 
-    Norms precomputed per VECTOR before the join, not per candidate
-    pair: interpreted array aggregates are the scoring cost, and the
-    candidate set is orders of magnitude larger than the corpus. Same
-    doubles, bit-identical cos_sim (the norm of a vector doesn't
-    depend on which pair it appears in). Shared by the LSH and IVF
-    paths — any blocking scheme reduces to a (qid, nid) table here.
+    Norms are per VECTOR (:func:`_normed`); the candidate set is
+    orders of magnitude larger than the corpus. Shared by the LSH and
+    IVF paths — any blocking scheme reduces to a (qid, nid) table here.
 
     Scoring is the JVM fold (oracle-exact). At scale every vector
     crosses the join once per candidate PAIR (134 s on 13.4M candidates
@@ -586,27 +579,16 @@ def _rerank_topk(
     cogrouped re-rank (:func:`_ivf_rerank_cogrouped`, 25 s) that ships
     vectors once per bucket instead.
     """
-    e = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-    en = e.select("vid", "v", _norm(F.col("v"), dim).alias("nrm"))
-    qv = en.select(
-        F.col("vid").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
+    pairs = cand.join(_normed(corpus, id_col, vec_col, "q"), "qid").join(
+        _normed(corpus, id_col, vec_col, "n"), "nid"
     )
-    nv = en.select(
-        F.col("vid").alias("nid"), F.col("v").alias("nv"), F.col("nrm").alias("nn")
-    )
-    cos = F.try_divide(_dot(F.col("qv"), F.col("nv"), dim), F.col("qn") * F.col("nn"))
-    scored = cand.join(qv, "qid").join(nv, "nid").select("qid", "nid", cos.alias("cos_sim"))
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("nid").alias("neighbor_id"),
-            "rank",
-            "cos_sim",
-        )
-    )
+    return _exact_topk(pairs, k, "query_id", "neighbor_id")
+
+
+# re-rank source of the candidate-table oracles: (qid, nid) -> vectors
+_CAND_PAIRS_SQL = (
+    "FROM cand c JOIN {table} q ON q.vec_id = c.qid JOIN {table} n ON n.vec_id = c.nid"
+)
 
 
 def ann_topk_sql(
@@ -675,16 +657,7 @@ def ann_topk_sql(
         probe_cte = ""
         probe_src = "bh"
     u = portable_hash60_sql("(plane::VARCHAR || ':' || (d - 1)::VARCHAR)")
-    dot = (
-        "list_reduce(list_prepend(0.0, list_transform(range(1, len(q.embedding) + 1), "
-        "i -> q.embedding[i]::DOUBLE * n.embedding[i]::DOUBLE)), (a, b) -> a + b)"
-    )
-    nrm = (
-        "sqrt(list_reduce(list_prepend(0.0, list_transform({v}, x -> x::DOUBLE * x::DOUBLE)), "
-        "(a, b) -> a + b))"
-    )
-    return f"""
-WITH proj AS (
+    ctes = f"""proj AS (
   SELECT e.vec_id, p.plane,
          sum(e.embedding[d.d]::DOUBLE * ({u}::DOUBLE / {TWO59} - 1.0)) AS s
   FROM {table} e,
@@ -702,17 +675,8 @@ WITH proj AS (
 ){idx_cte}{probe_cte}, cand AS (
   SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
   FROM {probe_src} a JOIN {idx_src} b ON a.band = b.band AND a.bh = b.bh AND a.vec_id <> b.vec_id
-), scored AS (
-  SELECT c.qid AS query_id, c.nid AS neighbor_id,
-         {dot} / NULLIF({nrm.format(v='q.embedding')} * {nrm.format(v='n.embedding')}, 0) AS cos_sim
-  FROM cand c JOIN {table} q ON q.vec_id = c.qid JOIN {table} n ON n.vec_id = c.nid
-)
-SELECT query_id, neighbor_id,
-       row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank,
-       cos_sim
-FROM scored
-QUALIFY rank <= {k}
-"""
+)"""
+    return _exact_topk_sql(_CAND_PAIRS_SQL.format(table=table), k, ctes=ctes)
 
 
 # ---------------------------------------------------------------------------
@@ -744,7 +708,7 @@ def ivf_centroids(spark, n_centroids: int, dim: int) -> DataFrame:
             F.sequence(F.lit(0), F.lit(dim - 1)),
             lambda d: _ivf_component(F.col("centroid"), d),
         ).alias("u"),
-    ).select("centroid", "u", _norm(F.col("u"), dim).alias("nrm"))
+    ).select("centroid", "u", _norm(F.col("u")).alias("nrm"))
 
 
 def train_centroids_kmeans(
@@ -922,7 +886,7 @@ def ivf_topk(
             .filter(F.col("qid") != F.col("nid"))
             .select("qid", "nid")
         )
-        return _rerank_topk(cand, corpus, k, id_col, vec_col, dim)
+        return _rerank_topk(cand, corpus, k, id_col, vec_col)
     # score every vector against every centroid (broadcast the tiny
     # centroid table); |v| is constant per vector so argmax only needs
     # dot / |u_c|
@@ -935,7 +899,7 @@ def ivf_topk(
             # try_divide: a collapsed kmeans centroid can be the zero
             # vector (nrm=0) — ANSI mode (Spark 4 default) would throw on
             # plain /; NULL scores rank last (desc → nulls last)
-            F.try_divide(_dot(F.col("v"), F.col("u"), dim), F.col("nrm")).alias("score"),
+            F.try_divide(_dot(F.col("v"), F.col("u")), F.col("nrm")).alias("score"),
         )
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("centroid"))
@@ -955,7 +919,7 @@ def ivf_topk(
         .filter(F.col("qid") != F.col("nid"))
         .select("qid", "nid")
     )
-    return _rerank_topk(cand, corpus, k, id_col, vec_col, dim)
+    return _rerank_topk(cand, corpus, k, id_col, vec_col)
 
 
 def _lloyd_numpy(x, k: int, seed: int = 42, iters: int = 20):
@@ -1125,7 +1089,7 @@ def ivf_topk_hier(
         .select(
             "vec_id",
             "coarse",
-            F.try_divide(_dot(F.col("v"), F.col("cu"), dim), F.col("cnrm")).alias("cscore"),
+            F.try_divide(_dot(F.col("v"), F.col("cu")), F.col("cnrm")).alias("cscore"),
         )
     )
     w_a = Window.partitionBy("vec_id").orderBy(F.col("cscore").desc(), F.col("coarse"))
@@ -1143,7 +1107,7 @@ def ivf_topk_hier(
         .select(
             "vec_id",
             "centroid",
-            F.try_divide(_dot(F.col("v"), F.col("u"), dim), F.col("nrm")).alias("score"),
+            F.try_divide(_dot(F.col("v"), F.col("u")), F.col("nrm")).alias("score"),
         )
     )
     w_b = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("centroid"))
@@ -1284,15 +1248,6 @@ def ivf_topk_sql(
     ceil(sqrt(count(*)))) — integer-exact in both engines.
     """
     u = portable_hash60_sql("('ivf:' || c.c::VARCHAR || ':' || (d - 1)::VARCHAR)")
-    fold = "list_reduce(list_prepend(0.0, {terms}), (a, b) -> a + b)"
-    cdot = fold.format(
-        terms=f"list_transform(range(1, {dim} + 1), i -> e.embedding[i]::DOUBLE * c.u[i])"
-    )
-    dot = fold.format(
-        terms="list_transform(range(1, len(q.embedding) + 1), "
-        "i -> q.embedding[i]::DOUBLE * n.embedding[i]::DOUBLE)"
-    )
-    nrm = "sqrt(" + fold.format(terms="list_transform({v}, x -> x::DOUBLE * x::DOUBLE)") + ")"
     if n_centroids is None:
         c_bound = (
             f"(SELECT CAST(greatest(4, ceil(sqrt(count(*)))) AS BIGINT) - 1 FROM {table})"
@@ -1300,15 +1255,14 @@ def ivf_topk_sql(
         cent_src = f"(SELECT unnest(generate_series(0, {c_bound})) AS c) c"
     else:
         cent_src = f"range(0, {n_centroids}) c(c)"
-    return f"""
-WITH cent AS (
+    ctes = f"""cent AS (
   SELECT c.c AS centroid,
          list_transform(range(1, {dim} + 1), d -> ({u}::DOUBLE / {TWO59} - 1.0)) AS u
   FROM {cent_src}
 ), cn AS (
-  SELECT centroid, u, {nrm.format(v='u')} AS nrm FROM cent
+  SELECT centroid, u, {_norm_sql('u')} AS nrm FROM cent
 ), sc AS (
-  SELECT e.vec_id, c.centroid, {cdot} / NULLIF(c.nrm, 0) AS score
+  SELECT e.vec_id, c.centroid, {_dot_sql('e.embedding', 'c.u', dim)} / NULLIF(c.nrm, 0) AS score
   FROM {table} e, cn c
 ), ranked AS (
   SELECT vec_id, centroid,
@@ -1320,17 +1274,8 @@ WITH cent AS (
   SELECT vec_id AS qid, centroid FROM ranked WHERE r <= {n_probe}
 ), cand AS (
   SELECT p.qid, a.nid FROM probes p JOIN assign a USING (centroid) WHERE p.qid <> a.nid
-), scored AS (
-  SELECT c.qid AS query_id, c.nid AS neighbor_id,
-         {dot} / NULLIF({nrm.format(v='q.embedding')} * {nrm.format(v='n.embedding')}, 0) AS cos_sim
-  FROM cand c JOIN {table} q ON q.vec_id = c.qid JOIN {table} n ON n.vec_id = c.nid
-)
-SELECT query_id, neighbor_id,
-       row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank,
-       cos_sim
-FROM scored
-QUALIFY rank <= {k}
-"""
+)"""
+    return _exact_topk_sql(_CAND_PAIRS_SQL.format(table=table), k, ctes=ctes)
 
 
 def recall_audit(
@@ -1400,7 +1345,7 @@ def recall_audit(
     # (n_queries × k id pairs, a few kB) feeds both method branches
     # from the block cache with truncated lineage.
     exact = brute_force_topk(
-        emb, queries=queries, k=k, dim=dim, max_query_rows=max_rows
+        emb, queries=queries, k=k, max_query_rows=max_rows
     ).select("query_id", "neighbor_id").localCheckpoint()
     builders = {
         "ann_lsh": lambda: ann_topk(emb, k=k, bits=bits, bands=bands, dim=dim),
@@ -1780,33 +1725,18 @@ FROM intra i JOIN nearest nr ON nr.label = i.label AND nr.r = 1
 # ---------------------------------------------------------------------------
 
 
-def embedding_auc(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """Per-class ROC-AUC of cosine-to-own-centroid as a classifier
-    score — the rank-based (Mann-Whitney) formulation: does distance
-    to the class centroid actually separate the class from the rest?
-    The one-number companion to label_agreement / class-stats: AUC is
-    threshold-free and insensitive to score calibration.
+def _centroid_scores(
+    emb: DataFrame, id_col: str, vec_col: str, label_col: str
+) -> tuple[DataFrame, Column]:
+    """Every vector × every class centroid: the broadcast cross join
+    (vid, v, lab, cls, cvec) and its decimal-ROUNDED cosine score.
 
-    AUC_c = (Σ_{i∈c} rank(s_i) − n_c(n_c+1)/2) / (n_c · (N − n_c))
-    over scores s = cos(v, centroid_c), ranked ASCENDING with
-    AVERAGE ranks on ties. Scores are decimal-ROUNDED before ranking
-    (centroid means carry aggregation-order ulp noise; ranking must
-    not see it), and the average-rank formula (min-rank + (tie−1)/2)
-    makes ties engine-independent.
-
-    Scale shape: centroids via one (label × dim) map-side-combinable
-    aggregate (exchange = labels × D partials); scoring is one scan
-    against the broadcast 10-row centroid table; the per-class rank
-    is a window over (class) — the one global-ish sort, standard for
-    exact AUC (a histogram-bucketed AUC is the approximate scale-out
-    when N per class exceeds a task).
-
-    Output: (class, n_pos, n_neg, auc).
+    Centroids come from one (label × dim) map-side-combinable
+    aggregate. Zero-norm vectors and centroids are filtered on BOTH
+    sides rather than try_divided: a NULL score would rank NULLS FIRST
+    in Spark but NULLS LAST in DuckDB, silently skewing every rank.
+    The score is rounded because centroid means carry
+    aggregation-order ulp noise that ranking and binning must not see.
     """
     from dataframeutils_spark.schema import decround
 
@@ -1827,18 +1757,67 @@ def embedding_auc(
         )
         .select("cls", F.transform(F.col("_sm"), lambda s: s.m).alias("cvec"))
     )
-    # zero-norm vectors/centroids are filtered on BOTH sides rather
-    # than try_divided: a NULL score would rank NULLS FIRST in Spark
-    # but NULLS LAST in DuckDB, silently skewing every rank
     cent = cent.filter(_norm(F.col("cvec")) > 0)
     base = base.filter(_norm(F.col("v")) > 0)
-    scored = base.crossJoin(F.broadcast(cent)).select(
+    cos = _dot(F.col("v"), F.col("cvec")) / (_norm(F.col("v")) * _norm(F.col("cvec")))
+    return base.crossJoin(F.broadcast(cent)), decround(cos)
+
+
+def _centroid_scores_sql(table: str) -> str:
+    """DuckDB twin of :func:`_centroid_scores`: the WITH entries
+    ``dims``, ``cent`` and ``cs`` (cls, vid, is_pos, s)."""
+    from dataframeutils_spark.schema import decround_sql
+
+    return f"""dims AS (
+  SELECT label AS lab, i.i AS pos, avg(embedding[i.i]::DOUBLE) AS m
+  FROM {table}
+  CROSS JOIN (SELECT unnest(range(1, len((SELECT embedding FROM {table} LIMIT 1)) + 1)) AS i) i
+  GROUP BY label, i.i
+), cent AS (
+  SELECT lab AS cls, list(m ORDER BY pos) AS cvec FROM dims GROUP BY lab
+), cs AS (
+  SELECT c.cls, e.vec_id AS vid, e.label = c.cls AS is_pos,
+         {decround_sql(_cos_sql("e.embedding", "c.cvec"))} AS s
+  FROM {table} e CROSS JOIN cent c
+  WHERE {_norm_sql("e.embedding")} > 0 AND {_norm_sql("c.cvec")} > 0
+)"""
+
+
+def embedding_auc(
+    emb: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    label_col: str = "label",
+) -> DataFrame:
+    """Per-class ROC-AUC of cosine-to-own-centroid as a classifier
+    score — the rank-based (Mann-Whitney) formulation: does distance
+    to the class centroid actually separate the class from the rest?
+    The one-number companion to label_agreement / class-stats: AUC is
+    threshold-free and insensitive to score calibration.
+
+    AUC_c = (Σ_{i∈c} rank(s_i) − n_c(n_c+1)/2) / (n_c · (N − n_c))
+    over scores s = cos(v, centroid_c), ranked ASCENDING with
+    AVERAGE ranks on ties. Scores are decimal-ROUNDED before ranking
+    (:func:`_centroid_scores`), and the average-rank formula
+    (min-rank + (tie−1)/2) makes ties engine-independent.
+
+    Scale shape: centroids via one (label × dim) map-side-combinable
+    aggregate (exchange = labels × D partials); scoring is one scan
+    against the broadcast 10-row centroid table; the per-class rank
+    is a window over (class) — the one global-ish sort, standard for
+    exact AUC (a histogram-bucketed AUC is the approximate scale-out
+    when N per class exceeds a task).
+
+    Output: (class, n_pos, n_neg, auc).
+    """
+    from dataframeutils_spark.schema import decround
+
+    pairs, s = _centroid_scores(emb, id_col, vec_col, label_col)
+    scored = pairs.select(
         "cls",
         "vid",
         (F.col("lab") == F.col("cls")).alias("is_pos"),
-        decround(
-            _dot(F.col("v"), F.col("cvec")) / (_norm(F.col("v")) * _norm(F.col("cvec")))
-        ).alias("s"),
+        s.alias("s"),
     )
     wc = Window.partitionBy("cls").orderBy("s")
     tie = Window.partitionBy("cls", "s")
@@ -1869,36 +1848,12 @@ def embedding_auc_sql(table: str = "embeddings") -> str:
     cosine, pre-rank decimal rounding and average-rank tie formula."""
     from dataframeutils_spark.schema import decround_sql
 
-    dot = (
-        "list_reduce(list_prepend(0.0, list_transform(range(1, len(e.embedding) + 1), "
-        "i -> e.embedding[i]::DOUBLE * c.cvec[i])), (a, b) -> a + b)"
-    )
-    nrm_v = (
-        "sqrt(list_reduce(list_prepend(0.0, list_transform(e.embedding, "
-        "x -> x::DOUBLE * x::DOUBLE)), (a, b) -> a + b))"
-    )
-    nrm_c = (
-        "sqrt(list_reduce(list_prepend(0.0, list_transform(c.cvec, "
-        "x -> x * x)), (a, b) -> a + b))"
-    )
     return f"""
-WITH dims AS (
-  SELECT label AS lab, i.i AS pos, avg(embedding[i.i]::DOUBLE) AS m
-  FROM {table}
-  CROSS JOIN (SELECT unnest(range(1, len((SELECT embedding FROM {table} LIMIT 1)) + 1)) AS i) i
-  GROUP BY label, i.i
-), cent AS (
-  SELECT lab AS cls, list(m ORDER BY pos) AS cvec FROM dims GROUP BY lab
-), scored AS (
-  SELECT c.cls, e.vec_id AS vid, e.label = c.cls AS is_pos,
-         {decround_sql(f"{dot} / ({nrm_v} * {nrm_c})")} AS s
-  FROM {table} e CROSS JOIN cent c
-  WHERE sqrt(list_reduce(list_prepend(0.0, list_transform(e.embedding, x -> x::DOUBLE * x::DOUBLE)), (a, b) -> a + b)) > 0 AND sqrt(list_reduce(list_prepend(0.0, list_transform(c.cvec, x -> x * x)), (a, b) -> a + b)) > 0
-), ranked AS (
+WITH {_centroid_scores_sql(table)}, ranked AS (
   SELECT *,
          rank() OVER (PARTITION BY cls ORDER BY s)
            + (count(*) OVER (PARTITION BY cls, s) - 1) / 2.0 AS avg_rank
-  FROM scored
+  FROM cs
 )
 SELECT cls AS class,
        CAST(count(*) FILTER (WHERE is_pos) AS BIGINT) AS n_pos,
@@ -2069,33 +2024,9 @@ def calibration_audit(
     """
     from dataframeutils_spark.schema import decround
 
-    base = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        F.col(label_col).alias("lab"),
-    )
-    cent = (
-        base.select("lab", F.posexplode(F.col("v")).alias("pos", "x"))
-        .groupBy("lab", "pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("m"))
-        .groupBy(F.col("lab").alias("cls"))
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("pos"), F.col("m")))
-            ).alias("_sm")
-        )
-        .select("cls", F.transform(F.col("_sm"), lambda s: s.m).alias("cvec"))
-    )
-    cent = cent.filter(_norm(F.col("cvec")) > 0)
-    base = base.filter(_norm(F.col("v")) > 0)
-    p = (
-        decround(
-            _dot(F.col("v"), F.col("cvec"))
-            / (_norm(F.col("v")) * _norm(F.col("cvec")))
-        )
-        + F.lit(1.0)
-    ) / F.lit(2.0)
-    scored = base.crossJoin(F.broadcast(cent)).select(
+    pairs, s = _centroid_scores(emb, id_col, vec_col, label_col)
+    p = (s + F.lit(1.0)) / F.lit(2.0)
+    scored = pairs.select(
         "cls",
         (F.col("lab") == F.col("cls")).cast("int").alias("y"),
         p.alias("p"),
@@ -2139,31 +2070,9 @@ def calibration_audit_sql(n_bins: int = 10, table: str = "embeddings") -> str:
     cosine, probability mapping, bin cells and per-class reduce."""
     from dataframeutils_spark.schema import decround_sql
 
-    dot = (
-        "list_reduce(list_prepend(0.0, list_transform(range(1, len(e.embedding) + 1), "
-        "i -> e.embedding[i]::DOUBLE * c.cvec[i])), (a, b) -> a + b)"
-    )
-    nrm_v = (
-        "sqrt(list_reduce(list_prepend(0.0, list_transform(e.embedding, "
-        "x -> x::DOUBLE * x::DOUBLE)), (a, b) -> a + b))"
-    )
-    nrm_c = (
-        "sqrt(list_reduce(list_prepend(0.0, list_transform(c.cvec, "
-        "x -> x * x)), (a, b) -> a + b))"
-    )
     return f"""
-WITH dims AS (
-  SELECT label AS lab, i.i AS pos, avg(embedding[i.i]::DOUBLE) AS m
-  FROM {table}
-  CROSS JOIN (SELECT unnest(range(1, len((SELECT embedding FROM {table} LIMIT 1)) + 1)) AS i) i
-  GROUP BY label, i.i
-), cent AS (
-  SELECT lab AS cls, list(m ORDER BY pos) AS cvec FROM dims GROUP BY lab
-), scored AS (
-  SELECT c.cls, CAST(e.label = c.cls AS INT) AS y,
-         ({decround_sql(f"{dot} / ({nrm_v} * {nrm_c})")} + 1.0) / 2.0 AS p
-  FROM {table} e CROSS JOIN cent c
-  WHERE {nrm_v} > 0 AND {nrm_c} > 0
+WITH {_centroid_scores_sql(table)}, scored AS (
+  SELECT cls, CAST(is_pos AS INT) AS y, (s + 1.0) / 2.0 AS p FROM cs
 ), cells AS (
   SELECT cls, least({n_bins - 1}, CAST(floor(p * {n_bins}) AS INT)) AS bin,
          count(*) AS nb, sum(p) AS sp, sum(y) AS sy,
@@ -2307,11 +2216,7 @@ def mmd_drift_sql(
     u2 = u("mmdw2", "f.d::VARCHAR || ':' || i::VARCHAR")
     ub = u("mmdb", "f.d::VARCHAR")
     amp = math.sqrt(2.0 / n_features)
-    dot = (
-        "list_reduce(list_prepend(0.0, list_transform("
-        f"range(1, {dim} + 1), i -> e.embedding[i]::DOUBLE * f.w[i])), "
-        "(a, b) -> a + b)"
-    )
+    dot = _dot_sql("e.embedding", "f.w", dim)
 
     def means(rel: str, tag: str) -> str:
         return f"""m_{tag} AS (

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.dedup import portable_hash60, portable_hash60_sql
+from dataframeutils_spark.operators.similarity import _dot_sql, _fold_sql, _norm_sql
 from dataframeutils_spark.operators.text import _tokens
 
 # --------------------------------------------------------------------------
@@ -499,7 +500,7 @@ def pq_quantize(
     native HOF projection — per vector m·k·(D/m) = k·D multiply-adds,
     no Python, no shuffle, no explode. The distance fold is
     sequential-order-pinned so Spark and DuckDB produce bit-identical
-    doubles (same trick as brute_force_topk_sql's list_reduce).
+    doubles (the fold of ``similarity._fold_sql``).
     """
     from dataframeutils_spark.schema import siground
 
@@ -525,31 +526,33 @@ def pq_quantize(
     )
 
 
+def _pq_dmat_sql(m: int, k: int, dim: int, table: str) -> str:
+    """DuckDB twin of :func:`_pq_dmat`: (vec_id, dmat), the m×k
+    squared-L2 distances of each sub-vector to each codebook entry."""
+    w = dim // m
+    comp = portable_hash60_sql(
+        "('pq:' || s::VARCHAR || ':' || c::VARCHAR || ':' || d::VARCHAR)"
+    )
+    diffs = f"""list_transform(range(0, {w}), d ->
+            embedding[s * {w} + d + 1]::DOUBLE - ({comp} / {_PQ_TWO59} - 1.0))"""
+    sub = f"list_transform(range(0, {k}), c -> {_fold_sql(f'list_transform({diffs}, x -> x * x)')})"
+    return f"""
+  SELECT vec_id, list_transform(range(0, {m}), s -> {sub}) AS dmat
+  FROM {table}
+"""
+
+
 def pq_quantize_sql(
     m: int = 8, k: int = 16, dim: int = 64, table: str = "embeddings"
 ) -> str:
     from dataframeutils_spark.schema import siground_sql
 
-    w = dim // m
-    comp = portable_hash60_sql(
-        "('pq:' || s::VARCHAR || ':' || c::VARCHAR || ':' || d::VARCHAR)"
-    )
-    sub = f"""list_transform(range(0, {k}), c ->
-        list_reduce(list_prepend(0.0, list_transform(
-          list_transform(range(0, {w}), d ->
-            embedding[s * {w} + d + 1]::DOUBLE - ({comp} / {_PQ_TWO59} - 1.0)),
-          x -> x * x)),
-          (a, b) -> a + b))"""
     return f"""
-WITH dm AS (
-  SELECT vec_id,
-         list_transform(range(0, {m}), s -> {sub}) AS dmat
-  FROM {table}
-)
+WITH dm AS ({_pq_dmat_sql(m, k, dim, table)})
 SELECT vec_id,
        array_to_string(list_transform(dmat, ds ->
          (list_position(ds, list_min(ds)) - 1)::VARCHAR), ',') AS pq_codes,
-       {siground_sql("list_reduce(list_prepend(0.0, list_transform(dmat, ds -> list_min(ds))), (a, b) -> a + b)")} AS sq_err
+       {siground_sql(_fold_sql("list_transform(dmat, ds -> list_min(ds))"))} AS sq_err
 FROM dm
 """
 
@@ -633,21 +636,8 @@ def pq_topk_sql(
 ) -> str:
     from dataframeutils_spark.schema import siground_sql
 
-    w = dim // m
-    comp = portable_hash60_sql(
-        "('pq:' || s::VARCHAR || ':' || c::VARCHAR || ':' || d::VARCHAR)"
-    )
-    sub = f"""list_transform(range(0, {k}), c ->
-        list_reduce(list_prepend(0.0, list_transform(
-          list_transform(range(0, {w}), d ->
-            embedding[s * {w} + d + 1]::DOUBLE - ({comp} / {_PQ_TWO59} - 1.0)),
-          x -> x * x)),
-          (a, b) -> a + b))"""
     return f"""
-WITH dm AS (
-  SELECT vec_id, list_transform(range(0, {m}), s -> {sub}) AS dmat
-  FROM {table}
-),
+WITH dm AS ({_pq_dmat_sql(m, k, dim, table)}),
 corpus AS (
   SELECT vec_id AS nid,
          list_transform(dmat, ds -> list_position(ds, list_min(ds)) - 1) AS codes
@@ -658,8 +648,7 @@ queries AS (
 ),
 scored AS (
   SELECT q.qid, c.nid,
-         list_reduce(list_prepend(0.0, list_transform(range(0, {m}), s ->
-           q.lut[s + 1][c.codes[s + 1] + 1])), (a, b) -> a + b) AS adc
+         {_fold_sql(f"list_transform(range(0, {m}), s -> q.lut[s + 1][c.codes[s + 1] + 1])")} AS adc
   FROM corpus c JOIN queries q ON c.nid <> q.qid
 )
 SELECT qid AS query_id, nid AS neighbor_id,
@@ -714,7 +703,7 @@ def ivfadc_topk(
         .select(
             "vec_id",
             "centroid",
-            F.try_divide(sim._dot(F.col("v"), F.col("u"), dim), F.col("nrm")).alias("score"),
+            F.try_divide(sim._dot(F.col("v"), F.col("u")), F.col("nrm")).alias("score"),
         )
     )
     wr = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("centroid"))
@@ -809,32 +798,16 @@ def ivfadc_topk_sql(
 ) -> str:
     from dataframeutils_spark.schema import siground_sql
 
-    TWO59 = float(2**59)
-    w = dim // m
     cu = portable_hash60_sql("('ivf:' || c.c::VARCHAR || ':' || (d - 1)::VARCHAR)")
-    fold = "list_reduce(list_prepend(0.0, {terms}), (a, b) -> a + b)"
-    cdot = fold.format(
-        terms=f"list_transform(range(1, {dim} + 1), i -> e.embedding[i]::DOUBLE * c.u[i])"
-    )
-    nrm = "sqrt(" + fold.format(terms="list_transform({v}, x -> x::DOUBLE * x::DOUBLE)") + ")"
-    comp = portable_hash60_sql(
-        "('pq:' || s::VARCHAR || ':' || c::VARCHAR || ':' || d::VARCHAR)"
-    )
-    sub = f"""list_transform(range(0, {k}), c ->
-        list_reduce(list_prepend(0.0, list_transform(
-          list_transform(range(0, {w}), d ->
-            embedding[s * {w} + d + 1]::DOUBLE - ({comp} / {TWO59} - 1.0)),
-          x -> x * x)),
-          (a, b) -> a + b))"""
     return f"""
 WITH cent AS (
   SELECT c.c AS centroid,
-         list_transform(range(1, {dim} + 1), d -> ({cu}::DOUBLE / {TWO59} - 1.0)) AS u
+         list_transform(range(1, {dim} + 1), d -> ({cu}::DOUBLE / {_PQ_TWO59} - 1.0)) AS u
   FROM range(0, {n_centroids}) c(c)
 ), cn AS (
-  SELECT centroid, u, {nrm.format(v='u')} AS nrm FROM cent
+  SELECT centroid, u, {_norm_sql('u')} AS nrm FROM cent
 ), sc AS (
-  SELECT e.vec_id, c.centroid, {cdot} / NULLIF(c.nrm, 0) AS score
+  SELECT e.vec_id, c.centroid, {_dot_sql('e.embedding', 'c.u', dim)} / NULLIF(c.nrm, 0) AS score
   FROM {table} e, cn c
 ), ranked AS (
   SELECT vec_id, centroid,
@@ -847,10 +820,7 @@ WITH cent AS (
 ), probes AS (
   SELECT vec_id AS qid, centroid FROM ranked
   WHERE r <= {n_probe} AND vec_id % {query_mod} = 0
-), dm AS (
-  SELECT vec_id, list_transform(range(0, {m}), s -> {sub}) AS dmat
-  FROM {table}
-), codes AS (
+), dm AS ({_pq_dmat_sql(m, k, dim, table)}), codes AS (
   SELECT vec_id AS nid,
          list_transform(dmat, ds -> list_position(ds, list_min(ds)) - 1) AS codes
   FROM dm
@@ -861,8 +831,7 @@ WITH cent AS (
   WHERE p.qid <> a.nid
 ), scored AS (
   SELECT c.qid, c.nid,
-         list_reduce(list_prepend(0.0, list_transform(range(0, {m}), s ->
-           l.lut[s + 1][cd.codes[s + 1] + 1])), (a, b) -> a + b) AS adc
+         {_fold_sql(f"list_transform(range(0, {m}), s -> l.lut[s + 1][cd.codes[s + 1] + 1])")} AS adc
   FROM cand c JOIN codes cd USING (nid) JOIN luts l USING (qid)
 )
 SELECT qid AS query_id, nid AS neighbor_id,

@@ -352,9 +352,7 @@ def test_semantic_decontaminate_flags_paraphrase_neighbors(spark):
     )
     out = {
         r["vec_id"]: r
-        for r in cleaning.semantic_decontaminate(
-            corpus, evals, threshold=0.9, dim=4
-        ).collect()
+        for r in cleaning.semantic_decontaminate(corpus, evals, threshold=0.9).collect()
     }
     assert out[1]["contaminated"] and out[1]["nearest_eval_id"] == 100
     assert out[1]["max_eval_sim"] == pytest.approx(1.0)
@@ -368,7 +366,7 @@ def test_semantic_decontaminate_broadcasts_eval_set(spark):
     )
     evals = corpus.limit(3)
     plan = (
-        cleaning.semantic_decontaminate(corpus, evals, dim=2)
+        cleaning.semantic_decontaminate(corpus, evals)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -905,7 +905,7 @@ def test_hard_negatives_ann_tier_recall(spark):
     the sf0.001 embeddings (hash-derived hyperplanes — no RNG luck),
     and every anchor must keep a full result set."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    exact = similarity.hard_negatives(emb, k=3, dim=64)
+    exact = similarity.hard_negatives(emb, k=3)
     approx = similarity.hard_negatives_ann(
         emb, k=3, oversample=8, bits=32, bands=8, dim=64
     )
@@ -1001,11 +1001,11 @@ def test_hard_negatives_partitioning_invariant(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     a = {
         (r["anchor_id"], r["rank"], r["negative_id"])
-        for r in similarity.hard_negatives(emb, k=2, dim=64).collect()
+        for r in similarity.hard_negatives(emb, k=2).collect()
     }
     b = {
         (r["anchor_id"], r["rank"], r["negative_id"])
-        for r in similarity.hard_negatives(emb.repartition(13), k=2, dim=64).collect()
+        for r in similarity.hard_negatives(emb.repartition(13), k=2).collect()
     }
     assert a == b and len(a) > 0
 
@@ -1390,7 +1390,7 @@ def test_multiprobe_bucket_cap_recall_floor_clustered(spark):
 
     exact = {
         (r["query_id"], r["neighbor_id"])
-        for r in similarity.brute_force_topk(emb, k=5, dim=d).select(
+        for r in similarity.brute_force_topk(emb, k=5).select(
             "query_id", "neighbor_id"
         ).collect()
     }

@@ -12,14 +12,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
-from dataframeutils_spark.sources.testdata import TABLES  # noqa: E402
-from tools.oracle_sweep import compare, normalize  # noqa: E402
+from tools.oracle_sweep import sweep  # noqa: E402
 
 
 def main() -> None:
@@ -45,40 +41,8 @@ def main() -> None:
         if n == 0:
             fails += 1
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
-    qs, os_ = E.queries(), E.oracle_sql()
-    results: dict[str, dict] = {}
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            got_pdf = fn(spark, sf_dir).toPandas()
-            if name in os_:
-                got = normalize(got_pdf)
-                want = normalize(con.execute(os_[name]).fetchdf())
-                err = compare(got, want)
-                status = "OK " if err is None else f"FAIL {err}"
-                results[name] = {"check": "exact", "ok": err is None,
-                                 "rows": len(got_pdf), "err": err}
-            else:
-                status = f"ROWS-ONLY n={len(got_pdf)}" + (
-                    " FAIL empty" if len(got_pdf) == 0 else ""
-                )
-                results[name] = {"check": "rows_only", "ok": len(got_pdf) > 0,
-                                 "rows": len(got_pdf), "err": None}
-            if "FAIL" in status:
-                fails += 1
-        except Exception as exc:
-            status, fails = f"ERROR {type(exc).__name__}: {exc}", fails + 1
-            results[name] = {"check": "error", "ok": False, "rows": 0,
-                             "err": f"{type(exc).__name__}: {exc}"}
-        print(f"{name:28s} {time.time()-t0:7.2f}s  {status}", flush=True)
+    results = sweep(spark, sf_dir, E.queries(), E.oracle_sql(), only)
+    fails += sum(not r["ok"] for r in results.values())
     print(f"\n{'ALL GREEN' if fails == 0 else f'{fails} FAILURES'}")
     if not only:
         # committable evidence for ALL registered queries — the external

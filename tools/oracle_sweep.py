@@ -68,41 +68,54 @@ def compare(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
     return None
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    from dataframeutils_spark.session import get_spark
+def sweep(spark, sf_dir: str, queries: dict, oracles: dict, only=()) -> dict[str, dict]:
+    """Run each query (all of them, or those named in ``only``) and check
+    it: against its DuckDB oracle over the tables in ``sf_dir`` where
+    one exists, else for a non-empty result. Prints one status line per
+    query; returns {name: {"check", "ok", "rows", "err"}}."""
     from dataframeutils_spark.sources.testdata import TABLES
-    from dataframeutils_spark import driver
 
-    spark = get_spark(app_name="oracle-sweep", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-
-    qs, os_ = driver.all_queries(), driver.all_oracles()
-    fails = 0
-    for name, fn in qs.items():
+    results: dict[str, dict] = {}
+    for name, fn in queries.items():
         if only and name not in only:
             continue
         t0 = time.time()
         try:
             got_pdf = fn(spark, sf_dir).toPandas()
-            if name in os_:
+            n = len(got_pdf)
+            if name in oracles:
                 got = normalize(got_pdf)
-                want = normalize(con.execute(os_[name]).fetchdf())
+                want = normalize(con.execute(oracles[name]).fetchdf())
                 err = compare(got, want)
                 status = "OK " if err is None else f"FAIL {err}"
+                results[name] = {"check": "exact", "ok": err is None, "rows": n, "err": err}
             else:
-                status = f"ROWS-ONLY n={len(got_pdf)}" + (" FAIL empty" if len(got_pdf) == 0 else "")
-            if "FAIL" in status:
-                fails += 1
+                status = f"ROWS-ONLY n={n}" + (" FAIL empty" if n == 0 else "")
+                results[name] = {"check": "rows_only", "ok": n > 0, "rows": n, "err": None}
         except Exception as exc:
-            status, fails = f"ERROR {type(exc).__name__}: {exc}", fails + 1
-        print(f"{name:24s} {time.time()-t0:7.2f}s  {status}", flush=True)
+            err = f"{type(exc).__name__}: {exc}"
+            status = f"ERROR {err}"
+            results[name] = {"check": "error", "ok": False, "rows": 0, "err": err}
+        print(f"{name:28s} {time.time()-t0:7.2f}s  {status}", flush=True)
+    con.close()
+    return results
+
+
+def main() -> None:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+
+    from dataframeutils_spark.session import get_spark
+    from dataframeutils_spark import driver
+
+    spark = get_spark(app_name="oracle-sweep", shuffle_partitions=16)
+    results = sweep(spark, sf_dir, driver.all_queries(), driver.all_oracles(), only)
+    fails = sum(not r["ok"] for r in results.values())
     print(f"\n{'ALL GREEN' if fails == 0 else f'{fails} FAILURES'}")
     spark.stop()
     sys.exit(1 if fails else 0)

@@ -6,9 +6,9 @@ format for optimization rounds (plans/r{N}/<query>_before.txt /
 _after.txt). Runs against the package in the CURRENT working tree, so
 checking out an older commit in a worktree and running this from there
 produces the "before" plans. Run-specific text (expression ids `#123`,
-RDD ids `RDD[8]` and their JVM call sites, exchange `plan_id=42`) is
-normalized before writing, so dumps of the same query from two trees
-diff directly.
+RDD ids `RDD[8]` and their JVM call sites, exchange `plan_id=42`,
+PySpark lambda variables `x_402`) is normalized before writing, so
+dumps of the same query from two trees diff directly.
 
 Usage: python tools/plan_dump.py <out_dir> <suffix> <query> [query ...]
        python tools/plan_dump.py <out_dir> <suffix> ALL
@@ -30,6 +30,9 @@ _RUN_IDS = [
     (re.compile(r"RDD\[\d+\] at (\w+) at [^\s,]+:\d+"), r"RDD[N] at \1 at <call site>"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    # PySpark names lambda variables x_402, y_403 from one per-process
+    # counter, so every lambda built earlier in the process shifts them
+    (re.compile(r"lambda ([xyz])_\d+"), r"lambda \1_N"),
 ]
 
 
