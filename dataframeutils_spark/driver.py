@@ -1071,13 +1071,12 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed ANN with hash-derived centroids — the second scale
     path next to LSH, exactly oracle-checkable like similarity_ann.
     Centroid count auto-sizes to ⌈√N⌉ in BOTH engines (a fixed C makes
-    re-rank work quadratic: 352 s vs 28 s at the 10× stress). Since
-    r11 the registered query runs the PRODUCTION Arrow cogrouped
-    re-rank (r10 verdict item 3): candidates grow ~N^1.5 with auto-√N
-    centroids and the JVM fold path walled 118 s at the sf1 suite
-    bench vs 0.6 s-class Arrow batches — same argmax/tie rules, pinned
-    equal to the fold path in tests/test_northstar.py, so the exact
-    oracle is unchanged."""
+    re-rank work quadratic: 352 s vs 28 s at the 10× stress). The
+    re-rank is the cogrouped Arrow one, which every ivf_topk runs:
+    candidates grow ~N^1.5 with auto-√N centroids and a pairwise JVM
+    fold re-rank walled 118 s at the sf1 suite bench vs 0.6 s-class
+    Arrow batches. Its output is compared with the pairwise re-rank of
+    ivf_topk_sql after rounding, so the oracle is exact."""
     return round_floats(
         similarity.ivf_topk(
             load_table(spark, sf_dir, "embeddings"),
@@ -1085,7 +1084,6 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_centroids=None,
             n_probe=2,
             dim=EMB_DIM,
-            arrow_rerank=True,
         ),
         all_dec=True,
     )
@@ -1164,8 +1162,6 @@ def q_similarity_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_probe=2,
             dim=EMB_DIM,
             centroids=cents,
-            arrow_rerank=True,
-            arrow_assign=True,
         ),
         all_dec=True,
     )
@@ -1191,7 +1187,6 @@ def q_similarity_ivf_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
             coarse_probe=4,
             dim=EMB_DIM,
             centroids=cents,
-            arrow_assign=True,
         ),
         all_dec=True,
     )

@@ -1364,7 +1364,9 @@ def semdedup_prune(
        on siground-rounded similarities (round-before-compare, the
        engine's cross-engine ordering contract).
 
-    Output: (vec_id, centroid, cent_sim, kept) for every input vector.
+    Output: (vec_id, centroid, cent_sim, kept) for every input vector
+    with a non-NULL, nonzero-norm embedding; the others have no
+    direction to cluster by and are dropped, in both engines.
 
     Scale: assignment is a broadcast nested-loop over <= C centroid
     rows (scan-side, no shuffle of the corpus); the only exchange of
@@ -1374,18 +1376,10 @@ def semdedup_prune(
     :func:`embedding_dup_pairs` (the O(n^2) exactness baseline) there
     is no crossJoin anywhere.
     """
-    from dataframeutils_spark.operators.similarity import (
-        _dot,
-        _norm,
-        auto_centroid_count,
-        ivf_centroids,
-    )
+    from dataframeutils_spark.operators.similarity import _dot, _hash_quantizer, _norm
     from dataframeutils_spark.schema import siground
 
-    spark = embeddings.sparkSession
-    if n_clusters is None:
-        n_clusters = auto_centroid_count(embeddings.count())
-    cents = ivf_centroids(spark, n_clusters, dim)
+    cents = _hash_quantizer(embeddings, n_clusters, dim, vec_col)
     e = embeddings.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("v"),
@@ -1460,27 +1454,13 @@ def semdedup_prune_sql(
     """DuckDB oracle for :func:`semdedup_prune` — identical hash-derived
     centroids, sequential list_reduce folds (bit-identical to Spark's
     aggregate), siground rounding BEFORE every comparison."""
-    from dataframeutils_spark.operators.similarity import TWO59, _dot_sql, _norm_sql
+    from dataframeutils_spark.operators.similarity import _centroids_sql, _dot_sql, _norm_sql
     from dataframeutils_spark.schema import siground_sql
 
-    u = portable_hash60_sql("('ivf:' || c.c::VARCHAR || ':' || (d - 1)::VARCHAR)")
     cdot = _dot_sql("e.embedding", "c.u", dim)
     pdot = _dot_sql("a.v", "b.v", dim)
-    if n_clusters is None:
-        c_bound = (
-            f"(SELECT CAST(greatest(4, ceil(sqrt(count(*)))) AS BIGINT) - 1 FROM {table})"
-        )
-        cent_src = f"(SELECT unnest(generate_series(0, {c_bound})) AS c) c"
-    else:
-        cent_src = f"range(0, {n_clusters}) c(c)"
     return f"""
-WITH cent AS (
-  SELECT c.c AS centroid,
-         list_transform(range(1, {dim} + 1), d -> ({u}::DOUBLE / {TWO59} - 1.0)) AS u
-  FROM {cent_src}
-), cn AS (
-  SELECT centroid, u, {_norm_sql('u')} AS nrm FROM cent
-), ev AS (
+WITH {_centroids_sql(table, dim, n_clusters)}, ev AS (
   SELECT vec_id, embedding, {_norm_sql('embedding')} AS nv FROM {table}
 ), sc AS (
   SELECT e.vec_id, e.embedding, e.nv, c.centroid,

@@ -44,6 +44,26 @@ from dataframeutils_spark.operators.dedup import portable_hash60, portable_hash6
 TWO59 = float(2**59)
 
 
+def _hash_uniform(key: Column) -> Column:
+    """Pseudo-uniform double in [-1, 1) from a string key,
+    ``portable_hash60(key) / 2^59 - 1``: the one source of every
+    hash-derived quantizer entry (hyperplanes, IVF centroids, PQ
+    codebooks; the key's salt keeps the families independent)."""
+    return portable_hash60(key).cast("double") / F.lit(TWO59) - F.lit(1.0)
+
+
+def _hash_uniform_sql(key: str) -> str:
+    """DuckDB twin of :func:`_hash_uniform`, bit-identical."""
+    return f"({portable_hash60_sql(key)}::DOUBLE / {TWO59} - 1.0)"
+
+
+def _embedding_dim(corpus: DataFrame, vec_col: str) -> int:
+    """Width of the first vector — a driver-side ``first()`` job, the
+    fallback when a caller does not pass ``dim``."""
+    first = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
+    return first["d"] if first is not None else 0
+
+
 def _dot(a: Column, b: Column) -> Column:
     """Sequential fold of Σ aᵢ·bᵢ in double — same order both engines.
 
@@ -305,12 +325,6 @@ def hard_negatives_sql(k: int = 5, table: str = "embeddings") -> str:
     )
 
 
-def hyperplane_component(plane: Column, dim: Column) -> Column:
-    """Deterministic pseudo-uniform hyperplane entry in [-1, 1)."""
-    h = portable_hash60(F.concat(plane.cast("string"), F.lit(":"), dim.cast("string")))
-    return h.cast("double") / F.lit(TWO59) - F.lit(1.0)
-
-
 def hyperplane_signatures(
     corpus: DataFrame,
     bits: int = 16,
@@ -339,13 +353,14 @@ def hyperplane_signatures(
     # version cost N×bits×dim hash evaluations (measured 76 s → ~5 s at
     # sf0.1 for 2000 vecs × 64 dims × 16 planes).
     if dim is None:
-        first = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = first["d"] if first is not None else 0
+        dim = _embedding_dim(corpus, vec_col)
     mat = spark.range(bits).select(
         F.col("id").cast("int").alias("plane"),
         F.transform(
             F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda d: hyperplane_component(F.col("plane"), d),
+            lambda d: _hash_uniform(
+                F.concat(F.col("plane").cast("string"), F.lit(":"), d.cast("string"))
+            ),
         ).alias("u"),
     )
     exploded = (
@@ -570,14 +585,14 @@ def _rerank_topk(
     """Exact-cosine re-rank of a (qid, nid) candidate table → top-k.
 
     Norms are per VECTOR (:func:`_normed`); the candidate set is
-    orders of magnitude larger than the corpus. Shared by the LSH and
-    IVF paths — any blocking scheme reduces to a (qid, nid) table here.
+    orders of magnitude larger than the corpus. The LSH re-rank: band
+    collisions are a (qid, nid) table with no one list per neighbor.
 
     Scoring is the JVM fold (oracle-exact). At scale every vector
     crosses the join once per candidate PAIR (134 s on 13.4M candidates
-    at the 10× stress), which is why the IVF production path uses the
-    cogrouped re-rank (:func:`_ivf_rerank_cogrouped`, 25 s) that ships
-    vectors once per bucket instead.
+    at the 10× stress), which is why IVF, where every neighbor sits in
+    exactly one list, re-ranks per list instead
+    (:func:`_ivf_rerank_cogrouped`, 25 s).
     """
     pairs = cand.join(_normed(corpus, id_col, vec_col, "q"), "qid").join(
         _normed(corpus, id_col, vec_col, "n"), "nid"
@@ -656,10 +671,10 @@ def ann_topk_sql(
     else:
         probe_cte = ""
         probe_src = "bh"
-    u = portable_hash60_sql("(plane::VARCHAR || ':' || (d - 1)::VARCHAR)")
+    u = _hash_uniform_sql("(plane::VARCHAR || ':' || (d - 1)::VARCHAR)")
     ctes = f"""proj AS (
   SELECT e.vec_id, p.plane,
-         sum(e.embedding[d.d]::DOUBLE * ({u}::DOUBLE / {TWO59} - 1.0)) AS s
+         sum(e.embedding[d.d]::DOUBLE * {u}) AS s
   FROM {table} e,
        range(0, {bits}) p(plane),
        range(1, {dim} + 1) d(d)
@@ -684,31 +699,62 @@ def ann_topk_sql(
 # ---------------------------------------------------------------------------
 
 
-def _ivf_component(cent: Column, d: Column) -> Column:
-    """Deterministic pseudo-uniform centroid entry in [-1, 1) — same
-    hash-derivation trick as the hyperplanes ('ivf:' salt keeps the two
-    families independent), which makes the IVF path exactly
-    oracle-checkable in DuckDB."""
-    h = portable_hash60(
-        F.concat(F.lit("ivf:"), cent.cast("string"), F.lit(":"), d.cast("string"))
-    )
-    return h.cast("double") / F.lit(TWO59) - F.lit(1.0)
-
-
 def ivf_centroids(spark, n_centroids: int, dim: int) -> DataFrame:
     """Hash-derived coarse-quantizer table: (centroid, u, nrm).
 
     Random directions are a *correctness baseline* quantizer (uniform
-    bucket occupancy, oracle-checkable); for data-adaptive buckets use
-    :func:`train_centroids_kmeans` — both feed :func:`ivf_topk`.
+    bucket occupancy, oracle-checkable; entries from
+    :func:`_hash_uniform` under the 'ivf:' salt); for data-adaptive
+    buckets use :func:`train_centroids_kmeans` — both feed
+    :func:`ivf_topk`.
     """
     return spark.range(n_centroids).select(
         F.col("id").cast("int").alias("centroid"),
         F.transform(
             F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda d: _ivf_component(F.col("centroid"), d),
+            lambda d: _hash_uniform(
+                F.concat(
+                    F.lit("ivf:"), F.col("centroid").cast("string"), F.lit(":"),
+                    d.cast("string"),
+                )
+            ),
         ).alias("u"),
     ).select("centroid", "u", _norm(F.col("u")).alias("nrm"))
+
+
+def _hash_quantizer(
+    corpus: DataFrame, n_centroids: int | None, dim: int | None, vec_col: str
+) -> DataFrame:
+    """The default IVF quantizer: :func:`ivf_centroids` with C
+    auto-sized by :func:`auto_centroid_count` from a corpus count when
+    ``n_centroids`` is None, and ``dim`` probed when None."""
+    if n_centroids is None:
+        n_centroids = auto_centroid_count(corpus.count())
+    if dim is None:
+        dim = _embedding_dim(corpus, vec_col)
+    return ivf_centroids(corpus.sparkSession, n_centroids, dim)
+
+
+def _centroids_sql(table: str, dim: int, n_centroids: int | None) -> str:
+    """DuckDB twin of :func:`_hash_quantizer` as the ``cent``/``cn``
+    CTEs (centroid, u, nrm). ``n_centroids=None`` sizes C to
+    greatest(4, ceil(sqrt(count(*)))) over ``table`` — integer-exact
+    like :func:`auto_centroid_count`."""
+    if n_centroids is None:
+        c_bound = (
+            f"(SELECT CAST(greatest(4, ceil(sqrt(count(*)))) AS BIGINT) - 1 FROM {table})"
+        )
+        cent_src = f"(SELECT unnest(generate_series(0, {c_bound})) AS c) c"
+    else:
+        cent_src = f"range(0, {n_centroids}) c(c)"
+    u = _hash_uniform_sql("('ivf:' || c.c::VARCHAR || ':' || (d - 1)::VARCHAR)")
+    return f"""cent AS (
+  SELECT c.c AS centroid,
+         list_transform(range(1, {dim} + 1), d -> {u}) AS u
+  FROM {cent_src}
+), cn AS (
+  SELECT centroid, u, {_norm_sql('u')} AS nrm FROM cent
+)"""
 
 
 def train_centroids_kmeans(
@@ -748,56 +794,102 @@ def auto_centroid_count(n_rows: int) -> int:
     at a 10× stress vs 28 s after auto-sizing). Exact integer sqrt/ceil
     — DuckDB's ceil(sqrt(N)) computes the identical value, keeping the
     auto-sized query oracle-checkable."""
-    import math
-
     return max(4, math.ceil(math.sqrt(n_rows)))
 
 
-def _assign_probes_arrow(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Centroid assignment as one Arrow pass: (vec_id, centroid, r),
-    r = 1..n_probe nearest centroids per vector.
+def _vectors(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
 
-    The flat fold path materializes N×C skinny rows (crossJoin) and
-    shuffles them all through the argmax window — at N = 2.5M,
-    C = 1600 that is 4×10⁹ rows and the measured wall at the 100×
-    stress. Here the centroid matrix (C × dim — metadata-sized by the
-    √N rule; 100 TB ⇒ ~150 MB, still driver-feasible) is collected
-    once and closed over: each Arrow batch does ONE numpy matmul
-    (B×dim @ dim×C) and a stable partial sort, emitting n_probe rows
-    per vector. No crossJoin, no window, no shuffle at all.
 
-    Tie-break parity with the fold path: centroid columns are laid out
-    in ascending-id order and the argsort is stable, so equal scores
-    resolve to the smaller centroid id; zero-norm centroids score −inf
-    (the fold path's NULL), ranking last among themselves by id.
+def _rank_lists(pairs: DataFrame, n_probe: int) -> tuple[DataFrame, DataFrame]:
+    """Oracle-exact coarse assignment: fold-score (vec_id, v) ×
+    (centroid, u, nrm) ``pairs`` as dot / |u| (|v| is constant per
+    vector, so the argmax does not need it) and rank with one window.
+    Returns ``assign`` (nid, centroid: the vector's inverted list) and
+    ``probes`` (qid, centroid: its ``n_probe`` nearest lists). Ties
+    break on the smaller centroid id. :func:`_ivf_lists_sql` is the
+    DuckDB twin."""
+    scored = pairs.select(
+        "vec_id",
+        "centroid",
+        # try_divide: a collapsed kmeans centroid can be the zero
+        # vector (nrm=0) — ANSI mode (Spark 4 default) would throw on
+        # plain /; NULL scores rank last (desc → nulls last)
+        F.try_divide(_dot(F.col("v"), F.col("u")), F.col("nrm")).alias("score"),
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("centroid"))
+    ranked = scored.withColumn("r", F.row_number().over(w))
+    assign = ranked.filter(F.col("r") == 1).select(F.col("vec_id").alias("nid"), "centroid")
+    probes = ranked.filter(F.col("r") <= n_probe).select(
+        F.col("vec_id").alias("qid"), "centroid"
+    )
+    return assign, probes
+
+
+def _ivf_lists_sql(table: str, dim: int, n_centroids: int | None) -> str:
+    """DuckDB twin of :func:`_rank_lists` over the hash quantizer: the
+    :func:`_centroids_sql` CTEs, then ``sc`` (vec_id, centroid, score)
+    and ``ranked`` (vec_id, centroid, r)."""
+    return f"""{_centroids_sql(table, dim, n_centroids)}, sc AS (
+  SELECT e.vec_id, c.centroid, {_dot_sql('e.embedding', 'c.u', dim)} / NULLIF(c.nrm, 0) AS score
+  FROM {table} e, cn c
+), ranked AS (
+  SELECT vec_id, centroid,
+         row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, centroid) AS r
+  FROM sc
+)"""
+
+
+def _centroid_matrix(centroids: DataFrame):
+    """A (centroid, u, nrm) table — C rows, small by construction — as
+    numpy arrays (ids, u, nrm) in ascending centroid order."""
+    import numpy as np
+
+    rows = sorted(centroids.select("centroid", "u", "nrm").collect(), key=lambda r: r["centroid"])
+    return (
+        np.array([r["centroid"] for r in rows], dtype=np.int64),
+        np.array([r["u"] for r in rows], dtype=np.float64),
+        np.array([r["nrm"] for r in rows], dtype=np.float64),
+    )
+
+
+def _cosine_scores(u, nrm):
+    """B×C argmax scores v·u / |u| of a numpy batch against the rows of
+    ``u``; a zero-norm row scores −inf (the fold path's NULL)."""
+    import numpy as np
+
+    return lambda v: np.where(nrm > 0, (v @ u.T) / nrm, -np.inf)
+
+
+def _rank_lists_arrow(
+    corpus: DataFrame, id_col: str, vec_col: str, cids, score, n_probe: int
+) -> tuple[DataFrame, DataFrame]:
+    """Arrow twin of :func:`_rank_lists` for a collected quantizer: one
+    pass per Arrow batch, no crossJoin, no window, no shuffle.
+    ``score(v)`` maps a B×dim batch to B×C scores whose columns follow
+    the ascending centroid ids ``cids``; −inf marks a centroid the row
+    cannot see.
+
+    The fold path materializes N×C skinny rows and shuffles them all
+    through the argmax window — at N = 2.5M, C = 1600 that is 4×10⁹
+    rows and the measured wall at the 100× stress. Here the centroid
+    matrix (C × dim — metadata-sized by the √N rule; 100 TB ⇒ ~150 MB,
+    still driver-feasible) is closed over and each batch does one
+    matmul and a stable partial sort, so equal scores resolve to the
+    smaller centroid id, as in the window.
     """
     import numpy as np
 
-    cent_rows = centroids.select("centroid", "u", "nrm").collect()
-    order = sorted(range(len(cent_rows)), key=lambda i: cent_rows[i]["centroid"])
-    cmat = np.array([cent_rows[i]["u"] for i in order], dtype=np.float64)
-    cnrm = np.array([cent_rows[i]["nrm"] for i in order], dtype=np.float64)
-    cids = np.array(
-        [cent_rows[i]["centroid"] for i in order], dtype=np.int64
-    )
-    nb = min(n_probe, len(cids))
+    nb = min(max(n_probe, 1), len(cids))
     id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"vec_id {id_type}, centroid int, r int"
 
-    def gen(batches):
+    def rank_batches(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-            s = v @ cmat.T
             with np.errstate(divide="ignore", invalid="ignore"):
-                s = np.where(cnrm > 0, s / cnrm, -np.inf)
+                s = score(v)
             idx = np.argsort(-s, axis=1, kind="stable")[:, :nb]
             b = len(pdf)
             yield pd.DataFrame(
@@ -814,7 +906,10 @@ def _assign_probes_arrow(
         # pin Arrow-stage parallelism: AQE sizes partitions for JVM
         # stages and starves Python ones (see the minhash note)
         src = src.repartition(par)
-    return src.mapInPandas(gen, out_schema)
+    pr = src.mapInPandas(rank_batches, f"vec_id {id_type}, centroid int, r int")
+    assign = pr.filter(F.col("r") == 1).select(F.col("vec_id").alias("nid"), "centroid")
+    probes = pr.filter(F.col("r") <= n_probe).select(F.col("vec_id").alias("qid"), "centroid")
+    return assign, probes
 
 
 def ivf_topk(
@@ -826,100 +921,49 @@ def ivf_topk(
     vec_col: str = "embedding",
     dim: int | None = None,
     centroids: DataFrame | None = None,
-    arrow_rerank: bool = False,
-    arrow_assign: bool = False,
 ) -> DataFrame:
     """IVF-bucketed approximate top-k: (query_id, neighbor_id, rank, cos_sim).
-
-    ``arrow_rerank=True`` scores whole inverted lists with one numpy
-    matmul per cogroup (:func:`_ivf_rerank_cogrouped`) instead of the
-    JVM fold of :func:`_rerank_topk` — the production setting when data
-    is clustered (hot inverted lists blow up the candidate count, and
-    re-rank, not assignment, dominates: measured 0.6 s assignment vs
-    134 s fold re-rank at the 10× stress).
 
     The second scale path next to LSH (:func:`ann_topk`): every vector
     is assigned to its nearest coarse centroid (one inverted list per
     centroid); a query probes its ``n_probe`` nearest lists and exact
-    cosine re-ranks only their members. Linear scoring pass (N × C
-    folds), shuffle keyed on the centroid id, candidate count bounded by
-    list occupancy × n_probe. Ties in both argmax and ranking break on
-    the smaller id — deterministic in both engines.
+    cosine re-ranks only their members. Ties in both argmax and ranking
+    break on the smaller id — deterministic in both engines.
 
-    ``n_centroids=None`` (the default) auto-sizes C to
-    :func:`auto_centroid_count` from a corpus count — a metadata-cheap
-    job on parquet. A fixed C is a scale trap: bucket occupancy N/C
-    grows linearly, so re-rank work grows quadratically. At extreme N
-    (C beyond ~10⁵) a flat N×C assignment scan itself becomes the
-    bottleneck — the published answer is a hierarchical (two-level)
-    coarse quantizer; out of scope here.
+    ``centroids=None`` (the default) is the hash-derived quantizer
+    (:func:`ivf_centroids`) with the oracle-exact fold+window
+    assignment (:func:`_rank_lists`; N × C folds, shuffle keyed on the
+    vector id), twinned by :func:`ivf_topk_sql`. ``n_centroids=None``
+    auto-sizes C to :func:`auto_centroid_count` from a corpus count —
+    a metadata-cheap job on parquet. A fixed C is a scale trap: bucket
+    occupancy N/C grows linearly, so re-rank work grows quadratically.
 
-    ``centroids`` defaults to the hash-derived oracle-checkable
-    quantizer; pass :func:`train_centroids_kmeans` output for the
-    production path.
+    A passed ``centroids`` table (:func:`train_centroids_kmeans` — the
+    production quantizer, rows-only by construction) is collected and
+    assigned with one numpy matmul per Arrow batch
+    (:func:`_rank_lists_arrow`), same argmax and tie-break, no N×C
+    shuffle. At extreme N (C beyond ~10⁵) the flat assignment itself
+    becomes the bottleneck; :func:`ivf_topk_hier` is the two-level
+    quantizer for that regime.
+
+    Re-rank is always :func:`_ivf_rerank_cogrouped`: one numpy matmul
+    per inverted list, so the candidate pair table is never built
+    (measured 0.6 s assignment vs 134 s pairwise fold re-rank at the
+    10× stress, where hot lists blow up the candidate count).
     """
-    spark = corpus.sparkSession
     if centroids is None:
-        if n_centroids is None:
-            n_centroids = auto_centroid_count(corpus.count())
-        if dim is None:
-            first = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-            dim = first["d"] if first is not None else 0
-        centroids = ivf_centroids(spark, n_centroids, dim)
-    if arrow_assign:
-        # production assignment: one numpy matmul per Arrow batch,
-        # shuffle-free (see _assign_probes_arrow) — same argmax and
-        # tie-break as the fold path, pinned equal in pytest
-        pr = _assign_probes_arrow(
-            corpus, centroids, max(n_probe, 1), id_col, vec_col
+        assign, probes = _rank_lists(
+            _vectors(corpus, id_col, vec_col).crossJoin(
+                F.broadcast(_hash_quantizer(corpus, n_centroids, dim, vec_col))
+            ),
+            n_probe,
         )
-        assign = pr.filter(F.col("r") == 1).select(
-            F.col("vec_id").alias("nid"), "centroid"
+    else:
+        cids, u, nrm = _centroid_matrix(centroids)
+        assign, probes = _rank_lists_arrow(
+            corpus, id_col, vec_col, cids, _cosine_scores(u, nrm), n_probe
         )
-        probes = pr.filter(F.col("r") <= n_probe).select(
-            F.col("vec_id").alias("qid"), "centroid"
-        )
-        if arrow_rerank:
-            return _ivf_rerank_cogrouped(probes, assign, corpus, k, id_col, vec_col)
-        cand = (
-            probes.join(assign, "centroid")
-            .filter(F.col("qid") != F.col("nid"))
-            .select("qid", "nid")
-        )
-        return _rerank_topk(cand, corpus, k, id_col, vec_col)
-    # score every vector against every centroid (broadcast the tiny
-    # centroid table); |v| is constant per vector so argmax only needs
-    # dot / |u_c|
-    scored = (
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id",
-            "centroid",
-            # try_divide: a collapsed kmeans centroid can be the zero
-            # vector (nrm=0) — ANSI mode (Spark 4 default) would throw on
-            # plain /; NULL scores rank last (desc → nulls last)
-            F.try_divide(_dot(F.col("v"), F.col("u")), F.col("nrm")).alias("score"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("centroid"))
-    ranked = scored.withColumn("r", F.row_number().over(w))
-    assign = ranked.filter(F.col("r") == 1).select(F.col("vec_id").alias("nid"), "centroid")
-    probes = ranked.filter(F.col("r") <= n_probe).select(
-        F.col("vec_id").alias("qid"), "centroid"
-    )
-    if arrow_rerank:
-        # never materialize the candidate pair table at all — score
-        # whole inverted lists per cogroup (see _ivf_rerank_cogrouped)
-        return _ivf_rerank_cogrouped(probes, assign, corpus, k, id_col, vec_col)
-    # each nid sits in exactly one list → (qid, nid) pairs are unique,
-    # no distinct needed before the re-rank
-    cand = (
-        probes.join(assign, "centroid")
-        .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid")
-    )
-    return _rerank_topk(cand, corpus, k, id_col, vec_col)
+    return _ivf_rerank_cogrouped(probes, assign, corpus, k, id_col, vec_col)
 
 
 def _lloyd_numpy(x, k: int, seed: int = 42, iters: int = 20):
@@ -957,7 +1001,6 @@ def ivf_topk_hier(
     dim: int | None = None,
     centroids: DataFrame | None = None,
     seed: int = 42,
-    arrow_assign: bool = False,
 ) -> DataFrame:
     """Two-level (hierarchical) IVF — the published answer to the flat
     assignment wall (cf. the inverted multi-index family): at extreme N
@@ -979,8 +1022,13 @@ def ivf_topk_hier(
     fine centroid outside the probed coarse groups is unseen — standard
     two-level IVF semantics), so this is the production/scale variant
     with a rows-only driver check; recall vs the flat assignment is
-    pinned in pytest. Re-rank is the cogrouped Arrow path, the
-    production setting.
+    pinned in pytest. Re-rank is :func:`_ivf_rerank_cogrouped`.
+
+    The quantizer picks the assignment as in :func:`ivf_topk`: the
+    default hash quantizer runs the two fold+window stages above; a
+    passed ``centroids`` table runs both stages in one Arrow pass per
+    batch (:func:`_rank_lists_arrow`), with the same probed-group
+    visibility and tie-breaks.
 
     At 100 TB the driver-side Lloyd stays honest: C = √N = 3×10⁵ rows
     × dim doubles ≈ 150 MB — still a driver-feasible matrix; beyond
@@ -989,98 +1037,51 @@ def ivf_topk_hier(
     import numpy as np
 
     spark = corpus.sparkSession
-    if centroids is None:
-        if n_centroids is None:
-            n_centroids = auto_centroid_count(corpus.count())
-        if dim is None:
-            first = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-            dim = first["d"] if first is not None else 0
-        centroids = ivf_centroids(spark, n_centroids, dim)
-    cent_rows = centroids.select("centroid", "u").collect()  # C rows — small by construction
-    x = np.array([r["u"] for r in cent_rows], dtype=np.float64)
-    cids = [int(r["centroid"]) for r in cent_rows]
+    hashed = centroids is None
+    if hashed:
+        centroids = _hash_quantizer(corpus, n_centroids, dim, vec_col)
+    cids, x, nrm = _centroid_matrix(centroids)
     if n_coarse is None:
         n_coarse = max(2, math.ceil(math.sqrt(len(x))))
     n_coarse = min(n_coarse, len(x))
     reps, fine_to_coarse = _lloyd_numpy(x, n_coarse, seed=seed)
+
+    if not hashed:
+        # coarse scores via a B×C1 matmul pick each row's coarse_probe
+        # groups, then fine scores via a B×C matmul MASKED to the
+        # probed groups (exact two-level semantics — unprobed fine
+        # centroids are invisible). The "wasted" flops on masked
+        # columns are deliberate: dgemm at B×C×dim is orders cheaper
+        # than avoiding them row-wise, and the hierarchy's real win
+        # (C1+probe·C/C1 work) only matters at extreme C, where this
+        # kernel should chunk columns instead.
+        coarse_scores = _cosine_scores(reps, np.sqrt(np.einsum("ij,ij->i", reps, reps)))
+        fine_scores = _cosine_scores(x, nrm)
+        cp = min(coarse_probe, len(reps))
+
+        def score(v):
+            # top coarse_probe groups per row (stable → smaller group
+            # id on ties, matching the window contract)
+            gsel = np.argsort(-coarse_scores(v), axis=1, kind="stable")[:, :cp]
+            fs = fine_scores(v)
+            mask = np.zeros_like(fs, dtype=bool)
+            for j in range(cp):
+                mask |= fine_to_coarse[None, :] == gsel[:, j][:, None]
+            return np.where(mask, fs, -np.inf)
+
+        assign, probes = _rank_lists_arrow(corpus, id_col, vec_col, cids, score, n_probe)
+        return _ivf_rerank_cogrouped(probes, assign, corpus, k, id_col, vec_col)
+
     coarse = spark.createDataFrame(
         [(j, [float(v) for v in reps[j]]) for j in range(n_coarse)],
         "coarse int, cu array<double>",
     ).select("coarse", "cu", _norm(F.col("cu")).alias("cnrm"))
     routing = spark.createDataFrame(
-        [(cids[i], int(fine_to_coarse[i])) for i in range(len(cids))],
+        [(int(c), int(g)) for c, g in zip(cids, fine_to_coarse)],
         "centroid int, coarse int",
     )
     fine = centroids.join(F.broadcast(routing), "centroid")
-
-    if arrow_assign:
-        # both stages in ONE Arrow pass per batch: coarse scores via a
-        # B×C1 matmul pick each row's coarse_probe groups, then fine
-        # scores via a B×C matmul MASKED to the probed groups (exact
-        # two-level semantics — unprobed fine centroids are invisible).
-        # The "wasted" flops on masked columns are deliberate: dgemm at
-        # B×C×dim is orders cheaper than avoiding them row-wise, and
-        # the hierarchy's real win (C1+probe·C/C1 work) only matters at
-        # extreme C, where this kernel should chunk columns instead.
-        import numpy as np
-
-        cnrm_arr = np.sqrt(np.einsum("ij,ij->i", reps, reps))
-        order_f = sorted(range(len(cids)), key=lambda i: cids[i])
-        fmat = x[order_f]
-        fnrm = np.sqrt(np.einsum("ij,ij->i", fmat, fmat))
-        fcid = np.array([cids[i] for i in order_f], dtype=np.int64)
-        fgrp = np.array(
-            [int(fine_to_coarse[i]) for i in order_f], dtype=np.int64
-        )
-        nb = min(max(n_probe, 1), len(fcid))
-        cp = min(coarse_probe, len(reps))
-        id_type = corpus.schema[id_col].dataType.simpleString()
-
-        def assign_gen(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                v = np.stack(pdf[vec_col].to_numpy()).astype(
-                    np.float64, copy=False
-                )
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cs = np.where(
-                        cnrm_arr > 0, (v @ reps.T) / cnrm_arr, -np.inf
-                    )
-                    fs = np.where(fnrm > 0, (v @ fmat.T) / fnrm, -np.inf)
-                # top coarse_probe groups per row (stable → smaller
-                # group id on ties, matching the window contract)
-                gsel = np.argsort(-cs, axis=1, kind="stable")[:, :cp]
-                mask = np.zeros_like(fs, dtype=bool)
-                for j in range(cp):
-                    mask |= fgrp[None, :] == gsel[:, j][:, None]
-                fs = np.where(mask, fs, -np.inf)
-                idx = np.argsort(-fs, axis=1, kind="stable")[:, :nb]
-                b = len(pdf)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.repeat(pdf[id_col].to_numpy(), nb),
-                        "centroid": fcid[idx].reshape(b * nb).astype(np.int32),
-                        "r": np.tile(np.arange(1, nb + 1), b),
-                    }
-                )
-
-        par = spark.sparkContext.defaultParallelism
-        src = corpus.select(F.col(id_col), F.col(vec_col))
-        if src.rdd.getNumPartitions() < par:
-            src = src.repartition(par)
-        pr = src.mapInPandas(
-            assign_gen, f"vec_id {id_type}, centroid int, r int"
-        )
-        assign = pr.filter(F.col("r") == 1).select(
-            F.col("vec_id").alias("nid"), "centroid"
-        )
-        probes = pr.filter(F.col("r") <= n_probe).select(
-            F.col("vec_id").alias("qid"), "centroid"
-        )
-        return _ivf_rerank_cogrouped(probes, assign, corpus, k, id_col, vec_col)
-
-    vecs = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    vecs = _vectors(corpus, id_col, vec_col)
     # stage A: skinny rows only through the window shuffle — the vector
     # itself is re-joined afterwards rather than dragged through N×C1
     # shuffled copies
@@ -1101,20 +1102,8 @@ def ivf_topk_hier(
     # stage B: fine candidates arrive via broadcast (no shuffle); scores
     # are computed map-side and only skinny (vec_id, centroid, score)
     # rows reach the argmax window
-    fscored = (
-        probed_groups.join(vecs, "vec_id")
-        .join(F.broadcast(fine), "coarse")
-        .select(
-            "vec_id",
-            "centroid",
-            F.try_divide(_dot(F.col("v"), F.col("u")), F.col("nrm")).alias("score"),
-        )
-    )
-    w_b = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("centroid"))
-    ranked = fscored.withColumn("r", F.row_number().over(w_b))
-    assign = ranked.filter(F.col("r") == 1).select(F.col("vec_id").alias("nid"), "centroid")
-    probes = ranked.filter(F.col("r") <= n_probe).select(
-        F.col("vec_id").alias("qid"), "centroid"
+    assign, probes = _rank_lists(
+        probed_groups.join(vecs, "vec_id").join(F.broadcast(fine), "coarse"), n_probe
     )
     return _ivf_rerank_cogrouped(probes, assign, corpus, k, id_col, vec_col)
 
@@ -1127,8 +1116,8 @@ def _ivf_rerank_cogrouped(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """PRODUCTION IVF re-rank: cogroup query and member vectors per
-    inverted list and score each bucket with ONE numpy matmul.
+    """The IVF re-rank: cogroup query and member vectors per inverted
+    list and score each bucket with ONE numpy matmul.
 
     The per-pair formulations (JVM fold or per-pair pandas UDF) ship
     every vector once per CANDIDATE PAIR — O(occupancy²) bytes per
@@ -1139,13 +1128,14 @@ def _ivf_rerank_cogrouped(
     matrix in C and emits only each query's per-bucket top-k (global
     top-k ⊆ union of per-bucket top-ks since every candidate lives in
     exactly one list). Measured 25 s end-to-end on the same stress —
-    5-6× over the fold — with identical (query, neighbor, rank) output
-    at oracle scale. BLAS accumulation order ≠ sequential fold in the
-    last ulp → rows-only driver checks, like every arrow path.
+    5-6× over the fold. BLAS accumulation order differs from the
+    sequential fold only in the last ulp of cos_sim, so the (query,
+    neighbor, rank) output equals the DuckDB oracle's and the rounded
+    cos_sim does too: ``similarity_ivf`` and ``similarity_recall`` are
+    exact-gated through this re-rank.
     """
     # the cogroup output schema must carry the CALLER's id type — a
-    # hardcoded `long` would cast-garble string/decimal ids that the
-    # fold path handles fine
+    # hardcoded `long` would cast-garble string/decimal ids
     id_dt = corpus.schema[id_col].dataType.simpleString()
 
     # distinct column names per side: both sides derive from the same
@@ -1244,31 +1234,10 @@ def ivf_topk_sql(
     bit-identical to Spark's ``aggregate`` — scores feed an argmax, so
     even 1-ULP order noise could flip an assignment. ``dim`` must match
     the Spark call site (shared constant), as in :func:`ann_topk_sql`.
-    ``n_centroids=None`` mirrors the Spark auto-sizing: C = greatest(4,
-    ceil(sqrt(count(*)))) — integer-exact in both engines.
+    ``n_centroids=None`` mirrors the Spark auto-sizing
+    (:func:`_centroids_sql`).
     """
-    u = portable_hash60_sql("('ivf:' || c.c::VARCHAR || ':' || (d - 1)::VARCHAR)")
-    if n_centroids is None:
-        c_bound = (
-            f"(SELECT CAST(greatest(4, ceil(sqrt(count(*)))) AS BIGINT) - 1 FROM {table})"
-        )
-        cent_src = f"(SELECT unnest(generate_series(0, {c_bound})) AS c) c"
-    else:
-        cent_src = f"range(0, {n_centroids}) c(c)"
-    ctes = f"""cent AS (
-  SELECT c.c AS centroid,
-         list_transform(range(1, {dim} + 1), d -> ({u}::DOUBLE / {TWO59} - 1.0)) AS u
-  FROM {cent_src}
-), cn AS (
-  SELECT centroid, u, {_norm_sql('u')} AS nrm FROM cent
-), sc AS (
-  SELECT e.vec_id, c.centroid, {_dot_sql('e.embedding', 'c.u', dim)} / NULLIF(c.nrm, 0) AS score
-  FROM {table} e, cn c
-), ranked AS (
-  SELECT vec_id, centroid,
-         row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, centroid) AS r
-  FROM sc
-), assign AS (
+    ctes = f"""{_ivf_lists_sql(table, dim, n_centroids)}, assign AS (
   SELECT vec_id AS nid, centroid FROM ranked WHERE r = 1
 ), probes AS (
   SELECT vec_id AS qid, centroid FROM ranked WHERE r <= {n_probe}
@@ -1312,8 +1281,8 @@ def recall_audit(
     ``arms`` selects the method rows: any of ``ann_lsh``, ``ivf``,
     ``ann_multiprobe`` (all hash-derived → exactly oracle-checkable via
     :func:`recall_audit_sql`) and ``ivf_kmeans`` (the MLlib k-means
-    quantizer with the Arrow assignment + re-rank paths — the
-    configuration a real deployment runs on clustered corpora; no
+    quantizer, assigned in Arrow batches — the configuration a real
+    deployment runs on clustered corpora; no
     DuckDB k-means → rows-only, its recall floor on clustered data is
     pinned in tests/test_northstar.py). Splitting the exact arms
     and the k-means arm into two REGISTERED queries keeps the
@@ -1361,8 +1330,6 @@ def recall_audit(
             n_probe=n_probe,
             dim=dim,
             centroids=train_centroids_kmeans(emb),
-            arrow_assign=True,
-            arrow_rerank=True,
         ),
     }
     unknown = [a for a in arms if a not in builders]

@@ -38,7 +38,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.dedup import portable_hash60, portable_hash60_sql
-from dataframeutils_spark.operators.similarity import _dot_sql, _fold_sql, _norm_sql
+from dataframeutils_spark.operators.similarity import (
+    _fold_sql,
+    _hash_uniform,
+    _hash_uniform_sql,
+    _ivf_lists_sql,
+)
 from dataframeutils_spark.operators.text import _tokens
 
 # --------------------------------------------------------------------------
@@ -404,28 +409,13 @@ FROM q
 # product quantization
 # ---------------------------------------------------------------------------
 
-_PQ_TWO59 = float(2**59)
-
-
-def _pq_component(s: Column, k: Column, d: Column) -> Column:
-    """Deterministic pseudo-uniform codebook entry in [-1, 1) — same
-    hash→unit-interval construction as the ANN hyperplanes
-    (operators.similarity.hyperplane_component)."""
-    h = portable_hash60(
-        F.concat(
-            F.lit("pq:"), s.cast("string"), F.lit(":"), k.cast("string"),
-            F.lit(":"), d.cast("string"),
-        )
-    )
-    return h.cast("double") / F.lit(_PQ_TWO59) - F.lit(1.0)
-
-
 def _pq_dmat(
     emb: DataFrame, m: int, k: int, dim: int, vec_col: str = "embedding"
 ) -> DataFrame:
     """Input plus ``dmat``: per-subspace distance matrix (m arrays of k
     squared-L2 distances of the vector's subspace against the
-    hash-derived codebook). ``dmat`` is the shared kernel of PQ:
+    hash-derived codebook, entries from ``similarity._hash_uniform``
+    under the 'pq:' salt). ``dmat`` is the shared kernel of PQ:
     argmin per row → the code (:func:`pq_quantize`); the raw arrays of
     a QUERY vector → the ADC lookup table (:func:`pq_topk`).
 
@@ -445,7 +435,12 @@ def _pq_dmat(
                 F.sequence(F.lit(0), F.lit(k - 1)),
                 lambda c: F.transform(
                     F.sequence(F.lit(0), F.lit(w - 1)),
-                    lambda d: _pq_component(s, c, d),
+                    lambda d: _hash_uniform(
+                        F.concat(
+                            F.lit("pq:"), s.cast("string"), F.lit(":"), c.cast("string"),
+                            F.lit(":"), d.cast("string"),
+                        )
+                    ),
                 ),
             ),
         ).alias("cb")
@@ -530,11 +525,11 @@ def _pq_dmat_sql(m: int, k: int, dim: int, table: str) -> str:
     """DuckDB twin of :func:`_pq_dmat`: (vec_id, dmat), the m×k
     squared-L2 distances of each sub-vector to each codebook entry."""
     w = dim // m
-    comp = portable_hash60_sql(
+    comp = _hash_uniform_sql(
         "('pq:' || s::VARCHAR || ':' || c::VARCHAR || ':' || d::VARCHAR)"
     )
     diffs = f"""list_transform(range(0, {w}), d ->
-            embedding[s * {w} + d + 1]::DOUBLE - ({comp} / {_PQ_TWO59} - 1.0))"""
+            embedding[s * {w} + d + 1]::DOUBLE - {comp})"""
     sub = f"list_transform(range(0, {k}), c -> {_fold_sql(f'list_transform({diffs}, x -> x * x)')})"
     return f"""
   SELECT vec_id, list_transform(range(0, {m}), s -> {sub}) AS dmat
@@ -695,23 +690,13 @@ def ivfadc_topk(
     from dataframeutils_spark.operators import similarity as sim
     from dataframeutils_spark.schema import siground
 
-    spark = emb.sparkSession
-    centroids = sim.ivf_centroids(spark, n_centroids, dim)
-    scored = (
-        emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id",
-            "centroid",
-            F.try_divide(sim._dot(F.col("v"), F.col("u")), F.col("nrm")).alias("score"),
-        )
+    assign, probes = sim._rank_lists(
+        sim._vectors(emb, id_col, vec_col).crossJoin(
+            F.broadcast(sim.ivf_centroids(emb.sparkSession, n_centroids, dim))
+        ),
+        n_probe,
     )
-    wr = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("centroid"))
-    ranked = scored.withColumn("r", F.row_number().over(wr))
-    assign = ranked.filter(F.col("r") == 1).select(F.col("vec_id").alias("nid"), "centroid")
-    probes = ranked.filter(
-        (F.col("r") <= n_probe) & (F.col("vec_id") % query_mod == 0)
-    ).select(F.col("vec_id").alias("qid"), "centroid")
+    probes = probes.filter(F.col("qid") % query_mod == 0)
 
     dm = _pq_dmat(emb, m, k, dim, vec_col)
     codes = dm.select(
@@ -798,22 +783,8 @@ def ivfadc_topk_sql(
 ) -> str:
     from dataframeutils_spark.schema import siground_sql
 
-    cu = portable_hash60_sql("('ivf:' || c.c::VARCHAR || ':' || (d - 1)::VARCHAR)")
     return f"""
-WITH cent AS (
-  SELECT c.c AS centroid,
-         list_transform(range(1, {dim} + 1), d -> ({cu}::DOUBLE / {_PQ_TWO59} - 1.0)) AS u
-  FROM range(0, {n_centroids}) c(c)
-), cn AS (
-  SELECT centroid, u, {_norm_sql('u')} AS nrm FROM cent
-), sc AS (
-  SELECT e.vec_id, c.centroid, {_dot_sql('e.embedding', 'c.u', dim)} / NULLIF(c.nrm, 0) AS score
-  FROM {table} e, cn c
-), ranked AS (
-  SELECT vec_id, centroid,
-         row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, centroid) AS r
-  FROM sc
-), assign0 AS (
+WITH {_ivf_lists_sql(table, dim, n_centroids)}, assign0 AS (
   SELECT vec_id AS nid, centroid FROM ranked WHERE r = 1
 ), assign AS (
   {_assign_cap_sql(list_cap)}

@@ -1,7 +1,9 @@
 """The cosine kernels agree bit for bit across engines: Spark's
 ``similarity._dot``/``_norm`` and DuckDB's ``_dot_sql``/``_norm_sql``/
 ``_cos_sql`` on FLOAT[] vectors, including a zero vector (NULL cosine
-on both sides) and mixed signs."""
+on both sides) and mixed signs; and so do the hash-derived quantizer
+entries (``_hash_uniform``/``_hash_uniform_sql``) and the IVF centroid
+table (``ivf_centroids``/``_centroids_sql``)."""
 
 from __future__ import annotations
 
@@ -70,3 +72,38 @@ def test_cosine_kernels_zero_norm_and_fold_order(spark, ddb):
     for got in (_spark_kernels(spark), _duckdb_kernels(ddb)):
         assert got[12][1] == 0.0 and got[12][2] is None
         assert got[13][0] == 0.0
+
+
+# hyperplane ('plane:d'), IVF ('ivf:c:d') and PQ ('pq:s:c:d') keys
+_HASH_KEYS = (
+    [f"{p}:{d}" for p in (0, 7, 31) for d in (0, 1, 63)]
+    + [f"ivf:{c}:{d}" for c in (0, 5, 400) for d in (0, 1, 63)]
+    + [f"pq:{s}:{c}:{d}" for s in (0, 7) for c in (0, 15) for d in (0, 7)]
+)
+
+
+def test_hash_quantizer_bit_identical_across_engines(spark, ddb):
+    keys = spark.createDataFrame([(k,) for k in _HASH_KEYS], "key string")
+    s = {r["key"]: _bits(r["u"]) for r in
+         keys.select("key", sim._hash_uniform(F.col("key")).alias("u")).collect()}
+    ddb.register("hash_keys", pd.DataFrame({"key": _HASH_KEYS}))
+    ddb.register("corpus_rows", pd.DataFrame({"vec_id": range(17)}))
+    try:
+        d = {k: _bits(u) for k, u in ddb.execute(
+            f"SELECT key, {sim._hash_uniform_sql('key')} AS u FROM hash_keys").fetchall()}
+        cents = {
+            n: ddb.execute(f"WITH {sim._centroids_sql('corpus_rows', DIM, n)} "
+                           "SELECT centroid, u, nrm FROM cn ORDER BY centroid").fetchall()
+            for n in (3, None)
+        }
+    finally:
+        ddb.unregister("hash_keys")
+        ddb.unregister("corpus_rows")
+    assert s == d
+    assert all(-1.0 <= float.fromhex(u) < 1.0 for u in s.values())
+    # C auto-sizes to max(4, ceil(sqrt(17))) = 5 in both engines
+    for n, c in ((3, 3), (None, sim.auto_centroid_count(17))):
+        got = [(r["centroid"], [_bits(x) for x in r["u"]], _bits(r["nrm"]))
+               for r in sim.ivf_centroids(spark, c, DIM).orderBy("centroid").collect()]
+        want = [(i, [_bits(x) for x in u], _bits(nrm)) for i, u, nrm in cents[n]]
+        assert got == want, f"n_centroids={n}"

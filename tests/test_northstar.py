@@ -374,6 +374,9 @@ def test_ann_topk_dim_param_matches_probe(spark):
         "similarity_topk",
         "similarity_ann",
         "similarity_ivf",
+        "similarity_recall",
+        "similarity_ivfadc",
+        "semdedup",
         "dedup_clusters",
         "dedup_embedding_clusters",
         "dataset_split",
@@ -417,58 +420,55 @@ def test_prepare_corpus_dedups_after_filtering(spark):
     assert got == {1}
 
 
-def test_ivf_arrow_rerank_matches_fold(spark):
-    """The production cogrouped re-rank must produce the same (query,
-    neighbor, rank) sets as the oracle-exact fold path — only the last
-    ulp of cos_sim may differ (BLAS vs sequential fold)."""
-    from dataframeutils_spark.operators import similarity
+def _ivf_rows(df):
+    return df.select("query_id", "neighbor_id", "rank")
 
+
+def test_ivf_cogrouped_rerank_matches_oracle(spark, ddb):
+    """The cogrouped re-rank (one numpy matmul per inverted list) must
+    produce the same (query, neighbor, rank) rows as the oracle's
+    pairwise fold re-rank in DuckDB — only the last ulp of cos_sim may
+    differ (BLAS vs sequential fold)."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    a = similarity.ivf_topk(emb, k=5, n_probe=2, dim=64, arrow_rerank=True).select(
-        "query_id", "neighbor_id", "rank"
-    )
-    b = similarity.ivf_topk(emb, k=5, n_probe=2, dim=64).select(
-        "query_id", "neighbor_id", "rank"
-    )
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    assert a.count() > 0
+    got = _ivf_rows(similarity.ivf_topk(emb, k=5, n_probe=2, dim=64))
+    sql = similarity.ivf_topk_sql(k=5, n_probe=2, dim=64)
+    assert_matches_oracle(got, ddb, f"SELECT query_id, neighbor_id, rank FROM ({sql})")
+    assert got.count() > 0
 
 
-def test_ivf_arrow_assign_matches_fold(spark):
-    """The shuffle-free numpy assignment (one matmul per Arrow batch)
-    must produce the IDENTICAL (query, neighbor, rank) result as the
-    fold+window path — same argmax, same (score desc, centroid asc)
+def _explicit_hash_centroids(spark, emb):
+    """The default quantizer's table, passed in as ``centroids=`` so the
+    Arrow assignment runs on it."""
+    return similarity.ivf_centroids(
+        spark, similarity.auto_centroid_count(emb.count()), 64
+    )
+
+
+def test_ivf_numpy_assignment_matches_fold(spark):
+    """The shuffle-free numpy assignment (one matmul per Arrow batch,
+    chosen for a passed quantizer) must produce the IDENTICAL (query,
+    neighbor, rank) result as the fold+window path the default hash
+    quantizer runs — same argmax, same (score desc, centroid asc)
     tie-break, zero-norm centroids last."""
-    from dataframeutils_spark.operators import similarity
-
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    a = similarity.ivf_topk(emb, k=5, n_probe=2, dim=64, arrow_assign=True).select(
-        "query_id", "neighbor_id", "rank"
-    )
-    b = similarity.ivf_topk(emb, k=5, n_probe=2, dim=64).select(
-        "query_id", "neighbor_id", "rank"
-    )
+    cents = _explicit_hash_centroids(spark, emb)
+    a = _ivf_rows(similarity.ivf_topk(emb, k=5, n_probe=2, dim=64, centroids=cents))
+    b = _ivf_rows(similarity.ivf_topk(emb, k=5, n_probe=2, dim=64))
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     assert a.count() > 0
 
 
-def test_ivf_hier_arrow_assign_matches_fold(spark):
+def test_ivf_hier_numpy_assignment_matches_fold(spark):
     """The one-pass Arrow two-stage assignment (coarse matmul → group-
     masked fine matmul) must reproduce the fold+window hier path's
     (query, neighbor, rank) output exactly — same probed-group
     visibility, same tie-breaks."""
-    from dataframeutils_spark.operators import similarity
-
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     kw = dict(k=5, n_probe=2, coarse_probe=3, dim=64, seed=7)
-    a = similarity.ivf_topk_hier(emb, arrow_assign=True, **kw).select(
-        "query_id", "neighbor_id", "rank"
-    )
-    b = similarity.ivf_topk_hier(emb, **kw).select(
-        "query_id", "neighbor_id", "rank"
-    )
+    cents = _explicit_hash_centroids(spark, emb)
+    a = _ivf_rows(similarity.ivf_topk_hier(emb, centroids=cents, **kw))
+    b = _ivf_rows(similarity.ivf_topk_hier(emb, **kw))
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     assert a.count() > 0
@@ -479,13 +479,9 @@ def test_ivf_hier_recall_vs_flat(spark):
     with coarse_probe=4 over hash-derived (structureless — worst case)
     centroids, ≥75% of the flat assignment's top-k pairs must survive,
     and every query keeps a full result set."""
-    from pyspark.sql import functions as F
-
-    from dataframeutils_spark.operators import similarity
-
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     hier = similarity.ivf_topk_hier(emb, k=5, n_probe=2, coarse_probe=4, dim=64)
-    flat = similarity.ivf_topk(emb, k=5, n_probe=2, dim=64, arrow_rerank=True)
+    flat = similarity.ivf_topk(emb, k=5, n_probe=2, dim=64)
     h = {(r["query_id"], r["neighbor_id"]) for r in hier.collect()}
     f = {(r["query_id"], r["neighbor_id"]) for r in flat.collect()}
     assert len(h & f) / len(f) >= 0.75
@@ -493,22 +489,20 @@ def test_ivf_hier_recall_vs_flat(spark):
     assert n_queries == emb.count()
 
 
-def test_ivf_arrow_rerank_carries_caller_id_type(spark):
-    """The cogroup output schema must derive from the caller's id
-    column — a hardcoded `long` would cast-garble string ids."""
-    from pyspark.sql import functions as F
-
-    from dataframeutils_spark.operators import similarity
-
+def test_ivf_python_stages_carry_caller_id_type(spark):
+    """The Arrow assignment and the cogroup re-rank output schemas must
+    derive from the caller's id column — a hardcoded `long` would
+    cast-garble string ids."""
     emb = (
         spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         .limit(40)
         .select(F.concat(F.lit("doc-"), F.col("vec_id")).alias("vec_id"), "embedding")
     )
-    out = similarity.ivf_topk(emb, k=3, n_probe=2, dim=64, arrow_rerank=True)
-    assert dict(out.dtypes)["query_id"] == "string"
-    rows = out.limit(5).collect()
-    assert rows and all(r["query_id"].startswith("doc-") for r in rows)
+    for cents in (None, similarity.ivf_centroids(spark, 4, 64)):
+        out = similarity.ivf_topk(emb, k=3, n_probe=2, dim=64, centroids=cents)
+        assert dict(out.dtypes)["query_id"] == "string"
+        rows = out.limit(5).collect()
+        assert rows and all(r["query_id"].startswith("doc-") for r in rows)
 
 
 def test_repetition_stats_counts_duplicate_ngrams(spark):
