@@ -343,10 +343,13 @@ def main() -> None:
     # similarity_ivf sizes C to ceil(sqrt(N)), so an sf0.001-warmed
     # plan compiles a DIFFERENT method than the sf0.1 run (round 3's
     # official 31.95 s row vs 3.4 s warm was exactly that); (2) warm
-    # per query, not as one upfront pass — the JVM codegen class cache
-    # holds ~100 entries, and with 45+ headline queries an upfront
-    # sweep EVICTS the early queries' classes before they are timed
-    # (measured: pipeline_prepare 11 s "warmed" vs 3.4 s actually warm).
+    # per query, not as one upfront pass — measured when the codegen
+    # class cache held Spark's default 100 entries, where with 45+
+    # headline queries an upfront sweep evicted the early queries'
+    # classes before they were timed (pipeline_prepare 11 s "warmed"
+    # vs 3.4 s actually warm). `get_spark` now sizes that cache to the
+    # whole registry, so a sweep no longer evicts them; the per-query
+    # protocol stays so the BENCH_r series stays comparable.
     # Adaptive warm count: most plans stabilize after one warm run, but
     # ITERATIVE operators (dedup_clusters' pointer-doubling rounds) run
     # a different stage graph per round — one warm pass leaves later

@@ -1072,7 +1072,7 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     path next to LSH, exactly oracle-checkable like similarity_ann.
     Centroid count auto-sizes to ⌈√N⌉ in BOTH engines (a fixed C makes
     re-rank work quadratic: 352 s vs 28 s at the 10× stress). The
-    re-rank is the cogrouped Arrow one, which every ivf_topk runs:
+    re-rank is the grouped Arrow one, which every ivf_topk runs:
     candidates grow ~N^1.5 with auto-√N centroids and a pairwise JVM
     fold re-rank walled 118 s at the sf1 suite bench vs 0.6 s-class
     Arrow batches. Its output is compared with the pairwise re-rank of

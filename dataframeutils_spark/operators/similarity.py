@@ -592,7 +592,7 @@ def _rerank_topk(
     crosses the join once per candidate PAIR (134 s on 13.4M candidates
     at the 10× stress), which is why IVF, where every neighbor sits in
     exactly one list, re-ranks per list instead
-    (:func:`_ivf_rerank_cogrouped`, 25 s).
+    (:func:`_ivf_rerank_grouped`, 25 s).
     """
     pairs = cand.join(_normed(corpus, id_col, vec_col, "q"), "qid").join(
         _normed(corpus, id_col, vec_col, "n"), "nid"
@@ -801,14 +801,14 @@ def _vectors(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
 
 
-def _rank_lists(pairs: DataFrame, n_probe: int) -> tuple[DataFrame, DataFrame]:
+def _rank_lists(pairs: DataFrame, n_probe: int) -> DataFrame:
     """Oracle-exact coarse assignment: fold-score (vec_id, v) ×
     (centroid, u, nrm) ``pairs`` as dot / |u| (|v| is constant per
     vector, so the argmax does not need it) and rank with one window.
-    Returns ``assign`` (nid, centroid: the vector's inverted list) and
-    ``probes`` (qid, centroid: its ``n_probe`` nearest lists). Ties
-    break on the smaller centroid id. :func:`_ivf_lists_sql` is the
-    DuckDB twin."""
+    Returns the ranked lists (vec_id, centroid, r) for r ≤ ``n_probe``:
+    r = 1 is the vector's own inverted list, every row is a list it
+    probes. Ties break on the smaller centroid id.
+    :func:`_ivf_lists_sql` is the DuckDB twin."""
     scored = pairs.select(
         "vec_id",
         "centroid",
@@ -818,12 +818,7 @@ def _rank_lists(pairs: DataFrame, n_probe: int) -> tuple[DataFrame, DataFrame]:
         F.try_divide(_dot(F.col("v"), F.col("u")), F.col("nrm")).alias("score"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), F.col("centroid"))
-    ranked = scored.withColumn("r", F.row_number().over(w))
-    assign = ranked.filter(F.col("r") == 1).select(F.col("vec_id").alias("nid"), "centroid")
-    probes = ranked.filter(F.col("r") <= n_probe).select(
-        F.col("vec_id").alias("qid"), "centroid"
-    )
-    return assign, probes
+    return scored.withColumn("r", F.row_number().over(w)).filter(F.col("r") <= n_probe)
 
 
 def _ivf_lists_sql(table: str, dim: int, n_centroids: int | None) -> str:
@@ -863,7 +858,7 @@ def _cosine_scores(u, nrm):
 
 def _rank_lists_arrow(
     corpus: DataFrame, id_col: str, vec_col: str, cids, score, n_probe: int
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Arrow twin of :func:`_rank_lists` for a collected quantizer: one
     pass per Arrow batch, no crossJoin, no window, no shuffle.
     ``score(v)`` maps a B×dim batch to B×C scores whose columns follow
@@ -906,10 +901,7 @@ def _rank_lists_arrow(
         # pin Arrow-stage parallelism: AQE sizes partitions for JVM
         # stages and starves Python ones (see the minhash note)
         src = src.repartition(par)
-    pr = src.mapInPandas(rank_batches, f"vec_id {id_type}, centroid int, r int")
-    assign = pr.filter(F.col("r") == 1).select(F.col("vec_id").alias("nid"), "centroid")
-    probes = pr.filter(F.col("r") <= n_probe).select(F.col("vec_id").alias("qid"), "centroid")
-    return assign, probes
+    return src.mapInPandas(rank_batches, f"vec_id {id_type}, centroid int, r int")
 
 
 def ivf_topk(
@@ -946,13 +938,13 @@ def ivf_topk(
     becomes the bottleneck; :func:`ivf_topk_hier` is the two-level
     quantizer for that regime.
 
-    Re-rank is always :func:`_ivf_rerank_cogrouped`: one numpy matmul
+    Re-rank is always :func:`_ivf_rerank_grouped`: one numpy matmul
     per inverted list, so the candidate pair table is never built
     (measured 0.6 s assignment vs 134 s pairwise fold re-rank at the
     10× stress, where hot lists blow up the candidate count).
     """
     if centroids is None:
-        assign, probes = _rank_lists(
+        lists = _rank_lists(
             _vectors(corpus, id_col, vec_col).crossJoin(
                 F.broadcast(_hash_quantizer(corpus, n_centroids, dim, vec_col))
             ),
@@ -960,10 +952,8 @@ def ivf_topk(
         )
     else:
         cids, u, nrm = _centroid_matrix(centroids)
-        assign, probes = _rank_lists_arrow(
-            corpus, id_col, vec_col, cids, _cosine_scores(u, nrm), n_probe
-        )
-    return _ivf_rerank_cogrouped(probes, assign, corpus, k, id_col, vec_col)
+        lists = _rank_lists_arrow(corpus, id_col, vec_col, cids, _cosine_scores(u, nrm), n_probe)
+    return _ivf_rerank_grouped(lists, corpus, k, id_col, vec_col)
 
 
 def _lloyd_numpy(x, k: int, seed: int = 42, iters: int = 20):
@@ -1022,7 +1012,7 @@ def ivf_topk_hier(
     fine centroid outside the probed coarse groups is unseen — standard
     two-level IVF semantics), so this is the production/scale variant
     with a rows-only driver check; recall vs the flat assignment is
-    pinned in pytest. Re-rank is :func:`_ivf_rerank_cogrouped`.
+    pinned in pytest. Re-rank is :func:`_ivf_rerank_grouped`.
 
     The quantizer picks the assignment as in :func:`ivf_topk`: the
     default hash quantizer runs the two fold+window stages above; a
@@ -1069,8 +1059,8 @@ def ivf_topk_hier(
                 mask |= fine_to_coarse[None, :] == gsel[:, j][:, None]
             return np.where(mask, fs, -np.inf)
 
-        assign, probes = _rank_lists_arrow(corpus, id_col, vec_col, cids, score, n_probe)
-        return _ivf_rerank_cogrouped(probes, assign, corpus, k, id_col, vec_col)
+        lists = _rank_lists_arrow(corpus, id_col, vec_col, cids, score, n_probe)
+        return _ivf_rerank_grouped(lists, corpus, k, id_col, vec_col)
 
     coarse = spark.createDataFrame(
         [(j, [float(v) for v in reps[j]]) for j in range(n_coarse)],
@@ -1102,54 +1092,45 @@ def ivf_topk_hier(
     # stage B: fine candidates arrive via broadcast (no shuffle); scores
     # are computed map-side and only skinny (vec_id, centroid, score)
     # rows reach the argmax window
-    assign, probes = _rank_lists(
+    lists = _rank_lists(
         probed_groups.join(vecs, "vec_id").join(F.broadcast(fine), "coarse"), n_probe
     )
-    return _ivf_rerank_cogrouped(probes, assign, corpus, k, id_col, vec_col)
+    return _ivf_rerank_grouped(lists, corpus, k, id_col, vec_col)
 
 
-def _ivf_rerank_cogrouped(
-    probes: DataFrame,
-    assign: DataFrame,
+def _ivf_rerank_grouped(
+    lists: DataFrame,
     corpus: DataFrame,
     k: int,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """The IVF re-rank: cogroup query and member vectors per inverted
-    list and score each bucket with ONE numpy matmul.
+    """The IVF re-rank: group the ranked ``lists`` (vec_id, centroid, r)
+    by inverted list and score each bucket with ONE numpy matmul. Every
+    row of a list is a query probing it; the rows with r = 1 are its
+    members. One grouping of one ranked table, so the coarse ranking is
+    planned once and each vector ships once per probed list.
 
     The per-pair formulations (JVM fold or per-pair pandas UDF) ship
     every vector once per CANDIDATE PAIR — O(occupancy²) bytes per
     bucket across the JVM↔Arrow boundary; at the 10× stress that is
     13.4M pairs ≈ 14 GB and dominates wall time (measured 134 s fold /
-    86 s per-pair-arrow). Cogrouping ships each vector once per probed
-    bucket — O(occupancy) — then computes the bucket's full cosine
-    matrix in C and emits only each query's per-bucket top-k (global
-    top-k ⊆ union of per-bucket top-ks since every candidate lives in
-    exactly one list). Measured 25 s end-to-end on the same stress —
-    5-6× over the fold. BLAS accumulation order differs from the
-    sequential fold only in the last ulp of cos_sim, so the (query,
-    neighbor, rank) output equals the DuckDB oracle's and the rounded
-    cos_sim does too: ``similarity_ivf`` and ``similarity_recall`` are
-    exact-gated through this re-rank.
+    86 s per-pair-arrow). Grouping per list ships O(occupancy), then
+    computes the bucket's full cosine matrix in C and emits only each
+    query's per-bucket top-k (global top-k ⊆ union of per-bucket top-ks
+    since every candidate lives in exactly one list). Measured 25 s
+    end-to-end on the same stress — 5-6× over the fold. BLAS
+    accumulation order differs from the sequential fold only in the
+    last ulp of cos_sim, so the (query, neighbor, rank) output equals
+    the DuckDB oracle's and the rounded cos_sim does too:
+    ``similarity_ivf`` and ``similarity_recall`` are exact-gated
+    through this re-rank.
     """
-    # the cogroup output schema must carry the CALLER's id type — a
-    # hardcoded `long` would cast-garble string/decimal ids
+    # the output schema must carry the CALLER's id type — a hardcoded
+    # `long` would cast-garble string/decimal ids
     id_dt = corpus.schema[id_col].dataType.simpleString()
-
-    # distinct column names per side: both sides derive from the same
-    # corpus/ranked lineage and would otherwise be an ambiguous self-join
-    e_q = corpus.select(F.col(id_col).alias("q_vid"), F.col(vec_col).alias("q_v"))
-    e_n = corpus.select(F.col(id_col).alias("n_vid"), F.col(vec_col).alias("n_v"))
-    # centroid renamed per side too: probes and assign are two filters
-    # of ONE ranked plan, so the shared name trips the ambiguous-
-    # self-join analyzer inside cogroup
-    qside = probes.join(e_q, probes["qid"] == e_q["q_vid"]).select(
-        F.col("centroid").alias("c_q"), "qid", F.col("q_v").alias("v")
-    )
-    nside = assign.join(e_n, assign["nid"] == e_n["n_vid"]).select(
-        F.col("centroid").alias("c_n"), "nid", F.col("n_v").alias("v")
+    members = lists.join(
+        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")), "vec_id"
     )
 
     # cap the per-matmul score matrix at ~32M doubles (256 MB): a HOT
@@ -1163,30 +1144,30 @@ def _ivf_rerank_cogrouped(
     # (kmeans-trained centroids keep lists balanced), not a crash.
     CHUNK_CELLS = 32_000_000
 
-    def bucket_topk(qpdf: pd.DataFrame, npdf: pd.DataFrame) -> pd.DataFrame:
+    def bucket_topk(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        if len(qpdf) == 0 or len(npdf) == 0:
-            return pd.DataFrame({"qid": [], "nid": [], "cos_sim": []})
         # sort members by id so a stable argsort on -score breaks
         # cosine ties toward the smaller neighbor id (the fold path's
         # ORDER BY cos DESC, nid contract)
-        npdf = npdf.sort_values("nid")
+        npdf = pdf[pdf["r"] == 1].sort_values("vec_id")
+        if len(npdf) == 0:
+            return pd.DataFrame({"qid": [], "nid": [], "cos_sim": []})
         n = np.stack(npdf["v"].to_numpy()).astype(np.float64, copy=False)
         nn = np.sqrt(np.einsum("ij,ij->i", n, n))
         with np.errstate(divide="ignore", invalid="ignore"):
             n_unit = (n / np.where(nn > 0, nn, np.nan)[:, None]).T
-        nids = npdf["nid"].to_numpy()
+        nids = npdf["vec_id"].to_numpy()
         take = min(k + 1, len(nids))  # +1: the self-match may rank first
         chunk = max(1, CHUNK_CELLS // max(len(nids), 1))
         out_q, out_n, out_c = [], [], []
-        for lo in range(0, len(qpdf), chunk):
-            qc = qpdf.iloc[lo : lo + chunk]
+        for lo in range(0, len(pdf), chunk):
+            qc = pdf.iloc[lo : lo + chunk]
             q = np.stack(qc["v"].to_numpy()).astype(np.float64, copy=False)
             qn = np.sqrt(np.einsum("ij,ij->i", q, q))
             with np.errstate(divide="ignore", invalid="ignore"):
                 s = (q / np.where(qn > 0, qn, np.nan)[:, None]) @ n_unit
-            qids = qc["qid"].to_numpy()
+            qids = qc["vec_id"].to_numpy()
             order = np.argsort(-s, axis=1, kind="stable")
             for i in range(len(qids)):
                 cols = order[i, :take]
@@ -1203,10 +1184,8 @@ def _ivf_rerank_cogrouped(
             out["cos_sim"] = sim.astype(object).where(sim.notna(), None)
         return out
 
-    per_bucket = (
-        qside.groupby("c_q")
-        .cogroup(nside.groupby("c_n"))
-        .applyInPandas(bucket_topk, f"qid {id_dt}, nid {id_dt}, cos_sim double")
+    per_bucket = members.groupBy("centroid").applyInPandas(
+        bucket_topk, f"qid {id_dt}, nid {id_dt}, cos_sim double"
     )
     w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("nid"))
     return (

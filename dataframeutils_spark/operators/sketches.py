@@ -690,13 +690,16 @@ def ivfadc_topk(
     from dataframeutils_spark.operators import similarity as sim
     from dataframeutils_spark.schema import siground
 
-    assign, probes = sim._rank_lists(
+    lists = sim._rank_lists(
         sim._vectors(emb, id_col, vec_col).crossJoin(
             F.broadcast(sim.ivf_centroids(emb.sparkSession, n_centroids, dim))
         ),
         n_probe,
     )
-    probes = probes.filter(F.col("qid") % query_mod == 0)
+    assign = lists.filter(F.col("r") == 1).select(F.col("vec_id").alias("nid"), "centroid")
+    probes = lists.filter(F.col("vec_id") % query_mod == 0).select(
+        F.col("vec_id").alias("qid"), "centroid"
+    )
 
     dm = _pq_dmat(emb, m, k, dim, vec_col)
     codes = dm.select(

@@ -22,6 +22,14 @@ def get_spark(
 
     Defaults honour the env vars the bench/driver harness uses:
     ``SPARK_GRAFT_CPUS`` → local parallelism and shuffle partitions.
+
+    ``spark.sql.codegen.cache.maxEntries`` is a static SQL conf: it
+    takes effect only when this call starts the JVM, and a session that
+    already exists keeps its cache size. The vanilla session of
+    ``tools/driver_sim.py`` does not get it (nor the class-name setting
+    next to it), and neither does the external driver that session
+    stands for: those runs keep Spark's 100-entry cache, and no gain
+    measured with this session is claimed for them.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if master is None:
@@ -45,12 +53,22 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Long-lived sessions churn the JIT code cache with generated
-        # (whole-stage-codegen) classes; at the 240 MB default the JVM
-        # eventually stops compiling and NEW generated code runs
-        # interpreted — measured 5× on expression-heavy stages after
-        # ~20 mixed queries (r7). Same flag a long-lived executor
-        # needs on a real cluster (spark.executor.extraJavaOptions).
+        # Compiled whole-stage-codegen classes are cached by source text
+        # in an LRU of this many entries (Spark's default is 100, split
+        # over 4 segments). One pass over the registered queries compiles
+        # about 3,600 distinct classes, so a smaller cache recompiles
+        # nearly all of them on every later pass: Janino, then the JIT.
+        .config("spark.sql.codegen.cache.maxEntries", "16384")
+        # ...and the source text must repeat: AQE numbers codegen stages
+        # in the order stages happen to finish, and a stage id in the
+        # class name made the same pipeline a new class on later passes
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        # JIT code cache: a session that runs the whole registry holds
+        # ~180 MB of compiled code (the profiled segment ~100 MB, where
+        # the 240 MB default gives it ~117 MB); when the cache fills the
+        # JVM stops compiling and new generated code runs interpreted
+        # (r7: 5× on expression-heavy stages). Same flag a long-lived
+        # executor needs on a real cluster (spark.executor.extraJavaOptions).
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",

@@ -424,8 +424,8 @@ def _ivf_rows(df):
     return df.select("query_id", "neighbor_id", "rank")
 
 
-def test_ivf_cogrouped_rerank_matches_oracle(spark, ddb):
-    """The cogrouped re-rank (one numpy matmul per inverted list) must
+def test_ivf_grouped_rerank_matches_oracle(spark, ddb):
+    """The grouped re-rank (one numpy matmul per inverted list) must
     produce the same (query, neighbor, rank) rows as the oracle's
     pairwise fold re-rank in DuckDB — only the last ulp of cos_sim may
     differ (BLAS vs sequential fold)."""
@@ -490,7 +490,7 @@ def test_ivf_hier_recall_vs_flat(spark):
 
 
 def test_ivf_python_stages_carry_caller_id_type(spark):
-    """The Arrow assignment and the cogroup re-rank output schemas must
+    """The Arrow assignment and the grouped re-rank output schemas must
     derive from the caller's id column — a hardcoded `long` would
     cast-garble string ids."""
     emb = (

@@ -594,22 +594,26 @@ def test_multiprobe_index_side_unchanged(spark):
 def test_ivf_quantizer_picks_the_assignment_path(spark):
     """The quantizer picks the IVF assignment: the default hash
     quantizer runs the fold+window (no Python stage), a passed
-    ``centroids`` table the one Arrow assignment stage (its plan holds
-    a copy under each cogroup side, both running the same function).
-    The re-rank is always the one cogroup."""
+    ``centroids`` table the one Arrow assignment stage. Either way the
+    coarse ranking is planned once — one ranking window or one
+    ``MapInPandas`` — and the re-rank is one grouped Python stage."""
     import re
 
     from dataframeutils_spark.operators import similarity
 
+    ranking = re.compile(r"row_number\(\) windowspecdefinition\(\w+#\d+L?, score#\d+ DESC")
     emb = load_table(spark, SF_DIR, "embeddings")
     cents = similarity.ivf_centroids(spark, 8, 64)
     for fn in (similarity.ivf_topk, similarity.ivf_topk_hier):
         default = _plan(fn(emb, k=5, n_probe=2, dim=64))
         passed = _plan(fn(emb, k=5, n_probe=2, dim=64, centroids=cents))
         assert "MapInPandas" not in default, fn.__name__
-        assert len(set(re.findall(r"MapInPandas (\w+)\(", passed))) == 1, fn.__name__
+        assert len(ranking.findall(default)) == 1, fn.__name__
+        assert passed.count("MapInPandas") == 1, fn.__name__
+        assert not ranking.search(passed), fn.__name__
         for plan in (default, passed):
-            assert plan.count("FlatMapCoGroupsInPandas") == 1, fn.__name__
+            assert plan.count("FlatMapGroupsInPandas") == 1, fn.__name__
+            assert "FlatMapCoGroupsInPandas" not in plan, fn.__name__
 
 
 def test_heavy_hitter_registers_bounded_groupby(spark):

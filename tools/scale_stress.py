@@ -54,7 +54,7 @@ QUERIES = [
     "range_attribution",
     # round 3 operators: the replicated corpus is the worst case for
     # shared-span detection (every replica family shares most spans)
-    # and pipeline dedup; kmeans+cogroup is the production IVF config
+    # and pipeline dedup; kmeans + grouped re-rank is the production IVF config
     "pipeline_prepare",
     "dedup_shared_spans",
     "session_overlap",
