@@ -1,20 +1,65 @@
 #!/usr/bin/env python
-"""Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: time the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print one
-JSON line {"metric", "value", "unit", "queries", "sf"}.
+JSON summary line.
 
-``value`` is total wall seconds across the headline set; per-query
-seconds are in ``queries``. Each query is executed with a count() action
-so results never funnel through the driver.
+Every run of a query goes through ``perfbench.run.Run.run_query``:
+build, plan, then ``count()`` and a full ``noop`` write of the same
+DataFrame, each phase timed on its own. ``value`` in the summary is
+``build_s + count_s`` summed over the timed runs; the per-query phases
+go to ``bench_records/<cpus>c-sf<sf>-<run id>.json``, a new file per run.
+
+Protocol, and why:
+
+- Two pre-touch jobs belong to the session, not to whichever query runs
+  first: one JVM job pays class loading, one 32-partition
+  ``mapInPandas`` spawns the Python worker pool that later Arrow stages
+  reuse.
+- ``weighted_bins`` runs once cold, before any warm run, so the warm
+  protocol's delta stays visible in the summary.
+- Each query is warmed at the benchmark's own scale factor right before
+  its timed run. JIT and codegen compilation are per-process costs that
+  amortize to zero at scale, and some plans are sized by the data
+  (``similarity_ivf`` picks ``ceil(sqrt(N))`` lists), so a smaller
+  scale factor compiles different code. Iterative operators run a
+  different stage graph per round, so warm runs repeat until one
+  improves on the last by less than 1.4×, at most three.
+- ``count()`` runs before the full write, so it meets the same JVM
+  state as the older ``count()``-only protocol of the BENCH_r series.
+- Between queries, ``gc.collect``, ``clearCache`` and a JVM
+  ``System.gc()``: checkpointed RDD blocks of iterative operators are
+  freed only when the Python references die and the JVM ContextCleaner
+  sees the weak references go, which a JVM without heap pressure may
+  not do for hundreds of queries.
+
+Environment: ``SPARK_GRAFT_ONLY`` picks the queries (comma-separated
+registered names, ``all`` for the whole registry, or ``i:j``, a slice of
+``HEADLINE``). ``SPARK_GRAFT_EVENT_DIR`` turns the Spark event log on,
+under a directory per run, and adds each query's stage summary to the
+record.
 """
 from __future__ import annotations
 
+import argparse
+import gc
 import json
 import os
 import sys
 import time
+from types import SimpleNamespace
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+
+from perfbench.run import Run, git_commit  # noqa: E402
+from perfbench.trace import parse_event_log, union_length  # noqa: E402
+
+WORKLOAD = "headline"  # the workload field of perfbench's job groups
+PHASES = ("count", "full")
+WARM_RUNS = 3
+WARM_GAIN = 1.4
+RECORD_KEYS = ("build_s", "plan_s", "count_s", "full_s", "py4j_calls", "build_jobs",
+               "engine_probe_ms", "rows", "warm_runs", "error")
 
 # Headline set: the flagship weighted-bin scan plus one representative
 # of each operator family (window-native stats, cross-feature, dedup /
@@ -250,246 +295,201 @@ HEADLINE = [
 # definition) and is likewise excluded: the gate checks it exactly at
 # sf0.01, and the 100 TB tier (hard_negatives_ann) reuses the
 # already-benched ANN pipeline.
-#
-# Timing note (decided in round 4, VERDICT r3 #7): dedup_simhash's
-# 60-conditional-sum aggregate compiles one large whole-stage-codegen
-# method — ~6 s on its first run in a fresh JVM, ~2 s after. The plan
-# itself is the right one (single projection + band equi-join), and a
-# compile happens once per executor lifetime — zero amortized at
-# scale — so the operator stays as-is and the spike is handled by the
-# warmup pass below running at the BENCH scale factor: the sf-sized
-# plan compiles untimed, and the timed number is the steady-state cost
-# that actually extrapolates to 100 TB.
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Optional headline subset (comma-separated names, or "i:j" slice of
-    # HEADLINE): lets long off-SF runs (e.g. the 10x BENCH_LOCAL sf1
-    # section) be chunked across sessions without changing the per-query
-    # warm protocol, which is per-query anyway.
-    only_env = os.environ.get("SPARK_GRAFT_ONLY", "")
-    headline = HEADLINE
-    if only_env:
-        parts = only_env.split(":")
-        if len(parts) == 2 and all(p.isdigit() or p == "" for p in parts):
-            i, j = parts
-            headline = HEADLINE[int(i or 0):int(j) if j else len(HEADLINE)]
-        else:
-            wanted = {n.strip() for n in only_env.split(",") if n.strip()}
-            headline = [n for n in HEADLINE if n in wanted]
-            unknown = wanted - set(HEADLINE)
-            if unknown:
-                raise SystemExit(
-                    f"SPARK_GRAFT_ONLY names not in HEADLINE: {sorted(unknown)}"
-                )
-        if not headline:
-            raise SystemExit(f"SPARK_GRAFT_ONLY={only_env!r} selects no queries")
-    # scale factor from the directory name (sf0.1 → 0.1)
-    base = os.path.basename(sf_dir.rstrip("/"))
-    try:
-        sf = float(base.replace("sf", ""))
-    except ValueError:
-        sf = -1.0
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    sf = scale_factor(sf_dir)
+    import __spark_entry__ as entry
 
-    from dataframeutils_spark.session import get_spark
-
-    # The engine session: the same conf the tests run under, including
-    # the 1 GB JIT code cache that keeps whole-stage-codegen compiled
-    # across a 100+-query session (r7: dedup_clusters 20 s with the
-    # 240 MB default vs 4.0 s with it). Driver memory: SPARK_DRIVER_MEMORY.
-    spark = get_spark(
-        app_name="dataframeutils-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Session pre-touch before the cold timer (VERDICT r7 #5: "profile
-    # the first-query path — session conf, Arrow batch init — and shave
-    # what's shaveable"). Two one-time costs belong to the SESSION, not
-    # to whichever query happens to run first:
-    #  1. JVM/DAGScheduler/task-serializer class loading (~2-3 s): one
-    #     trivial JVM job pays it.
-    #  2. Python-worker pool spawn + pandas/numpy import + Arrow
-    #     serializer init (~2 s wall across 32 concurrent workers): one
-    #     trivial 32-partition mapInPandas pays it; workers are reused
-    #     (spark.python.worker.reuse default) by every later Arrow
-    #     stage. On a real cluster long-lived executors hold exactly
-    #     this warm pool.
-    # The flagship's OWN cold costs — its codegen, its scan, its
-    # shuffle — stay inside the timed run.
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    def _touch(it):
-        import pandas as _pd  # noqa: F401
-
-        yield from it
-
-    spark.range(0, 32, 1, 32).mapInPandas(_touch, "id long").count()
-
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-
-    # Per-query warm-then-time at the BENCH SF: pay JVM JIT +
-    # whole-stage-codegen compilation (e.g. dedup_simhash's
-    # 60-conditional-sum method, the composed pipeline_prepare
-    # projection) in an untimed run IMMEDIATELY before the timed one —
-    # per-process constants that amortize to zero at scale, and leaving
-    # them in the timed number makes runs bimodal.  Two details learned
-    # the hard way: (1) warm at sf_dir, not a smaller SF —
-    # similarity_ivf sizes C to ceil(sqrt(N)), so an sf0.001-warmed
-    # plan compiles a DIFFERENT method than the sf0.1 run (round 3's
-    # official 31.95 s row vs 3.4 s warm was exactly that); (2) warm
-    # per query, not as one upfront pass — measured when the codegen
-    # class cache held Spark's default 100 entries, where with 45+
-    # headline queries an upfront sweep evicted the early queries'
-    # classes before they were timed (pipeline_prepare 11 s "warmed"
-    # vs 3.4 s actually warm). `get_spark` now sizes that cache to the
-    # whole registry, so a sweep no longer evicts them; the per-query
-    # protocol stays so the BENCH_r series stays comparable.
-    # Adaptive warm count: most plans stabilize after one warm run, but
-    # ITERATIVE operators (dedup_clusters' pointer-doubling rounds) run
-    # a different stage graph per round — one warm pass leaves later
-    # rounds' codegen cold (measured: 22 s cold → 11 s after one warm →
-    # 3.7 s after two). Warm until consecutive untimed runs stop
-    # improving by >1.4×, capped at 3 — steady state is the number that
-    # extrapolates, compile cost is per-executor-lifetime.
-    # Cold-run honesty number (VERDICT r4 #7): the very first flagship
-    # execution in this fresh JVM, before ANY warm pass — codegen
-    # compile + JIT included — so the warm protocol's delta is visible
-    # in the published JSON rather than only the steady-state number.
+    names = select_queries(os.environ.get("SPARK_GRAFT_ONLY", ""), list(entry.queries()))
+    run_id = f"{time.strftime('%Y%m%dT%H%M%S', time.gmtime())}-{os.getpid()}"
+    event_root = os.environ.get("SPARK_GRAFT_EVENT_DIR")
+    args = argparse.Namespace(seed=0, trace=0, sf_dir=sf_dir,
+                              event_dir=os.path.join(event_root, run_id) if event_root else None)
+    run = BenchRun(args, SimpleNamespace(name=WORKLOAD, queries=tuple(names)), entry, None, cpus)
+    timed: dict[str, dict] = {}
     weighted_bins_cold = -1.0
-    if "weighted_bins" in headline:  # skip in subset chunks without it
-        t0 = time.time()
-        try:
-            qs["weighted_bins"](spark, sf_dir).count()
-            weighted_bins_cold = round(time.time() - t0, 3)
-        except Exception as exc:
-            print(f"# weighted_bins cold: FAILED {exc}", file=sys.stderr, flush=True)
-        print(
-            f"# weighted_bins cold (first run, fresh JVM): {weighted_bins_cold:.2f}s",
-            file=sys.stderr,
-            flush=True,
-        )
-
-    per_query: dict[str, float] = {}
-    total = 0.0
-    for name in headline:
-        fn = qs.get(name)
-        if fn is None:
-            continue
-        # Label jobs per query (guide §1.5) so the UI / event log can
-        # attribute stages; a local-property set, nanoseconds.
-        spark.sparkContext.setJobDescription(f"bench:{name}")
-        prev = None
-        for _ in range(3):
-            try:
-                w0 = time.time()
-                fn(spark, sf_dir).count()  # untimed warm run
-                wdt = time.time() - w0
-            except Exception:
-                break
-            if prev is not None and wdt > prev / 1.4:
-                break
-            prev = wdt
-        t0 = time.time()
-        try:
-            n = fn(spark, sf_dir).count()
-            dt = time.time() - t0
-            per_query[name] = round(dt, 3)
-            total += dt
-            print(f"# {name}: {n} rows in {dt:.2f}s", file=sys.stderr, flush=True)
-        except Exception as exc:  # keep benching the rest
-            per_query[name] = -1.0
-            print(f"# {name}: FAILED {exc}", file=sys.stderr, flush=True)
-        # Session hygiene between queries (r7): iterative operators
-        # (connected components, textrank, BPE) localCheckpoint RDDs
-        # whose storage blocks are only reclaimed when the Python
-        # references die AND the JVM ContextCleaner runs. Over a
-        # 100+-query session those blocks pile up in storage memory and
-        # tax later queries (measured: dedup_keep_best 2.6 s solo vs
-        # 15.4 s late in a 104-query session). Drop the references and
-        # give the cleaner a GC edge to find them.
-        import gc
-
-        gc.collect()
-        spark.catalog.clearCache()
-        # Python gc only releases the py4j proxies; the checkpoint
-        # blocks themselves are owned by JVM RDD objects that the
-        # ContextCleaner reclaims via WEAK references — which a JVM
-        # that never feels heap pressure may not process for hundreds
-        # of queries. One explicit JVM System.gc() per query closes
-        # the chain (r7: dedup_clusters measured 18.0 s late in a
-        # 126-query session vs 3.6 s solo before this; the cost is
-        # ~0.1 s per query, outside the timed section).
-        spark.sparkContext._jvm.System.gc()
-
-    # Emit the per-query dict sorted fastest-first / SLOWEST-LAST: the
-    # external driver keeps only the last ~2000 chars of stdout, so tail
-    # ordering decides which per-query numbers stay comparable across
-    # rounds — the expensive queries are the ones worth comparing
-    # (r13 verdict item 5; protocol and values unchanged, ordering is
-    # not semantic in JSON).
-    per_query_sorted = dict(sorted(per_query.items(), key=lambda kv: kv[1]))
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total_wall",
-                "value": round(total, 3),
-                "unit": "sec",
-                "queries": per_query_sorted,
-                "weighted_bins_cold": weighted_bins_cold,
-                "sf": sf,
-            }
-        ),
-        flush=True,
-    )
-    # Full per-query map as a file artifact beside the summary line, in
-    # HEADLINE order, so every round keeps a complete committed record
-    # even when stdout is tail-truncated (r13 verdict item 5; additive).
     try:
-        perq_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_PERQ.json"
-        )
-        with open(perq_path, "w") as fh:
-            json.dump(
-                {
-                    "metric": "headline_total_wall",
-                    "value": round(total, 3),
-                    "unit": "sec",
-                    "queries": per_query,
-                    "weighted_bins_cold": weighted_bins_cold,
-                    "sf": sf,
-                    "cpus": cpus,
-                },
-                fh,
-                indent=1,
-            )
-    except OSError as exc:  # never fail the bench over the artifact
-        print(f"# BENCH_PERQ.json not written: {exc}", file=sys.stderr, flush=True)
-    # The driver records only the last ~2000 chars of stdout; the
-    # per-query dict above can push the headline fields out of that
-    # capture (BENCH_r12.json parsed as null). Emit a compact summary
-    # as the FINAL line so the tail always parses (r12 verdict item 2).
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total_wall",
-                "value": round(total, 3),
-                "unit": "sec",
-                "n_queries": len(per_query),
-                "n_failed": sum(1 for v in per_query.values() if v < 0),
-                "weighted_bins_cold": weighted_bins_cold,
-                "weighted_bins_warm": per_query.get("weighted_bins"),
-                "sf": sf,
-            }
-        ),
-        flush=True,
-    )
-    spark.stop()
+        run.start()
+        if "weighted_bins" in names:
+            cold = run.run_query("cold", "weighted_bins", False, ("count",))
+            if "error" in cold:
+                print(f"# weighted_bins cold: FAILED {cold['error']}", file=sys.stderr, flush=True)
+            else:
+                weighted_bins_cold = round(bench_s(cold), 3)
+                print(f"# weighted_bins cold (first run, fresh JVM): {weighted_bins_cold:.2f}s",
+                      file=sys.stderr, flush=True)
+        for name in names:
+            rec = timed[name] = time_query(run, name)
+            if "error" in rec:
+                print(f"# {name}: FAILED {rec['error']}", file=sys.stderr, flush=True)
+            else:
+                print(f"# {name}: {rec['rows']} rows, build+count {bench_s(rec):.2f}s, "
+                      f"full {rec['full_s']:.2f}s", file=sys.stderr, flush=True)
+            gc.collect()
+            run.spark.catalog.clearCache()
+            run.sc._jvm.System.gc()
+    finally:
+        run.stop()
+
+    result = summary(timed, weighted_bins_cold, sf)
+    queries = {n: {k: r.get(k) for k in RECORD_KEYS} for n, r in timed.items()}
+    if args.event_dir:
+        for name, events in stage_summary(*parse_event_log(args.event_dir), timed).items():
+            queries[name].update(events)
+    record = {"run_id": run_id, "commit": git_commit(), "cpus": cpus, "sf": sf,
+              "sf_dir": sf_dir, "only": os.environ.get("SPARK_GRAFT_ONLY", ""),
+              "event_dir": args.event_dir, "summary": result, "queries": queries}
+    out_dir = os.path.join(ROOT, "bench_records")
+    os.makedirs(out_dir, exist_ok=True)
+    path = os.path.join(out_dir, f"{cpus}c-sf{sf:g}-{run_id}.json")
+    with open(path, "w") as fh:
+        json.dump(record, fh, indent=1)
+    print(f"# record: {os.path.relpath(path, ROOT)}", file=sys.stderr, flush=True)
+    print(json.dumps(result), flush=True)
+
+
+def select_queries(only: str, registered: list[str]) -> list[str]:
+    """The queries a run times, from ``SPARK_GRAFT_ONLY``: empty for
+    ``HEADLINE``, ``all`` for every registered query, ``i:j`` for a
+    slice of ``HEADLINE``, or comma-separated registered names. Exits
+    on an unregistered name, in ``HEADLINE`` or in ``only``."""
+    missing = [n for n in HEADLINE if n not in registered]
+    if missing:
+        raise SystemExit(f"HEADLINE names not registered: {missing}")
+    only = only.strip()
+    if not only:
+        return list(HEADLINE)
+    if only == "all":
+        return list(registered)
+    parts = only.split(":")
+    if len(parts) == 2 and all(p.isdigit() or p == "" for p in parts):
+        i, j = parts
+        chosen = HEADLINE[int(i or 0):int(j) if j else len(HEADLINE)]
+    else:
+        chosen = list(dict.fromkeys(n.strip() for n in only.split(",") if n.strip()))
+        unknown = [n for n in chosen if n not in registered]
+        if unknown:
+            raise SystemExit(f"SPARK_GRAFT_ONLY names not registered: {unknown}")
+    if not chosen:
+        raise SystemExit(f"SPARK_GRAFT_ONLY={only!r} selects no queries")
+    return chosen
+
+
+def scale_factor(sf_dir: str) -> float:
+    """The scale factor in a directory name (``sf0.1`` → 0.1), else -1."""
+    try:
+        return float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
+    except ValueError:
+        return -1.0
+
+
+def bench_s(rec: dict) -> float | None:
+    """The seconds a run adds to ``value``; None if it failed."""
+    return None if "error" in rec else rec["build_s"] + rec["count_s"]
+
+
+def summary(timed: dict[str, dict], weighted_bins_cold: float, sf: float) -> dict:
+    """The last line of output; its keys and their order are what the
+    BENCH_r series reads."""
+    secs = {n: bench_s(r) for n, r in timed.items()}
+    ok = [s for s in secs.values() if s is not None]
+    wb = secs.get("weighted_bins")
+    warm = None if "weighted_bins" not in secs else -1.0 if wb is None else round(wb, 3)
+    return {
+        "metric": "headline_total_wall",
+        "value": round(sum(ok), 3),
+        "unit": "sec",
+        "n_queries": len(timed),
+        "n_failed": len(timed) - len(ok),
+        "weighted_bins_cold": weighted_bins_cold,
+        "weighted_bins_warm": warm,
+        "sf": sf,
+    }
+
+
+def stage_summary(jobs: dict, stages: dict, timed: dict[str, dict]) -> dict[str, dict]:
+    """Each timed run's Spark work, from ``perfbench.trace.parse_event_log``.
+
+    Jobs belong to a query by perfbench's job group
+    ``bench:<workload>:timed:<query>:<phase>``. ``driver_gap_s`` is the
+    time of the count and full phases in which none of their jobs ran.
+    """
+    groups: dict[tuple[str, str], list[dict]] = {}
+    for j in jobs.values():
+        parts = j["group"].split(":")
+        if len(parts) == 5 and parts[:3] == ["bench", WORKLOAD, "timed"]:
+            groups.setdefault((parts[3], parts[4]), []).append(j)
+    out = {}
+    for name, rec in timed.items():
+        mine = [j for (q, _), js in groups.items() if q == name for j in js]
+        ran = [stages[s] for s in sorted({s for j in mine for s in j["stages"]})
+               if s in stages and stages[s]["submitted"]]
+        action = [(j["t0"] / 1e3, j["t1"] / 1e3) for p in PHASES for j in groups.get((name, p), [])]
+        phase_s = sum(rec.get(f"{p}_s", 0.0) for p in PHASES)
+        out[name] = {
+            "jobs": len(mine),
+            "stages": len(ran),
+            "job_wall_s": union_length([(j["t0"] / 1e3, j["t1"] / 1e3) for j in mine]),
+            "stage_wall_s": union_length([(s["t0"] / 1e3, s["t1"] / 1e3) for s in ran]),
+            "executor_run_s": sum(s["run_ms"] for s in ran) / 1e3,
+            "gc_s": sum(s["gc_ms"] for s in ran) / 1e3,
+            "scheduler_delay_s": sum(s["sched_delay_ms"] for s in ran) / 1e3,
+            "fetch_wait_s": sum(s["fetch_wait_ms"] for s in ran) / 1e3,
+            "driver_gap_s": max(0.0, phase_s - union_length(action)),
+        }
+    return out
+
+
+class BenchRun(Run):
+    """perfbench's run over the tables at ``args.sf_dir``: the session
+    is the benchmark's own, and no inputs are generated."""
+
+    def start(self) -> None:
+        from pyspark import SparkContext
+
+        from dataframeutils_spark.session import get_spark
+        from perfbench.trace import Py4jCounter
+
+        self.sf_dir = self.args.sf_dir
+        event_dir = self.args.event_dir
+        conf = {"spark.ui.showConsoleProgress": "false"}
+        if event_dir:
+            os.makedirs(event_dir)
+            conf |= {"spark.eventLog.enabled": "true",
+                     "spark.eventLog.rolling.enabled": "false",
+                     "spark.eventLog.compress": "false",
+                     "spark.eventLog.dir": "file://" + os.path.abspath(event_dir)}
+        self.spark = get_spark(app_name="dataframeutils-bench", master=f"local[{self.cpus}]",
+                               shuffle_partitions=self.cpus, extra_conf=conf)
+        self.sc = self.spark.sparkContext
+        self.sc.setLogLevel("ERROR")
+        self.jvm = SparkContext._gateway.proc
+        self._group("bench:setup")
+        self.spark.range(1000).selectExpr("sum(id)").collect()
+        self.spark.range(0, 32, 1, 32).mapInPandas(_touch, "id long").count()
+        self.py4j = Py4jCounter(self.spark)
+        self.queries = self.entry.queries()
+
+
+def _touch(it):
+    import pandas  # noqa: F401
+
+    yield from it
+
+
+def time_query(run: BenchRun, name: str) -> dict:
+    """Warm ``name`` (see the module docstring), then time it once."""
+    prev = None
+    for warm in range(1, WARM_RUNS + 1):
+        s = bench_s(run.run_query(f"warm{warm}", name, False, PHASES))
+        if s is None or (prev is not None and s > prev / WARM_GAIN):
+            break
+        prev = s
+    rec = run.run_query("timed", name, False, PHASES)
+    rec["warm_runs"] = warm
+    return rec
 
 
 if __name__ == "__main__":

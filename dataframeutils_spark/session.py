@@ -12,6 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else half of physical memory capped at
+    24g: local mode runs everything in the driver JVM, and a heap larger
+    than the host gets the JVM killed when another process needs memory."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(half_mb, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "dataframeutils_spark",
     master: str | None = None,
@@ -50,7 +60,7 @@ def get_spark(
         # Arrow: the fast path for applyInPandas / pandas_udf kernels
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Compiled whole-stage-codegen classes are cached by source text

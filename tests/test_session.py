@@ -22,3 +22,17 @@ def test_codegen_cache_holds_a_cycle_of_more_than_100_classes(spark):
         passes.append(_compiled(spark) - before)
     assert passes[0] > 100, passes
     assert passes[1] == 0, passes
+
+
+def test_driver_memory_is_half_the_host_capped_at_24g(monkeypatch):
+    from dataframeutils_spark import session
+
+    pages = {"SC_PAGE_SIZE": 4096}
+    monkeypatch.setattr(session.os, "sysconf", lambda name: pages[name])
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    pages["SC_PHYS_PAGES"] = 16 * 2**30 // 4096
+    assert session.driver_memory() == "8192m"
+    pages["SC_PHYS_PAGES"] = 256 * 2**30 // 4096
+    assert session.driver_memory() == "24576m"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert session.driver_memory() == "3g"
