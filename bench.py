@@ -14,7 +14,9 @@ Protocol, and why:
 - Two pre-touch jobs belong to the session, not to whichever query runs
   first: one JVM job pays class loading, one 32-partition
   ``mapInPandas`` spawns the Python worker pool that later Arrow stages
-  reuse.
+  reuse and imports ``dataframeutils_spark`` in it, so every pooled
+  worker carries the package's import-time zip guard (see
+  ``session.guard_zip_invalidation``) before the first timed query.
 - ``weighted_bins`` runs once cold, before any warm run, so the warm
   protocol's delta stays visible in the summary.
 - Each query is warmed at the benchmark's own scale factor right before
@@ -59,7 +61,7 @@ PHASES = ("count", "full")
 WARM_RUNS = 3
 WARM_GAIN = 1.4
 RECORD_KEYS = ("build_s", "plan_s", "count_s", "full_s", "py4j_calls", "build_jobs",
-               "engine_probe_ms", "rows", "warm_runs", "error")
+               "engine_probe_ms", "py_worker_cpu_s", "rows", "warm_runs", "error")
 
 # Headline set: the flagship weighted-bin scan plus one representative
 # of each operator family (window-native stats, cross-feature, dedup /
@@ -336,7 +338,8 @@ def main() -> None:
     result = summary(timed, weighted_bins_cold, sf)
     queries = {n: {k: r.get(k) for k in RECORD_KEYS} for n, r in timed.items()}
     if args.event_dir:
-        for name, events in stage_summary(*parse_event_log(args.event_dir), timed).items():
+        for name, events in stage_summary(*parse_event_log(args.event_dir), timed,
+                                          cpus).items():
             queries[name].update(events)
     record = {"run_id": run_id, "commit": git_commit(), "cpus": cpus, "sf": sf,
               "sf_dir": sf_dir, "only": os.environ.get("SPARK_GRAFT_ONLY", ""),
@@ -409,12 +412,15 @@ def summary(timed: dict[str, dict], weighted_bins_cold: float, sf: float) -> dic
     }
 
 
-def stage_summary(jobs: dict, stages: dict, timed: dict[str, dict]) -> dict[str, dict]:
+def stage_summary(jobs: dict, stages: dict, timed: dict[str, dict],
+                  cpus: int) -> dict[str, dict]:
     """Each timed run's Spark work, from ``perfbench.trace.parse_event_log``.
 
     Jobs belong to a query by perfbench's job group
     ``bench:<workload>:timed:<query>:<phase>``. ``driver_gap_s`` is the
-    time of the count and full phases in which none of their jobs ran.
+    time of the count and full phases in which none of their jobs ran;
+    ``single_task_stage_s`` is the wall of the stages that ran one task
+    on more than one core, where all cores but one sat idle.
     """
     groups: dict[tuple[str, str], list[dict]] = {}
     for j in jobs.values():
@@ -433,6 +439,8 @@ def stage_summary(jobs: dict, stages: dict, timed: dict[str, dict]) -> dict[str,
             "stages": len(ran),
             "job_wall_s": union_length([(j["t0"] / 1e3, j["t1"] / 1e3) for j in mine]),
             "stage_wall_s": union_length([(s["t0"] / 1e3, s["t1"] / 1e3) for s in ran]),
+            "single_task_stage_s": union_length([(s["t0"] / 1e3, s["t1"] / 1e3) for s in ran
+                                                 if cpus > 1 and s["tasks"] == 1]),
             "executor_run_s": sum(s["run_ms"] for s in ran) / 1e3,
             "gc_s": sum(s["gc_ms"] for s in ran) / 1e3,
             "scheduler_delay_s": sum(s["sched_delay_ms"] for s in ran) / 1e3,
@@ -450,7 +458,7 @@ class BenchRun(Run):
         from pyspark import SparkContext
 
         from dataframeutils_spark.session import get_spark
-        from perfbench.trace import Py4jCounter
+        from perfbench.trace import ProcWatch, Py4jCounter
 
         self.sf_dir = self.args.sf_dir
         event_dir = self.args.event_dir
@@ -466,6 +474,7 @@ class BenchRun(Run):
         self.sc = self.spark.sparkContext
         self.sc.setLogLevel("ERROR")
         self.jvm = SparkContext._gateway.proc
+        self.watch = ProcWatch(self.jvm.pid)
         self._group("bench:setup")
         self.spark.range(1000).selectExpr("sum(id)").collect()
         self.spark.range(0, 32, 1, 32).mapInPandas(_touch, "id long").count()
@@ -476,18 +485,24 @@ class BenchRun(Run):
 def _touch(it):
     import pandas  # noqa: F401
 
+    import dataframeutils_spark  # noqa: F401
+
     yield from it
 
 
 def time_query(run: BenchRun, name: str) -> dict:
-    """Warm ``name`` (see the module docstring), then time it once."""
+    """Warm ``name`` (see the module docstring), then time it once.
+    ``py_worker_cpu_s`` is the CPU the JVM's descendants, the
+    ``pyspark.daemon`` and its workers, used during the timed run."""
     prev = None
     for warm in range(1, WARM_RUNS + 1):
         s = bench_s(run.run_query(f"warm{warm}", name, False, PHASES))
         if s is None or (prev is not None and s > prev / WARM_GAIN):
             break
         prev = s
+    cpu0 = run.watch.worker_cpu_s()
     rec = run.run_query("timed", name, False, PHASES)
+    rec["py_worker_cpu_s"] = run.watch.worker_cpu_s() - cpu0
     rec["warm_runs"] = warm
     return rec
 

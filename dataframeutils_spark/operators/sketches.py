@@ -696,11 +696,6 @@ def ivfadc_topk(
         ),
         n_probe,
     )
-    assign = lists.filter(F.col("r") == 1).select(F.col("vec_id").alias("nid"), "centroid")
-    probes = lists.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("qid"), "centroid"
-    )
-
     dm = _pq_dmat(emb, m, k, dim, vec_col)
     codes = dm.select(
         F.col(id_col).alias("nid"),
@@ -711,28 +706,32 @@ def ivfadc_topk(
     luts = dm.filter(F.col(id_col) % query_mod == 0).select(
         F.col(id_col).alias("qid"), F.col("dmat").alias("lut")
     )
+    # One grouping of the one ranked table pairs each list's probing
+    # queries with its members (r = 1): two filters of it joined on
+    # centroid would each plan the N×C fold and the ranking window.
+    is_member = F.col("r") == 1
+    members = F.collect_list(F.when(is_member, F.col("vec_id")))
     if list_cap is not None:
         # Occupancy cap (the N102 multiprobe discipline applied to the
         # coarse lists): a query scans at most list_cap members per
         # probed list — candidates ≤ n_probe·list_cap per query at ANY
         # corpus size, instead of n_probe·N/C. Members survive in a
         # deterministic salted-hash order so both engines keep the
-        # same ones (the dHash/LSH bucket_cap rule).
-        wcap = Window.partitionBy("centroid").orderBy(
-            portable_hash60(
-                F.concat(F.lit("ivfcap:"), F.col("nid").cast("string"))
-            ),
-            F.col("nid"),
-        )
-        assign = (
-            assign.withColumn("_cr", F.row_number().over(wcap))
-            .filter(F.col("_cr") <= list_cap)
-            .drop("_cr")
-        )
+        # same ones (the dHash/LSH bucket_cap rule); sorted
+        # (hash, id) structs are that order with its tie-break.
+        h = portable_hash60(F.concat(F.lit("ivfcap:"), F.col("vec_id").cast("string")))
+        keyed = F.struct(h.alias("h"), F.col("vec_id").alias("nid"))
+        capped = F.slice(F.array_sort(F.collect_list(F.when(is_member, keyed))), 1, list_cap)
+        members = F.transform(capped, lambda e: e["nid"])
     cand = (
-        probes.join(assign, "centroid")
+        lists.groupBy("centroid")
+        .agg(
+            F.collect_list(F.when(F.col("vec_id") % query_mod == 0, F.col("vec_id"))).alias("qids"),
+            members.alias("nids"),
+        )
+        .select(F.explode("qids").alias("qid"), "nids")
+        .select("qid", F.explode("nids").alias("nid"))
         .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid")
     )
     # explicit m-term sum, NOT aggregate(zip_with(...)): higher-order
     # lambdas evaluate interpreted per candidate row; fixed-index

@@ -3,13 +3,57 @@
 Local mode is a single JVM; the same settings (AQE, adaptive coalescing,
 skew-join handling, Arrow for the pandas-UDF path) are the ones that
 matter on a 1000-executor cluster, so tests exercise the real config.
+
+Importing this module (the package ``__init__`` does) also installs
+:func:`guard_zip_invalidation` in the importing process, so a Python
+worker that unpickles any of the engine's functions carries it.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def guard_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` skip an unchanged archive.
+
+    A PySpark worker calls ``importlib.invalidate_caches()`` at the start
+    of every task, so that a zip added with ``addPyFile`` becomes
+    importable. Before Python 3.12 that makes every zipimporter re-parse
+    its archive's whole central directory: a warm worker holds a dozen
+    importers over ``pyspark.zip`` and two over the spark-core jar,
+    about 27k entries a task, most of the task's CPU in short Python
+    stages. Guarded, an importer re-reads only when the archive's
+    ``(st_mtime_ns, st_size, st_ino)`` differs from the one it last
+    read, or when ``stat`` fails, so a replaced or deleted archive is
+    still picked up. Python 3.12 made the method lazy upstream, so the
+    guard is installed on older versions only; installing it twice is
+    a no-op.
+    """
+    original = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 12) or getattr(original, "_stamp_guarded", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            self._stamp = None
+            return original(self)
+        stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        if getattr(self, "_stamp", None) != stamp:
+            original(self)
+            self._stamp = stamp
+
+    invalidate_caches._stamp_guarded = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+guard_zip_invalidation()
 
 
 def driver_memory() -> str:

@@ -3,6 +3,8 @@ functions, so no Spark session starts here."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 
 import bench
@@ -65,9 +67,9 @@ def test_stage_summary_reads_timed_jobs_only():
     def job(group, t0, t1, stages):
         return {"group": group, "t0": t0, "t1": t1, "stages": stages}
 
-    def stage(t0, t1, run_ms, submitted=True):
+    def stage(t0, t1, run_ms, submitted=True, tasks=4):
         return {"submitted": submitted, "t0": t0, "t1": t1, "run_ms": run_ms, "gc_ms": 10,
-                "sched_delay_ms": 5, "fetch_wait_ms": 0}
+                "sched_delay_ms": 5, "fetch_wait_ms": 0, "tasks": tasks}
 
     g = f"bench:{bench.WORKLOAD}"
     jobs = {
@@ -76,9 +78,11 @@ def test_stage_summary_reads_timed_jobs_only():
         2: job(f"{g}:timed:q:count", 2000, 2300, [2, 3]),
         3: job(f"{g}:timed:q:full", 3000, 3400, [4]),
     }
-    stages = {0: stage(0, 500, 999), 1: stage(1000, 1200, 100), 2: stage(2000, 2300, 300),
-              3: stage(0, 0, 0, submitted=False), 4: stage(3000, 3400, 800)}
-    out = bench.stage_summary(jobs, stages, {"q": _run(0.3, 0.5, full=0.6)})["q"]
+    stages = {0: stage(0, 500, 999, tasks=1), 1: stage(1000, 1200, 100),
+              2: stage(2000, 2300, 300, tasks=1), 3: stage(0, 0, 0, submitted=False, tasks=0),
+              4: stage(3000, 3400, 800)}
+    timed = {"q": _run(0.3, 0.5, full=0.6)}
+    out = bench.stage_summary(jobs, stages, timed, 4)["q"]
     assert (out["jobs"], out["stages"]) == (3, 3)
     assert out["job_wall_s"] == pytest.approx(0.9)
     assert out["stage_wall_s"] == pytest.approx(0.9)
@@ -86,3 +90,24 @@ def test_stage_summary_reads_timed_jobs_only():
     assert out["gc_s"] == pytest.approx(0.03)
     # count + full took 1.1 s, their jobs 0.7 s
     assert out["driver_gap_s"] == pytest.approx(0.4)
+    # stage 2 ran one task (stage 0 did too, but in a warm run)
+    assert out["single_task_stage_s"] == pytest.approx(0.3)
+    # on one core a single task leaves no core idle
+    assert bench.stage_summary(jobs, stages, timed, 1)["q"]["single_task_stage_s"] == 0.0
+
+
+def test_time_query_records_python_worker_cpu_of_the_timed_run():
+    """``py_worker_cpu_s`` is the workers' CPU across the timed run
+    only, not the warm runs before it; it is a record key."""
+    cpu = iter([10.0, 10.75])
+
+    def run_query(pass_id, name, traced, phases):
+        assert phases == bench.PHASES
+        return _run(1.0, 1.0)  # no warm run improves on the last by 1.4x
+
+    run = SimpleNamespace(run_query=run_query,
+                          watch=SimpleNamespace(worker_cpu_s=lambda: next(cpu)))
+    rec = bench.time_query(run, "q")
+    assert rec["py_worker_cpu_s"] == pytest.approx(0.75)
+    assert rec["warm_runs"] == 2
+    assert "py_worker_cpu_s" in bench.RECORD_KEYS

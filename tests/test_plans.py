@@ -616,6 +616,21 @@ def test_ivf_quantizer_picks_the_assignment_path(spark):
             assert "FlatMapCoGroupsInPandas" not in plan, fn.__name__
 
 
+def test_ivfadc_ranks_the_coarse_lists_once(spark):
+    """IVFADC's list members (r = 1) and its queries' probes come from
+    one grouping of one ranked table, with or without the occupancy
+    cap: one ranking window, so the N × C fold is scored once."""
+    import re
+
+    from dataframeutils_spark.operators import sketches
+
+    ranking = re.compile(r"row_number\(\) windowspecdefinition\(vec_id#\d+L?, score#\d+ DESC")
+    emb = load_table(spark, SF_DIR, "embeddings")
+    for cap in (None, 8):
+        plan = _plan(sketches.ivfadc_topk(emb, n_centroids=8, n_probe=2, dim=64, list_cap=cap))
+        assert len(ranking.findall(plan)) == 1, cap
+
+
 def test_heavy_hitter_registers_bounded_groupby(spark):
     """The write side is one windowed groupBy over (window, row,
     bucket) — partial aggregation present (bounded merge state), no
