@@ -2849,11 +2849,11 @@ def q_fuzzy_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     char swapped to 'q', or 'z' if already 'q') and matched back
     against the vocabulary at distance <= 1 — each probe must recover
     its source term (+ any other true neighbors)."""
-    from dataframeutils_spark.operators.text import _tokens
+    from dataframeutils_spark.operators.text import _terms
 
     docs = load_table(spark, sf_dir, "documents")
     vocab = (
-        docs.select(F.explode(_tokens(F.lower(F.col("text")))).alias("term"))
+        docs.select(F.explode(_terms("text")).alias("term"))
         .filter(F.length("term") >= 4)
         .distinct()
     )
@@ -3543,16 +3543,12 @@ def q_weighted_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to value units (single correctly-rounded division — identical
     in both engines).
 
-    ``num_buckets`` is derived from the input's row count.
+    The operator derives ``num_buckets`` from the input's row count.
     events_bins_input is a row-preserving 1:1 select, so its optimized
     ``count()`` plan is the bare scan's, and the input is read once.
     """
-    inp = events_bins_input(spark, sf_dir)
-    n_rows = inp.count()
-    par = spark.sparkContext.defaultParallelism
     res = weighted_bins.calculate_weighted_bins(
-        inp,
-        num_buckets=weighted_bins.derive_num_buckets(n_rows, par),
+        events_bins_input(spark, sf_dir),
         id1_col="id1",
         id2_col="id2",
         timestamp_col="timestamp",
@@ -4644,6 +4640,7 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def all_oracles() -> dict[str, str]:
+    terms_sql = text._tokens_sql("lower(text)")
     return {
         "weighted_bins": oracles.weighted_bins_sql(WB_BIN_SIZE_MILLI, WB_MAX_BINS),
         "panel_distribution": oracles.DISTRIBUTION_SQL,
@@ -5041,11 +5038,9 @@ GROUP BY event_type
         "fuzzy_terms": dedup.fuzzy_term_lookup_sql(
             "SELECT DISTINCT CASE WHEN substr(term, 1, 1) = 'q' THEN 'z' "
             "ELSE 'q' END || substr(term, 2) AS probe FROM ("
-            "SELECT unnest(list_filter(string_split(lower(text), ' '), "
-            "t -> length(t) > 0)) AS term FROM documents) WHERE length(term) >= 4",
+            f"SELECT unnest({terms_sql}) AS term FROM documents) WHERE length(term) >= 4",
             "SELECT DISTINCT term FROM ("
-            "SELECT unnest(list_filter(string_split(lower(text), ' '), "
-            "t -> length(t) > 0)) AS term FROM documents) WHERE length(term) >= 4",
+            f"SELECT unnest({terms_sql}) AS term FROM documents) WHERE length(term) >= 4",
         ),
         "bloom_skipping": sketches.bloom_skipping_audit_sql(
             "SELECT md5(text) AS key, "

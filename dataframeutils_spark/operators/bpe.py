@@ -33,15 +33,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.local_solve import local_threshold
-from dataframeutils_spark.operators.text import _tokens
+from dataframeutils_spark.operators.text import _terms, _tokens_sql
 
 END_OF_WORD = "▁"  # sentencepiece-style marker, appended per word
 
 
 def _word_table(docs: DataFrame, text_col: str, vocab_top: int) -> DataFrame:
-    words = docs.select(
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("word")
-    )
+    words = docs.select(F.explode(_terms(text_col)).alias("word"))
     return (
         words.groupBy("word")
         .agg(F.count("*").alias("cnt"))
@@ -246,7 +244,7 @@ def bpe_encode_stats(
     ``assert_true`` so corrupt input fails loudly at execution instead
     of hash-mismatching downstream (the array-fold form had no such
     constraint; this one trades it for the linear-scan encode)."""
-    words = _tokens(F.lower(F.col(text_col)))
+    words = _terms(text_col)
     # Reserved-byte guard: NULL (and a no-op) on clean rows, a loud
     # SparkRuntimeException naming the doc on corrupt ones. Folded into
     # BOTH n_words and n_tokens via coalesce so the non-foldable assert
@@ -356,11 +354,10 @@ def _bpe_rules_ctes(
     """CTE chain (toks, w, s0, r1..rN, s1..sN-1, rules) whose final
     ``rules`` relation is (rank, left, right, merged, pair_count) —
     byte-identical to :func:`bpe_train`'s merge table."""
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     sep = "chr(1)"
     ctes = [
         f"""toks AS MATERIALIZED (
-  SELECT {toks} AS ws FROM {table}
+  SELECT {_tokens_sql("lower(text)")} AS ws FROM {table}
 )""",
         f"""w AS MATERIALIZED (
   SELECT word, CAST(count(*) AS BIGINT) AS cnt
@@ -461,12 +458,11 @@ def bpe_encode_stats_sql(
     answer as the engine's per-doc fold, far less replay."""
     from dataframeutils_spark.schema import siground_sql
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     comp = siground_sql("n_symbols * 1.0 / n_tokens")
     return f"""
 WITH {_bpe_wordtok_ctes(n_merges, vocab_top, table)},
 docw AS (
-  SELECT doc_id, unnest({toks}) AS word FROM {table}
+  SELECT doc_id, unnest({_tokens_sql("lower(text)")}) AS word FROM {table}
 ),
 agg AS (
   SELECT d.doc_id,

@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.text import (
     LANG_STOPWORDS,
+    _ws_split,
+    _ws_split_sql,
     ngram_array,
     ngram_array_sql,
 )
@@ -64,7 +66,7 @@ def decontaminate(
     """
 
     def doc_grams(df: DataFrame) -> DataFrame:
-        toks = F.split(F.col(text_col), r"\s+")
+        toks = _ws_split(F.col(text_col))
         return df.select(
             F.col(id_col).alias("doc_id"),
             F.array_distinct(ngram_array(toks, n)).alias("grams"),
@@ -114,7 +116,7 @@ def decontaminate_sql(
     return f"""
 WITH tok AS (
   SELECT doc_id, ({bench_pred}) AS is_bench,
-         string_split_regex(text, '\\s+') AS toks
+         {_ws_split_sql("text")} AS toks
   FROM {table}
 ), g AS (
   SELECT doc_id, is_bench, list_distinct({grams}) AS grams FROM tok

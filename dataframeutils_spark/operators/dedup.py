@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dataframeutils_spark.operators.local_solve import local_threshold, route_local
+from dataframeutils_spark.operators.local_solve import local_threshold, route_local, spread
 
 # ---------------------------------------------------------------------------
 # hashing schemes
@@ -151,7 +151,8 @@ def shingles(
     the downstream hash work is 100-1000× the scan size, so parallelism
     must be set *before* the multiplication, not after.
     """
-    par = docs.sparkSession.sparkContext.defaultParallelism
+    from dataframeutils_spark.operators.text import _ws_split
+
     # Materialize the token array in its own projection before the
     # higher-order transform. HOFs run interpreted (CodegenFallback)
     # and re-evaluate free subexpressions once PER ARRAY ELEMENT — an
@@ -159,8 +160,8 @@ def shingles(
     # doc (measured 124 s → 4 s at sf0.1). As a multi-use non-trivial
     # alias the projection survives CollapseProject, so the lambda's
     # element_at hits a bound column, not a recomputed split.
-    tokd = docs.repartition(par, F.col(id_col)).select(
-        F.col(id_col).alias("doc_id"), F.split(F.col(text_col), r"\s+").alias("toks")
+    tokd = spread(docs, F.col(id_col)).select(
+        F.col(id_col).alias("doc_id"), _ws_split(F.col(text_col)).alias("toks")
     )
     toks = F.col("toks")
     # sequence(0, k) with k < 0 descends instead of being empty — guard
@@ -378,10 +379,11 @@ def simhash(
     integer. Entirely conditional aggregation: one explode + one
     groupBy, no Python.
     """
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    toks = docs.repartition(par, F.col(id_col)).select(
+    from dataframeutils_spark.operators.text import _ws_split
+
+    toks = spread(docs, F.col(id_col)).select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("tok"),
+        F.explode(_ws_split(F.col(text_col))).alias("tok"),
     ).filter(F.length("tok") > 0)
     counted = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("w"))
     hashed = counted.select("doc_id", "w", portable_hash60(F.col("tok")).alias("h"))
@@ -890,10 +892,12 @@ FROM lab
 
 
 def _shingle_cte(table: str = "documents", n: int = 3) -> str:
+    from dataframeutils_spark.operators.text import _ws_split_sql
+
     gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(n))
     return f"""
 tok AS (
-  SELECT doc_id, string_split_regex(text, '\\s+') AS toks FROM {table}
+  SELECT doc_id, {_ws_split_sql("text")} AS toks FROM {table}
 ), sh AS (
   SELECT DISTINCT doc_id, g AS shingle FROM (
     SELECT doc_id,
@@ -985,11 +989,13 @@ WHERE i.n_inter / (ca.n_sh + cb.n_sh - i.n_inter)::DOUBLE >= {threshold}
 
 
 def simhash_sql(table: str = "documents", bits: int = 60) -> str:
+    from dataframeutils_spark.operators.text import _ws_split_sql
+
     h = portable_hash60_sql("tok")
     return f"""
 WITH toks AS (
   SELECT doc_id, t AS tok FROM (
-    SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS t FROM {table})
+    SELECT doc_id, unnest({_ws_split_sql("text")}) AS t FROM {table})
   WHERE length(t) > 0
 ), counted AS (
   SELECT doc_id, tok, count(*) AS w FROM toks GROUP BY doc_id, tok
@@ -1528,10 +1534,10 @@ def fuzzy_term_pairs(
     BEFORE the Levenshtein verify, and the verify itself is a native
     JVM function on the bounded candidate set. No all-pairs anywhere.
     """
-    from dataframeutils_spark.operators.text import _tokens
+    from dataframeutils_spark.operators.text import _terms
 
     vocab = (
-        docs.select(F.explode(_tokens(F.lower(F.col(text_col)))).alias("term"))
+        docs.select(F.explode(_terms(text_col)).alias("term"))
         .filter(F.length("term") >= min_len)
         .groupBy("term")
         .agg(F.count("*").alias("n"))

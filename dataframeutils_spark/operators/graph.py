@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dataframeutils_spark.operators.local_solve import local_threshold, route_local
-from dataframeutils_spark.operators.text import _tokens, ranked_topk
+from dataframeutils_spark.operators.local_solve import local_threshold, route_local, spread
+from dataframeutils_spark.operators.text import _terms, _tokens_sql, ranked_topk
 
 
 def _pagerank_local(
@@ -163,7 +163,7 @@ def pagerank(
 
 
 def _bigram_pairs(docs: DataFrame, text_col: str):
-    toks = _tokens(F.lower(F.col(text_col)))
+    toks = _terms(text_col)
     m = F.size(toks) - 1
     pairs = F.zip_with(
         F.slice(toks, 1, m),
@@ -192,17 +192,14 @@ def textrank_keywords(
     """
     from dataframeutils_spark.schema import siground
 
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    docs = docs.repartition(par)
+    docs = spread(docs)
     bi = _bigram_pairs(docs, text_col)
     edges = (
         bi.union(bi.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .groupBy("src", "dst")
         .agg(F.count("*").alias("w"))
     )
-    nodes = docs.select(
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("node")
-    ).distinct()
+    nodes = docs.select(F.explode(_terms(text_col)).alias("node")).distinct()
     ranks = pagerank(nodes, edges, iters=iters, damping=damping)
     scored = ranks.select(
         F.col("node").alias("term"), siground(F.col("rank")).alias("score")
@@ -219,7 +216,6 @@ def textrank_keywords_sql(
     """DuckDB oracle: the power iteration unrolled as chained CTEs."""
     from dataframeutils_spark.schema import siground_sql
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     its = []
     for i in range(iters):
         its.append(
@@ -236,7 +232,7 @@ def textrank_keywords_sql(
     chain = ",\n".join(its)
     return f"""
 WITH tok AS (
-  SELECT {toks} AS toks FROM {table}
+  SELECT {_tokens_sql("lower(text)")} AS toks FROM {table}
 ), bi AS (
   SELECT unnest(toks[1:len(toks) - 1]) AS src,
          unnest(toks[2:len(toks)]) AS dst
@@ -308,10 +304,9 @@ def cooccurrence_edges(
     # The lazy checkpoint matters more: without it BOTH join sides run
     # the whole scan + exchange + dedup pipeline (the broadcast build
     # side cannot reuse the probe side's exchange), doubling the scan.
-    par = items.sparkSession.sparkContext.defaultParallelism
+    pairs = items.select(F.col(group_col).alias("g"), F.col(item_col).alias("u"))
     a = (
-        items.select(F.col(group_col).alias("g"), F.col(item_col).alias("u"))
-        .repartition(par, F.col("g"))
+        spread(pairs, F.col("g"))
         .dropDuplicates(["g", "u"])
         .localCheckpoint(eager=False)
     )

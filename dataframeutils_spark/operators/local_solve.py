@@ -1,10 +1,15 @@
-"""Routing between a driver-local solve and the distributed loop.
+"""Physical routing decisions: a driver-local solve or the distributed
+loop, and how a scan-side stage spreads its input over the cores.
 
 Connected components, k_core, pagerank and BPE each solve small inputs
 in numpy/Python on the driver and large ones as a distributed fixpoint
 loop. One env var per operator sets the ceiling (0 disables the local
 path); the collect is bounded by it, the same discipline as a
 broadcast-join decision.
+
+:func:`spread` is the one scan-side spread rule: an operator whose work
+multiplies before its first exchange (a token explode, a Python map
+stage, a per-row array fold) spreads its input through it.
 """
 
 from __future__ import annotations
@@ -40,3 +45,11 @@ def route_local(df: DataFrame, threshold: int) -> tuple[DataFrame, bool]:
         df = df.localCheckpoint()
         return df, df.count() <= threshold
     return df.localCheckpoint(eager=False), False
+
+
+def spread(df: DataFrame, *cols) -> DataFrame:
+    """``df`` hash-partitioned on ``cols`` (round-robin without them)
+    over ``defaultParallelism`` partitions, so the scan-side work after
+    it uses every core. One exchange, always: the rule does not yet
+    look at how many splits the input already has."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *cols)

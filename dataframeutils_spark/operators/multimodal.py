@@ -53,6 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dataframeutils_spark.operators import local_solve
 from dataframeutils_spark.operators.dedup import (
     portable_hash60,
     portable_hash60_sql,
@@ -92,9 +93,9 @@ def _synth_table(
 
     ``make(media_id, h)`` returns ``(media_type, payload)``, where ``h``
     is the document's seed (first 15 hex digits of md5(text)). With
-    ``spread`` the narrow ``(media_id, text)`` rows are first hash-spread
-    over ``defaultParallelism`` partitions, so pure-Python codec work
-    uses every core even when the documents arrive as one small file.
+    ``spread`` the narrow ``(media_id, text)`` rows first go through
+    ``local_solve.spread`` by media_id, so pure-Python codec work uses
+    every core even when the documents arrive as one small file.
     """
 
     def synth_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -111,8 +112,7 @@ def _synth_table(
 
     src = docs.select(F.col(id_col).alias("media_id"), F.col(text_col).alias("text"))
     if spread:
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        src = src.repartition(par, F.col("media_id"))
+        src = local_solve.spread(src, F.col("media_id"))
     return src.mapInPandas(
         synth_batches, schema="media_id long, media_type string, content binary"
     )

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dataframeutils_spark.operators.text import _tokens
+from dataframeutils_spark.operators.text import _terms, _tokens_sql
 
 # 2^16 docs per cumsum block: the block-totals window sees N/65536 rows
 BLOCK = 1 << 16
@@ -51,7 +51,7 @@ def pack_sequences(
     """
     d = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.size(_tokens(F.lower(F.col(text_col)))).alias("n"),
+        F.size(_terms(text_col)).alias("n"),
     )
     return pack_from_counts(d, seq_len=seq_len)
 
@@ -162,7 +162,7 @@ FROM bins
 def pack_sequences_sql(
     table: str = "documents", seq_len: int = 256
 ) -> str:
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
+    toks = _tokens_sql("lower(text)")
     return f"""
 WITH d AS (
   SELECT doc_id, len({toks}) AS n FROM {table} WHERE len({toks}) > 0
@@ -182,11 +182,10 @@ def pack_sequences_bpe_sql(
     is exact-hash-gated end to end."""
     from dataframeutils_spark.operators.bpe import _bpe_wordtok_ctes
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     return f"""
 WITH {_bpe_wordtok_ctes(n_merges, vocab_top, table)},
 docw AS (
-  SELECT doc_id, unnest({toks}) AS word FROM {table}
+  SELECT doc_id, unnest({_tokens_sql("lower(text)")}) AS word FROM {table}
 ),
 d AS (
   SELECT doc_id, CAST(sum(wtok.t) AS BIGINT) AS n
@@ -229,7 +228,7 @@ def length_buckets(
         pows.append(p)
         p *= 2
     pows.append(max_len)
-    c = F.size(_tokens(F.lower(F.col(text_col))))
+    c = F.size(_terms(text_col))
     d = docs.select(c.alias("c")).filter(F.col("c") > 0)
     bucket = F.when(F.col("c") <= pows[0], F.lit(pows[0]))
     for pw in pows[1:]:
@@ -275,8 +274,7 @@ def length_buckets_sql(
     waste = decround_sql("1.0 - kept * 1.0 / pad")
     return f"""
 WITH counts AS (
-  SELECT len(list_filter(string_split(lower(text), ' '),
-             t -> length(t) > 0)) AS c
+  SELECT len({_tokens_sql("lower(text)")}) AS c
   FROM {table}
 ), bucketed AS (
   SELECT CAST(CASE {case} ELSE {max_len} END AS BIGINT) AS bucket_len, c

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.sampling import SPLIT_BUCKETS, _bucket
 from dataframeutils_spark.operators.text import (
+    _ws_split,
     language_id_columns,
     text_stat_columns,
 )
@@ -69,7 +70,7 @@ def prepare_corpus(
     tokd = docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("text"),
-        F.split(F.col(text_col), r"\s+").alias("__toks"),
+        _ws_split(F.col(text_col)).alias("__toks"),
     )
     enriched = tokd.select(
         "doc_id",

@@ -23,6 +23,7 @@ from dataframeutils_spark.operators.dedup import (
     portable_hash60,
     portable_hash60_sql,
 )
+from dataframeutils_spark.operators.text import _ws_split, _ws_split_sql
 
 SPLIT_BUCKETS = 100
 
@@ -793,7 +794,7 @@ def dsir_select(
     tokd = docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(source_col).isin(*target_sources).alias("is_target"),
-        F.split(F.col(text_col), r"\s+").alias("toks"),
+        _ws_split(F.col(text_col)).alias("toks"),
     )
     toks = F.col("toks")
     grams = F.when(
@@ -859,7 +860,7 @@ def dsir_select_sql(
     return f"""
 WITH tok AS (
   SELECT doc_id, source IN ({srcs}) AS is_target,
-         string_split_regex(text, '\\s+') AS toks
+         {_ws_split_sql("text")} AS toks
   FROM {table}
 ), bi AS (
   SELECT doc_id, is_target, {h} % {n_feat} AS feat FROM (

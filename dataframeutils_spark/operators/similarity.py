@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.dedup import portable_hash60, portable_hash60_sql
+from dataframeutils_spark.operators.local_solve import spread
 
 TWO59 = float(2**59)
 
@@ -345,7 +346,6 @@ def hyperplane_signatures(
     NULL-poison the projection.
     """
     spark = corpus.sparkSession
-    par = spark.sparkContext.defaultParallelism
     # The hyperplane entries depend only on (plane, dim) — a constant
     # bits×dim matrix. Build it ONCE (bits rows) and broadcast-cross-
     # join, instead of re-deriving every md5 component per corpus row:
@@ -364,7 +364,7 @@ def hyperplane_signatures(
         ).alias("u"),
     )
     exploded = (
-        corpus.repartition(par, F.col(id_col))
+        spread(corpus, F.col(id_col))
         .select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
         .crossJoin(F.broadcast(mat))
     )
@@ -900,7 +900,7 @@ def _rank_lists_arrow(
     if src.rdd.getNumPartitions() < par:
         # pin Arrow-stage parallelism: AQE sizes partitions for JVM
         # stages and starves Python ones (see the minhash note)
-        src = src.repartition(par)
+        src = spread(src)
     return src.mapInPandas(rank_batches, f"vec_id {id_type}, centroid int, r int")
 
 

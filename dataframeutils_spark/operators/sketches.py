@@ -38,13 +38,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.dedup import portable_hash60, portable_hash60_sql
+from dataframeutils_spark.operators.local_solve import spread
 from dataframeutils_spark.operators.similarity import (
     _fold_sql,
     _hash_uniform,
     _hash_uniform_sql,
     _ivf_lists_sql,
 )
-from dataframeutils_spark.operators.text import _tokens
+from dataframeutils_spark.operators.text import _terms, _tokens_sql
 
 # --------------------------------------------------------------------------
 # count-min sketch
@@ -142,10 +143,7 @@ def countmin_profile(
     the oracle therefore checks for every row. One token scan feeds
     both the exact counts and the sketch (ReuseExchange dedupes it).
     """
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    toks = docs.repartition(par, F.col(id_col)).select(
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("term")
-    )
+    toks = spread(docs, F.col(id_col)).select(F.explode(_terms(text_col)).alias("term"))
     exact = toks.groupBy("term").agg(F.count("*").alias("n_exact"))
     top = exact.orderBy(F.col("n_exact").desc(), F.col("term")).limit(k)
     sketch = countmin_sketch(toks, depth=depth, width=width)
@@ -161,7 +159,6 @@ def countmin_profile(
 def countmin_profile_sql(
     table: str = "documents", k: int = 50, depth: int = 4, width: int = 1024
 ) -> str:
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     cell_rows = " UNION ALL ".join(
         f"SELECT {i} AS cm_row, {_cm_bucket_sql('term', i, width)} AS bucket, "
         f"term FROM toks"
@@ -169,7 +166,7 @@ def countmin_profile_sql(
     )
     return f"""
 WITH toks AS (
-  SELECT unnest({toks}) AS term FROM {table}
+  SELECT unnest({_tokens_sql("lower(text)")}) AS term FROM {table}
 ), probes AS (
   {cell_rows}
 ), sketch AS (
@@ -212,9 +209,7 @@ def inverted_index(
     """
     terms = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.array_distinct(_tokens(F.lower(F.col(text_col))))
-        ).alias("term"),
+        F.explode(F.array_distinct(_terms(text_col))).alias("term"),
     )
     partial = (
         terms.groupBy(
@@ -249,10 +244,7 @@ def inverted_index(
 def inverted_index_sql(
     table: str = "documents", max_postings: int = 20, min_df: int = 1
 ) -> str:
-    toks = (
-        "list_distinct(list_filter(string_split(lower(text), ' '), "
-        "t -> length(t) > 0))"
-    )
+    toks = f"list_distinct({_tokens_sql('lower(text)')})"
     return f"""
 WITH terms AS (
   SELECT doc_id, unnest({toks}) AS term FROM {table}
@@ -1230,7 +1222,7 @@ def hll_distinct_words(
 
     toks = docs.select(
         F.col(group_col).alias("grp"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("item"),
+        F.explode(_terms(text_col)).alias("item"),
     )
     regs = hll_registers(toks, "item", ("grp",), p)
     est = hll_estimate(regs, ("grp",), p)
@@ -1267,8 +1259,7 @@ def hll_distinct_words_sql(
     md = f"CAST({float(m)!r} AS DOUBLE)"
     h = portable_hash60_sql("item")
     toks = (
-        f"SELECT {group_col} AS grp, unnest(list_filter("
-        f"string_split(lower(text), ' '), t -> length(t) > 0)) AS item "
+        f"SELECT {group_col} AS grp, unnest({_tokens_sql('lower(text)')}) AS item "
         f"FROM {table}"
     )
     est_expr = (

@@ -17,6 +17,21 @@ no shuffle at all for :func:`text_stats`/:func:`language_id`;
 :func:`fingerprint` shuffles only (doc_id, 60-bit hash) pairs, never
 text. At 100 TB these pipeline into the same stage as the parquet scan
 (whole-stage codegen), reading only the pruned ``text`` column.
+
+Tokenizer contracts: the Spark operators and their DuckDB oracles share
+two splits, and each is defined once per engine here.
+
+* Space tokens: :func:`_tokens` / :func:`_tokens_sql` split on single
+  spaces and drop empty tokens, so a tab or newline stays inside a
+  token. :func:`_terms` is the lowercased form over a column, the term
+  stream of the corpus statistics (``_tokens_sql("lower(text)")`` in
+  the oracles); :func:`_doc_terms` explodes it per document.
+* Whitespace runs: :func:`_ws_split` / :func:`_ws_split_sql` split on
+  ``\\s+`` and keep the empty token a leading or trailing run leaves.
+
+``lower`` itself differs outside ASCII: ``lower('İ')`` is ``'i̇'``
+(i + combining dot above) in Spark but ``'i'`` in DuckDB. The shipped
+testdata is ASCII only, so no oracle meets it.
 """
 
 from __future__ import annotations
@@ -25,6 +40,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.dedup import portable_hash60, portable_hash60_sql
+from dataframeutils_spark.operators.local_solve import spread
 
 # A word, a number run, or a single non-space symbol — the BPE-ish
 # pre-tokenizer split (letters / digits / punctuation never share a
@@ -46,6 +62,33 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 
 def _tokens(text_col: Column) -> Column:
     return F.filter(F.split(text_col, " "), lambda t: F.length(t) > 0)
+
+
+def _tokens_sql(expr: str) -> str:
+    """DuckDB twin of :func:`_tokens` over the SQL expression ``expr``."""
+    return f"list_filter(string_split({expr}, ' '), t -> length(t) > 0)"
+
+
+def _terms(text_col: str) -> Column:
+    """Lowercased :func:`_tokens` of column ``text_col``: the term stream."""
+    return _tokens(F.lower(F.col(text_col)))
+
+
+def _ws_split(text_col: Column) -> Column:
+    """Split on whitespace runs, keeping the empty edge tokens."""
+    return F.split(text_col, r"\s+")
+
+
+def _ws_split_sql(expr: str) -> str:
+    """DuckDB twin of :func:`_ws_split` over the SQL expression ``expr``."""
+    return f"string_split_regex({expr}, '\\s+')"
+
+
+def _doc_terms(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(doc_id, term) rows of every document, spread by id before the explode."""
+    return spread(docs, F.col(id_col)).select(
+        F.col(id_col).alias("doc_id"), F.explode(_terms(text_col)).alias("term")
+    )
 
 
 def ngram_array(toks: Column, n: int) -> Column:
@@ -138,7 +181,7 @@ def text_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
 
 def text_stats_sql(table: str = "documents") -> str:
     """DuckDB oracle for :func:`text_stats` (same expressions)."""
-    toks = "list_filter(string_split(text, ' '), t -> length(t) > 0)"
+    toks = _tokens_sql("text")
     stops = ", ".join(f"'{s}'" for s in LANG_STOPWORDS["en"])
     return f"""
 SELECT doc_id,
@@ -188,7 +231,7 @@ def ngram_lm_score(
     whole two-pass train+score pipeline is exactly oracle-checkable.
     """
     tokd = docs.select(
-        F.col(id_col).alias("doc_id"), F.split(F.col(text_col), r"\s+").alias("toks")
+        F.col(id_col).alias("doc_id"), _ws_split(F.col(text_col)).alias("toks")
     )
     toks = F.col("toks")
     bigrams = F.when(
@@ -242,7 +285,7 @@ def ngram_lm_score_sql(
 ) -> str:
     return f"""
 WITH tok AS (
-  SELECT doc_id, string_split_regex(text, '\\s+') AS toks FROM {table}
+  SELECT doc_id, {_ws_split_sql("text")} AS toks FROM {table}
 ), bi AS (
   SELECT doc_id, u.bg.w1 AS w1, u.bg.w2 AS w2 FROM (
     SELECT doc_id,
@@ -319,7 +362,7 @@ def repetition_stats(
     :func:`text_stats`.
     """
     tokd = docs.select(
-        F.col(id_col).alias("doc_id"), F.split(F.col(text_col), r"\s+").alias("toks")
+        F.col(id_col).alias("doc_id"), _ws_split(F.col(text_col)).alias("toks")
     )
     cols = repetition_columns(F.col("toks"), n=n)
     return tokd.select(
@@ -331,7 +374,7 @@ def repetition_stats_sql(table: str = "documents", n: int = 3) -> str:
     gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(n))
     return f"""
 WITH tok AS (
-  SELECT doc_id, string_split_regex(text, '\\s+') AS toks FROM {table}
+  SELECT doc_id, {_ws_split_sql("text")} AS toks FROM {table}
 ), g AS (
   SELECT doc_id,
          CASE WHEN len(toks) >= {n}
@@ -352,7 +395,7 @@ FROM g
 def language_id_columns(text_col: str = "text") -> dict[str, Column]:
     """The :func:`language_id` output columns as named expressions (see
     :func:`text_stat_columns` for why)."""
-    toks = _tokens(F.lower(F.col(text_col)))
+    toks = _terms(text_col)
     n_tokens = F.greatest(F.size(toks), F.lit(1))
 
     def stop_hits(sw: tuple[str, ...]) -> Column:
@@ -394,7 +437,7 @@ def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 
 
 def language_id_sql(table: str = "documents") -> str:
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
+    toks = _tokens_sql("lower(text)")
     score = lambda sw: (
         f"len(list_filter({toks}, t -> t IN ({', '.join(repr(s) for s in sw)})))"
         f" / greatest(len({toks}), 1)::DOUBLE"
@@ -461,11 +504,10 @@ def fingerprint(
 
 def fingerprint_sql(table: str = "documents", k: int = 8, n: int = 3) -> str:
     """DuckDB oracle for :func:`fingerprint` via explode + window."""
-    toks = "list_filter(string_split(text, ' '), t -> length(t) > 0)"
     gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(n))
     return f"""
 WITH tok AS (
-  SELECT doc_id, {toks} AS toks FROM {table}
+  SELECT doc_id, {_tokens_sql("text")} AS toks FROM {table}
 ), gr AS (
   SELECT doc_id, len(toks) - {n} + 1 AS n_grams,
          unnest(CASE WHEN len(toks) >= {n}
@@ -509,11 +551,7 @@ def topk_terms(
     is TakeOrdered over per-partition heaps — no global sort of the
     vocabulary. The rank window runs on k rows, not the vocab.
     """
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    toks = (
-        docs.repartition(par, F.col(id_col))
-        .select(F.explode(_tokens(F.lower(F.col(text_col)))).alias("term"))
-    )
+    toks = spread(docs, F.col(id_col)).select(F.explode(_terms(text_col)).alias("term"))
     counts = toks.groupBy("term").agg(F.count("*").alias("n"))
     top = counts.orderBy(F.col("n").desc(), F.col("term")).limit(k)
     w = Window.orderBy(F.col("n").desc(), F.col("term"))
@@ -521,10 +559,9 @@ def topk_terms(
 
 
 def topk_terms_sql(table: str = "documents", k: int = 50) -> str:
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     return f"""
 WITH toks AS (
-  SELECT unnest({toks}) AS term FROM {table}
+  SELECT unnest({_tokens_sql("lower(text)")}) AS term FROM {table}
 ), counts AS (
   SELECT term, count(*) AS n FROM toks GROUP BY term
 )
@@ -560,20 +597,13 @@ def tfidf_topterms(
     """
     from dataframeutils_spark.schema import siground
 
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    toks = (
-        docs.repartition(par, F.col(id_col))
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("term"),
-        )
-    )
+    toks = _doc_terms(docs, text_col, id_col)
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfreq = F.count("*").over(Window.partitionBy("term"))
     # docs with ≥1 token, from a light scan (id + text length only — no
     # explode); doc_id is unique in the documents contract
     nd = docs.select(
-        F.count(F.when(F.size(_tokens(F.lower(F.col(text_col)))) > 0, 1)).alias("n_docs")
+        F.count(F.when(F.size(_terms(text_col)) > 0, 1)).alias("n_docs")
     )
     idf = F.log((F.lit(1.0) + F.col("n_docs")) / (F.lit(1.0) + F.col("df"))) + F.lit(1.0)
     scored = (
@@ -590,11 +620,10 @@ def tfidf_topterms(
 def tfidf_topterms_sql(table: str = "documents", k: int = 3) -> str:
     from dataframeutils_spark.schema import siground_sql
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     score = siground_sql("tf * (ln((1.0 + n_docs) / (1.0 + df)) + 1.0)")
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest({toks}) AS term FROM {table}
+  SELECT doc_id, unnest({_tokens_sql("lower(text)")}) AS term FROM {table}
 ), tf AS (
   SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term
 ), dfreq AS (
@@ -640,11 +669,7 @@ def bm25_search(
     from dataframeutils_spark.schema import siground
 
     qt = [t.lower() for t in query_terms]
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    toks = docs.repartition(par, F.col(id_col)).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("term"),
-    )
+    toks = _doc_terms(docs, text_col, id_col)
     tf = (
         toks.groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
@@ -653,7 +678,7 @@ def bm25_search(
     dfreq = F.count("*").over(Window.partitionBy("term"))
     dl = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.size(_tokens(F.lower(F.col(text_col)))).alias("dl"),
+        F.size(_terms(text_col)).alias("dl"),
     )
     # N and avgdl over token-bearing docs only (empty docs carry no
     # mass), derived from the same dl projection — one light scan
@@ -693,7 +718,7 @@ def bm25_search_sql(
 ) -> str:
     from dataframeutils_spark.schema import siground_sql
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
+    toks = _tokens_sql("lower(text)")
     qlist = ", ".join(f"'{t.lower()}'" for t in query_terms)
     contrib = (
         f"ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * "
@@ -791,7 +816,7 @@ def chunk_documents_sql(
     )
     return f"""
 WITH tokd AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> length(t) > 0) AS toks
+  SELECT doc_id, {_tokens_sql("text")} AS toks
   FROM {table}
 ),
 ex AS (
@@ -835,9 +860,7 @@ def vocab_growth(
     No counterpart in the reference (north-star text tier).
     """
     b = F.expr(f"CAST({id_col} AS BIGINT) DIV {bucket}").alias("bucket")
-    toks = docs.select(
-        b, F.explode(_tokens(F.lower(F.col(text_col)))).alias("term")
-    )
+    toks = docs.select(b, F.explode(_terms(text_col)).alias("term"))
     per_bucket = toks.groupBy("bucket").agg(F.count("*").alias("n_tokens"))
     first_seen = toks.groupBy("term").agg(F.min("bucket").alias("bucket"))
     new_terms = first_seen.groupBy("bucket").agg(F.count("*").alias("new_terms"))
@@ -860,10 +883,9 @@ def vocab_growth(
 
 
 def vocab_growth_sql(table: str = "documents", bucket: int = 250) -> str:
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     return f"""
 WITH tok AS (
-  SELECT doc_id // {bucket} AS bucket, unnest({toks}) AS term FROM {table}
+  SELECT doc_id // {bucket} AS bucket, unnest({_tokens_sql("lower(text)")}) AS term FROM {table}
 ), per_bucket AS (
   SELECT bucket, CAST(count(*) AS BIGINT) AS n_tokens FROM tok GROUP BY bucket
 ), first_seen AS (
@@ -909,11 +931,7 @@ def token_entropy(
     """
     from dataframeutils_spark.schema import siground
 
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    toks = docs.repartition(par, F.col(id_col)).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("term"),
-    )
+    toks = _doc_terms(docs, text_col, id_col)
     cnt = toks.groupBy("doc_id", "term").agg(F.count("*").alias("c"))
     agg = cnt.groupBy("doc_id").agg(
         F.sum("c").alias("n_tokens"),
@@ -941,7 +959,6 @@ def token_entropy(
 def token_entropy_sql(table: str = "documents") -> str:
     from dataframeutils_spark.schema import siground_sql
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     h = "ln(CAST(n_tokens AS DOUBLE)) - clnc / CAST(n_tokens AS DOUBLE)"
     norm = (
         f"CASE WHEN ln(CAST(n_types AS DOUBLE)) <> 0 "
@@ -949,7 +966,7 @@ def token_entropy_sql(table: str = "documents") -> str:
     )
     return f"""
 WITH tok AS (
-  SELECT doc_id, unnest({toks}) AS term FROM {table}
+  SELECT doc_id, unnest({_tokens_sql("lower(text)")}) AS term FROM {table}
 ), cnt AS (
   SELECT doc_id, term, count(*) AS c FROM tok GROUP BY doc_id, term
 ), agg AS (
@@ -994,9 +1011,8 @@ def pmi_collocations(
     """
     from dataframeutils_spark.schema import siground
 
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    docs = docs.repartition(par)
-    toks = _tokens(F.lower(F.col(text_col)))
+    docs = spread(docs)
+    toks = _terms(text_col)
     m = F.size(toks) - 1
     pairs = F.zip_with(
         F.slice(toks, 1, m),
@@ -1044,11 +1060,10 @@ def pmi_collocations_sql(
 ) -> str:
     from dataframeutils_spark.schema import siground_sql
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     pmi = "ln((pair_count / nb) / ((a.cu / nt) * (b.cu / nt)))"
     return f"""
 WITH tok AS (
-  SELECT {toks} AS toks FROM {table}
+  SELECT {_tokens_sql("lower(text)")} AS toks FROM {table}
 ), bi AS (
   SELECT unnest(toks[1:len(toks) - 1]) AS w1,
          unnest(toks[2:len(toks)]) AS w2
@@ -1169,10 +1184,9 @@ def chargram_search(
     DOWN and emit phantom sub-n grams).
     """
     qgrams = _chargrams(query, n)
-    par = docs.sparkSession.sparkContext.defaultParallelism
     txt = F.lower(F.col(text_col))
     g = (
-        docs.repartition(par, F.col(id_col))
+        spread(docs, F.col(id_col))
         .select(F.col(id_col).alias("doc_id"), txt.alias("_t"))
         .filter(F.length("_t") >= n)
         .select(
@@ -1335,15 +1349,7 @@ def doc_kl_divergence(
     """
     from dataframeutils_spark.schema import siground
 
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    toks = (
-        docs.repartition(par, F.col(id_col))
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("term"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    toks = _doc_terms(docs, text_col, id_col).localCheckpoint(eager=False)
     dc = toks.groupBy("doc_id", "term").agg(F.count("*").alias("c"))
     cc = toks.groupBy("term").agg(F.count("*").alias("cw"))
     ntot = toks.groupBy().agg(F.count("*").cast("double").alias("nt"))
@@ -1374,10 +1380,9 @@ def doc_kl_divergence(
 def doc_kl_divergence_sql(table: str = "documents") -> str:
     from dataframeutils_spark.schema import siground_sql
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     return f"""
 WITH tok AS (
-  SELECT doc_id, unnest({toks}) AS term FROM {table}
+  SELECT doc_id, unnest({_tokens_sql("lower(text)")}) AS term FROM {table}
 ), dc AS (
   SELECT doc_id, term, count(*) AS c FROM tok GROUP BY doc_id, term
 ), cc AS (
@@ -1416,10 +1421,9 @@ def zipf_fit(
     """
     from dataframeutils_spark.schema import siground
 
-    par = docs.sparkSession.sparkContext.defaultParallelism
     cnt = (
-        docs.repartition(par)
-        .select(F.explode(_tokens(F.lower(F.col(text_col)))).alias("term"))
+        spread(docs)
+        .select(F.explode(_terms(text_col)).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("c"))
     )
@@ -1450,11 +1454,10 @@ def zipf_fit(
 def zipf_fit_sql(top_r: int = 1000, table: str = "documents") -> str:
     from dataframeutils_spark.schema import siground_sql
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     return f"""
 WITH cnt AS (
   SELECT term, count(*) AS c FROM (
-    SELECT unnest({toks}) AS term FROM {table}
+    SELECT unnest({_tokens_sql("lower(text)")}) AS term FROM {table}
   ) GROUP BY term
 ), top AS (
   SELECT ln(CAST(rank AS DOUBLE)) AS x, ln(CAST(c AS DOUBLE)) AS y FROM (
@@ -1536,12 +1539,8 @@ def retrieval_quality(
         "query_id string, term string",
     )
     union_terms = sorted({t.lower() for _, terms, _ in queries for t in terms})
-    par = spark.sparkContext.defaultParallelism
     # --- shared token pipeline (bm25_search's shape, run ONCE) ---
-    toks = docs.repartition(par, F.col(id_col)).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("term"),
-    )
+    toks = _doc_terms(docs, text_col, id_col)
     tf = (
         toks.groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
@@ -1549,7 +1548,7 @@ def retrieval_quality(
     )
     dl = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.size(_tokens(F.lower(F.col(text_col)))).alias("dl"),
+        F.size(_terms(text_col)).alias("dl"),
     )
     stats = dl.filter(F.col("dl") > 0).agg(
         F.count("*").alias("n_docs"),
@@ -1597,7 +1596,7 @@ def retrieval_quality(
     # --- chargram arm (chargram_search's shape, run ONCE) ---
     txt = F.lower(F.col(text_col))
     g = (
-        docs.repartition(par, F.col(id_col))
+        spread(docs, F.col(id_col))
         .select(F.col(id_col).alias("doc_id"), txt.alias("_t"))
         .filter(F.length("_t") >= ngram)
         .select(
@@ -1771,13 +1770,12 @@ def retrieval_quality_sql(
     relevance formula, and the same metric algebra per query."""
     from dataframeutils_spark.schema import decround_sql
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     parts = []
     for qid, terms, qstring in queries:
         qlist = ", ".join(f"'{t.lower()}'" for t in terms)
         rel_cte = f"""
   SELECT doc_id, least({rel_cap}, count(*))::INT AS rel
-  FROM (SELECT doc_id, unnest({toks}) AS term FROM {table})
+  FROM (SELECT doc_id, unnest({_tokens_sql("lower(text)")}) AS term FROM {table})
   WHERE term IN ({qlist}) GROUP BY doc_id"""
         gain = "((1 << rel) - 1)"
         dgain = f"{gain}::DOUBLE / log2(rank + 1.0)"
@@ -1852,9 +1850,7 @@ def term_drift(
     from dataframeutils_spark.schema import decround
 
     def top(df: DataFrame, tag: str) -> tuple[DataFrame, DataFrame, DataFrame]:
-        toks = df.select(
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("term")
-        )
+        toks = df.select(F.explode(_terms(text_col)).alias("term"))
         cnt = toks.groupBy("term").agg(F.count("*").alias(f"cnt_{tag}"))
         tot = cnt.agg(F.sum(f"cnt_{tag}").alias(f"tot_{tag}"))
         ranked = ranked_topk(
@@ -1908,12 +1904,11 @@ def term_drift_sql(old_rel: str, new_rel: str, k: int = 100) -> str:
     are unaliased parenthesized subqueries with a ``text`` column."""
     from dataframeutils_spark.schema import decround_sql
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
 
     def top(rel: str, tag: str) -> str:
         return f"""cnt_{tag} AS (
   SELECT term, count(*) AS cnt_{tag}
-  FROM (SELECT unnest({toks}) AS term FROM {rel} AS s_{tag})
+  FROM (SELECT unnest({_tokens_sql("lower(text)")}) AS term FROM {rel} AS s_{tag})
   GROUP BY term
 ), tot_{tag} AS (
   SELECT sum(cnt_{tag})::DOUBLE AS tot_{tag} FROM cnt_{tag}

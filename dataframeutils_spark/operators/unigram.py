@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.bpe import _word_table
+from dataframeutils_spark.operators.text import _terms, _tokens_sql
 
 UNK_SCORE = -20.0  # flat per-character penalty for unseen characters
 
@@ -258,11 +259,9 @@ def unigram_encode_stats(
     """
     spark = docs.sparkSession
     b = spark.sparkContext.broadcast(scores)
-    from dataframeutils_spark.operators.text import _tokens
-
     base = docs.select(
         F.col(id_col),
-        _tokens(F.lower(F.col(text_col))).alias("_words"),
+        _terms(text_col).alias("_words"),
     )
 
     def enc(it):
@@ -439,12 +438,11 @@ def _unigram_vocab_ctes(
     if em_rounds != 1:
         raise ValueError("SQL oracle supports em_rounds=1 only")
     K = max_piece_len
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     ctes = []
     if define_base:
         ctes += [
             f"""toks AS MATERIALIZED (
-  SELECT {toks} AS ws FROM {table}
+  SELECT {_tokens_sql("lower(text)")} AS ws FROM {table}
 )""",
             f"""w AS MATERIALIZED (
   SELECT word, CAST(count(*) AS BIGINT) AS cnt
@@ -549,12 +547,11 @@ def unigram_encode_stats_sql(
     the bpe_encode_stats_sql pattern."""
     from dataframeutils_spark.schema import siground_sql
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
     comp = siground_sql("n_chars_tok * 1.0 / n_tokens")
     return f"""
 WITH RECURSIVE {_unigram_wordtok_ctes(seed_size, max_piece_len, vocab_top, table)},
 docw AS (
-  SELECT doc_id, unnest({toks}) AS word FROM {table}
+  SELECT doc_id, unnest({_tokens_sql("lower(text)")}) AS word FROM {table}
 ),
 agg AS (
   SELECT d.doc_id,
@@ -594,8 +591,6 @@ def tokenizer_fertility_sql(
     from dataframeutils_spark.operators.bpe import _bpe_wordtok_ctes
     from dataframeutils_spark.schema import decround_sql
 
-    toks = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
-
     def ratio(num: str, den: str) -> str:
         return (
             f"CASE WHEN {den} > 0 THEN "
@@ -608,7 +603,7 @@ WITH RECURSIVE {_bpe_wordtok_ctes(n_merges, vocab_top, table)},
 {_unigram_wordtok_ctes(seed_size, max_piece_len, vocab_top, table,
                        define_base=False, define_dw=False)},
 docw AS (
-  SELECT {group_col}, unnest({toks}) AS word FROM {table}
+  SELECT {group_col}, unnest({_tokens_sql("lower(text)")}) AS word FROM {table}
 ),
 ndocs AS (
   SELECT {group_col}, CAST(count(*) AS BIGINT) AS n_docs

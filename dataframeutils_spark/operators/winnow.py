@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.dedup import portable_hash60, portable_hash60_sql
+from dataframeutils_spark.operators.local_solve import spread
 
 # 50-bit fingerprint hash + 10-bit position tiebreak stays inside the
 # signed-64 range for one integer min per window.
@@ -56,11 +57,10 @@ def _keyed_positions(
     carried from the scan so consumers never need a COUNT window to
     re-derive it (the explode emits exactly one row per p in
     [1, np] — nothing is dropped in between)."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
     txt = F.lower(F.col(text_col))
     h = F.pmod(portable_hash60(F.substring(F.col("_t"), F.col("p"), kgram)), F.lit(_HBITS))
     return (
-        docs.repartition(par, F.col(id_col))
+        spread(docs, F.col(id_col))
         .select(F.col(id_col).alias("doc_id"), txt.alias("_t"))
         .filter(F.length("_t") >= kgram)
         .select(

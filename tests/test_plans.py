@@ -6,6 +6,8 @@ machine; plan shapes don't.)"""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -655,3 +657,19 @@ def test_leakage_split_corpus_join_not_forced_broadcast(spark):
     df = sampling.leakage_safe_split(load_table(spark, SF_DIR, "documents"))
     logical = df._jdf.queryExecution().optimizedPlan().toString()
     assert "ResolvedHint" not in logical
+
+
+def test_spread_is_one_exchange_over_default_parallelism(spark):
+    """The scan-side spread rule: ``spread(df, k)`` plans one hash
+    exchange on k and ``spread(df)`` one round-robin exchange, both over
+    ``defaultParallelism`` partitions."""
+    from dataframeutils_spark.operators.local_solve import spread
+
+    par = spark.sparkContext.defaultParallelism
+    df = spark.range(100).select(F.col("id").alias("k"))
+    keyed = _plan(spread(df, "k"))
+    assert keyed.count("Exchange ") == 1, keyed
+    assert re.search(rf"Exchange hashpartitioning\(k#\d+L?, {par}\)", keyed), keyed
+    plain = _plan(spread(df))
+    assert plain.count("Exchange ") == 1, plain
+    assert f"Exchange RoundRobinPartitioning({par})" in plain, plain

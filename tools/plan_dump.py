@@ -3,9 +3,12 @@
 
 Writes one `<out_dir>/<query><suffix>.txt` per query — the evidence
 format for optimization rounds (plans/r{N}/<query>_before.txt /
-_after.txt). Runs against the package in the CURRENT working tree, so
-checking out an older commit in a worktree and running this from there
-produces the "before" plans. Run-specific text (expression ids `#123`,
+_after.txt) — and, for a query with a DuckDB oracle, its
+`driver.all_oracles()` text as `<out_dir>/<query><suffix>.sql`, so one
+`diff -r` between two dumps shows plan and oracle changes together.
+Runs against the package in the CURRENT working tree, so checking out
+an older commit in a worktree and running this from there produces the
+"before" plans. Run-specific text (expression ids `#123`,
 RDD ids `RDD[8]` and their JVM call sites, exchange `plan_id=42`,
 PySpark lambda variables `x_402`) is normalized before writing, so
 dumps of the same query from two trees diff directly.
@@ -56,6 +59,7 @@ def main() -> int:
     from dataframeutils_spark import driver as d
 
     qs = d.all_queries()
+    oracles = d.all_oracles()
     if names == ["ALL"]:
         names = list(qs)
     rc = 0
@@ -81,6 +85,9 @@ def main() -> int:
             f.write(f"# {name} — explain(formatted) at {SF_DIR}\n\n")
             f.write(txt)
         print(f"{name}: {path} ({len(txt)} chars)")
+        if name in oracles:
+            with open(os.path.join(out_dir, f"{name}{suffix}.sql"), "w") as f:
+                f.write(oracles[name])
     spark.stop()
     return rc
 
