@@ -32,7 +32,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dataframeutils_spark.operators.local_solve import local_threshold
 from dataframeutils_spark.operators.text import _terms, _tokens_sql
 
 END_OF_WORD = "▁"  # sentencepiece-style marker, appended per word
@@ -110,7 +109,7 @@ def bpe_train(
     vocab_top: int = 2000,
     text_col: str = "text",
     require_full: bool = False,
-    local_vocab_threshold: int | None = None,
+    local_vocab_threshold: int = 100_000,
 ) -> tuple[DataFrame, list[tuple[str, str, int]]]:
     """Learn ``n_merges`` BPE rules; returns (merge table DataFrame,
     the same rules as a driver-side list for :func:`bpe_encode`).
@@ -126,16 +125,11 @@ def bpe_train(
     here, not as an opaque row-count diff at the gate.
 
     The merge rounds run on the driver when ``vocab_top`` ≤
-    ``local_vocab_threshold`` (default 100k words;
-    ``SPARK_GRAFT_BPE_LOCAL_VOCAB`` overrides it, 0 disables the local
+    ``local_vocab_threshold`` (default 100k words; 0 disables the local
     path), otherwise as the distributed loop.
     """
     spark = docs.sparkSession
     wt = _word_table(docs, text_col, vocab_top)
-    if local_vocab_threshold is None:
-        local_vocab_threshold = local_threshold(
-            "SPARK_GRAFT_BPE_LOCAL_VOCAB", 100_000
-        )
     if 0 < vocab_top <= local_vocab_threshold:
         # The training frame is ≤ vocab_top rows BY CONTRACT (the limit
         # above), so collecting it is bounded at any corpus size — the

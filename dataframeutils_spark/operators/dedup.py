@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dataframeutils_spark.operators.local_solve import local_threshold, route_local, spread
+from dataframeutils_spark.operators.local_solve import route_local, spread
 
 # ---------------------------------------------------------------------------
 # hashing schemes
@@ -571,7 +571,7 @@ def connected_components(
     dst_col: str = "doc_b",
     max_iter: int = 25,
     numeric_ids: bool = True,
-    local_edge_threshold: int | None = None,
+    local_edge_threshold: int = 4_000_000,
 ) -> DataFrame:
     """Connected components over an undirected edge list:
     (doc_id, cluster_id) with cluster_id = min node id in the component.
@@ -603,9 +603,9 @@ def connected_components(
     either way) and counted. When it is below
     ``local_edge_threshold`` edges (default 4M ≈ 64 MB of long pairs —
     the same bounded-collect discipline as a broadcast-join decision;
-    ``SPARK_GRAFT_CC_LOCAL_EDGES`` overrides it, 0 disables the local
-    path), the components are solved exactly on the driver with a
-    vectorized numpy union-find (hook-to-min + pointer-doubling compression)
+    0 disables the local path), the components are solved exactly on
+    the driver with a vectorized numpy union-find (hook-to-min +
+    pointer-doubling compression)
     instead of running O(log D) distributed rounds whose per-round
     scheduling overhead dwarfs the data at that size (measured: 12
     rounds over a 376-node winnow graph ≈ 5 s of fixed cost; the local
@@ -618,8 +618,8 @@ def connected_components(
     graph's diameter raises only on the distributed path (which fails
     loud rather than return split clusters). A converged result is
     identical either way; the local path simply cannot produce the
-    unconverged-failure case. Set ``local_edge_threshold=0`` (or the
-    env override) to exercise the distributed ``max_iter`` guard.
+    unconverged-failure case. Set ``local_edge_threshold=0`` to
+    exercise the distributed ``max_iter`` guard.
     """
     if max_iter < 1:
         # max_iter=0 would silently return the fused-init labels
@@ -632,10 +632,6 @@ def connected_components(
     src, dst = F.col(src_col), F.col(dst_col)
     if numeric_ids:
         src, dst = src.cast("long"), dst.cast("long")
-    if local_edge_threshold is None:
-        local_edge_threshold = local_threshold(
-            "SPARK_GRAFT_CC_LOCAL_EDGES", 4_000_000
-        )
     pairs, local = route_local(
         edges.select(src.alias("src"), dst.alias("dst")), local_edge_threshold
     )

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dataframeutils_spark.operators.local_solve import block_prefix
+
 MICROS_PER_DAY = 86_400_000_000
 
 
@@ -570,15 +572,14 @@ def late_data_audit(
 
     Arrival order is ``seq_col`` (the ingest sequence). A naive running
     max over arrival order is one global sort task — instead arrivals
-    land in ``seq/bucket`` buckets: the per-bucket max table is tiny
-    (≤ n/bucket rows), the running max over STRICTLY EARLIER buckets is
-    a window on that bounded table, broadcast back. Within-bucket
+    land in ``seq/bucket`` buckets, and the watermark is the running
+    max over STRICTLY EARLIER buckets from a
+    :func:`~dataframeutils_spark.operators.local_solve.block_prefix`
+    ledger (≤ n/bucket rows), broadcast back. Within-bucket
     disorder is invisible (the watermark a real stream holds also trails
     by an update interval — same semantics); the first bucket has no
     watermark yet and counts as on-time, matching a stream's warmup.
     """
-    from pyspark.sql import Window
-
     # pure integer bucket assignment: Spark's DIV and DuckDB's // both
     # truncate toward zero, and integer arithmetic stays exact at any
     # magnitude (the old double-divide-then-cast path lost exactness
@@ -588,9 +589,9 @@ def late_data_audit(
         F.expr(f"CAST({seq_col} AS BIGINT) DIV {bucket}").alias("_b"),
         F.unix_micros(F.col(ts_col)).alias("_us"),
     )
-    bmax = ev.groupBy("_b").agg(F.max("_us").alias("_bmax"))
-    wprev = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    ledger = bmax.select("_b", F.max("_bmax").over(wprev).alias("_wm_us"))
+    ledger = block_prefix(ev, [], "_b", F.col("_us"), fold=F.max).select(
+        "_b", F.col("_pre").alias("_wm_us")
+    )
     late_secs = F.greatest(
         F.lit(0.0), (F.col("_wm_us") - F.col("_us")) / F.lit(1e6)
     )

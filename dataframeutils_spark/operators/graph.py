@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dataframeutils_spark.operators.local_solve import local_threshold, route_local, spread
+from dataframeutils_spark.operators.local_solve import route_local, spread
 from dataframeutils_spark.operators.text import _terms, _tokens_sql, ranked_topk
 
 
@@ -93,7 +93,7 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "w",
-    local_edge_threshold: int | None = None,
+    local_edge_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Weighted PageRank with a fixed iteration count.
 
@@ -107,9 +107,8 @@ def pagerank(
     Scale-adaptive small-graph path (the connected-components /
     k_core discipline): the transition table is materialized once and
     counted; at or below ``local_edge_threshold`` edges (default 1M of
-    (src, dst, p) rows ≈ 60 MB; ``SPARK_GRAFT_PR_LOCAL_EDGES``
-    overrides it, 0 disables the local path) the ``iters`` rounds run
-    on the driver in vectorized numpy instead of paying
+    (src, dst, p) rows ≈ 60 MB; 0 disables the local path) the
+    ``iters`` rounds run on the driver in vectorized numpy instead of paying
     iters × (join + aggregate + join) of per-round scheduling — and,
     as much, instead of CONSTRUCTING the unrolled iteration plan
     (~2 s of driver-side expression building for 5 rounds). Above the
@@ -130,10 +129,6 @@ def pagerank(
     trans = edges.join(outw, "src").select(
         "src", "dst", (F.col("w") / F.col("sw")).alias("p")
     )
-    if local_edge_threshold is None:
-        local_edge_threshold = local_threshold(
-            "SPARK_GRAFT_PR_LOCAL_EDGES", 1_000_000
-        )
     trans, local = route_local(trans, local_edge_threshold)
     if local:
         return _pagerank_local(trans, nodes, iters=iters, damping=damping)
@@ -746,7 +741,7 @@ def _k_core_local(
 
 def k_core_summary(
     edges: DataFrame, k: int, rounds: int = 10,
-    local_edge_threshold: int | None = None,
+    local_edge_threshold: int = 4_000_000,
 ) -> DataFrame:
     """k-core of an undirected edge list by FIXED-round peeling:
     ``rounds`` times, drop every node of degree < k and the edges
@@ -773,9 +768,9 @@ def k_core_summary(
     Scale-adaptive small-graph path (same discipline as
     connected_components): the edge table is materialized once and
     counted; at or below ``local_edge_threshold`` edges (default 4M ≈
-    64 MB; ``SPARK_GRAFT_GRAPH_LOCAL_EDGES`` overrides it, 0 disables
-    the local path; integral node ids only) the peel runs on the driver
-    in vectorized numpy instead of paying ``rounds`` × (aggregate + two semi-joins)
+    64 MB; 0 disables the local path; integral node ids only) the peel
+    runs on the driver in vectorized numpy instead of paying ``rounds``
+    × (aggregate + two semi-joins)
     of per-round scheduling overhead (measured ~3.8 s for 10 rounds
     over a 1.2M-edge graph at sf0.1; the local peel is < 100 ms).
     avg_degree is rounded by the same Spark decround expression either
@@ -784,10 +779,6 @@ def k_core_summary(
     """
     from dataframeutils_spark.schema import decround
 
-    if local_edge_threshold is None:
-        local_edge_threshold = local_threshold(
-            "SPARK_GRAFT_GRAPH_LOCAL_EDGES", 4_000_000
-        )
     dtypes = dict(edges.dtypes)
     if not (
         dtypes.get("u") in _INTEGRAL_TYPES and dtypes.get("v") in _INTEGRAL_TYPES

@@ -21,15 +21,13 @@ zone-map reader would skip. Integer arithmetic end to end — the audit
 is exactly oracle-checkable.
 
 Scale notes:
-- The file assignment is a GLOBAL sort position. The naive
-  ``row_number() OVER (ORDER BY zkey)`` funnels all rows through one
-  task; here it is the same two-phase prefix-sum as
-  :mod:`dataframeutils_spark.operators.packing` — intra-block
-  row_number under a hash-partitioned window on the TOP BITS of the
-  sort key (block order is a prefix of key order, so positions
-  compose), plus one tiny block-totals window over ~2⁶ rows. A real
-  writer would ``repartitionByRange(zkey)`` + ``sortWithinPartitions``
-  and let each task write its files; the audit's math is the same.
+- The file assignment is a GLOBAL sort position, taken with
+  :func:`~dataframeutils_spark.operators.local_solve.block_positions`
+  (the two-phase rank that keeps it off one task) on blocks = the TOP
+  BITS of the leading sort key, so the block order is a prefix of the
+  key order. A real writer would ``repartitionByRange(zkey)`` +
+  ``sortWithinPartitions`` and let each task write its files; the
+  audit's math is the same.
 - Bit-bucketing needs only ONE global min/max row (broadcast), not a
   rank pass. ``bits=16`` per dimension keeps the interleave in a
   single 32-bit key. The bucket expression is overflow-aware: the
@@ -51,8 +49,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# top bits of the sort key that define a prefix-sum block: 2^6 = 64
-# blocks through the small second-phase window
+from dataframeutils_spark.operators.local_solve import block_positions
+
+# top bits of the sort key that define a ledger block: 2^6 = 64 blocks
 _BLK_BITS = 6
 
 
@@ -86,32 +85,6 @@ def _morton_sql(bx: str, bt: str, bits: int) -> str:
         terms.append(f"((({bx} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({bt} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)
-
-
-def _global_positions(
-    df: DataFrame, order_cols: tuple[str, ...], blk: Column
-) -> DataFrame:
-    """0-based global sort position under ``ORDER BY *order_cols``
-    without a global single-task window.
-
-    ``blk`` must be monotone non-decreasing in the sort order (here:
-    the top bits of the leading sort key), so per-block positions and
-    the exclusive cumsum of block counts compose into the global
-    position. Phase 2's unpartitioned window sees one row per block.
-    """
-    d = df.withColumn("_blk", blk)
-    w_intra = Window.partitionBy("_blk").orderBy(*[F.col(c) for c in order_cols])
-    d = d.withColumn("_intra", F.row_number().over(w_intra))
-    counts = d.groupBy("_blk").agg(F.count("*").alias("_bn"))
-    w_blk = Window.orderBy("_blk").rowsBetween(Window.unboundedPreceding, -1)
-    counts = counts.withColumn(
-        "_bpre", F.coalesce(F.sum("_bn").over(w_blk), F.lit(0))
-    ).select("_blk", "_bpre")
-    return (
-        d.join(F.broadcast(counts), "_blk")
-        .withColumn("_pos", F.col("_bpre") + F.col("_intra") - F.lit(1))
-        .drop("_blk", "_intra", "_bpre")
-    )
 
 
 def zorder_layout_audit(
@@ -166,18 +139,15 @@ def zorder_layout_audit(
 
     layouts = {
         # Z-order: sort by the interleaved key; blocks = its top bits
-        "zorder": _global_positions(
-            e, ("zkey", "rid"), F.expr(f"shiftright(zkey, {2 * bits - _BLK_BITS})")
-        ),
+        "zorder": (["zkey", "rid"], f"shiftright(zkey, {2 * bits - _BLK_BITS})"),
         # linear: the single-key baseline (time-sorted ingest order)
-        "linear": _global_positions(
-            e, ("t", "rid"), F.expr(f"shiftright(bt, {bits - _BLK_BITS})")
-        ),
+        "linear": (["t", "rid"], f"shiftright(bt, {bits - _BLK_BITS})"),
     }
     outs = []
-    for name, d in layouts.items():
+    for name, (order, blk) in layouts.items():
+        d = block_positions(e.withColumn("_blk", F.expr(blk)), [], "_blk", order)
         files = (
-            d.withColumn("file_id", F.expr(f"_pos DIV {rows_per_file}"))
+            d.withColumn("file_id", F.expr(f"(_pos - 1) DIV {rows_per_file}"))
             .groupBy("file_id")
             .agg(
                 F.count("*").alias("n_rows"),

@@ -12,13 +12,12 @@ the part that needs a distributed engine.
 Scale notes — the whole operator is one global prefix-sum, and the
 naive formulation (``Window.orderBy(doc_id)`` with no partition key)
 funnels ALL rows through a single task. Instead the cumsum is
-two-phase: per-block intra prefix sums (hash-partitioned window on
-``doc_id DIV block``), block totals cumsummed in a second, tiny window
-whose row count is N/block, then recombined. With block = 2¹⁶ a
-10¹⁰-document corpus leaves only ~150k block rows for the small
-window — and a third level would buy another 2¹⁶ factor if ever
-needed. The bin fan-out (`sequence`) adds ≤ 1 + n/seq_len rows per
-doc, proportional to output size.
+two-phase on ``doc_id DIV BLOCK`` blocks: an exclusive prefix sum
+within each block (hash-partitioned window) plus the block's offset
+from :func:`~dataframeutils_spark.operators.local_solve.block_prefix`
+(see there for the rationale). With BLOCK = 2¹⁶ a 10¹⁰-document corpus
+leaves only ~150k ledger rows. The bin fan-out (`sequence`) adds
+≤ 1 + n/seq_len rows per doc, proportional to output size.
 
 Deterministic by construction (doc order = doc_id order, integer
 arithmetic only), so the manifest carries a full exact DuckDB oracle.
@@ -29,9 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dataframeutils_spark.operators.local_solve import block_prefix
 from dataframeutils_spark.operators.text import _terms, _tokens_sql
 
-# 2^16 docs per cumsum block: the block-totals window sees N/65536 rows
+# 2^16 docs per cumsum block: the block ledger has N/65536 rows
 BLOCK = 1 << 16
 
 
@@ -71,13 +71,10 @@ def pack_from_counts(counts: DataFrame, seq_len: int = 256) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     d = d.withColumn("intra", F.coalesce(F.sum("n").over(w_intra), F.lit(0)))
-    # phase 2: cumsum of block totals — N/BLOCK rows through the small
-    # unpartitioned window, not N
-    blocks = d.groupBy("blk").agg(F.sum("n").alias("bn"))
-    w_blk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    blocks = blocks.withColumn(
-        "bpre", F.coalesce(F.sum("bn").over(w_blk), F.lit(0))
-    ).select("blk", "bpre")
+    # phase 2: the block ledger's exclusive cumsum of block totals
+    blocks = block_prefix(d, [], "blk", F.col("n")).select(
+        "blk", F.coalesce("_pre", F.lit(0)).alias("bpre")
+    )
     d = d.join(F.broadcast(blocks), "blk").withColumn(
         "ofs", F.col("bpre") + F.col("intra")
     )

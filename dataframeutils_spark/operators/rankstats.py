@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators.dedup import portable_hash60
+from dataframeutils_spark.operators.local_solve import block_prefix
 from dataframeutils_spark.schema import decround, gate_min_len, siground
 
 _EPOCH = "1970-01-01"
@@ -495,14 +496,13 @@ def bh_fdr(
     p-values (a test that abstained) are dropped from the battery —
     they never count toward m.
 
-    Scale shape (two-phase bounded rank, the pack_sequences /
-    quota_sample pattern — r11 verdict item 4): the motivating
-    deployment is 3 tests × a million series = 3M hypothesis rows,
-    too many to funnel through ONE task's global window. p ∈ [0, 1]
-    is range-bucketed into ``_N_BUCKETS`` contiguous buckets; buckets
-    are contiguous rank ranges because the bucket is a monotone
-    function of the leading sort key, so (1) battery-wide rank =
-    hash-partitioned rank WITHIN the bucket + the broadcast prefix
+    Scale shape (two-phase bounded rank): the motivating deployment is
+    3 tests × a million series = 3M hypothesis rows, too many to
+    funnel through ONE task's global window. p ∈ [0, 1] is
+    range-bucketed into ``_N_BUCKETS`` contiguous buckets, the blocks
+    of a :func:`~dataframeutils_spark.operators.local_solve.block_prefix`
+    ledger (see there for the rationale), so (1) battery-wide rank =
+    hash-partitioned rank WITHIN the bucket + the ledger's prefix
     count of earlier buckets, (2) m = the ledger total, and (3) the
     battery-wide suffix min of p·m/rank decomposes into the
     within-bucket suffix min (partitioned window) combined with the
@@ -535,16 +535,11 @@ def bh_fdr(
         ),
     ).localCheckpoint(eager=False)
     # phase A ledger: bucket counts → exclusive prefix (rank offset)
-    # and battery size m; ≤ _N_BUCKETS rows through the tiny window
-    ledger = d.groupBy("_bk").agg(F.count("*").alias("_cnt"))
-    w_pre = Window.orderBy("_bk").rowsBetween(Window.unboundedPreceding, -1)
-    w_tot = Window.orderBy("_bk").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ledger = ledger.select(
+    # and battery size m
+    ledger = block_prefix(d, [], "_bk", F.lit(1)).select(
         "_bk",
-        F.coalesce(F.sum("_cnt").over(w_pre), F.lit(0)).alias("_ofs"),
-        F.sum("_cnt").over(w_tot).alias("_m"),
+        F.coalesce("_pre", F.lit(0)).alias("_ofs"),
+        F.col("_tot").alias("_m"),
     )
     # phase B: rank within bucket (hash-partitioned window) + offset
     w_rank = Window.partitionBy("_bk").orderBy(*order_asc)

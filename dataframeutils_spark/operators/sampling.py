@@ -23,6 +23,7 @@ from dataframeutils_spark.operators.dedup import (
     portable_hash60,
     portable_hash60_sql,
 )
+from dataframeutils_spark.operators.local_solve import block_positions, block_prefix
 from dataframeutils_spark.operators.text import _ws_split, _ws_split_sql
 
 SPLIT_BUCKETS = 100
@@ -232,16 +233,17 @@ def quota_sample(
     formulation — ``row_number() OVER (PARTITION BY stratum ORDER BY
     hash)`` — is a scale trap: one giant stratum becomes one sort task.
 
-    Two-phase rank instead (same machinery as the packing/layout
-    prefix sums): rows land in 2^bucket_bits ordered sub-buckets (the
-    hash's TOP bits, so (bucket, hash, id) ordering ≡ (hash, id)
-    ordering); a bounded (strata × buckets) count table locates each
-    stratum's threshold bucket; every bucket strictly below passes
-    scan-side with no rank at all, and only the ONE straddling bucket
-    per stratum is ranked — its window partitions are 2^bucket_bits
-    finer than the stratum, so no task ever sorts a whole stratum.
-    The result is exactly the rows the naive global rank would pick
-    (the DuckDB oracle runs that naive form).
+    Two-phase rank instead: rows land in 2^bucket_bits ordered
+    sub-buckets (the hash's TOP bits, so (bucket, hash, id) ordering ≡
+    (hash, id) ordering), and the
+    :func:`~dataframeutils_spark.operators.local_solve.block_prefix`
+    ledger over them locates each stratum's threshold bucket. Every
+    bucket strictly below passes scan-side with no rank at all, and
+    only the ONE straddling bucket per stratum is ranked — its window
+    partitions are 2^bucket_bits finer than the stratum, so no task
+    ever sorts a whole stratum. The result is exactly the rows the
+    naive global rank would pick (the DuckDB oracle runs that naive
+    form).
     """
     return _lowest_hash_select(
         df,
@@ -268,20 +270,13 @@ def _lowest_hash_select(
     hashed = df.withColumn("_h", h).withColumn(
         "_b", F.shiftright(F.col("_h"), 60 - bucket_bits)
     )
-    counts = hashed.groupBy(strat_col, "_b").agg(F.count("*").alias("_cnt"))
-    wcum = (
-        Window.partitionBy(strat_col)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wtot = Window.partitionBy(strat_col)
-    # bounded frame: ≤ strata × 2^bucket_bits rows — broadcast it
-    ledger = counts.select(
+    # bounded ledger: ≤ strata × 2^bucket_bits rows — broadcast it
+    ledger = block_prefix(hashed, [strat_col], "_b", F.lit(1)).select(
         strat_col,
         "_b",
-        (F.sum("_cnt").over(wcum) - F.col("_cnt")).alias("_before"),
-        quota_of_total(F.sum("_cnt").over(wtot)).alias("_quota"),
-        "_cnt",
+        F.coalesce("_pre", F.lit(0)).alias("_before"),
+        quota_of_total(F.col("_tot")).alias("_quota"),
+        F.col("_n").alias("_cnt"),
     )
     joined = hashed.join(F.broadcast(ledger), [strat_col, "_b"])
     below = joined.filter(F.col("_before") + F.col("_cnt") <= F.col("_quota"))
@@ -385,12 +380,11 @@ def curriculum_manifest(
 
     Stage boundaries reuse the exact-percentile round-then-compare
     contract (``features.quantile_bin``), so stage membership is
-    engine-exact. Positions use the :func:`quota_sample` two-phase
-    machinery: a bounded (stage × 2^bucket_bits) count ledger turns the
-    per-stage global rank into per-(stage, hash-bucket) ranks plus a
-    broadcast prefix offset — no task ever sorts a whole stage, yet the
-    positions are exactly the naive ``row_number() OVER (PARTITION BY
-    stage ORDER BY hash, id)`` the DuckDB oracle runs.
+    engine-exact. Positions come from
+    :func:`~dataframeutils_spark.operators.local_solve.block_positions`
+    over (stage, top hash bits) blocks, so no task ever sorts a whole
+    stage, yet the positions are exactly the naive ``row_number() OVER
+    (PARTITION BY stage ORDER BY hash, id)`` the DuckDB oracle runs.
     """
     from dataframeutils_spark.operators.features import _rounded_boundaries
 
@@ -413,20 +407,8 @@ def curriculum_manifest(
         )
         .withColumn("_b", F.shiftright(F.col("_h"), 60 - bucket_bits))
     )
-    counts = staged.groupBy("stage", "_b").agg(F.count("*").alias("_cnt"))
-    wcum = (
-        Window.partitionBy("stage")
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ledger = counts.select(
-        "stage", "_b", (F.sum("_cnt").over(wcum) - F.col("_cnt")).alias("_before")
-    )
-    wrank = Window.partitionBy("stage", "_b").orderBy("_h", id_col)
-    return (
-        staged.join(F.broadcast(ledger), ["stage", "_b"])
-        .withColumn("pos_in_stage", F.col("_before") + F.row_number().over(wrank))
-        .select(id_col, score_col, "stage", "pos_in_stage")
+    return block_positions(staged, ["stage"], "_b", ["_h", id_col]).select(
+        id_col, score_col, "stage", F.col("_pos").alias("pos_in_stage")
     )
 
 

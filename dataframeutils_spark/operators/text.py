@@ -548,14 +548,11 @@ def topk_terms(
     Scale shape: explode → groupBy(term) rides Spark's map-side partial
     aggregation (each task emits its local term counts, the shuffle
     carries ~|vocab| rows per task, not |tokens|), and the final top-k
-    is TakeOrdered over per-partition heaps — no global sort of the
-    vocabulary. The rank window runs on k rows, not the vocab.
+    is :func:`ranked_topk` — no global sort of the vocabulary.
     """
     toks = spread(docs, F.col(id_col)).select(F.explode(_terms(text_col)).alias("term"))
     counts = toks.groupBy("term").agg(F.count("*").alias("n"))
-    top = counts.orderBy(F.col("n").desc(), F.col("term")).limit(k)
-    w = Window.orderBy(F.col("n").desc(), F.col("term"))
-    return top.select("term", "n", F.row_number().over(w).alias("rank"))
+    return ranked_topk(counts, k, [F.col("n").desc(), F.col("term")])
 
 
 def topk_terms_sql(table: str = "documents", k: int = 50) -> str:

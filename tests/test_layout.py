@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators import dedup, layout, skew
+from dataframeutils_spark.operators.local_solve import block_positions
 
 N = 4096
 RPF = 128
@@ -50,7 +51,7 @@ def test_zorder_positions_match_global_sort_order(spark, grid_events):
     """The two-phase global position must be a permutation of 0..N-1
     AND equal the true global (t, rid) sort rank. The block column is
     monotone in the sort order (top bits of the leading sort key, the
-    operator's own form) — _global_positions' documented precondition;
+    operator's own form) — block_positions' documented precondition;
     a non-monotone block would satisfy the permutation property yet
     scramble the order, which is exactly what this test pins."""
     e = grid_events.select(
@@ -58,7 +59,9 @@ def test_zorder_positions_match_global_sort_order(spark, grid_events):
         F.unix_micros("ts").alias("t"),
         F.col("event_id").alias("rid"),
     )
-    pos = layout._global_positions(e, ("t", "rid"), F.expr("shiftright(t, 26)"))
+    pos = block_positions(
+        e.withColumn("_blk", F.expr("shiftright(t, 26)")), [], "_blk", ["t", "rid"]
+    ).withColumn("_pos", F.col("_pos") - 1)
     rows = pos.select("t", "rid", "_pos").collect()
     # permutation of 0..N-1 → every file except the last is full
     assert sorted(r["_pos"] for r in rows) == list(range(N))

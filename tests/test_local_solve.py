@@ -1,17 +1,20 @@
-"""Boundary tests for the driver-local / distributed routing in
-``operators/local_solve.py``: at count == threshold the local solver
-runs, one edge over it the distributed loop runs, and both give the
-same rows and schema."""
+"""Tests for ``operators/local_solve.py``: the driver-local /
+distributed routing at its exact threshold boundary (at count ==
+threshold the local solver runs, one edge over it the distributed loop
+runs, and both give the same rows and schema), and the two-phase block
+ledger pinned against a plain window."""
 
 from __future__ import annotations
 
 import random
 
+import pandas as pd
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dataframeutils_spark.operators import bpe, dedup, graph
-from dataframeutils_spark.operators.local_solve import local_threshold
+from dataframeutils_spark.operators.local_solve import block_positions, block_prefix
 from dataframeutils_spark.schema import siground
 
 N_EDGES = 40
@@ -110,28 +113,53 @@ def test_bpe_local_at_vocab_top_distributed_below(spark, monkeypatch):
     assert t_loc.collect() == t_dist.collect()
 
 
-@pytest.mark.parametrize(
-    "env, default",
-    [
-        ("SPARK_GRAFT_CC_LOCAL_EDGES", 4_000_000),
-        ("SPARK_GRAFT_GRAPH_LOCAL_EDGES", 4_000_000),
-        ("SPARK_GRAFT_PR_LOCAL_EDGES", 1_000_000),
-        ("SPARK_GRAFT_BPE_LOCAL_VOCAB", 100_000),
-    ],
-)
-def test_malformed_env_warns_and_uses_default(monkeypatch, env, default):
-    monkeypatch.setenv(env, "4M")
-    with pytest.warns(UserWarning, match=f"{env}='4M' is not an int; using default {default}"):
-        assert local_threshold(env, default) == default
-    monkeypatch.setenv(env, "7")
-    assert local_threshold(env, default) == 7
-    monkeypatch.delenv(env)
-    assert local_threshold(env, default) == default
+@pytest.fixture(scope="module")
+def blocked(spark):
+    """(g, t, id, v, blk) rows with blk = (t·100 + id) DIV 7, so blk is
+    non-decreasing in (t, id). Ties on t are broken by id across block
+    boundaries; group 1 has a single block; group 0 has no t in 3..9,
+    so the blocks between t = 2 and t = 10 are empty."""
+    rng = random.Random(11)
+    rows = []
+    for i in range(120):
+        t = rng.choice([0, 1, 2, 10, 11]) if i % 4 else 20
+        rows.append((0, t, i % 100, rng.randint(-50, 50)))
+    rows += [(1, 3, i, rng.randint(-50, 50)) for i in range(1, 6)]
+    df = spark.createDataFrame(rows, "g long, t long, id long, v long").dropDuplicates(
+        ["g", "t", "id"]
+    )
+    return df.withColumn("blk", F.expr("(t * 100 + id) DIV 7"))
 
 
-def test_malformed_env_routes_with_default(spark, edges, monkeypatch):
-    calls = _spy(monkeypatch, dedup, "_connected_components_local")
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_EDGES", "lots")
-    with pytest.warns(UserWarning, match="SPARK_GRAFT_CC_LOCAL_EDGES='lots'"):
-        _cc(spark, edges, None)
-    assert calls == ["_connected_components_local"]
+@pytest.mark.parametrize("by", [[], ["g"]], ids=["global", "by_g"])
+def test_block_positions_equal_row_number(blocked, by):
+    order = ["t", "id"]
+    want = blocked.withColumn(
+        "want", F.row_number().over(Window.partitionBy(*by).orderBy(*order))
+    )
+    got = block_positions(blocked, by, "blk", order)
+    assert sorted(got.columns) == sorted([*blocked.columns, "_pos"])
+    rows = got.join(want.select("g", "t", "id", "want"), ["g", "t", "id"]).collect()
+    assert len(rows) == blocked.count()
+    assert all(r["_pos"] == r["want"] for r in rows)
+    # the data exercises what the ledger must get right
+    tie_blocks = blocked.groupBy("g", "t").agg(F.countDistinct("blk").alias("nb"))
+    assert tie_blocks.filter("nb > 1").count() > 0
+    assert blocked.filter("g = 1").select("blk").distinct().count() == 1
+    blks = sorted(r["blk"] for r in blocked.filter("g = 0").select("blk").distinct().collect())
+    assert len(blks) < blks[-1] - blks[0] + 1
+
+
+def test_block_prefix_max_equals_cummax(blocked):
+    got = block_prefix(blocked, ["g"], "blk", F.col("v"), fold=F.max).toPandas()
+    pdf = blocked.toPandas()
+    want = pdf.groupby(["g", "blk"], as_index=False)["v"].max().rename(columns={"v": "_n"})
+    want = want.sort_values(["g", "blk"])
+    want["_pre"] = want.groupby("g")["_n"].transform(lambda s: s.cummax().shift(1))
+    want["_tot"] = want.groupby("g")["_n"].transform("max")
+    cols = ["g", "blk", "_n", "_pre", "_tot"]
+    pd.testing.assert_frame_equal(
+        got.sort_values(["g", "blk"]).reset_index(drop=True)[cols],
+        want.reset_index(drop=True)[cols],
+        check_dtype=False,
+    )

@@ -99,14 +99,19 @@ def test_asof_join_matches_pandas_merge_asof(spark, left, right):
     assert list(got["score_asof"].fillna(-1)) == list(want["score"].fillna(-1))
 
 
-def test_connected_components_long_chain_converges_fast(spark):
+@pytest.mark.parametrize(
+    "kw", [{}, {"local_edge_threshold": 0}], ids=["default", "distributed"]
+)
+def test_connected_components_long_chain_converges_fast(spark, kw):
     """Adversarial diameter-200 chain: pointer doubling must converge
     well inside the default max_iter=25 (one-hop propagation would need
-    200 rounds and previously returned silently-split clusters)."""
+    200 rounds and previously returned silently-split clusters). The
+    default threshold solves 200 edges with the driver-local union-find;
+    local_edge_threshold=0 pins the distributed pointer-doubling loop."""
     n = 200
     edges = [(i, i + 1) for i in range(n)]
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = dedup.connected_components(df).collect()
+    got = dedup.connected_components(df, **kw).collect()
     assert len(got) == n + 1
     assert {r["cluster_id"] for r in got} == {0}
 
